@@ -233,7 +233,8 @@ def run_merge_bench(cpus: int) -> dict:
             F.countDistinct("field", "term").alias("terms"),
         ).collect()[0]
         sharded_terms = int(agg["rows"]) - int(agg["terms"])
-        assert sharded_terms > 0, "giant-term shard escalation did not engage"
+        if sharded_terms <= 0:
+            raise RuntimeError("giant-term shard escalation did not engage")
         leg.update(
             {
                 "full_merge_fan_in": rec["fan_in"],
@@ -286,52 +287,64 @@ def run_codec_bytes(cpus: int) -> dict:
     n_docs = int(os.environ.get("SPARK_GRAFT_CODEC_DOCS", "200000"))
     spark = get_spark("iresearch_codec_bytes", cores=cpus)
     src = _fresh_dir("codec_src")
-    generate_corpus(spark, n_docs, num_partitions=4 * cpus).write.parquet(src)
-    corpus = spark.read.parquet(src)
-    out: dict = {
-        "metric": "postings_bytes_per_doc",
-        "unit": "bytes",
-        "docs": n_docs,
-        "cpus": cpus,
-    }
-    for trial in range(2):
-        for codec in ("varint", "packed"):
-            d = _fresh_dir(f"codec_{codec}_{trial}")
-            t0 = time.perf_counter()
-            m = build_index(spark, corpus, d, num_segments=cpus, codec=codec)
-            sec = round(time.perf_counter() - t0, 4)
-            # positions (prox) stream bytes — packed also bit-packs these;
-            # not in the build metrics, so measure off the segments table
-            pos_bytes = int(
-                spark.read.parquet(f"{d}/segments")
-                .agg(F.sum(F.length("positions")))
-                .collect()[0][0]
-                or 0
-            )
-            shutil.rmtree(d, ignore_errors=True)
-            if codec in out:  # second trial: keep min time, pin bytes
-                prev = out[codec]
-                assert prev["postings_bytes"] == m["postings_bytes"], codec
-                assert prev["positions_bytes"] == pos_bytes, codec
-                sec = min(sec, prev["build_sec"])
-            out[codec] = {
-                "postings_bytes": m["postings_bytes"],
-                "bytes_per_doc": round(m["postings_bytes"] / n_docs, 2),
-                "positions_bytes": pos_bytes,
-                "positions_bytes_per_doc": round(pos_bytes / n_docs, 2),
-                "build_sec": sec,
-                "docs_per_sec": round(n_docs / sec, 2),
-            }
-    out["value"] = out["packed"]["bytes_per_doc"]
-    out["packed_over_varint"] = round(
-        out["packed"]["postings_bytes"] / out["varint"]["postings_bytes"], 4
-    )
-    out["positions_packed_over_varint"] = round(
-        out["packed"]["positions_bytes"] / out["varint"]["positions_bytes"], 4
-    )
-    shutil.rmtree(src, ignore_errors=True)
-    spark.stop()
-    return out
+    try:
+        generate_corpus(spark, n_docs, num_partitions=4 * cpus).write.parquet(src)
+        corpus = spark.read.parquet(src)
+        out: dict = {
+            "metric": "postings_bytes_per_doc",
+            "unit": "bytes",
+            "docs": n_docs,
+            "cpus": cpus,
+        }
+        # untimed warm-up build (JVM/JIT, first corpus scan), so the first
+        # timed leg does not pay a cost the other codec's legs skip
+        d = _fresh_dir("codec_warmup")
+        build_index(spark, corpus, d, num_segments=cpus)
+        shutil.rmtree(d, ignore_errors=True)
+        for trial in range(2):
+            for codec in ("varint", "packed"):
+                d = _fresh_dir(f"codec_{codec}_{trial}")
+                t0 = time.perf_counter()
+                m = build_index(spark, corpus, d, num_segments=cpus, codec=codec)
+                sec = round(time.perf_counter() - t0, 4)
+                # positions (prox) stream bytes — packed also bit-packs
+                # these; not in the build metrics, so measure off the
+                # segments table
+                pos_bytes = int(
+                    spark.read.parquet(f"{d}/segments")
+                    .agg(F.sum(F.length("positions")))
+                    .collect()[0][0]
+                    or 0
+                )
+                shutil.rmtree(d, ignore_errors=True)
+                if codec in out:  # second trial: keep min time, pin bytes
+                    prev = out[codec]
+                    if (prev["postings_bytes"], prev["positions_bytes"]) != (
+                        m["postings_bytes"], pos_bytes
+                    ):
+                        raise RuntimeError(
+                            f"{codec}: bytes differ between identical builds"
+                        )
+                    sec = min(sec, prev["build_sec"])
+                out[codec] = {
+                    "postings_bytes": m["postings_bytes"],
+                    "bytes_per_doc": round(m["postings_bytes"] / n_docs, 2),
+                    "positions_bytes": pos_bytes,
+                    "positions_bytes_per_doc": round(pos_bytes / n_docs, 2),
+                    "build_sec": sec,
+                    "docs_per_sec": round(n_docs / sec, 2),
+                }
+        out["value"] = out["packed"]["bytes_per_doc"]
+        out["packed_over_varint"] = round(
+            out["packed"]["postings_bytes"] / out["varint"]["postings_bytes"], 4
+        )
+        out["positions_packed_over_varint"] = round(
+            out["packed"]["positions_bytes"] / out["varint"]["positions_bytes"], 4
+        )
+        return out
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        spark.stop()
 
 
 def _scaling_build(cores: int, corpus_path: str, n_parts: int,

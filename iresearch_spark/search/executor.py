@@ -10,16 +10,17 @@ SURVEY §3.2) Spark-first:
    and bake per-term-instance score constants (c0) exactly like
    `Scorer::collect` (`bm25.cpp:366-410`). Global, never per-segment stats:
    the rank-identity requirement of `term_filter.cpp:92-129`.
-2. **execute** (cluster): cogroup the needed postings rows with the
-   per-SEGMENT packed norms blobs (one row per segment — O(segments), never
-   an O(corpus) docmeta scan per query; see ``norms_blob_df``); one Arrow
-   kernel per segment evaluates the boolean tree with numpy set ops
+2. **execute** (cluster): group the needed postings rows by segment; one
+   Arrow kernel per segment evaluates the boolean tree with numpy set ops
    (conjunction = intersect1d ordered by cost, disjunction = bincount-union
    with min_match, exclusion = isin mask — SURVEY §2.5) and returns the
-   segment-local top-k.
+   segment-local top-k. Its per-doc side (norms, tombstones) is packed on
+   the driver and broadcast once per snapshot (``norms_blob_df``): no
+   docmeta scan or norms exchange per query.
 3. **reduce**: global ``orderBy(score desc, segment_id, doc_id).limit(k)``
    (ties broken by ascending docID, like the reference test expectations),
-   then a broadcast join back to docmeta for (repo, path, commit) identity.
+   then a broadcast join back to docmeta for (repo, path, commit) identity,
+   re-ordered under the same bounded ``limit(k)``.
 
 Block-max WAND (`formats_10.cpp:2426-2806` wanderator, adapted to a batch
 engine): for single-term / flat-disjunction queries the kernel first builds a
@@ -43,6 +44,8 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -149,6 +152,48 @@ def _term_matches(leaf, term: str, _rx_cache: dict = {}) -> bool:
     raise TypeError(leaf)  # pragma: no cover
 
 
+def _read_int32(path: str, cols: list[str]) -> pa.Table | None:
+    """Driver-side pyarrow read of int32 columns from a Spark-written
+    parquet directory (None if absent). The explicit schema null-fills a
+    missing column the way a Spark read with a schema does, and reads a
+    directory without data files as zero rows."""
+    import os
+
+    if not os.path.isdir(path):
+        return None
+    return pq.read_table(path, schema=pa.schema([(c, pa.int32()) for c in cols]))
+
+
+def _pack_norms(index_dir: str, segment_id: int, dl_cols: list[str]) -> dict:
+    """One segment's norms from its docmeta partition: ``{"ndocs": n,
+    col: int32[n] for col in dl_cols}`` (index = doc_id - 1, null -> 0).
+    A segment without docmeta rows (an empty wave) packs to ndocs 0."""
+    t = _read_int32(
+        f"{index_dir}/docmeta/segment_id={segment_id}", ["doc_id", *dl_cols]
+    )
+    if t is None or t.num_rows == 0:
+        return {"ndocs": 0, **{c: np.empty(0, np.int32) for c in dl_cols}}
+    ids = t["doc_id"].to_numpy().astype(np.int64)
+    n = int(ids.max())
+    out: dict = {"ndocs": n}
+    for c in dl_cols:
+        a = np.zeros(n, dtype=np.int32)
+        a[ids - 1] = t[c].fill_null(0).to_numpy()
+        out[c] = a
+    return out
+
+
+def _read_tombstones(index_dir: str) -> dict[int, np.ndarray]:
+    """segment_id -> sorted unique tombstoned doc ids (int32) from the
+    deletes table (segment_writer.hpp:63-66 document mask)."""
+    t = _read_int32(f"{index_dir}/deletes", ["segment_id", "doc_id"])
+    if t is None:
+        return {}
+    seg = t["segment_id"].to_numpy()
+    doc = t["doc_id"].to_numpy()
+    return {int(s): np.unique(doc[seg == s]) for s in np.unique(seg)}
+
+
 class SearchEngine:
     def __init__(
         self,
@@ -186,15 +231,16 @@ class SearchEngine:
         # Bounded LRU (was: crude clear-at-100k) — the reference's analogue
         # is the per-reader term dictionary cache, likewise bounded.
         self._stats_cache = LRUCache(65536)
-        # per-segment packed norms (see norms_blob_df): built once per
-        # manifest publish, persisted; invalidated by the stamp check
-        self._norms_blob: DataFrame | None = None
+        # packed norms (see norms_blob_df): per-segment arrays kept across
+        # publishes, and this snapshot's broadcasts (dropped on publish)
+        self._norms_cache: dict[tuple, dict] = {}
+        self._norms_bc: dict[int, Any] | None = None
         # serializes the stamp check/reload so a concurrent reader can't
         # observe a half-reloaded manifest view (long-lived service shape:
         # queries race publishes — tests/test_concurrent_reader.py)
         import threading
 
-        self._stamp_lock = threading.Lock()
+        self._stamp_lock = threading.RLock()
         self._load_manifest()
         self._manifest_stamp = self._stamp()
 
@@ -245,9 +291,7 @@ class SearchEngine:
             if stamp != self._manifest_stamp:
                 self.clear_proxy_cache()
                 self._stats_cache.clear()
-                if self._norms_blob is not None:
-                    self._norms_blob.unpersist()
-                    self._norms_blob = None
+                self._release_norms()
                 if self.generation is None:
                     self._load_manifest()
                 self._manifest_stamp = stamp
@@ -314,93 +358,56 @@ class SearchEngine:
             .select(*cols)
         )
 
-    def norms_df(self) -> DataFrame:
-        """(segment_id, doc_id, dl[, dl_<field>...], deleted) — the kernel's
-        per-doc side. Tombstoned docs (deletes table,
-        segment_writer.hpp:63-66 document mask) are flagged and dropped at
-        posting-decode time."""
-        import os
+    def norms_blob_df(self) -> dict[int, Any]:
+        """Per-SEGMENT packed norms of this snapshot: segment_id -> one
+        ``SparkContext.broadcast`` of ``{"ndocs", "dl"[, "dl_<field>"...],
+        "deleted_ids"}`` — dense per-doc token counts, an int32 array per
+        field (index = doc_id - 1; doc ids are dense 1..docs per segment —
+        the build/merge invariant), plus the sorted tombstone ids. This is
+        the kernel's whole per-doc side: no docmeta scan or exchange per
+        query. The reference likewise opens each segment's norms once per
+        reader (`core/index/norm.hpp:75-197`) and keeps unchanged segments
+        across reopens (`index_reader.hpp:35-153`).
 
-        from iresearch_spark.index.build import docmeta_schema
+        The driver reads each segment's docmeta partition with pyarrow (no
+        Spark job) and caches it by (segment_id, content_hash, docs), so a
+        publish packs only segments this reader has not seen; driver cost:
+        4 bytes x docs x indexed fields. Each publish re-reads the deletes
+        table and broadcasts afresh; old broadcasts are unpersisted, never
+        destroyed, so a DataFrame built before the publish still collects
+        its own snapshot. (The name predates the broadcast form;
+        ``perfbench/trace.py`` wraps it as the executor.norms_blob layer.)"""
+        with self._stamp_lock:
+            self._check_stamp()
+            if self._norms_bc is None:
+                extra = sorted(n for n in self.field_stats if n != self.field)
+                dl_cols = ["dl"] + [f"dl_{n}" for n in extra]
+                cache = {}
+                for s in self.manifest.segments:
+                    sid = int(s["segment_id"])
+                    key = (sid, int(s.get("content_hash") or 0),
+                           int(s.get("docs") or 0))
+                    cache[key] = self._norms_cache.get(key) or _pack_norms(
+                        self.index_dir, sid, dl_cols)
+                self._norms_cache = cache  # drops merged-away segments
+                dels = _read_tombstones(self.index_dir)
+                sc = self.spark.sparkContext
+                none = np.empty(0, np.int32)
+                self._norms_bc = {
+                    key[0]: sc.broadcast(
+                        {**blob, "deleted_ids": dels.get(key[0], none)}
+                    )
+                    for key, blob in cache.items()
+                }
+            return self._norms_bc
 
-        extra = [n for n in self.field_stats if n != self.field]
-        base = self._seg_filter(
-            self.spark.read.schema(docmeta_schema(extra))
-            .parquet(f"{self.index_dir}/docmeta")
-            .select(
-                "segment_id", "doc_id", "dl", *[f"dl_{n}" for n in extra]
-            )
-        )
-        if os.path.isdir(f"{self.index_dir}/deletes"):
-            from iresearch_spark.index.deletes import deletes_df
-
-            dels = deletes_df(self.spark, self.index_dir).withColumn(
-                "deleted", F.lit(True)
-            )
-            return base.join(dels, ["segment_id", "doc_id"], "left").withColumn(
-                "deleted", F.coalesce(F.col("deleted"), F.lit(False))
-            )
-        return base.withColumn("deleted", F.lit(False))
-
-    def norms_blob_df(self) -> DataFrame:
-        """Per-SEGMENT packed norms: ONE row per live segment carrying the
-        dense per-doc token counts as an int32 blob per field (index =
-        doc_id - 1; doc ids are dense 1..docs per segment — the build/merge
-        invariant) plus the sorted tombstone id list. This is the kernel's
-        whole per-doc side, so a query's norms input is O(segments) rows,
-        never an O(corpus) docmeta scan + exchange per query — the
-        reference reads norms from a per-segment columnstore file opened
-        once per reader (`core/index/norm.hpp:75-197`, `formats_10.cpp`
-        norm column), not by re-scanning document metadata per query.
-
-        Built once per manifest publish (the reader-open cost, amortized
-        across every subsequent query on this engine), persisted
-        cluster-side, and invalidated by the manifest stamp check (a
-        commit/merge/delete publish rebuilds it, so tombstones are baked
-        into the blob of the snapshot they belong to)."""
-        self._check_stamp()
-        entry_stamp = self._manifest_stamp
-        if self._norms_blob is not None:
-            return self._norms_blob
-        from pyspark import StorageLevel
-
-        extra = sorted(n for n in self.field_stats if n != self.field)
-        dl_cols = ["dl"] + [f"dl_{n}" for n in extra]
-        schema = (
-            "segment_id int, ndocs int, "
-            + ", ".join(f"{c} binary" for c in dl_cols)
-            + ", deleted_ids binary"
-        )
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            n = int(ids.max())
-            out: dict[str, list] = {
-                "segment_id": [int(pdf["segment_id"].iloc[0])],
-                "ndocs": [n],
-            }
-            for c in dl_cols:
-                a = np.zeros(n, dtype=np.int32)
-                a[ids - 1] = pdf[c].fillna(0).to_numpy(np.int32)
-                out[c] = [a.tobytes()]
-            dels = np.sort(ids[pdf["deleted"].to_numpy(bool)])
-            out["deleted_ids"] = [dels.astype(np.int32).tobytes()]
-            return pd.DataFrame(out)
-
-        blob = (
-            self.norms_df()
-            .groupby("segment_id")
-            .applyInPandas(pack, schema=schema)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        blob.count()  # materialize now: later queries only read the cache
-        if self._manifest_stamp == entry_stamp:
-            self._norms_blob = blob
-        else:
-            # a publish raced the build: serve this (pre-publish) query
-            # from the uncached blob, don't pin the stale snapshot
-            blob.unpersist()
-        return blob
+    def _release_norms(self) -> None:
+        """Unpersist this snapshot's norms broadcasts (not destroy: a plan
+        built before a publish may still read them)."""
+        if self._norms_bc is not None:
+            for bc in self._norms_bc.values():
+                bc.unpersist()
+            self._norms_bc = None
 
     def docmeta_df(self) -> DataFrame:
         self._check_stamp()
@@ -1234,11 +1241,37 @@ class SearchEngine:
         if isinstance(f, ProxyF):
             return self._search_proxy(f, k, dtype, with_identity)
         prep = self.prepare(f, dtype)
-        kernel = _make_kernel(prep, k, wand and k is not None)
-        score_type = "float" if dtype == "float32" else "double"
-        out_schema = f"segment_id int, doc_id int, score {score_type}"
+        local_topk = self._run_kernel(prep, k, wand and k is not None)
+        return self._finalize(local_topk, k, with_identity)
 
-        seg_df = self.segments_df(prep.needs_positions)
+    def wand_stats(
+        self, f: Filter, k: int = 10, dtype: str = "float32"
+    ) -> DataFrame:
+        """Diagnostic: per-segment WAND regime + block-decode accounting
+        for a top-k query — (segment_id, mode, blocks_total,
+        blocks_decoded), one row per segment the query's kernel runs on.
+        ``mode`` records which branch the kernel took
+        (pruned / full_dense dense-survivor fallback / full_small /
+        full_lowmatch, and their and_* conjunction twins; 'exhaustive'
+        means the tree wasn't WAND-eligible). blocks_total counts the
+        skippable blocks registered by dense_ub (for conjunctions: the
+        non-lead children — the lead child decodes whole postings by
+        design). The skipped-block ratio 1 - decoded/total is the
+        regression-tracked signal behind the ~1.1x dense-corpus worst-case
+        guard (bench.py --wand-regimes). Runs through the same scan and
+        kernel launch as ``search``."""
+        return self._run_kernel(self.prepare(f, dtype), k, True, stats=True)
+
+    def _run_kernel(
+        self, prep: _Prepared, k: int | None, wand: bool, stats: bool = False
+    ) -> DataFrame:
+        """The one scan + kernel launch behind ``search`` and
+        ``wand_stats``: the postings rows the prepared tree needs (term and
+        field predicates pushed into the segments scan), grouped by segment
+        into the kernel with this snapshot's norms broadcasts."""
+        with self._stamp_lock:  # norms and scan from the same snapshot
+            norms = self.norms_blob_df()
+            seg_df = self.segments_df(prep.needs_positions)
         if prep.needed_terms or prep.rest_specs:
             from functools import reduce
             from operator import or_
@@ -1260,60 +1293,23 @@ class SearchEngine:
             seg_df = seg_df.filter(reduce(or_, preds))
         else:
             seg_df = seg_df.filter(F.col("field") == self.field).limit(0)
-        norms = self.norms_blob_df()
-
-        local_topk = (
-            seg_df.groupby("segment_id")
-            .cogroup(norms.groupby("segment_id"))
-            .applyInPandas(kernel, schema=out_schema)
-        )
-        return self._finalize(local_topk, k, with_identity)
-
-    def wand_stats(
-        self, f: Filter, k: int = 10, dtype: str = "float32"
-    ) -> DataFrame:
-        """Diagnostic: per-segment WAND regime + block-decode accounting
-        for a top-k query — (segment_id, mode, blocks_total,
-        blocks_decoded). ``mode`` records which branch the kernel took
-        (pruned / full_dense dense-survivor fallback / full_small /
-        full_lowmatch, and their and_* conjunction twins; 'exhaustive'
-        means the tree wasn't WAND-eligible). blocks_total counts the
-        skippable blocks registered by dense_ub (for conjunctions: the
-        non-lead children — the lead child decodes whole postings by
-        design). The skipped-block ratio 1 - decoded/total is the
-        regression-tracked signal behind the ~1.1x dense-corpus worst-case
-        guard (bench.py --wand-regimes)."""
-        prep = self.prepare(f, dtype)
-        kernel = _make_kernel(prep, k, True, stats=True)
-        seg_df = self.segments_df(prep.needs_positions)
-        if prep.needed_terms or prep.rest_specs:
-            from functools import reduce
-            from operator import or_
-
-            by_field: dict[str, list[str]] = {}
-            for fld, t in prep.needed_terms:
-                by_field.setdefault(fld, []).append(t)
-            preds = [
-                (F.col("field") == fld) & F.col("term").isin(terms)
-                for fld, terms in sorted(by_field.items())
-            ]
-            preds += [
-                (F.col("field") == fld) & self._leaf_pred(leaf)
-                for fld, leaf in prep.rest_specs
-            ]
-            seg_df = seg_df.filter(reduce(or_, preds))
-        else:
-            seg_df = seg_df.filter(F.col("field") == self.field).limit(0)
-        return (
-            seg_df.groupby("segment_id")
-            .cogroup(self.norms_blob_df().groupby("segment_id"))
-            .applyInPandas(
-                kernel,
-                schema=(
-                    "segment_id int, mode string, "
-                    "blocks_total long, blocks_decoded long"
-                ),
+        if _matches_without_postings(prep.tree):
+            # all/exists match docs that have no postings row: one null stub
+            # row per live segment makes every segment a kernel group
+            stubs = self.spark.range(1).select(
+                F.explode(
+                    F.array(*map(F.lit, sorted(norms))).cast("array<int>")
+                ).alias("segment_id")
             )
+            seg_df = seg_df.unionByName(stubs, allowMissingColumns=True)
+        if stats:
+            schema = ("segment_id int, mode string, blocks_total long, "
+                      "blocks_decoded long")
+        else:
+            score = "float" if prep.consts["dtype"] == "float32" else "double"
+            schema = f"segment_id int, doc_id int, score {score}"
+        return seg_df.groupby("segment_id").applyInPandas(
+            _make_kernel(prep, k, wand, norms, stats), schema=schema
         )
 
     def _finalize(
@@ -1335,11 +1331,14 @@ class SearchEngine:
         # (k=None, e.g. an exists/whole-corpus query) is unbounded — let AQE
         # pick the join strategy instead of forcing a full-result broadcast
         right = F.broadcast(global_topk) if k is not None else global_topk
-        return (
+        out = (
             dm.join(right, ["segment_id", "doc_id"])
             .select("repo", "path", "commit", "lang", "score", "segment_id", "doc_id")
             .orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
         )
+        # the join has at most k rows: limit(k) plans a TakeOrderedAndProject
+        # instead of a range-partitioned sort (sampling job + exchange)
+        return out if k is None else out.limit(k)
 
     def _search_proxy(
         self, f: "ProxyF", k: int | None, dtype: str, with_identity: bool
@@ -1388,27 +1387,40 @@ class SearchEngine:
         self._proxy_cache.clear()  # LRU on_evict unpersists each entry
 
     def close(self) -> None:
-        """Release every cluster-side resource this reader holds: persisted
-        proxy match sets, the term-stats cache, and the packed-norms cache.
-        Idempotent — a closed engine re-materializes lazily if reused."""
-        self.clear_proxy_cache()
-        self._stats_cache.clear()
-        if self._norms_blob is not None:
-            self._norms_blob.unpersist()
-            self._norms_blob = None
+        """Release every resource this reader holds: persisted proxy match
+        sets, the term-stats cache, the norms broadcasts (unpersisted) and
+        the driver-side packed norms. Idempotent — a closed engine
+        re-materializes lazily if reused."""
+        with self._stamp_lock:
+            self.clear_proxy_cache()
+            self._stats_cache.clear()
+            self._release_norms()
+            self._norms_cache = {}
 
 
 # ----------------------------------------------------------------- kernel
 
 
-def _make_kernel(prep: _Prepared, k: int, wand: bool, stats: bool = False):
+def _matches_without_postings(node: dict) -> bool:
+    """True when the compiled tree holds an ``all`` or ``exists`` node —
+    the ops that match docs of a segment with no postings row."""
+    subs = node.get("children", []) + node.get("excludes", [])
+    subs += [node["child"]] if "child" in node else []
+    return node["op"] in ("all", "exists") or any(
+        map(_matches_without_postings, subs))
+
+
+def _make_kernel(
+    prep: _Prepared, k: int, wand: bool, norms: dict, stats: bool = False
+):
+    """The per-segment kernel; ``norms`` is ``norms_blob_df()``'s map, of
+    which a task reads only its own segment's broadcast."""
     tree = prep.tree
     instances = prep.instances
     consts = prep.consts
-    needs_positions = prep.needs_positions
     rest_specs = prep.rest_specs
 
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def kernel(left: pd.DataFrame) -> pd.DataFrame:
         from iresearch_spark.codec import postings_codec
 
         cmod = postings_codec(consts.get("codec", "varint"))
@@ -1424,37 +1436,25 @@ def _make_kernel(prep: _Prepared, k: int, wand: bool, stats: bool = False):
                 "score": pd.Series([], dtype=consts["dtype"]),
             }
         )
-        if right.empty:
-            if stats:
-                return pd.DataFrame(
-                    {
-                        "segment_id": pd.Series([], dtype="int32"),
-                        "mode": pd.Series([], dtype=object),
-                        "blocks_total": pd.Series([], dtype="int64"),
-                        "blocks_decoded": pd.Series([], dtype="int64"),
-                    }
-                )
-            return empty
-        # right = ONE packed-norms row for this segment (norms_blob_df):
-        # dense int32 dl blob per field (index = doc_id - 1) + tombstones
-        segment_id = int(right["segment_id"].iloc[0])
-        ndocs = int(right["ndocs"].iloc[0])
-        # per-field dense norm lookups (primary field's norms are the ``dl``
-        # blob, secondary fields ride in ``dl_<name>`` blobs)
+        segment_id = int(left["segment_id"].iloc[0])
+        # this segment's packed norms (norms_blob_df): dense int32 dl array
+        # per field (index = doc_id - 1) + sorted tombstone ids
+        seg_norms = norms[segment_id].value
+        ndocs = seg_norms["ndocs"]
+        # per-field dense norm lookups (primary field's norms are ``dl``,
+        # secondary fields ride in ``dl_<name>``)
         dl_arrs: dict[str, np.ndarray] = {}
 
         def dl_arr_of(fld: str) -> np.ndarray:
             if fld not in dl_arrs:
                 col = "dl" if fld == primary_field else f"dl_{fld}"
                 a = np.zeros(ndocs + 1, dtype=np.int64)
-                a[1:] = np.frombuffer(right[col].iloc[0], dtype=np.int32)
+                a[1:] = seg_norms[col]
                 dl_arrs[fld] = a
             return dl_arrs[fld]
 
         del_arr = np.zeros(ndocs + 1, dtype=bool)
-        del_blob = right["deleted_ids"].iloc[0]
-        if del_blob is not None and len(del_blob):
-            del_arr[np.frombuffer(del_blob, dtype=np.int32)] = True
+        del_arr[seg_norms["deleted_ids"]] = True
 
         # (field, term) -> segment rowS: normally one row, but a giant
         # term's postings may be SHARDED into several disjoint doc-range
@@ -1463,7 +1463,8 @@ def _make_kernel(prep: _Prepared, k: int, wand: bool, stats: bool = False):
         # last_doc)
         rows_by_term: dict[tuple[str, str], list] = {}
         for row in left.itertuples(index=False):
-            rows_by_term.setdefault((row.field, row.term), []).append(row)
+            if row.term is not None:  # skip the all/exists stub row
+                rows_by_term.setdefault((row.field, row.term), []).append(row)
         for shards in rows_by_term.values():
             if len(shards) > 1:
                 shards.sort(
@@ -2250,6 +2251,4 @@ def _make_kernel(prep: _Prepared, k: int, wand: bool, stats: bool = False):
         out_cols["score"] = scores[order]
         return pd.DataFrame(out_cols)
 
-    if needs_positions:
-        pass  # positions columns are already selected by the caller
     return kernel

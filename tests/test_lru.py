@@ -108,10 +108,16 @@ def test_proxy_cache_eviction_unpersists(spark, tmp_path_factory):
     eng.search(Proxy(child=TermF(term="void")), k=5).collect()
     assert len(eng._proxy_cache) == 1
     assert not first.is_cached  # evicted AND unpersisted
-    # close() releases everything the reader pinned
-    eng.norms_blob_df()
-    assert eng._norms_blob is not None and eng._norms_blob.is_cached
-    blob = eng._norms_blob
+    # close() releases everything the reader pinned: every norms broadcast
+    # is unpersisted (not destroyed — a plan built earlier may still read
+    # it) and the engine drops its broadcasts and packed norms
+    norms = eng.norms_blob_df()
+    assert len(norms) == 2
+    released = []
+    for bc in norms.values():
+        bc.unpersist = lambda bc=bc: released.append(bc)
     eng.close()
-    assert eng._norms_blob is None and not blob.is_cached
+    assert sorted(map(id, released)) == sorted(map(id, norms.values()))
+    assert all(bc._jbroadcast.isValid() for bc in released)
+    assert eng._norms_bc is None and eng._norms_cache == {}
     assert len(eng._proxy_cache) == 0 and len(eng._stats_cache) == 0
