@@ -95,65 +95,45 @@ def _corpus_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def _engine(spark: SparkSession, sf_dir: str):
+# build_index kwargs of each index variant over one sf dir's documents
+_ENGINE_VARIANTS: dict[str, dict] = {
+    "": {},
+    # two-field index (content + lang, plus numeric and collation fields):
+    # the reference's N-fields-per-doc model
+    # (`core/index/segment_writer.hpp:91-119`)
+    "mf": {
+        "fields": [
+            ("content", "code"),
+            ("lang", "code"),
+            ("n_chars", "numeric"),
+            ("repo", "collation"),
+        ],
+    },
+    # `text` analyzer (lower -> accent strip -> stopwords -> snowball
+    # stem, text_token_stream.cpp order)
+    "text": {"analyzer": "text"},
+    # per-position user bytes (IndexFeatures::PAY,
+    # token_attributes.hpp:67-72): the original-case token form
+    "pay": {"analyzer": "code_payload"},
+    # per-position payloads carry the token's original-text char span
+    # (stored OFFS on the PAY stream)
+    "offs": {"analyzer": "code_offsets"},
+}
+
+
+def _engine(spark: SparkSession, sf_dir: str, variant: str = ""):
+    """Engine over the ``variant`` index of ``sf_dir``'s documents, built
+    once per process into a tempdir."""
     from iresearch_spark.index.build import build_index
 
-    key = os.path.abspath(sf_dir)
+    src = os.path.abspath(sf_dir)
+    key = f"{src}#{variant}" if variant else src
     if key not in _INDEX_CACHE:
-        idx = os.path.join(
-            tempfile.gettempdir(), "iresearch_idx_" + key.replace("/", "_")
-        )
+        prefix = f"iresearch_idx_{variant}_" if variant else "iresearch_idx_"
+        idx = os.path.join(tempfile.gettempdir(), prefix + src.replace("/", "_"))
         build_index(
-            spark, _corpus_from_documents(_docs(spark, sf_dir)), idx, num_segments=4
-        )
-        _INDEX_CACHE[key] = idx
-    return _cached_engine(spark, _INDEX_CACHE[key])
-
-
-def _engine_mf(spark: SparkSession, sf_dir: str):
-    """Two-field index (content + lang): the reference's N-fields-per-doc
-    model (`core/index/segment_writer.hpp:91-119`)."""
-    from iresearch_spark.index.build import build_index
-
-    key = os.path.abspath(sf_dir) + "#mf"
-    if key not in _INDEX_CACHE:
-        idx = os.path.join(
-            tempfile.gettempdir(),
-            "iresearch_idx_mf_" + os.path.abspath(sf_dir).replace("/", "_"),
-        )
-        build_index(
-            spark,
-            _corpus_from_documents(_docs(spark, sf_dir)),
-            idx,
-            num_segments=4,
-            fields=[
-                ("content", "code"),
-                ("lang", "code"),
-                ("n_chars", "numeric"),
-                ("repo", "collation"),
-            ],
-        )
-        _INDEX_CACHE[key] = idx
-    return _cached_engine(spark, _INDEX_CACHE[key])
-
-
-def _engine_text(spark: SparkSession, sf_dir: str):
-    """Index under the `text` analyzer (lower -> accent strip -> stopwords
-    -> snowball stem, text_token_stream.cpp order)."""
-    from iresearch_spark.index.build import build_index
-
-    key = os.path.abspath(sf_dir) + "#text"
-    if key not in _INDEX_CACHE:
-        idx = os.path.join(
-            tempfile.gettempdir(),
-            "iresearch_idx_text_" + os.path.abspath(sf_dir).replace("/", "_"),
-        )
-        build_index(
-            spark,
-            _corpus_from_documents(_docs(spark, sf_dir)),
-            idx,
-            num_segments=4,
-            analyzer="text",
+            spark, _corpus_from_documents(_docs(spark, sf_dir)), idx,
+            num_segments=4, **_ENGINE_VARIANTS[variant],
         )
         _INDEX_CACHE[key] = idx
     return _cached_engine(spark, _INDEX_CACHE[key])
@@ -161,12 +141,7 @@ def _engine_text(spark: SparkSession, sf_dir: str):
 
 def _ft(spark: SparkSession, sf_dir: str, filt, k=None, mf=False,
         text=False) -> DataFrame:
-    if mf:
-        eng = _engine_mf(spark, sf_dir)
-    elif text:
-        eng = _engine_text(spark, sf_dir)
-    else:
-        eng = _engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir, "mf" if mf else "text" if text else "")
     res = eng.search(filt, k=k, dtype="float64")
     return res.select(
         F.col("path").cast("int").alias("doc_id"),
@@ -174,54 +149,10 @@ def _ft(spark: SparkSession, sf_dir: str, filt, k=None, mf=False,
     )
 
 
-def _engine_pay(spark: SparkSession, sf_dir: str):
-    """Payload index: per-position user bytes (IndexFeatures::PAY,
-    token_attributes.hpp:67-72) — here the original-case token form."""
-    from iresearch_spark.index.build import build_index
-
-    key = os.path.abspath(sf_dir) + "#pay"
-    if key not in _INDEX_CACHE:
-        idx = os.path.join(
-            tempfile.gettempdir(),
-            "iresearch_idx_pay_" + os.path.abspath(sf_dir).replace("/", "_"),
-        )
-        build_index(
-            spark,
-            _corpus_from_documents(_docs(spark, sf_dir)),
-            idx,
-            num_segments=4,
-            analyzer="code_payload",
-        )
-        _INDEX_CACHE[key] = idx
-    return _cached_engine(spark, _INDEX_CACHE[key])
-
-
-def _engine_offs(spark: SparkSession, sf_dir: str):
-    """Engine over a ``code_offsets`` index: per-position payloads carry the
-    token's original-text char span (stored OFFS on the PAY stream)."""
-    from iresearch_spark.index.build import build_index
-
-    key = os.path.abspath(sf_dir) + "#offs"
-    if key not in _INDEX_CACHE:
-        idx = os.path.join(
-            tempfile.gettempdir(),
-            "iresearch_idx_offs_" + os.path.abspath(sf_dir).replace("/", "_"),
-        )
-        build_index(
-            spark,
-            _corpus_from_documents(_docs(spark, sf_dir)),
-            idx,
-            num_segments=4,
-            analyzer="code_offsets",
-        )
-        _INDEX_CACHE[key] = idx
-    return _cached_engine(spark, _INDEX_CACHE[key])
-
-
 def _ft_payload(spark: SparkSession, sf_dir: str, term: str) -> DataFrame:
     """One row per occurrence of ``term``: (doc_id, pos, payload) where the
     payload is the original-case surface form stored in the pay stream."""
-    eng = _engine_pay(spark, sf_dir)
+    eng = _engine(spark, sf_dir, "pay")
     res = eng.term_payloads(term)
     return res.select(
         F.col("path").cast("int").alias("doc_id"),
@@ -794,7 +725,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # char spans read back from the pay stream and unpacked JVM-side.
     # Promoted INTO the window at r5 alongside ft_stored_fields.
     def ft_stored_offsets(s, d):
-        eng = _engine_offs(s, d)
+        eng = _engine(s, d, "offs")
         res = eng.term_offsets("spark")
         return res.select(
             F.col("path").cast("int").alias("doc_id"),

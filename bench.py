@@ -159,11 +159,7 @@ def run_merge_bench(cpus: int) -> dict:
     the reference's consolidation driver). A second timed merge re-runs the
     largest fan-in with ``shard_docs``+``hot_term_bytes`` low enough that
     the hot-term solo buckets AND the giant-term shard escalation both
-    engage, and asserts they did (the plan-audit note). Both codecs run
-    in ONE session (varint first, packed second) so their tier/full-merge
-    times are same-host-window comparable — the codec decode+re-encode is
-    the merge inner loop, and cross-session readings of it differ by the
-    documented window noise alone."""
+    engage, and asserts they did (the plan-audit note)."""
     import pyspark.sql.functions as F
 
     from iresearch_spark.corpus import generate_corpus
@@ -175,19 +171,18 @@ def run_merge_bench(cpus: int) -> dict:
     n_docs = int(os.environ.get("SPARK_GRAFT_MERGE_DOCS", "200000"))
     n_segments = int(os.environ.get("SPARK_GRAFT_MERGE_SEGMENTS", "64"))
     spark = get_spark("iresearch_merge_bench", cores=cpus)
-
     src = _fresh_dir("merge_src")
-    generate_corpus(spark, n_docs, num_partitions=4 * cpus).write.parquet(src)
-    corpus = spark.read.parquet(src)
+    try:
+        generate_corpus(spark, n_docs, num_partitions=4 * cpus).write.parquet(src)
+        corpus = spark.read.parquet(src)
 
-    def fresh_index(tag: str, codec: str) -> str:
-        d = _fresh_dir(f"merge_{tag}_{codec}")
-        build_index(spark, corpus, d, num_segments=n_segments, codec=codec)
-        return d
+        def fresh_index(tag: str) -> str:
+            d = _fresh_dir(f"merge_{tag}")
+            build_index(spark, corpus, d, num_segments=n_segments)
+            return d
 
-    def one_codec(codec: str) -> dict:
         # ---- tier-policy consolidation to quiescence (timed)
-        d = fresh_index("tier", codec)
+        d = fresh_index("tier")
         man0 = read_manifest(d)
         bytes_in = sum(s["postings_bytes"] for s in man0.segments)
         t0 = time.perf_counter()
@@ -195,7 +190,12 @@ def run_merge_bench(cpus: int) -> dict:
         tier_sec = round(time.perf_counter() - t0, 4)
         man1 = read_manifest(d)
         docs_merged = sum(r["docs"] for r in recs)
-        leg = {
+        out = {
+            "metric": "merge_docs_per_sec",
+            "value": round(docs_merged / tier_sec, 2) if tier_sec else 0.0,
+            "unit": "docs/sec",
+            "docs": n_docs,
+            "cpus": cpus,
             "segments_in": len(man0.segments),
             "segments_out": len(man1.segments),
             "rounds": len(recs),
@@ -206,9 +206,6 @@ def run_merge_bench(cpus: int) -> dict:
                 s["postings_bytes"] for s in man1.segments
             ),
             "tier_consolidate_sec": tier_sec,
-            "tier_docs_per_sec": (
-                round(docs_merged / tier_sec, 2) if tier_sec else 0.0
-            ),
         }
         shutil.rmtree(d, ignore_errors=True)
 
@@ -216,9 +213,8 @@ def run_merge_bench(cpus: int) -> dict:
         # (plan audit: HOT_TERMS postings at 200k docs are ~all-docs lists,
         # so a 1 MB hot threshold puts them in solo buckets and shard_docs
         # splits their merged blobs into disjoint doc-range rows)
-        d = fresh_index("sharded", codec)
-        man0 = read_manifest(d)
-        seg_ids = [s["segment_id"] for s in man0.segments]
+        d = fresh_index("sharded")
+        seg_ids = [s["segment_id"] for s in read_manifest(d).segments]
         t0 = time.perf_counter()
         rec = merge_segments(
             spark, d, seg_ids, hot_term_bytes=1 << 20,
@@ -233,113 +229,16 @@ def run_merge_bench(cpus: int) -> dict:
             F.countDistinct("field", "term").alias("terms"),
         ).collect()[0]
         sharded_terms = int(agg["rows"]) - int(agg["terms"])
+        shutil.rmtree(d, ignore_errors=True)
         if sharded_terms <= 0:
             raise RuntimeError("giant-term shard escalation did not engage")
-        leg.update(
+        out.update(
             {
                 "full_merge_fan_in": rec["fan_in"],
                 "full_merge_sec": shard_sec,
                 "full_merge_docs_per_sec": round(rec["docs"] / shard_sec, 2),
                 "sharded_terms": sharded_terms,
             }
-        )
-        shutil.rmtree(d, ignore_errors=True)
-        return leg
-
-    legs = {codec: one_codec(codec) for codec in ("varint", "packed")}
-    out = {
-        "metric": "merge_docs_per_sec",
-        "value": legs["packed"]["tier_docs_per_sec"],
-        "unit": "docs/sec",
-        "docs": n_docs,
-        "cpus": cpus,
-        **legs,
-        "packed_over_varint_tier": round(
-            legs["packed"]["tier_consolidate_sec"]
-            / legs["varint"]["tier_consolidate_sec"],
-            4,
-        ),
-        "packed_over_varint_full": round(
-            legs["packed"]["full_merge_sec"]
-            / legs["varint"]["full_merge_sec"],
-            4,
-        ),
-    }
-    shutil.rmtree(src, ignore_errors=True)
-    spark.stop()
-    return out
-
-
-def run_codec_bytes(cpus: int) -> dict:
-    """Bytes-per-doc artifact for the posting-block codecs: the same corpus
-    built under varint and packed; records postings bytes + build time for
-    each (the scan-bytes number that dominates 100 TB wall time). Builds
-    are INTERLEAVED varint/packed/varint/packed with min-of-2 build_sec
-    per codec: sequential legs once read a whole-window shift as a codec
-    effect (packed 47.8 s one session, 66.4 s the next, same code). Bytes
-    are deterministic; the repeat asserts that."""
-    from pyspark.sql import functions as F
-
-    from iresearch_spark.corpus import generate_corpus
-    from iresearch_spark.index.build import build_index
-    from iresearch_spark.session import get_spark
-
-    n_docs = int(os.environ.get("SPARK_GRAFT_CODEC_DOCS", "200000"))
-    spark = get_spark("iresearch_codec_bytes", cores=cpus)
-    src = _fresh_dir("codec_src")
-    try:
-        generate_corpus(spark, n_docs, num_partitions=4 * cpus).write.parquet(src)
-        corpus = spark.read.parquet(src)
-        out: dict = {
-            "metric": "postings_bytes_per_doc",
-            "unit": "bytes",
-            "docs": n_docs,
-            "cpus": cpus,
-        }
-        # untimed warm-up build (JVM/JIT, first corpus scan), so the first
-        # timed leg does not pay a cost the other codec's legs skip
-        d = _fresh_dir("codec_warmup")
-        build_index(spark, corpus, d, num_segments=cpus)
-        shutil.rmtree(d, ignore_errors=True)
-        for trial in range(2):
-            for codec in ("varint", "packed"):
-                d = _fresh_dir(f"codec_{codec}_{trial}")
-                t0 = time.perf_counter()
-                m = build_index(spark, corpus, d, num_segments=cpus, codec=codec)
-                sec = round(time.perf_counter() - t0, 4)
-                # positions (prox) stream bytes — packed also bit-packs
-                # these; not in the build metrics, so measure off the
-                # segments table
-                pos_bytes = int(
-                    spark.read.parquet(f"{d}/segments")
-                    .agg(F.sum(F.length("positions")))
-                    .collect()[0][0]
-                    or 0
-                )
-                shutil.rmtree(d, ignore_errors=True)
-                if codec in out:  # second trial: keep min time, pin bytes
-                    prev = out[codec]
-                    if (prev["postings_bytes"], prev["positions_bytes"]) != (
-                        m["postings_bytes"], pos_bytes
-                    ):
-                        raise RuntimeError(
-                            f"{codec}: bytes differ between identical builds"
-                        )
-                    sec = min(sec, prev["build_sec"])
-                out[codec] = {
-                    "postings_bytes": m["postings_bytes"],
-                    "bytes_per_doc": round(m["postings_bytes"] / n_docs, 2),
-                    "positions_bytes": pos_bytes,
-                    "positions_bytes_per_doc": round(pos_bytes / n_docs, 2),
-                    "build_sec": sec,
-                    "docs_per_sec": round(n_docs / sec, 2),
-                }
-        out["value"] = out["packed"]["bytes_per_doc"]
-        out["packed_over_varint"] = round(
-            out["packed"]["postings_bytes"] / out["varint"]["postings_bytes"], 4
-        )
-        out["positions_packed_over_varint"] = round(
-            out["packed"]["positions_bytes"] / out["varint"]["positions_bytes"], 4
         )
         return out
     finally:
@@ -603,16 +502,12 @@ def main() -> None:
                     help="record exhaustive-vs-WAND pairs + block skips")
     ap.add_argument("--merge-bench", action="store_true",
                     help="record tier-consolidation + sharded-merge throughput")
-    ap.add_argument("--codec-bytes", action="store_true",
-                    help="record varint-vs-packed postings bytes per doc")
     ap.add_argument("--n", type=int, default=8,
                     help="small cluster size N for --scaling (large = 4N)")
     args = ap.parse_args()
 
     if args.merge_bench:
         out = run_merge_bench(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    elif args.codec_bytes:
-        out = run_codec_bytes(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     elif args.wand_regimes:
         out = run_wand_regimes(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     elif args.scaling_query:

@@ -6,7 +6,7 @@ hierarchical segment consolidation), re-expressed Spark-first:
 
 - index build = one shuffle + grouped Arrow UDF per segment
   (cf. reference `core/index/segment_writer.cpp` flush pipeline)
-- posting lists = delta+varint 128-doc blocks with block-max metadata
+- posting lists = bit-packed delta 128-doc blocks with block-max metadata
   (cf. `core/formats/formats_10.cpp:86-131`)
 - query = driver-side stats prepare + per-segment vectorized score kernel
   (cf. `core/search/filter.hpp:38-99` prepare/execute lifecycle)

@@ -1,39 +1,6 @@
 from iresearch_spark.codec.varint import encode_varints, decode_varints  # noqa: F401
 from iresearch_spark.codec.postings import (  # noqa: F401
-    BLOCK_SIZE,
-    encode_postings,
-    decode_postings,
-    decode_blocks,
-    encode_positions,
-    decode_positions,
-    encode_postings_batch,
-    encode_positions_batch,
-    decode_postings_many,
     encode_payloads_batch,
     encode_span_payloads_batch,
     decode_payloads,
 )
-
-from iresearch_spark.codec import packed as _packed  # noqa: E402
-from iresearch_spark.codec import postings as _varint  # noqa: E402
-
-# Posting-block codec registry (manifest.postings_codec -> module). Both
-# modules expose the same encode/decode surface; the packed decoders
-# require block_offsets (a stored segments column) — varint's ignore it.
-POSTINGS_CODECS = {"varint": _varint, "packed": _packed}
-
-# Default for NEW indexes: bit-packed full blocks (`formats_10.cpp:86-131`
-# SIMD-format analogue) — measured 0.70-0.75x the varint postings bytes on
-# identical corpora with rank-identical results and no kernel-level decode
-# cost (BENCH_codec.json / BASELINE.md round 5). Existing indexes keep the
-# codec recorded in their manifest; resume auto-detects it.
-DEFAULT_CODEC = "packed"
-
-
-def postings_codec(name: str):
-    try:
-        return POSTINGS_CODECS[name]
-    except KeyError:
-        raise ValueError(
-            f"unknown postings codec {name!r}; have {sorted(POSTINGS_CODECS)}"
-        ) from None

@@ -1,38 +1,39 @@
-"""Bit-packed posting-block codec ("packed") — the SIMD-style block format.
+"""Bit-packed posting-block codec — the engine's one postings format.
 
 The reference bit-packs each full 128-doc block at the block's own bit
 width (`core/formats/formats_10.cpp:86-131` via
 `core/utils/bit_packing.cpp`); partial tail blocks fall back to
-byte-granular encoding. This module is the numpy re-expression, API- and
-layout-semantics-compatible with :mod:`iresearch_spark.codec.postings`
-(the "varint" codec):
+byte-granular encoding. This module is the numpy re-expression:
 
-- full 128-doc blocks: ``[w_d:u8][w_f:u8]`` header, then ``16*w_d`` bytes
-  of MSB-first bit-packed doc deltas (128 values at ``w_d`` bits each —
-  always byte-aligned since ``128*w % 8 == 0``), then ``16*w_f`` bytes of
-  freqs. Widths are per-block (`bit_packing.hpp` maxbits analogue).
-- the tail block (< 128 docs) stays delta+varint, laid out exactly like a
-  varint-codec block (``[deltas..., freqs...]``) — one partial block per
-  term never pays a fixed-width header.
-- ``block_offsets`` / ``last_docs`` / ``max_freqs`` / ``min_norms`` keep
-  identical semantics, so the WAND kernel and skip logic are codec-blind.
+- one ``postings`` blob per (segment, field, term). Full 128-doc blocks
+  are a ``[w_d:u8][w_f:u8]`` header, then ``16*w_d`` bytes of MSB-first
+  bit-packed doc deltas (128 values at ``w_d`` bits each — always
+  byte-aligned since ``128*w % 8 == 0``), then ``16*w_f`` bytes of freqs.
+  Widths are per-block (`bit_packing.hpp` maxbits analogue).
+- the tail block (< 128 docs) is delta+LEB128 varint (``[deltas...,
+  freqs...]``, :mod:`iresearch_spark.codec.varint`) — one partial block
+  per term never pays a fixed-width header.
+- ``block_offsets`` (a stored column): byte offset of each block inside
+  the blob. It replaces the reference's skip list
+  (`core/formats/skip_list.hpp`): random access to any block is an O(1)
+  slice. Decoders REQUIRE it.
+- ``last_docs`` / ``max_freqs`` / ``min_norms`` per block: the WAND data
+  of `core/formats/wand_writer.hpp:137-221` (kWandTagMinNorm variant:
+  competitive = max freq + min norm, norm >= freq invariant).
 
-Positions (`encode_positions_batch` / `decode_positions` below) are ALSO
-bit-packed under this codec — the reference packs the prox stream the same
-way (`formats_10.cpp:230-265` pos block write via `bit_packing.cpp`):
+Positions (`encode_positions_batch` / `decode_positions` below) live in a
+separate blob, so queries that don't need them never read the bytes
+(Parquet column pruning == the reference's separate .pos file). They are
+bit-packed the same way (`formats_10.cpp:230-265` pos block write):
 128-OCCURRENCE chunks with a 1-byte width header + ``16*w`` bytes each,
-varint tail. Chunk boundaries follow occurrence count (the reference's pos
-block granularity), not posting blocks, so the stored ``pos_offsets``
-column records per-chunk byte offsets under this codec (decode can also
-header-walk without them — the per-doc-block offsets of the varint codec
-are likewise never read at query time). Payload streams (pay_lens /
-payloads) stay varint+raw in both codecs: lengths are mostly < 128 (one
-varint byte == the packed width budget) and the data buffer is
-incompressible user bytes.
+varint tail. Chunk boundaries follow occurrence count, not posting blocks;
+the stored ``pos_offsets`` column records per-chunk byte offsets (decode
+can also header-walk without them). Payload streams (pay_lens / payloads)
+stay varint+raw (:mod:`iresearch_spark.codec.postings`).
 
-Decode entry points REQUIRE ``block_offsets`` (packed blocks are not
-self-delimiting without reading headers sequentially); every caller has
-them — they are a stored column of the segments table.
+Corrupt input raises ``ValueError``: every full block/chunk header must
+hold widths in 1..32 (doc ids, freqs and positions are int32) and span
+exactly the bytes up to the next block, inside the blob.
 """
 
 from __future__ import annotations
@@ -45,11 +46,8 @@ from iresearch_spark.codec.varint import (
     varint_lengths,
 )
 
-BLOCK_SIZE = 128
-
-
-def _block_starts(n: int) -> np.ndarray:
-    return np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
+BLOCK_SIZE = 128  # cf. core/formats/formats_10.cpp:90
+MAX_WIDTH = 32
 
 
 def _widths(maxvals: np.ndarray) -> np.ndarray:
@@ -73,14 +71,51 @@ def _unpack_group(packed: np.ndarray, w: int) -> np.ndarray:
     return (bits.astype(np.uint64) << shifts).sum(axis=2, dtype=np.uint64)
 
 
+def _check_ranges(offs: np.ndarray, ends: np.ndarray, size: int) -> None:
+    """Every block's byte range ``offs[i]:ends[i]`` lies inside the blob."""
+    if offs.size and (
+        offs.min() < 0 or (ends < offs).any() or ends.max() > size
+    ):
+        raise ValueError("corrupt packed blob: block range outside the blob")
+
+
+def _read_widths(
+    buf: np.ndarray, offs: np.ndarray, ends: np.ndarray, n_hdr: int
+) -> np.ndarray:
+    """(B, n_hdr) header widths of the full blocks/chunks at ``offs``, each
+    of which must span exactly ``offs:ends`` (ranges already checked to lie
+    inside ``buf``)."""
+    if (ends - offs < n_hdr).any():
+        raise ValueError("corrupt packed blob: block shorter than its header")
+    w = buf[offs[:, None] + np.arange(n_hdr)].astype(np.int64)
+    if w.size and (w.min() < 1 or w.max() > MAX_WIDTH):
+        raise ValueError(
+            f"corrupt packed blob: bit width outside 1..{MAX_WIDTH}"
+        )
+    if (offs + n_hdr + 16 * w.sum(axis=1) != ends).any():
+        raise ValueError("corrupt packed blob: block length mismatch")
+    return w
+
+
 def encode_postings_batch(
     docs: np.ndarray,
     freqs: np.ndarray,
     dls: np.ndarray,
     term_lengths: np.ndarray,
 ) -> tuple[list[bytes], list[np.ndarray], list[np.ndarray], list[np.ndarray], list[np.ndarray]]:
-    """Packed twin of ``postings.encode_postings_batch`` — same inputs,
-    same per-term return tuple, different byte layout."""
+    """Encode MANY posting lists in one vectorized pass.
+
+    ``docs``/``freqs``/``dls`` are the term-major concatenation of every
+    term's posting list (doc ids ascending within each term, ``dls`` the
+    per-doc Norm2 value feeding block min_norm); ``term_lengths[t]`` =
+    number of postings of term t. One global encode + slicing replaces a
+    per-term Python loop — this keeps the segment-flush kernel (the
+    analogue of `field_data.cpp:1124-1162` flush) vectorized when a
+    segment has hundreds of thousands of unique terms.
+
+    Returns per-term lists: ``(blobs, block_offsets, last_docs, max_freqs,
+    min_norms)``.
+    """
     nt = np.ascontiguousarray(term_lengths, dtype=np.int64)
     T = nt.size
     N = int(nt.sum())
@@ -193,7 +228,7 @@ def encode_postings_batch(
         # per-tail base correction
         out[tgt] = tail_buf
 
-    # ---- WAND metadata (identical semantics to the varint codec)
+    # ---- WAND metadata
     block_last_posting = block_first_posting + block_sizes - 1
     last_docs_all = docs[block_last_posting]
     min_norms_all = np.minimum.reduceat(dls, block_first_posting)
@@ -226,12 +261,11 @@ def _decode_selected(
     freqs = np.empty(out_n, dtype=np.int64)
     out_starts = np.concatenate([[0], np.cumsum(sizes)])[:-1]
     is_full = sizes == BLOCK_SIZE
+    _check_ranges(offs, ends, buf.size)
 
     fb = np.flatnonzero(is_full)
     if fb.size:
-        wd = buf[offs[fb]].astype(np.int64)
-        wf = buf[offs[fb] + 1].astype(np.int64)
-        dst = out_starts[fb][:, None] + np.arange(BLOCK_SIZE, dtype=np.int64)
+        wd, wf = _read_widths(buf, offs[fb], ends[fb], 2).T
         for w in np.unique(wd):
             grp = fb[wd == w]
             src = (
@@ -245,26 +279,22 @@ def _decode_selected(
             )
         for w in np.unique(wf):
             grp = fb[wf == w]
-            wd_g = buf[offs[grp]].astype(np.int64)
             src = (
                 offs[grp][:, None]
                 + 2
-                + 16 * wd_g[:, None]
+                + 16 * wd[wf == w][:, None]
                 + np.arange(16 * int(w), dtype=np.int64)
             )
             vals = _unpack_group(buf[src], int(w))
             freqs[out_starts[grp][:, None] + np.arange(BLOCK_SIZE)] = (
                 vals.astype(np.int64)
             )
-        del dst
 
     tb = np.flatnonzero(~is_full)
     if tb.size:
         pieces = [buf[offs[b] : ends[b]] for b in tb]
-        tvals = decode_varints(np.concatenate(pieces))
         tsizes = sizes[tb]
-        if tvals.size != int(2 * tsizes.sum()):
-            raise ValueError("packed tail varint stream length mismatch")
+        tvals = decode_varints(np.concatenate(pieces), int(2 * tsizes.sum()))
         sec0 = np.concatenate([[0], np.cumsum(2 * tsizes)])[:-1]
         tout = np.concatenate([[0], np.cumsum(tsizes)])[:-1]
         n_t = int(tsizes.sum())
@@ -279,42 +309,48 @@ def _decode_selected(
     return deltas, freqs
 
 
+def _block_sizes(n: int, offs: np.ndarray) -> np.ndarray:
+    """Posting count of each of an ``n``-doc list's blocks; ``offs`` (its
+    stored block offsets) must have one entry per block."""
+    starts = np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
+    if offs.size != starts.size:
+        raise ValueError(
+            f"corrupt packed blob: {offs.size} block offsets for "
+            f"{starts.size} blocks"
+        )
+    return np.diff(np.append(starts, n))
+
+
 def decode_postings(
-    blob: bytes, docs_count: int, block_offsets: np.ndarray | None = None
+    blob: bytes, docs_count: int, block_offsets: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Full decode -> (doc_ids, freqs). ``block_offsets`` is REQUIRED for
-    the packed codec (kept optional in the signature for call-site symmetry
-    with the varint codec, which ignores it)."""
+    """Full decode of one posting list -> (doc_ids, freqs)."""
     n = int(docs_count)
     if n == 0:
         e = np.empty(0, dtype=np.int64)
         return e, e
-    if block_offsets is None:
-        raise ValueError("packed codec requires block_offsets to decode")
     offs = np.ascontiguousarray(block_offsets, dtype=np.int64)
     buf = np.frombuffer(blob, dtype=np.uint8)
     ends = np.append(offs[1:], len(blob))
-    starts = _block_starts(n)
-    sizes = np.diff(np.append(starts, n))
-    deltas, freqs = _decode_selected(buf, offs, ends, sizes)
+    deltas, freqs = _decode_selected(buf, offs, ends, _block_sizes(n, offs))
     return np.cumsum(deltas), freqs
 
 
 def decode_postings_many(
     blobs: list[bytes],
     docs_counts: np.ndarray,
-    block_offsets_list: list[np.ndarray] | None = None,
+    block_offsets_list: list[np.ndarray],
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Packed twin of ``postings.decode_postings_many`` (merge path): one
-    width-grouped unpack over ALL rows' blocks at once."""
+    """Decode MANY posting blobs (the merge path): one width-grouped unpack
+    over ALL rows' blocks at once. Returns the concatenation ``(doc_ids,
+    freqs)`` across all rows, in row order — the inverse of
+    :func:`encode_postings_batch`."""
     nt = np.ascontiguousarray(docs_counts, dtype=np.int64)
     T = nt.size
     N = int(nt.sum())
     if N == 0:
         e = np.empty(0, dtype=np.int64)
         return e, e
-    if block_offsets_list is None:
-        raise ValueError("packed codec requires block_offsets to decode")
     buf = np.concatenate(
         [np.frombuffer(b, dtype=np.uint8) for b in blobs]
     )
@@ -327,8 +363,7 @@ def decode_postings_many(
         ends_parts.append(
             buf_starts[t] + np.append(o[1:], blob_lens[t])
         )
-        s = _block_starts(int(nt[t]))
-        sizes_parts.append(np.diff(np.append(s, int(nt[t]))))
+        sizes_parts.append(_block_sizes(int(nt[t]), o))
     offs = np.concatenate(offs_parts)
     ends = np.concatenate(ends_parts)
     sizes = np.concatenate(sizes_parts).astype(np.int64)
@@ -343,15 +378,16 @@ def decode_postings_many(
 def encode_positions_batch(
     freqs: np.ndarray, flat_positions: np.ndarray, term_lengths: np.ndarray
 ) -> tuple[list[bytes], list[np.ndarray]]:
-    """Packed twin of ``postings.encode_positions_batch`` — same inputs
-    (term-major / doc-major / position-ascending ``flat_positions``, per-doc
-    counts ``freqs``), same per-term ``(blobs, offsets)`` return shape.
+    """Vectorized positions encoding for many terms at once.
 
-    Delta stream is identical to the varint codec (absolute at each doc
-    start, within-doc deltas otherwise); the bytes differ: per term, full
+    ``flat_positions`` is the term-major / doc-major / position-ascending
+    concatenation of every occurrence position; per-doc counts are
+    ``freqs`` (so counts are not stored). Positions are delta-encoded
+    within each doc (absolute at each doc start). Per term, full
     128-occurrence chunks are ``[w:u8] + 16*w`` bytes of MSB-first packed
-    deltas, the tail (< 128 occurrences) is varint. Returned offsets are
-    per-CHUNK byte offsets (including the tail chunk when present).
+    deltas, the tail (< 128 occurrences) is varint. Returns per-term
+    ``(blobs, offsets)``; offsets are per-CHUNK byte offsets (including the
+    tail chunk when present).
     """
     nt = np.ascontiguousarray(term_lengths, dtype=np.int64)
     T = nt.size
@@ -460,50 +496,11 @@ def encode_positions_batch(
 def decode_positions(
     blob: bytes, freqs: np.ndarray, pos_offsets: np.ndarray | None = None
 ) -> np.ndarray:
-    """Full decode of a packed positions blob -> flat positions (per-doc
-    cumsum'd, same contract as the varint ``decode_positions``). Uses the
-    stored per-chunk ``pos_offsets`` when given and consistent; otherwise
-    header-walks the full chunks (one trivial Python step per 128
-    occurrences)."""
+    """Full decode of one positions blob -> flat positions (per-doc
+    cumsum'd). Uses the stored per-chunk ``pos_offsets`` when given and
+    consistent; otherwise header-walks the full chunks."""
     freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    total = int(freqs.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    buf = np.frombuffer(blob, dtype=np.uint8)
-    n_full = total // BLOCK_SIZE
-    tail = total - n_full * BLOCK_SIZE
-    n_chunks = n_full + (1 if tail else 0)
-    if pos_offsets is not None and len(pos_offsets) == n_chunks:
-        offs = np.ascontiguousarray(pos_offsets, dtype=np.int64)
-        tail_off = int(offs[n_full]) if tail else len(blob)
-        offs = offs[:n_full]
-    else:
-        offs = np.empty(n_full, dtype=np.int64)
-        o = 0
-        for k in range(n_full):
-            offs[k] = o
-            o += 1 + 16 * int(buf[o])
-        tail_off = o
-
-    deltas = np.empty(total, dtype=np.int64)
-    if n_full:
-        wd = buf[offs].astype(np.int64)
-        dst = np.arange(n_full, dtype=np.int64)[:, None] * BLOCK_SIZE + np.arange(
-            BLOCK_SIZE, dtype=np.int64
-        )
-        for w in np.unique(wd):
-            grp = np.flatnonzero(wd == w)
-            src = offs[grp][:, None] + 1 + np.arange(16 * int(w), dtype=np.int64)
-            deltas[dst[grp]] = _unpack_group(buf[src], int(w)).astype(np.int64)
-    if tail:
-        deltas[n_full * BLOCK_SIZE :] = decode_varints(
-            buf[tail_off:], tail
-        ).astype(np.int64)
-
-    doc_starts = np.concatenate([[0], np.cumsum(freqs)])[:-1]
-    cs = np.cumsum(deltas)
-    cs_before = np.concatenate([[0], cs])[doc_starts]
-    return cs - np.repeat(cs_before, freqs)
+    return decode_positions_many([blob], freqs, [freqs.size], [pos_offsets])
 
 
 def decode_positions_many(
@@ -512,9 +509,9 @@ def decode_positions_many(
     counts: np.ndarray,
     offsets=None,
 ) -> np.ndarray:
-    """Cross-row vectorized decode of MANY packed positions blobs — the
-    merge hot path (`merge.py` decodes an entire term bucket at once;
-    a per-row :func:`decode_positions` loop measured 3.2x slower).
+    """Cross-row vectorized decode of MANY positions blobs — the merge hot
+    path (`merge.py` decodes an entire term bucket at once; a per-row
+    decode loop measured 3.2x slower).
 
     - ``blobs``: sequence of per-row blobs; ``None`` rows yield zero
       placeholders (mixed multi-field buckets where only the payload
@@ -545,9 +542,7 @@ def decode_positions_many(
     row_occ_start = occ_cum[post_cum[:-1]]
     row_occ = occ_cum[post_cum[1:]] - row_occ_start
 
-    present = np.fromiter(
-        (b is not None and len(b) > 0 for b in blobs), dtype=bool, count=R
-    )
+    present = np.fromiter((b is not None for b in blobs), dtype=bool, count=R)
     present &= row_occ > 0
     blob_len = np.fromiter(
         (len(blobs[i]) if present[i] else 0 for i in range(R)),
@@ -573,6 +568,7 @@ def decode_positions_many(
     full_rows = np.flatnonzero(n_full > 0)
     if full_rows.size:
         chunk_abs_parts: list[np.ndarray] = []
+        chunk_end_parts: list[np.ndarray] = []
         chunk_dst_parts: list[np.ndarray] = []
         for i in full_rows:
             nf = int(n_full[i])
@@ -588,17 +584,26 @@ def decode_positions_many(
                 o = 0
                 base = int(blob_start[i])
                 for k in range(nf):
+                    if o >= blob_len[i]:
+                        raise ValueError(
+                            "corrupt packed blob: chunk past the blob end"
+                        )
                     offs_row[k] = o
                     o += 1 + 16 * int(buf[base + o])
                 tail_off[i] = o
+            ends_row = np.append(offs_row[1:], tail_off[i])
+            _check_ranges(offs_row, ends_row, int(blob_len[i]))
             chunk_abs_parts.append(blob_start[i] + offs_row)
+            chunk_end_parts.append(blob_start[i] + ends_row)
             chunk_dst_parts.append(
                 row_occ_start[i]
                 + BLOCK_SIZE * np.arange(nf, dtype=np.int64)
             )
         chunk_abs = np.concatenate(chunk_abs_parts)
         chunk_dst = np.concatenate(chunk_dst_parts)
-        wd = buf[chunk_abs].astype(np.int64)
+        wd = _read_widths(
+            buf, chunk_abs, np.concatenate(chunk_end_parts), 1
+        )[:, 0]
         lane = np.arange(BLOCK_SIZE, dtype=np.int64)
         for w in np.unique(wd):
             grp = np.flatnonzero(wd == w)
@@ -610,9 +615,6 @@ def decode_positions_many(
             deltas[chunk_dst[grp][:, None] + lane] = _unpack_group(
                 buf[src], int(w)
             ).astype(np.int64)
-    else:
-        # no full chunks anywhere: every present blob is pure varint
-        tail_off[:] = 0
 
     # ---- tails: gather byte ranges into one stream, decode once
     tail_rows = np.flatnonzero(tail_occ > 0)
@@ -648,7 +650,12 @@ def decode_blocks(
     docs_count: int,
     block_ids: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Packed twin of ``postings.decode_blocks`` (the WAND skip path)."""
+    """Decode only the selected blocks (the WAND skip path).
+
+    Returns ``(doc_ids, freqs, block_of_each_posting)`` for the union of the
+    selected blocks, in ascending doc order; each block's first doc id is
+    rebased on the previous block's ``last_docs`` entry.
+    """
     n = int(docs_count)
     block_ids = np.asarray(block_ids, dtype=np.int64)
     if n == 0 or block_ids.size == 0:
@@ -656,8 +663,7 @@ def decode_blocks(
         return e, e, e
     offs_all = np.ascontiguousarray(block_offsets, dtype=np.int64)
     ends_all = np.append(offs_all[1:], len(blob))
-    starts = _block_starts(n)
-    all_sizes = np.diff(np.append(starts, n))
+    all_sizes = _block_sizes(n, offs_all)
     buf = np.frombuffer(blob, dtype=np.uint8)
     sizes = all_sizes[block_ids]
     deltas, freqs = _decode_selected(

@@ -1,24 +1,14 @@
-"""Posting-list codec: delta + varint, fixed 128-doc blocks, block-max metadata.
+"""Per-position payload streams (IndexFeatures::PAY).
 
-Mirrors the *layout semantics* of the reference postings format
-(`core/formats/formats_10.cpp:86-131`: 128-doc blocks, doc-id deltas, freqs
-alongside, positions in a separate stream) re-expressed for a vectorized batch
-engine:
+The reference stores per-position user bytes in the prox/pay stream as a
+sizes buffer plus a data buffer (`core/formats/formats_10.cpp:230-265`
+``pay_sizes`` / ``pay_buf_``). We keep the same split as two parquet
+columns: ``pay_lens``, a LEB128 varint sizes stream, and ``payloads``, the
+raw concatenated data buffer. Either decodes standalone. Occurrences are in
+the same term-major / doc-major / position-ascending order as the positions
+stream (:func:`iresearch_spark.codec.packed.encode_positions_batch`).
 
-- one ``postings`` binary blob per (segment, field, term): per block, the
-  varint stream ``[doc deltas..., freqs...]``; blocks are independently
-  decodable given the previous block's ``last_doc`` (carried in blockmax).
-- ``block_offsets`` (int array): byte offset of each block inside the blob —
-  this replaces the reference's skip list (`core/formats/skip_list.hpp`):
-  random access to any block is an O(1) slice instead of a skip-pointer walk.
-- ``blockmax`` rows ``(last_doc, max_freq, min_norm)`` per block — the WAND
-  data of `core/formats/wand_writer.hpp:137-221` (kWandTagMinNorm variant:
-  competitive = max freq + min norm, norm >= freq invariant).
-- positions live in a *separate* blob so queries that don't need them never
-  read the bytes (Parquet column pruning == the reference's separate .pos
-  file, `formats_10.cpp:3618-3634`).
-
-Everything is numpy-vectorized; no per-element Python.
+Everything is numpy-vectorized; no per-element Python on the encode side.
 """
 
 from __future__ import annotations
@@ -31,191 +21,6 @@ from iresearch_spark.codec.varint import (
     varint_lengths,
 )
 
-BLOCK_SIZE = 128  # cf. /root/reference/core/formats/formats_10.cpp:90
-
-
-def _block_starts(n: int) -> np.ndarray:
-    return np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
-
-
-def encode_postings(
-    doc_ids: np.ndarray, freqs: np.ndarray, dls: np.ndarray
-) -> tuple[bytes, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Encode one posting list.
-
-    Parameters: sorted unique ``doc_ids`` (>=1), per-doc ``freqs`` (>=1) and
-    per-doc field lengths ``dls`` (the Norm2 value, used for block min_norm).
-
-    Returns ``(blob, block_offsets, last_docs, max_freqs, min_norms)``.
-    """
-    n = int(doc_ids.size)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return b"", e, e, e, e
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    starts = _block_starts(n)
-    nblocks = starts.size
-    sizes = np.diff(np.append(starts, n))
-
-    deltas = np.diff(doc_ids, prepend=np.int64(0))
-    # Interleave per block: [deltas(block0), freqs(block0), deltas(block1), ...]
-    idx = np.arange(n, dtype=np.int64)
-    block_of = idx // BLOCK_SIZE
-    s_b = starts[block_of]
-    within = idx - s_b
-    delta_pos = 2 * s_b + within
-    freq_pos = 2 * s_b + sizes[block_of] + within
-    values = np.empty(2 * n, dtype=np.uint64)
-    values[delta_pos] = deltas.astype(np.uint64)
-    values[freq_pos] = freqs.astype(np.uint64)
-
-    lengths = varint_lengths(values)
-    cum0 = np.concatenate([[0], np.cumsum(lengths)])
-    block_offsets = cum0[2 * starts]
-
-    last_docs = doc_ids[np.append(starts[1:], n) - 1]
-    max_freqs = np.maximum.reduceat(freqs, starts)
-    min_norms = np.minimum.reduceat(
-        np.ascontiguousarray(dls, dtype=np.int64), starts
-    )
-    blob = encode_varints(values)
-    assert nblocks == block_offsets.size
-    return blob, block_offsets, last_docs, max_freqs, min_norms
-
-
-def encode_postings_batch(
-    docs: np.ndarray,
-    freqs: np.ndarray,
-    dls: np.ndarray,
-    term_lengths: np.ndarray,
-) -> tuple[list[bytes], list[np.ndarray], list[np.ndarray], list[np.ndarray], list[np.ndarray]]:
-    """Encode MANY posting lists in one vectorized pass.
-
-    ``docs``/``freqs``/``dls`` are the term-major concatenation of every
-    term's posting list (doc ids ascending within each term);
-    ``term_lengths[t]`` = number of postings of term t. One global varint
-    encode + slicing replaces a per-term Python loop — this is what keeps the
-    segment-flush kernel (the analogue of `field_data.cpp:1124-1162` flush)
-    vectorized when a segment has hundreds of thousands of unique terms.
-
-    Returns per-term lists: ``(blobs, block_offsets, last_docs, max_freqs,
-    min_norms)``.
-    """
-    nt = np.ascontiguousarray(term_lengths, dtype=np.int64)
-    T = nt.size
-    N = int(nt.sum())
-    if N == 0:
-        return [], [], [], [], []
-    docs = np.ascontiguousarray(docs, dtype=np.int64)
-    freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    dls = np.ascontiguousarray(dls, dtype=np.int64)
-
-    term_starts = np.concatenate([[0], np.cumsum(nt)])[:-1]
-    idx = np.arange(N, dtype=np.int64)
-    term_of = np.repeat(np.arange(T, dtype=np.int64), nt)
-    rank_in_term = idx - term_starts[term_of]
-
-    # doc-id deltas, reset at each term start
-    deltas = np.empty(N, dtype=np.int64)
-    deltas[1:] = docs[1:] - docs[:-1]
-    deltas[term_starts] = docs[term_starts]
-
-    # global block enumeration (term-major)
-    block_within = rank_in_term // BLOCK_SIZE
-    blocks_per_term = (nt + BLOCK_SIZE - 1) // BLOCK_SIZE
-    block_term_offsets = np.concatenate([[0], np.cumsum(blocks_per_term)])[:-1]
-    block_id = block_term_offsets[term_of] + block_within
-    total_blocks = int(blocks_per_term.sum())
-    block_sizes = np.bincount(block_id, minlength=total_blocks).astype(np.int64)
-
-    block_start_in_term = BLOCK_SIZE * block_within
-    within_block = rank_in_term - block_start_in_term
-    pos_delta = 2 * term_starts[term_of] + 2 * block_start_in_term + within_block
-    pos_freq = pos_delta + block_sizes[block_id]
-    values = np.empty(2 * N, dtype=np.uint64)
-    values[pos_delta] = deltas.astype(np.uint64)
-    values[pos_freq] = freqs.astype(np.uint64)
-
-    lengths = varint_lengths(values)
-    cum0 = np.concatenate([[0], np.cumsum(lengths)])
-    term_byte_start = cum0[2 * term_starts]
-    term_byte_end = np.append(term_byte_start[1:], cum0[-1])
-
-    # per-block metadata
-    term_of_block = np.repeat(np.arange(T, dtype=np.int64), blocks_per_term)
-    block_within_of_block = (
-        np.arange(total_blocks, dtype=np.int64) - block_term_offsets[term_of_block]
-    )
-    block_first_posting = (
-        term_starts[term_of_block] + BLOCK_SIZE * block_within_of_block
-    )
-    block_first_value = 2 * term_starts[term_of_block] + 2 * BLOCK_SIZE * block_within_of_block
-    block_byte_off = cum0[block_first_value] - term_byte_start[term_of_block]
-    block_last_posting = block_first_posting + block_sizes - 1
-    last_docs_all = docs[block_last_posting]
-    max_freqs_all = np.maximum.reduceat(freqs, block_first_posting)
-    min_norms_all = np.minimum.reduceat(dls, block_first_posting)
-
-    blob_all = encode_varints(values)
-    blobs = [blob_all[term_byte_start[t] : term_byte_end[t]] for t in range(T)]
-    cuts = np.cumsum(blocks_per_term)[:-1]
-    return (
-        blobs,
-        np.split(block_byte_off, cuts),
-        np.split(last_docs_all, cuts),
-        np.split(max_freqs_all, cuts),
-        np.split(min_norms_all, cuts),
-    )
-
-
-def encode_positions_batch(
-    freqs: np.ndarray, flat_positions: np.ndarray, term_lengths: np.ndarray
-) -> tuple[list[bytes], list[np.ndarray]]:
-    """Vectorized positions encoding for many terms at once.
-
-    ``flat_positions`` is the term-major, doc-major concatenation of every
-    occurrence position; per-doc counts are ``freqs``. Returns per-term
-    ``(blobs, block_pos_offsets)``.
-    """
-    nt = np.ascontiguousarray(term_lengths, dtype=np.int64)
-    T = nt.size
-    N = int(nt.sum())
-    if N == 0:
-        return [], []
-    freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    flat = np.ascontiguousarray(flat_positions, dtype=np.int64)
-    total = int(freqs.sum())
-    if flat.size != total:
-        raise ValueError("flat_positions length != sum(freqs)")
-
-    posting_starts = np.concatenate([[0], np.cumsum(freqs)])[:-1]
-    deltas = np.diff(flat, prepend=np.int64(0))
-    deltas[posting_starts] = flat[posting_starts]
-    lengths = varint_lengths(deltas.astype(np.uint64))
-    cum0 = np.concatenate([[0], np.cumsum(lengths)])
-
-    term_starts = np.concatenate([[0], np.cumsum(nt)])[:-1]
-    term_byte_start = cum0[posting_starts[term_starts]]
-    term_byte_end = np.append(term_byte_start[1:], cum0[-1])
-
-    blocks_per_term = (nt + BLOCK_SIZE - 1) // BLOCK_SIZE
-    term_of_block = np.repeat(np.arange(T, dtype=np.int64), blocks_per_term)
-    block_term_offsets = np.concatenate([[0], np.cumsum(blocks_per_term)])[:-1]
-    block_within_of_block = (
-        np.arange(int(blocks_per_term.sum()), dtype=np.int64)
-        - block_term_offsets[term_of_block]
-    )
-    block_first_posting = (
-        term_starts[term_of_block] + BLOCK_SIZE * block_within_of_block
-    )
-    block_byte_off = (
-        cum0[posting_starts[block_first_posting]] - term_byte_start[term_of_block]
-    )
-    blob_all = encode_varints(deltas.astype(np.uint64))
-    blobs = [blob_all[term_byte_start[t] : term_byte_end[t]] for t in range(T)]
-    return blobs, np.split(block_byte_off, np.cumsum(blocks_per_term)[:-1])
-
 
 def encode_payloads_batch(
     freqs: np.ndarray,
@@ -223,12 +28,6 @@ def encode_payloads_batch(
     term_lengths: np.ndarray,
 ) -> tuple[list[bytes], list[bytes]]:
     """Vectorized per-position payload encoding for many terms at once.
-
-    The reference stores per-position user bytes in the prox/pay stream as a
-    sizes buffer plus a data buffer (`core/formats/formats_10.cpp:230-265`
-    ``pay_sizes`` / ``pay_buf_``, written by ``push_payload``); we keep the
-    same split — a varint sizes stream and a raw concatenated data buffer —
-    as two parquet columns so either decodes standalone.
 
     ``flat_payloads``: object array of ``bytes``, one per occurrence, in the
     same term-major / doc-major / position-ascending order as
@@ -327,198 +126,4 @@ def decode_payloads(
     out = np.empty(total, dtype=object)
     for i in range(total):
         out[i] = data_blob[starts[i] : ends[i]]
-    return out
-
-
-def decode_postings(
-    blob: bytes, docs_count: int, block_offsets: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a full posting list -> (doc_ids int64, freqs int64).
-    ``block_offsets`` is accepted for signature symmetry with the packed
-    codec and ignored (the varint stream is self-delimiting)."""
-    n = int(docs_count)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    values = decode_varints(blob, 2 * n)
-    starts = _block_starts(n)
-    sizes = np.diff(np.append(starts, n))
-    idx = np.arange(n, dtype=np.int64)
-    block_of = idx // BLOCK_SIZE
-    s_b = starts[block_of]
-    within = idx - s_b
-    deltas = values[2 * s_b + within].astype(np.int64)
-    freqs = values[2 * s_b + sizes[block_of] + within].astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    return doc_ids, freqs
-
-
-def decode_postings_many(
-    blobs: list[bytes],
-    docs_counts: np.ndarray,
-    block_offsets_list: list[np.ndarray] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode MANY posting blobs in one vectorized pass (merge kernel path).
-
-    Returns the concatenation ``(doc_ids, freqs)`` across all rows, in row
-    order — the inverse of ``encode_postings_batch``. ``block_offsets_list``
-    is accepted for signature symmetry with the packed codec and ignored.
-    """
-    nt = np.ascontiguousarray(docs_counts, dtype=np.int64)
-    T = nt.size
-    N = int(nt.sum())
-    if N == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    values = decode_varints(
-        np.concatenate([np.frombuffer(b, dtype=np.uint8) for b in blobs]), 2 * N
-    )
-    term_starts = np.concatenate([[0], np.cumsum(nt)])[:-1]
-    idx = np.arange(N, dtype=np.int64)
-    term_of = np.repeat(np.arange(T, dtype=np.int64), nt)
-    rank_in_term = idx - term_starts[term_of]
-    block_within = rank_in_term // BLOCK_SIZE
-    blocks_per_term = (nt + BLOCK_SIZE - 1) // BLOCK_SIZE
-    block_term_offsets = np.concatenate([[0], np.cumsum(blocks_per_term)])[:-1]
-    block_id = block_term_offsets[term_of] + block_within
-    block_sizes = np.bincount(
-        block_id, minlength=int(blocks_per_term.sum())
-    ).astype(np.int64)
-    block_start_in_term = BLOCK_SIZE * block_within
-    within_block = rank_in_term - block_start_in_term
-    pos_delta = 2 * term_starts[term_of] + 2 * block_start_in_term + within_block
-    deltas = values[pos_delta].astype(np.int64)
-    freqs = values[pos_delta + block_sizes[block_id]].astype(np.int64)
-    # within-row cumsum (first delta of each row is absolute)
-    cs = np.cumsum(deltas)
-    cs_before = np.concatenate([[0], cs])[term_starts]
-    doc_ids = cs - np.repeat(cs_before, nt)
-    return doc_ids, freqs
-
-
-def decode_blocks(
-    blob: bytes,
-    block_offsets: np.ndarray,
-    last_docs: np.ndarray,
-    docs_count: int,
-    block_ids: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode only the selected blocks (the WAND skip path).
-
-    Returns ``(doc_ids, freqs, block_of_each_posting)`` for the union of the
-    selected blocks, in ascending doc order.
-    """
-    n = int(docs_count)
-    block_ids = np.asarray(block_ids, dtype=np.int64)
-    if n == 0 or block_ids.size == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    starts = _block_starts(n)
-    all_sizes = np.diff(np.append(starts, n))
-    offs = np.asarray(block_offsets, dtype=np.int64)
-    ends = np.append(offs[1:], len(blob))
-
-    buf = np.frombuffer(blob, dtype=np.uint8)
-    pieces = [buf[offs[b] : ends[b]] for b in block_ids]
-    values = decode_varints(np.concatenate(pieces))
-    sizes = all_sizes[block_ids]
-    if values.size != int(2 * sizes.sum()):
-        raise ValueError("selected-block varint stream length mismatch")
-
-    # positions of delta/freq sections within the concatenated value stream
-    sec0 = np.concatenate([[0], np.cumsum(2 * sizes)])[:-1]  # per sel block
-    out_n = int(sizes.sum())
-    out_starts = np.concatenate([[0], np.cumsum(sizes)])[:-1]
-    idx = np.arange(out_n, dtype=np.int64)
-    sel_of = np.repeat(np.arange(block_ids.size, dtype=np.int64), sizes)
-    within = idx - out_starts[sel_of]
-    deltas = values[sec0[sel_of] + within].astype(np.int64)
-    freqs = values[sec0[sel_of] + sizes[sel_of] + within].astype(np.int64)
-
-    bases = np.where(block_ids > 0, last_docs[block_ids - 1], 0).astype(np.int64)
-    cs = np.cumsum(deltas)
-    cs_before = np.concatenate([[0], cs])[out_starts]
-    correction = bases - cs_before
-    doc_ids = cs + np.repeat(correction, sizes)
-    return doc_ids, freqs, block_ids[sel_of]
-
-
-def encode_positions(
-    freqs: np.ndarray, flat_positions: np.ndarray, docs_count: int
-) -> tuple[bytes, np.ndarray]:
-    """Encode the positions stream for one posting list.
-
-    ``flat_positions``: concatenation of each doc's sorted position list; the
-    per-doc count equals ``freqs`` (one position per occurrence), so counts are
-    not stored (recoverable from the doc/freq stream). Positions are
-    delta-encoded within each doc. Returns ``(blob, block_pos_offsets)`` where
-    ``block_pos_offsets[b]`` is the byte offset of doc-block b's section.
-    """
-    n = int(docs_count)
-    if n == 0:
-        return b"", np.empty(0, dtype=np.int64)
-    freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    flat = np.ascontiguousarray(flat_positions, dtype=np.int64)
-    total = int(freqs.sum())
-    if flat.size != total:
-        raise ValueError("flat_positions length != sum(freqs)")
-    doc_starts = np.concatenate([[0], np.cumsum(freqs)])[:-1]
-    deltas = np.diff(flat, prepend=np.int64(0))
-    deltas[doc_starts] = flat[doc_starts]  # absolute at each doc start
-    lengths = varint_lengths(deltas.astype(np.uint64))
-    cum0 = np.concatenate([[0], np.cumsum(lengths)])
-    starts = _block_starts(n)
-    block_pos_offsets = cum0[doc_starts[starts]]
-    return encode_varints(deltas.astype(np.uint64)), block_pos_offsets
-
-
-def decode_positions(
-    blob: bytes, freqs: np.ndarray, pos_offsets: np.ndarray | None = None
-) -> np.ndarray:
-    """Full decode of a positions blob -> flat positions (per-doc cumsum'd).
-    ``pos_offsets`` is accepted for signature symmetry with the packed codec
-    and ignored (the varint stream is self-delimiting)."""
-    freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    total = int(freqs.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    deltas = decode_varints(blob, total).astype(np.int64)
-    doc_starts = np.concatenate([[0], np.cumsum(freqs)])[:-1]
-    cs = np.cumsum(deltas)
-    # first delta of every doc is absolute, so within-doc cumsum of deltas is
-    # the absolute position; subtract the running sum carried over from the
-    # previous doc
-    cs_before = np.concatenate([[0], cs])[doc_starts]
-    return cs - np.repeat(cs_before, freqs)
-
-
-def decode_positions_many(
-    blobs,
-    freqs: np.ndarray,
-    counts: np.ndarray,
-    offsets=None,
-) -> np.ndarray:
-    """Decode MANY varint positions blobs in one call (packed-codec twin,
-    the merge hot path). Varint streams are self-delimiting, so present
-    rows concatenate into one decodable stream; ``None`` rows yield zero
-    placeholders. ``counts`` is the per-row posting count over the flat
-    row-major ``freqs``; ``offsets`` is ignored (signature symmetry)."""
-    R = len(blobs)
-    counts = np.ascontiguousarray(counts, dtype=np.int64)
-    freqs = np.ascontiguousarray(freqs, dtype=np.int64)
-    present = np.fromiter(
-        (b is not None and len(b) > 0 for b in blobs), dtype=bool, count=R
-    )
-    if present.all():
-        return decode_positions(b"".join(blobs), freqs)
-    total = int(freqs.sum())
-    out = np.zeros(total, dtype=np.int64)
-    if not present.any():
-        return out
-    post_mask = np.repeat(present, counts)
-    occ_mask = np.repeat(post_mask, freqs)
-    out[occ_mask] = decode_positions(
-        b"".join(blobs[i] for i in np.flatnonzero(present)),
-        freqs[post_mask],
-    )
     return out

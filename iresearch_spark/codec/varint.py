@@ -48,7 +48,11 @@ def decode_varints(buf: bytes | np.ndarray, count: int | None = None) -> np.ndar
     """
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     if b.size == 0:
+        if count:
+            raise ValueError(f"empty varint stream, expected {count} values")
         return np.empty(0, dtype=np.uint64)
+    if b[-1] & 0x80:
+        raise ValueError("varint stream ends inside a value")
     is_last = (b & 0x80) == 0
     ends = np.flatnonzero(is_last)
     n = ends.size

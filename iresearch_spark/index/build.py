@@ -10,8 +10,9 @@ Spark-first reading of the reference indexing dataflow
   via ``row_number() over (partition by segment order by repo, path, commit)``.
 - one grouped Arrow UDF per segment = the tokenize→invert→flush pipeline
   (`field_data::invert` :985-1080 + flush :1124-1162), fully numpy-vectorized,
-  emitting one row per term with delta+varint posting blob, block offsets and
-  block-max (WAND) metadata.
+  emitting one row per term with a bit-packed posting blob
+  (:mod:`iresearch_spark.codec.packed`), block offsets and block-max (WAND)
+  metadata.
 - ``docmeta`` table = docmap + norms in one: identity, sha256 invariant,
   Norm2 ``dl`` (raw token count, `core/index/norm.hpp:135-142`), computed
   JVM-side with ``regexp_extract_all`` — which also cross-checks the Python
@@ -47,13 +48,16 @@ from iresearch_spark.analysis import (
 )
 from iresearch_spark.codec import (
     encode_payloads_batch,
+    encode_span_payloads_batch,
+)
+from iresearch_spark.codec.packed import (
     encode_positions_batch,
     encode_postings_batch,
-    encode_span_payloads_batch,
 )
 from iresearch_spark.index.manifest import (
     Manifest,
     read_checkpoints,
+    read_manifest,
     write_checkpoint,
     write_manifest,
 )
@@ -185,12 +189,7 @@ HASH_SEGMENTS_SCHEMA = (
 HASH_SEGMENTS_PAY_SCHEMA = HASH_SEGMENTS_SCHEMA + ", pay_lens binary, payloads binary"
 
 
-def _invert_hash_kernel(
-    with_positions: bool,
-    with_spans: bool = False,
-    codec: str = "varint",
-    positions_codec: str | None = None,
-):
+def _invert_hash_kernel(with_positions: bool, with_spans: bool = False):
     """Pure-integer invert: one input row per doc (segment_id, doc_id, dl,
     hs array<long> of per-token hashes) -> one output row per term hash with
     encoded postings. Same math as ``_invert_kernel`` with the term identity
@@ -205,12 +204,6 @@ def _invert_hash_kernel(
 
     schema = HASH_SEGMENTS_PAY_SCHEMA if with_spans else HASH_SEGMENTS_SCHEMA
     cols = [c.split()[0] for c in schema.split(", ")]
-    from iresearch_spark.codec import postings_codec
-
-    encode_doc_blocks = postings_codec(codec).encode_postings_batch
-    encode_pos_blocks = postings_codec(
-        positions_codec or codec
-    ).encode_positions_batch
 
     def invert(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -262,7 +255,7 @@ def _invert_hash_kernel(
         tstarts = np.flatnonzero(term_start_mask)
         term_lengths = np.diff(np.append(tstarts, pstarts.size))
 
-        blobs, offs, lasts, maxf, minn = encode_doc_blocks(
+        blobs, offs, lasts, maxf, minn = encode_postings_batch(
             p_docs, freqs, p_dls, term_lengths
         )
         total_tf = np.add.reduceat(freqs, tstarts)
@@ -279,7 +272,7 @@ def _invert_hash_kernel(
             "min_norms": minn,
         }
         if with_positions or with_spans:
-            pblobs, poffs = encode_pos_blocks(freqs, sp, term_lengths)
+            pblobs, poffs = encode_positions_batch(freqs, sp, term_lengths)
             out["positions"] = pblobs
             out["pos_offsets"] = poffs
         else:
@@ -305,8 +298,6 @@ def make_seg_builder(
     verify_dictionary: bool = True,
     out_partitions: int | None = None,
     column: str | None = None,
-    codec: str = "varint",
-    positions_codec: str | None = None,
 ):
     """Returns seg_builder(sub) -> segments DataFrame (SEGMENTS_SCHEMA).
 
@@ -326,10 +317,7 @@ def make_seg_builder(
     )
     use_jvm = jvm_ok and (not with_payloads or with_spans)
     if not use_jvm:
-        invert = _invert_kernel(
-            analyzer, field, with_positions, with_payloads, codec,
-            positions_codec=positions_codec,
-        )
+        invert = _invert_kernel(analyzer, field, with_positions, with_payloads)
         schema = SEGMENTS_PAY_SCHEMA if with_payloads else SEGMENTS_SCHEMA
 
         def build_py(sub: DataFrame) -> DataFrame:
@@ -343,10 +331,7 @@ def make_seg_builder(
 
         return build_py
 
-    invert_h = _invert_hash_kernel(
-        with_positions, with_spans=with_spans, codec=codec,
-        positions_codec=positions_codec,
-    )
+    invert_h = _invert_hash_kernel(with_positions, with_spans=with_spans)
     kernel_schema = (
         HASH_SEGMENTS_PAY_SCHEMA if with_spans else HASH_SEGMENTS_SCHEMA
     )
@@ -446,8 +431,7 @@ def make_seg_builder(
 
 def _invert_kernel(
     analyzer_name: str, field: str, with_positions: bool,
-    with_payloads: bool = False, codec: str = "varint",
-    positions_codec: str | None = None,
+    with_payloads: bool = False,
 ):
     """``with_payloads``: the analyzer is a payload analyzer (tokens + per-
     position user bytes, token_attributes.hpp:67-72); positions are implied
@@ -459,12 +443,6 @@ def _invert_kernel(
         if with_payloads
         else get_analyzer(analyzer_name)
     )
-    from iresearch_spark.codec import postings_codec
-
-    encode_doc_blocks = postings_codec(codec).encode_postings_batch
-    encode_pos_blocks = postings_codec(
-        positions_codec or codec
-    ).encode_positions_batch
 
     def invert(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -520,7 +498,7 @@ def _invert_kernel(
         dl_lookup[doc_ids] = counts
         p_dls = dl_lookup[p_docs]
 
-        blobs, offs, lasts, maxf, minn = encode_doc_blocks(
+        blobs, offs, lasts, maxf, minn = encode_postings_batch(
             p_docs, freqs, p_dls, term_lengths
         )
         total_tf = np.add.reduceat(freqs, tstarts)
@@ -539,7 +517,7 @@ def _invert_kernel(
             "min_norms": minn,
         }
         if with_positions or with_payloads:
-            pblobs, poffs = encode_pos_blocks(freqs, sp, term_lengths)
+            pblobs, poffs = encode_positions_batch(freqs, sp, term_lengths)
             out["positions"] = pblobs
             out["pos_offsets"] = poffs
         else:
@@ -710,7 +688,6 @@ def build_index(
     fields: list[tuple[str, str]] | None = None,
     sort_by: list[str] | None = None,
     commit_payload: bytes | None = None,
-    codec: str | None = None,
 ) -> dict:
     """Build (or resume) the index; returns build metrics.
 
@@ -721,15 +698,10 @@ def build_index(
     ids ascend by these within each segment.
     ``fail_after_waves`` injects a driver-side failure after N committed waves
     (for the resume test, FIXTURES.md F6).
-    ``codec`` = posting-block codec: "packed" (bit-packed full blocks,
-    `formats_10.cpp:86-131` analogue — the default for new indexes) or
-    "varint"; recorded in the manifest, preserved by merge, dispatched on
-    by every decoder. A resume auto-detects the original build's codec
-    from the published manifest and raises if an explicit ``codec``
-    contradicts it (a mixed-codec index would be unreadable); only a
-    build that died before its FIRST commit has no manifest to consult —
-    such a resume of an explicitly non-default-codec build must re-pass
-    the codec.
+    Postings and positions are always written in the bit-packed format
+    (:mod:`iresearch_spark.codec.packed`, `formats_10.cpp:86-131`
+    analogue). A resume refuses, with ``ValueError``, an index whose
+    published manifest records another format.
     """
     import glob
     import os
@@ -737,30 +709,8 @@ def build_index(
 
     from pyspark import StorageLevel
 
-    from iresearch_spark.codec import DEFAULT_CODEC
-    from iresearch_spark.index.manifest import read_manifest
-
-    pos_codec: str | None = None
     if resume:
-        existing = read_manifest(index_dir)
-        if existing is not None:
-            man_codec = getattr(existing, "postings_codec", "varint")
-            if codec is not None and codec != man_codec:
-                raise ValueError(
-                    f"resume with codec={codec!r} but the index was built "
-                    f"with {man_codec!r}; a segment's postings are only "
-                    "readable under the codec that wrote them"
-                )
-            codec = man_codec
-            # resumed segments must encode positions exactly like the
-            # committed ones — an index built before positions gained a
-            # packed encoding records positions_codec="varint" (absent key)
-            # even when its postings are packed
-            pos_codec = getattr(existing, "positions_codec", "varint")
-    if codec is None:
-        codec = DEFAULT_CODEC
-    if pos_codec is None:
-        pos_codec = codec
+        read_manifest(index_dir)  # refuses a legacy-format index
 
     t0 = time.time()
     # One shuffle + in-partition sort assigns segment & doc ids; persist so
@@ -788,8 +738,7 @@ def build_index(
     plan = _plan_waves(num_segments, waves)
     seg_builder = make_seg_builder(
         spark, analyzer, field, with_positions, jvm_tokenize,
-        verify_dictionary, out_partitions=num_segments, codec=codec,
-        positions_codec=pos_codec,
+        verify_dictionary, out_partitions=num_segments,
     )
     dl_expr = make_dl_expr(analyzer, field)
     extra_fields = [
@@ -797,8 +746,7 @@ def build_index(
             name,
             make_seg_builder(
                 spark, az, name, with_positions, jvm_tokenize,
-                verify_dictionary, out_partitions=num_segments, codec=codec,
-                positions_codec=pos_codec,
+                verify_dictionary, out_partitions=num_segments,
             ),
             make_dl_expr(az, name),
         )
@@ -841,8 +789,6 @@ def build_index(
                     if commit_payload is not None
                     else None
                 ),
-                postings_codec=codec,
-                positions_codec=pos_codec,
             ),
         )
         committed_waves += 1

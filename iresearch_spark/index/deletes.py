@@ -80,8 +80,8 @@ def mark_deleted_rows(
         s["deleted_docs"] = int(counts.get(s["segment_id"], 0))
         segs.append(s)
     # replace() carries EVERY manifest attribute forward (a hand-copied
-    # field list silently reset with_payloads/postings_codec on delete
-    # publish, corrupting payload reads / packed decodes)
+    # field list once silently reset with_payloads on delete publish,
+    # corrupting payload reads)
     from dataclasses import replace
 
     write_manifest(index_dir, replace(man, segments=segs))

@@ -34,30 +34,24 @@ def import_index(
 ) -> dict:
     """Import every live segment of ``src_dir`` into ``dst_dir``.
 
-    Indexes must agree on fields/analyzers/positions (the reference demands
-    codec/feature compatibility at Import time). Returns
+    Indexes must agree on fields/analyzers/positions/sort (the reference
+    demands codec/feature compatibility at Import time; both indexes are
+    in the one postings format, or ``read_manifest`` refuses them). Returns
     ``{"imported": K, "mapping": {old_id: new_id}}``.
     """
     src = read_manifest(src_dir)
     dst = read_manifest(dst_dir)
     if src is None or dst is None:
         raise FileNotFoundError("both indexes need a manifest")
-    src_codec = getattr(src, "postings_codec", "varint")
-    dst_codec = getattr(dst, "postings_codec", "varint")
-    src_pos_codec = getattr(src, "positions_codec", "varint")
-    dst_pos_codec = getattr(dst, "positions_codec", "varint")
     if (
         src.field_specs() != dst.field_specs()
         or src.with_positions != dst.with_positions
         or (src.sort or None) != (dst.sort or None)
-        or src_codec != dst_codec
-        or src_pos_codec != dst_pos_codec
     ):
         raise ValueError(
-            "incompatible indexes: fields/analyzers/positions/sort/codec "
-            f"differ ({src.field_specs()}/sort={src.sort}/"
-            f"codec={src_codec}+{src_pos_codec} vs {dst.field_specs()}/"
-            f"sort={dst.sort}/codec={dst_codec}+{dst_pos_codec})"
+            "incompatible indexes: fields/analyzers/positions/sort "
+            f"differ ({src.field_specs()}/sort={src.sort} vs "
+            f"{dst.field_specs()}/sort={dst.sort})"
         )
 
     base = 1 + max((s["segment_id"] for s in dst.segments), default=-1)
@@ -119,8 +113,6 @@ def import_index(
             sort=dst.sort,
             with_payloads=dst.with_payloads,
             commit_payload=dst.commit_payload,
-            postings_codec=dst_codec,
-            positions_codec=dst_pos_codec,
         ),
     )
     return {"imported": len(src_ids), "mapping": mapping}

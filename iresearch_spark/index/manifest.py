@@ -20,6 +20,14 @@ import os
 from dataclasses import dataclass, field
 
 
+# Postings and positions blobs are bit-packed (`iresearch_spark.codec.packed`,
+# the `formats_10.cpp:86-131` SIMD format analogue). Indexes written before
+# the format became the only one may record "varint" or omit these keys;
+# read_manifest refuses them.
+CODEC = "packed"
+CODEC_KEYS = ("postings_codec", "positions_codec")
+
+
 @dataclass
 class Manifest:
     format_version: int
@@ -41,16 +49,6 @@ class Manifest:
     # commit-level user payload (index_writer.cpp:1181-1183 meta payload
     # provider — ArangoDB stores its recovery tick here); base64 of the bytes
     commit_payload: str | None = None
-    # posting-block codec: "varint" (delta+varint) or "packed" (bit-packed
-    # full blocks + varint tail, `formats_10.cpp:86-131` SIMD format
-    # analogue). Decoders dispatch on this; merge preserves it.
-    postings_codec: str = "varint"
-    # positions-stream codec, recorded separately from postings_codec so
-    # indexes written before positions gained a packed encoding (their
-    # manifests lack the key -> "varint") keep decoding correctly; new
-    # builds set it equal to the posting codec (the reference packs the
-    # prox stream with the same bit-packing, `formats_10.cpp:230-265`)
-    positions_codec: str = "varint"
 
     def commit_payload_bytes(self) -> bytes | None:
         if self.commit_payload is None:
@@ -81,10 +79,9 @@ class Manifest:
             payload["with_payloads"] = True
         if self.commit_payload is not None:
             payload["commit_payload"] = self.commit_payload
-        if self.postings_codec != "varint":  # legacy manifests stay stable
-            payload["postings_codec"] = self.postings_codec
-        if self.positions_codec != "varint":
-            payload["positions_codec"] = self.positions_codec
+        # the one postings/positions format (codec.packed); recorded so a
+        # reader can tell it from the retired varint format
+        payload.update(dict.fromkeys(CODEC_KEYS, CODEC))
         return json.dumps(payload, sort_keys=True, separators=(",", ":")) + "\n"
 
 
@@ -175,6 +172,14 @@ def read_manifest(index_dir: str, generation: int | None = None) -> Manifest | N
             return None
     with open(path) as f:
         d = json.load(f)
+    for key in CODEC_KEYS:
+        # an absent key is the legacy default, "varint"
+        recorded = d.get(key, "varint")
+        if recorded != CODEC:
+            raise ValueError(
+                f"index {index_dir} records {key}={recorded!r}; only "
+                f"{CODEC!r} is readable, so rebuild the index"
+            )
     return Manifest(
         format_version=d["format_version"],
         num_segments=d["num_segments"],
@@ -186,8 +191,6 @@ def read_manifest(index_dir: str, generation: int | None = None) -> Manifest | N
         sort=d.get("sort"),
         with_payloads=d.get("with_payloads", False),
         commit_payload=d.get("commit_payload"),
-        postings_codec=d.get("postings_codec", "varint"),
-        positions_codec=d.get("positions_codec", "varint"),
     )
 
 

@@ -13,9 +13,9 @@ The Spark reading of `core/index/merge_writer.cpp` + the tier policy of
   term merge degenerates to an ordered concatenation per term — no heap
   needed. One ``groupBy(field, hash(term) % B)`` shuffle; each bucket kernel
   decodes ALL its posting blobs in one vectorized pass
-  (``decode_postings_many``), shifts doc ids by broadcast base offsets,
-  concatenates per term in segment order, and re-encodes with
-  ``encode_postings_batch`` — no per-term Python.
+  (``packed.decode_postings_many``), shifts doc ids by broadcast base
+  offsets, concatenates per term in segment order, and re-encodes with
+  ``packed.encode_postings_batch`` — no per-term Python.
 
 Skew note (10^12-file scale): bucketing by term hash spreads the dictionary
 uniformly, and terms whose total postings bytes exceed ``hot_term_bytes``
@@ -40,6 +40,7 @@ from iresearch_spark.codec import (
     decode_payloads,
     encode_payloads_batch,
 )
+from iresearch_spark.codec import packed
 from iresearch_spark.index.build import SEGMENTS_SCHEMA
 from iresearch_spark.index.manifest import (
     Manifest,
@@ -182,10 +183,6 @@ def merge_segments(
 
     man = read_manifest(index_dir)
     assert man is not None
-    from iresearch_spark.codec import postings_codec
-
-    codec_mod = postings_codec(getattr(man, "postings_codec", "varint"))
-    pos_mod = postings_codec(getattr(man, "positions_codec", "varint"))
     # public API: normalize — remap base offsets accumulate in iteration
     # order, which MUST be ascending segment_id to match merge_bucket's sort
     seg_ids = sorted({int(s) for s in seg_ids})
@@ -245,7 +242,7 @@ def merge_segments(
         )
         fields_arr = pdf["field"].to_numpy(dtype=object)
         counts = pdf["docs_count"].to_numpy(np.int64)
-        docs, freqs = codec_mod.decode_postings_many(
+        docs, freqs = packed.decode_postings_many(
             list(pdf["postings"]), counts, list(pdf["block_offsets"])
         )
         row_of = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
@@ -330,7 +327,7 @@ def merge_segments(
                     exp_meta.append(mi)
             lengths = np.asarray(exp_lengths, dtype=np.int64)
             meta = np.asarray(exp_meta, dtype=np.int64)
-        blobs, offs, lasts, maxf, minn = codec_mod.encode_postings_batch(
+        blobs, offs, lasts, maxf, minn = packed.encode_postings_batch(
             kept_docs, kept_freqs, kept_dls, lengths
         )
         out = {
@@ -368,12 +365,11 @@ def merge_segments(
         )
         if (with_positions or with_payloads) and has_pos.any():
             # one cross-row vectorized decode of the whole bucket (the
-            # codec's many-row entry point: varint concatenates the
-            # self-delimiting streams; packed width-groups the chunks of
-            # every row at once — a per-row decode loop measured 3.2x
-            # slower). None rows (mixed multi-field buckets) come back as
-            # zero placeholders through the shared permutation.
-            flat_pos = pos_mod.decode_positions_many(
+            # chunks of every row width-grouped at once — a per-row decode
+            # loop measured 3.2x slower). None rows (mixed multi-field
+            # buckets) come back as zero placeholders through the shared
+            # permutation.
+            flat_pos = packed.decode_positions_many(
                 pdf["positions"].tolist(),
                 freqs,
                 counts,
@@ -382,7 +378,7 @@ def merge_segments(
                 else None,
             )
             pos_keep = np.repeat(keep, freqs)
-            pblobs, poffs = pos_mod.encode_positions_batch(
+            pblobs, poffs = packed.encode_positions_batch(
                 kept_freqs, flat_pos[pos_keep], lengths
             )
             # an output term's rows all come from one (field, term) —
@@ -608,8 +604,6 @@ def merge_segments(
             sort=man.sort,
             with_payloads=man.with_payloads,
             commit_payload=man.commit_payload,
-            postings_codec=getattr(man, "postings_codec", "varint"),
-            positions_codec=getattr(man, "positions_codec", "varint"),
         ),
     )
     if cleanup:

@@ -255,11 +255,6 @@ class SearchEngine:
         self.manifest = m
         self._seg_ids = sorted(int(s["segment_id"]) for s in m.segments)
         self.field = m.field_name
-        # posting-block codec every decode in this engine dispatches on
-        self._postings_codec = getattr(m, "postings_codec", "varint")
-        # positions-stream codec (recorded separately: pre-packed-positions
-        # indexes carry packed postings but varint positions)
-        self._positions_codec = getattr(m, "positions_codec", "varint")
         self.field_stats: dict[str, tuple[int, int]] = {}
         for name, _az in m.field_specs():
             if name == m.field_name:
@@ -487,11 +482,9 @@ class SearchEngine:
             )
         import os
 
-        from iresearch_spark.codec import decode_payloads, postings_codec
+        from iresearch_spark.codec import decode_payloads, packed
         from iresearch_spark.index.build import SEGMENTS_PAY_SCHEMA
 
-        cmod = postings_codec(self._postings_codec)
-        pmod = postings_codec(self._positions_codec)
         fld = self._resolve_field(field_name)
         seg = self._seg_filter(
             self.spark.read.schema(SEGMENTS_PAY_SCHEMA)
@@ -512,12 +505,12 @@ class SearchEngine:
                 for r in pdf.itertuples():
                     if r.pay_lens is None:  # field indexed without PAY
                         continue
-                    docs, freqs = cmod.decode_postings(
+                    docs, freqs = packed.decode_postings(
                         r.postings,
                         int(r.docs_count),
                         np.asarray(r.block_offsets, dtype=np.int64),
                     )
-                    pos = pmod.decode_positions(
+                    pos = packed.decode_positions(
                         r.positions,
                         freqs,
                         np.asarray(r.pos_offsets, dtype=np.int64)
@@ -1221,8 +1214,6 @@ class SearchEngine:
                 "scorer": self.scorer,
                 "primary": self.field,
                 "fields": sorted(used_fields),
-                "codec": self._postings_codec,
-                "pos_codec": self._positions_codec,
             },
             needed_terms=needed,
             rest_specs=rest_specs,
@@ -1421,10 +1412,8 @@ def _make_kernel(
     rest_specs = prep.rest_specs
 
     def kernel(left: pd.DataFrame) -> pd.DataFrame:
-        from iresearch_spark.codec import postings_codec
+        from iresearch_spark.codec import packed
 
-        cmod = postings_codec(consts.get("codec", "varint"))
-        pos_mod = postings_codec(consts.get("pos_codec", "varint"))
         dtype = np.float32 if consts["dtype"] == "float32" else np.float64
         scorer = consts["scorer"]
         primary_field = consts["primary"]
@@ -1481,7 +1470,7 @@ def _make_kernel(
             raw_postings and flat_positions so sharded blobs decode once."""
             if key not in shard_cache:
                 shard_cache[key] = [
-                    cmod.decode_postings(
+                    packed.decode_postings(
                         r.postings,
                         int(r.docs_count),
                         np.asarray(r.block_offsets, dtype=np.int64),
@@ -1524,7 +1513,7 @@ def _make_kernel(
                 shards = rows_by_term[key]
                 decs = shard_decodes(key)
                 parts = [
-                    pos_mod.decode_positions(
+                    packed.decode_positions(
                         r.positions,
                         f_s,
                         np.asarray(r.pos_offsets, dtype=np.int64)
@@ -1946,7 +1935,7 @@ def _make_kernel(
                     if bids.size == 0:
                         continue
                     diag["blocks_decoded"] += int(bids.size)
-                    d, f_, _ = cmod.decode_blocks(
+                    d, f_, _ = packed.decode_blocks(
                         r.postings,
                         np.asarray(r.block_offsets, dtype=np.int64),
                         np.asarray(r.last_docs, dtype=np.int64),

@@ -59,7 +59,6 @@ class IncrementalIndexer:
         analyzer: str = "code",
         with_positions: bool = True,
         retain_generations: int | None = None,
-        codec: str | None = None,
     ):
         self.spark = spark
         self.index_dir = index_dir
@@ -67,24 +66,7 @@ class IncrementalIndexer:
         self.field = field
         self.analyzer = analyzer
         self.with_positions = with_positions
-        # posting-block codec: new batches must encode exactly like the
-        # index they append to; default to the existing manifest's codec
-        from iresearch_spark.codec import DEFAULT_CODEC
-
-        existing = read_manifest(index_dir)
-        self.codec = codec or (
-            getattr(existing, "postings_codec", "varint")
-            if existing is not None
-            else DEFAULT_CODEC
-        )
-        # appended batches must encode positions exactly like the index
-        # they join (an older index may pair packed postings with varint
-        # positions — its manifest lacks the positions_codec key)
-        self.pos_codec = (
-            getattr(existing, "positions_codec", "varint")
-            if existing is not None
-            else self.codec
-        )
+        read_manifest(index_dir)  # refuses a legacy-format index up front
         # a per-micro-batch publisher is the one writer that accumulates
         # generations without bound; set a rolling window (e.g. 64) to
         # prune old snapshot files each publish. OPT-IN (default None =
@@ -93,8 +75,7 @@ class IncrementalIndexer:
         self.retain_generations = retain_generations
         self._seg_builder = make_seg_builder(
             spark, analyzer, field, with_positions,
-            out_partitions=segments_per_batch, codec=self.codec,
-            positions_codec=self.pos_codec,
+            out_partitions=segments_per_batch,
         )
 
     # ------------------------------------------------------------ manifest
@@ -108,8 +89,6 @@ class IncrementalIndexer:
                 analyzer=self.analyzer,
                 with_positions=self.with_positions,
                 segments=[],
-                postings_codec=self.codec,
-                positions_codec=self.pos_codec,
             )
         return m
 
@@ -167,8 +146,6 @@ class IncrementalIndexer:
                 sort=m.sort,
                 with_payloads=m.with_payloads,
                 commit_payload=m.commit_payload,
-                postings_codec=getattr(m, "postings_codec", "varint"),
-                positions_codec=getattr(m, "positions_codec", "varint"),
             ),
         )
         if self.retain_generations:

@@ -38,9 +38,6 @@ def main() -> int:
     ap.add_argument("--num-segments", type=int, default=32)
     ap.add_argument("--waves", type=int, default=1)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--codec", default="varint",
-                    choices=("varint", "packed"),
-                    help="posting-block codec (packed = bit-packed blocks)")
     ap.add_argument("--query", default=None,
                     help="comma-separated terms for a smoke top-k disjunction")
     ap.add_argument("--k", type=int, default=10)
@@ -75,7 +72,6 @@ def main() -> int:
         num_segments=args.num_segments,
         waves=args.waves,
         resume=args.resume,
-        codec=args.codec,
     )
     out = {"job": "build", **metrics}
 

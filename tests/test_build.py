@@ -62,13 +62,9 @@ def test_manifest_and_metrics(built):
 
 
 def test_postings_match_naive_index(spark, built):
-    from iresearch_spark.codec import postings_codec
-    from iresearch_spark.index.manifest import read_manifest as _rm
+    from iresearch_spark.codec import packed
 
     index_dir, _ = built
-    man = _rm(index_dir)
-    cmod = postings_codec(man.postings_codec)
-    pos_mod = postings_codec(man.positions_codec)
     seg = spark.read.parquet(f"{index_dir}/segments").toPandas()
     expected, dls = _naive_index(make_corpus_pdf(N_DOCS, min_tokens=20, max_tokens=300))
 
@@ -80,7 +76,7 @@ def test_postings_match_naive_index(spark, built):
     for i in sample:
         row = seg.iloc[i]
         exp = expected[(row["segment_id"], row["term"])]
-        docs, freqs = cmod.decode_postings(
+        docs, freqs = packed.decode_postings(
             row["postings"],
             row["docs_count"],
             np.asarray(row["block_offsets"], dtype=np.int64),
@@ -89,7 +85,7 @@ def test_postings_match_naive_index(spark, built):
         assert docs.tolist() == exp_docs
         assert freqs.tolist() == [exp[d][0] for d in exp_docs]
         assert row["total_tf"] == sum(f for f, _ in exp.values())
-        flat_pos = pos_mod.decode_positions(
+        flat_pos = packed.decode_positions(
             row["positions"],
             freqs,
             np.asarray(row["pos_offsets"], dtype=np.int64)

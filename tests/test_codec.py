@@ -1,4 +1,4 @@
-"""Kernel unit tests for the varint / posting-list codec.
+"""Kernel unit tests for the varint primitive and the posting-list codec.
 
 Mirrors the reference's codec round-trip strategy
 (`/root/reference/tests/formats/` formats round-trips), with the F4 fixture
@@ -8,15 +8,14 @@ lengths {1, 2, 127, 128, 129, 10k} plus seeded random lists.
 import numpy as np
 import pytest
 
-from iresearch_spark.codec import (
+from iresearch_spark.codec import decode_varints, encode_varints
+from iresearch_spark.codec.packed import (
     BLOCK_SIZE,
     decode_blocks,
-    decode_postings,
     decode_positions,
-    decode_varints,
-    encode_positions,
-    encode_postings,
-    encode_varints,
+    decode_postings,
+    encode_positions_batch,
+    encode_postings_batch,
 )
 
 RNG = np.random.default_rng(42)
@@ -47,11 +46,17 @@ def _random_posting(n, max_doc=None, seed=0):
     return docs.astype(np.int64), freqs, dls
 
 
+def _encode_one(docs, freqs, dls):
+    """One posting list through the batch encoder -> per-list tuple."""
+    out = encode_postings_batch(docs, freqs, dls, np.asarray([docs.size]))
+    return tuple(x[0] for x in out)
+
+
 @pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 255, 256, 1000, 10_000])
 def test_postings_roundtrip(n):
     docs, freqs, dls = _random_posting(n, seed=n)
-    blob, offs, last_docs, max_freqs, min_norms = encode_postings(docs, freqs, dls)
-    out_docs, out_freqs = decode_postings(blob, n)
+    blob, offs, last_docs, max_freqs, min_norms = _encode_one(docs, freqs, dls)
+    out_docs, out_freqs = decode_postings(blob, n, offs)
     np.testing.assert_array_equal(out_docs, docs)
     np.testing.assert_array_equal(out_freqs, freqs)
     nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
@@ -67,7 +72,7 @@ def test_postings_roundtrip(n):
 @pytest.mark.parametrize("n", [1, 129, 1000, 10_000])
 def test_decode_selected_blocks(n):
     docs, freqs, dls = _random_posting(n, seed=100 + n)
-    blob, offs, last_docs, _, _ = encode_postings(docs, freqs, dls)
+    blob, offs, last_docs, _, _ = _encode_one(docs, freqs, dls)
     nblocks = offs.size
     rng = np.random.default_rng(7)
     for trial in range(4):
@@ -87,10 +92,11 @@ def test_positions_roundtrip(n):
     flat = np.concatenate(
         [np.sort(rng.choice(1000, size=f, replace=False)) for f in freqs]
     ).astype(np.int64)
-    blob, pos_offs = encode_positions(freqs, flat, n)
-    out = decode_positions(blob, freqs)
-    np.testing.assert_array_equal(out, flat)
-    assert pos_offs.size == (n + BLOCK_SIZE - 1) // BLOCK_SIZE
+    blobs, pos_offs = encode_positions_batch(freqs, flat, np.asarray([n]))
+    np.testing.assert_array_equal(decode_positions(blobs[0], freqs, pos_offs[0]), flat)
+    np.testing.assert_array_equal(decode_positions(blobs[0], freqs), flat)
+    # one offset per 128-occurrence chunk, the varint tail included
+    assert pos_offs[0].size == (int(freqs.sum()) + BLOCK_SIZE - 1) // BLOCK_SIZE
 
 
 def test_singleton_posting():
@@ -98,48 +104,7 @@ def test_singleton_posting():
     docs = np.array([42], dtype=np.int64)
     freqs = np.array([3], dtype=np.int64)
     dls = np.array([10], dtype=np.int64)
-    blob, offs, last_docs, max_freqs, min_norms = encode_postings(docs, freqs, dls)
-    d, f = decode_postings(blob, 1)
+    blob, offs, last_docs, max_freqs, min_norms = _encode_one(docs, freqs, dls)
+    d, f = decode_postings(blob, 1, offs)
     assert d.tolist() == [42] and f.tolist() == [3]
     assert last_docs.tolist() == [42] and max_freqs.tolist() == [3]
-
-
-def test_batch_encode_matches_single():
-    from iresearch_spark.codec import encode_postings_batch, encode_positions_batch
-
-    rng = np.random.default_rng(11)
-    term_lengths = np.array([1, 2, 127, 128, 129, 300, 1, 1000])
-    docs_l, freqs_l, dls_l, pos_l = [], [], [], []
-    for i, n in enumerate(term_lengths):
-        d, f, dl = _random_posting(int(n), seed=500 + i)
-        docs_l.append(d)
-        freqs_l.append(f)
-        dls_l.append(dl)
-        pos_l.append(
-            np.concatenate(
-                [np.sort(rng.choice(5000, size=ff, replace=False)) for ff in f]
-            )
-        )
-    docs = np.concatenate(docs_l)
-    freqs = np.concatenate(freqs_l)
-    dls = np.concatenate(dls_l)
-    flat_pos = np.concatenate(pos_l)
-
-    blobs, offs, lasts, maxf, minn = encode_postings_batch(docs, freqs, dls, term_lengths)
-    pblobs, poffs = encode_positions_batch(freqs, flat_pos, term_lengths)
-    assert len(blobs) == len(term_lengths)
-    for t, n in enumerate(term_lengths):
-        eb, eo, el, emf, emn = encode_postings(docs_l[t], freqs_l[t], dls_l[t])
-        assert blobs[t] == eb
-        np.testing.assert_array_equal(offs[t], eo)
-        np.testing.assert_array_equal(lasts[t], el)
-        np.testing.assert_array_equal(maxf[t], emf)
-        np.testing.assert_array_equal(minn[t], emn)
-        epb, epo = encode_positions(freqs_l[t], pos_l[t], int(n))
-        assert pblobs[t] == epb
-        np.testing.assert_array_equal(poffs[t], epo)
-        # and decode round-trips
-        dd, df_ = decode_postings(blobs[t], int(n))
-        np.testing.assert_array_equal(dd, docs_l[t])
-        np.testing.assert_array_equal(df_, freqs_l[t])
-        np.testing.assert_array_equal(decode_positions(pblobs[t], freqs_l[t]), pos_l[t])

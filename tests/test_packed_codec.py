@@ -1,7 +1,11 @@
 """Bit-packed posting-block codec ("packed", `formats_10.cpp:86-131` /
-`utils/bit_packing.cpp` analogue): round-trip equivalence with the varint
-codec at the array level, end-to-end rank identity at the engine level,
-merge/codec persistence, and the bytes win on dense postings."""
+`utils/bit_packing.cpp` analogue): array-level round trips against the
+input lists, refusal of corrupt blobs, end-to-end rank identity against the
+naive oracle, merge/manifest persistence, and the bytes win on dense
+postings."""
+
+import json
+import os
 
 import numpy as np
 import pytest
@@ -9,23 +13,30 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from iresearch_spark.codec import packed as P
-from iresearch_spark.codec import postings as V
 from iresearch_spark.index import build_index
 
 SCHEMA = (
     "repo string, path string, commit string, lang string, content string"
 )
+N_DOCS = 600
+N_SEGMENTS = 4
+
+
+def _manifest_codecs(d: str) -> tuple[str, str]:
+    with open(os.path.join(d, "manifest.json")) as f:
+        m = json.load(f)
+    return m.get("postings_codec"), m.get("positions_codec")
 
 
 # ------------------------------------------------------------- array level
 
 
 @st.composite
-def posting_lists(draw):
+def posting_lists(draw, min_len=1):
     T = draw(st.integers(1, 6))
     lengths, docs, freqs, dls = [], [], [], []
     for _ in range(T):
-        n = draw(st.integers(1, 400))
+        n = draw(st.integers(min_len, 400))
         gaps = draw(
             st.lists(
                 st.integers(1, 1 << 20), min_size=n, max_size=n
@@ -54,42 +65,73 @@ def posting_lists(draw):
 
 @settings(max_examples=40, deadline=None)
 @given(posting_lists())
-def test_packed_equals_varint_roundtrip(data):
+def test_packed_postings_roundtrip(data):
     docs, freqs, dls, nt = data
-    vb, vo, vl, vmf, vmn = V.encode_postings_batch(docs, freqs, dls, nt)
     pb, po, pl, pmf, pmn = P.encode_postings_batch(docs, freqs, dls, nt)
+    ts = np.concatenate([[0], np.cumsum(nt)])
     for t in range(nt.size):
-        # identical block metadata (WAND data is codec-independent)
-        assert np.array_equal(vl[t], pl[t])
-        assert np.array_equal(vmf[t], pmf[t])
-        assert np.array_equal(vmn[t], pmn[t])
-        d1, f1 = V.decode_postings(vb[t], int(nt[t]))
-        d2, f2 = P.decode_postings(pb[t], int(nt[t]), po[t])
-        assert np.array_equal(d1, d2) and np.array_equal(f1, f2)
-        # selected-block decode parity on a pseudo-random block subset
+        n = int(nt[t])
+        d_t, f_t, dl_t = (a[ts[t] : ts[t + 1]] for a in (docs, freqs, dls))
+        # block metadata (the WAND data): per 128-posting block
+        starts = np.arange(0, n, P.BLOCK_SIZE)
+        ends = np.minimum(starts + P.BLOCK_SIZE, n)
+        assert np.array_equal(pl[t], d_t[ends - 1])
+        assert np.array_equal(pmf[t], np.maximum.reduceat(f_t, starts))
+        assert np.array_equal(pmn[t], np.minimum.reduceat(dl_t, starts))
+        d2, f2 = P.decode_postings(pb[t], n, po[t])
+        assert np.array_equal(d2, d_t) and np.array_equal(f2, f_t)
+        # selected-block decode on a pseudo-random block subset
         nb = len(po[t])
         sel = np.unique(np.arange(nb)[:: max(1, nb // 3)])
-        a = P.decode_blocks(pb[t], po[t], pl[t], int(nt[t]), sel)
-        b = V.decode_blocks(vb[t], vo[t], vl[t], int(nt[t]), sel)
-        for x, y in zip(a, b):
-            assert np.array_equal(x, y)
-    dm_v = V.decode_postings_many(vb, nt)
-    dm_p = P.decode_postings_many(pb, nt, list(po))
-    assert np.array_equal(dm_v[0], dm_p[0])
-    assert np.array_equal(dm_v[1], dm_p[1])
+        sd, sf, sb = P.decode_blocks(pb[t], po[t], pl[t], n, sel)
+        mask = np.isin(np.arange(n) // P.BLOCK_SIZE, sel)
+        assert np.array_equal(sd, d_t[mask])
+        assert np.array_equal(sf, f_t[mask])
+        assert np.array_equal(sb, (np.arange(n) // P.BLOCK_SIZE)[mask])
+    dm, fm = P.decode_postings_many(pb, nt, list(po))
+    assert np.array_equal(dm, docs) and np.array_equal(fm, freqs)
+
+
+@settings(max_examples=40, deadline=None)
+@given(posting_lists(min_len=P.BLOCK_SIZE), st.data())
+def test_corrupt_postings_raise_value_error(data, draw):
+    """A zero or >32 bit width in a full block's header, or a truncated
+    blob, raises ValueError from the full decoders — never IndexError,
+    never arrays."""
+    docs, freqs, dls, nt = data
+    pb, po, *_ = P.encode_postings_batch(docs, freqs, dls, nt)
+    t = draw.draw(st.integers(0, nt.size - 1))
+    n, blob = int(nt[t]), bytearray(pb[t])
+    kind = draw.draw(st.sampled_from(["zero", "wide", "truncate"]))
+    if kind == "truncate":
+        blob = blob[: draw.draw(st.integers(0, len(blob) - 1))]
+    else:
+        full = n // P.BLOCK_SIZE  # blocks 0..full-1 carry width headers
+        b = draw.draw(st.integers(0, full - 1))
+        hdr = int(po[t][b]) + draw.draw(st.integers(0, 1))  # doc/freq width
+        blob[hdr] = 0 if kind == "zero" else draw.draw(st.integers(33, 255))
+    blob = bytes(blob)
+    with pytest.raises(ValueError, match="corrupt|varint"):
+        P.decode_postings(blob, n, po[t])
+    rows = list(pb)
+    rows[t] = blob
+    with pytest.raises(ValueError, match="corrupt|varint"):
+        P.decode_postings_many(rows, nt, list(po))
 
 
 def test_packed_beats_varint_on_dense_blocks():
     """Dense hot-term postings (delta=1, tiny freqs) are the 100 TB scan
-    case: packed must be a multiple smaller than byte-granular varint."""
+    case. Byte-granular varint spends at least one byte per doc delta and
+    one per freq (2 bytes per posting); packed spends 1 + 2 bits per
+    posting plus a 2-byte header per 128-doc block."""
     n = 128 * 64
     docs = np.arange(1, n + 1, dtype=np.int64)
     freqs = np.full(n, 2, dtype=np.int64)
     dls = np.full(n, 50, dtype=np.int64)
     nt = np.asarray([n], dtype=np.int64)
-    vb, *_ = V.encode_postings_batch(docs, freqs, dls, nt)
     pb, *_ = P.encode_postings_batch(docs, freqs, dls, nt)
-    assert len(pb[0]) < 0.35 * len(vb[0]), (len(pb[0]), len(vb[0]))
+    assert len(pb[0]) == 64 * (2 + 16 * (1 + 2))
+    assert len(pb[0]) < 0.35 * 2 * n
 
 
 # ------------------------------------------------------------ engine level
@@ -97,20 +139,15 @@ def test_packed_beats_varint_on_dense_blocks():
 
 @pytest.fixture(scope="module")
 def corpora(spark, tmp_path_factory):
-    """The same corpus built under both codecs."""
-    from iresearch_spark.corpus import generate_corpus
-    from iresearch_spark.index import build_index
+    """One packed index and the naive oracle over the same corpus."""
+    from iresearch_spark.corpus import generate_corpus, make_corpus_pdf
+    from tests.oracle import OracleEngine
 
-    corpus = generate_corpus(spark, 600, 4)
-    dirs = {}
-    metrics = {}
-    for codec in ("varint", "packed"):
-        d = str(tmp_path_factory.mktemp(f"idx_{codec}"))
-        metrics[codec] = build_index(
-            spark, corpus, d, num_segments=4, codec=codec
-        )
-        dirs[codec] = d
-    return dirs, metrics
+    d = str(tmp_path_factory.mktemp("idx_packed"))
+    build_index(
+        spark, generate_corpus(spark, N_DOCS, 4), d, num_segments=N_SEGMENTS
+    )
+    return d, OracleEngine(make_corpus_pdf(N_DOCS), N_SEGMENTS)
 
 
 def _battery():
@@ -126,69 +163,55 @@ def _battery():
     ]
 
 
+def _docs_scores(rows):
+    return [(r[0], r[1], r[2], np.float32(r[3])) for r in rows]
+
+
 def test_packed_engine_rank_identity(spark, corpora):
-    """Every query shape returns IDENTICAL rows (same scores, same order)
-    from the packed index as from the varint index — the codec is invisible
-    above the decode layer."""
+    """Every query shape returns the oracle's rows (same docs, float32
+    scores and order), through WAND and exhaustive evaluation."""
     from iresearch_spark.search import SearchEngine
 
-    dirs, metrics = corpora
-    assert metrics["packed"]["docs"] == metrics["varint"]["docs"]
-    ev = SearchEngine(spark, dirs["varint"])
-    ep = SearchEngine(spark, dirs["packed"])
+    d, oracle = corpora
+    eng = SearchEngine(spark, d)
     for q in _battery():
+        exp = oracle.search(q, k=20)
         for wand in (True, False):
-            rv = [tuple(r) for r in ev.search(q, k=20, wand=wand).collect()]
-            rp = [tuple(r) for r in ep.search(q, k=20, wand=wand).collect()]
-            assert rv == rp, (q, wand)
-    ev.close()
-    ep.close()
+            got = [
+                (r["repo"], r["path"], r["commit"], r["score"],
+                 r["segment_id"], r["doc_id"])
+                for r in eng.search(q, k=20, wand=wand).collect()
+            ]
+            assert _docs_scores(got) == _docs_scores(exp), (q, wand)
+            assert [g[4:] for g in got] == [e[4:] for e in exp], (q, wand)
+    eng.close()
 
 
 def test_packed_survives_merge_and_records_codec(spark, corpora):
-    """Consolidation re-encodes with the manifest's codec and preserves the
-    codec field; post-merge results stay identical to the varint twin."""
+    """Consolidation re-encodes packed and keeps the manifest's format
+    keys; post-merge results still equal the oracle's."""
     from iresearch_spark.index import read_manifest
     from iresearch_spark.index.merge import merge_segments
-    from iresearch_spark.search import SearchEngine, TermF
+    from iresearch_spark.search import SearchEngine
 
-    dirs, _ = corpora
-    man = read_manifest(dirs["packed"])
-    assert man.postings_codec == "packed"
-    seg_ids = [s["segment_id"] for s in man.segments]
-    merge_segments(spark, dirs["packed"], seg_ids)
-    man2 = read_manifest(dirs["packed"])
-    assert man2.postings_codec == "packed"
-    assert len(man2.segments) == 1
-    ev = SearchEngine(spark, dirs["varint"])
-    ep = SearchEngine(spark, dirs["packed"])
+    d, oracle = corpora
+    seg_ids = [s["segment_id"] for s in read_manifest(d).segments]
+    merge_segments(spark, d, seg_ids)
+    assert _manifest_codecs(d) == ("packed", "packed")
+    assert len(read_manifest(d).segments) == 1
+    eng = SearchEngine(spark, d)
     for q in _battery():
-        rv = [
-            (r["repo"], r["path"], r["commit"], r["score"])
-            for r in ev.search(q, k=20).collect()
-        ]
-        rp = [
-            (r["repo"], r["path"], r["commit"], r["score"])
-            for r in ep.search(q, k=20).collect()
-        ]
-        assert rv == rp, q
-    ev.close()
-    ep.close()
-
-
-def test_packed_smaller_on_real_corpus(corpora):
-    _, metrics = corpora
-    assert (
-        metrics["packed"]["postings_bytes"]
-        < metrics["varint"]["postings_bytes"]
-    ), metrics
+        got = [(r["repo"], r["path"], r["commit"], r["score"])
+               for r in eng.search(q, k=20).collect()]
+        assert _docs_scores(got) == _docs_scores(oracle.search(q, k=20)), q
+    eng.close()
 
 
 def test_delete_publish_preserves_manifest_attrs(spark, tmp_path):
     """Regression (found in r5): mark_deleted's manifest rewrite hand-copied
-    a field subset, silently resetting with_payloads / postings_codec — a
-    delete on a packed or payload index then corrupted every later read."""
-    from iresearch_spark.index import build_index, read_manifest
+    a field subset, silently resetting manifest attributes — a delete then
+    corrupted every later read."""
+    from iresearch_spark.index import read_manifest
     from iresearch_spark.index.deletes import mark_deleted
 
     rows = [("r", f"{i:03d}.py", "c", "py", f"alpha beta doc{i}")
@@ -196,86 +219,61 @@ def test_delete_publish_preserves_manifest_attrs(spark, tmp_path):
     d = str(tmp_path / "idx_del_codec")
     build_index(
         spark, spark.createDataFrame(rows, SCHEMA), d, num_segments=2,
-        codec="packed",
+        analyzer="code_payload",
     )
     keys = spark.createDataFrame(
         [("r", "003.py", "c")], "repo string, path string, commit string"
     )
     mark_deleted(spark, d, keys)
-    man = read_manifest(d)
-    assert man.postings_codec == "packed"
+    assert _manifest_codecs(d) == ("packed", "packed")
+    assert read_manifest(d).with_payloads
 
 
 # ------------------------------------------------------- default + resume
 
 
 def test_default_codec_is_packed(spark, tmp_path):
-    """New indexes default to the packed codec (round-5 promotion: 0.70x
-    postings bytes at rank identity, BENCH_codec.json)."""
-    from iresearch_spark.codec import DEFAULT_CODEC
-    from iresearch_spark.index import read_manifest
-
-    assert DEFAULT_CODEC == "packed"
+    """A new index records the packed format for postings and positions
+    (the manifest keys a reader checks before decoding)."""
     rows = [("r", f"{i:03d}.py", "c", "py", f"alpha beta doc{i}")
             for i in range(30)]
     d = str(tmp_path / "idx_default_codec")
     build_index(spark, spark.createDataFrame(rows, SCHEMA), d,
                 num_segments=2)
-    assert read_manifest(d).postings_codec == "packed"
-
-
-def test_resume_autodetects_original_codec(spark, tmp_path):
-    """A resume must keep encoding like the index it resumes: the codec is
-    read from the published manifest, NOT from the (new) default — an
-    explicit-varint build interrupted mid-way and resumed without a codec
-    argument stays varint, byte-identical to an uninterrupted varint
-    build."""
-    from iresearch_spark.corpus import generate_corpus
-    from iresearch_spark.index import read_manifest
-    from iresearch_spark.index.manifest import manifest_path
-
-    corpus = generate_corpus(spark, 160, num_partitions=3)
-    d_full = str(tmp_path / "full_varint")
-    d_resume = str(tmp_path / "resumed_varint")
-    build_index(spark, corpus, d_full, num_segments=4, waves=2,
-                codec="varint")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(spark, corpus, d_resume, num_segments=4, waves=2,
-                    codec="varint", fail_after_waves=1)
-    build_index(spark, corpus, d_resume, num_segments=4, waves=2,
-                resume=True)  # no codec= — auto-detected from the manifest
-    assert read_manifest(d_resume).postings_codec == "varint"
-    with open(manifest_path(d_full)) as f1, \
-            open(manifest_path(d_resume)) as f2:
-        assert f1.read() == f2.read()
+    assert _manifest_codecs(d) == ("packed", "packed")
 
 
 def test_resume_codec_mismatch_raises(spark, tmp_path):
-    """An explicit codec that contradicts the manifest is refused — mixed
-    per-segment codecs inside one index would be unreadable."""
+    """Resuming a build whose published manifest records another postings
+    format (a legacy index: no codec keys) is refused — its segments are
+    unreadable, and mixing formats in one index would be too."""
     from iresearch_spark.corpus import generate_corpus
 
     corpus = generate_corpus(spark, 120, num_partitions=2)
     d = str(tmp_path / "mismatch")
     with pytest.raises(RuntimeError, match="injected failure"):
         build_index(spark, corpus, d, num_segments=4, waves=2,
-                    codec="varint", fail_after_waves=1)
+                    fail_after_waves=1)
+    p = os.path.join(d, "manifest.json")
+    with open(p) as f:
+        m = json.load(f)
+    for key in ("postings_codec", "positions_codec"):
+        m.pop(key)
+    with open(p, "w") as f:
+        json.dump(m, f)
     with pytest.raises(ValueError, match="codec"):
-        build_index(spark, corpus, d, num_segments=4, waves=2,
-                    resume=True, codec="packed")
+        build_index(spark, corpus, d, num_segments=4, waves=2, resume=True)
 
 
 def test_incremental_defaults_to_packed_on_new_index(spark, tmp_path):
-    """A brand-new streaming index picks up the packed default; appended
-    batches keep it (batches must encode exactly like the index they
-    append to)."""
-    from iresearch_spark.index import read_manifest
+    """A brand-new streaming index records the packed format, and appended
+    batches keep it."""
     from iresearch_spark.streaming.incremental import IncrementalIndexer
 
     d = str(tmp_path / "idx_stream_codec")
     ix = IncrementalIndexer(spark, d, segments_per_batch=2)
-    assert ix.codec == "packed"
-    rows = [("r", f"{i:03d}.py", "c", "py", f"gamma delta doc{i}")
-            for i in range(20)]
-    ix.process_batch(spark.createDataFrame(rows, SCHEMA), batch_id=0)
-    assert read_manifest(d).postings_codec == "packed"
+    for batch in range(2):
+        rows = [("r", f"{batch}_{i:03d}.py", "c", "py", f"gamma delta doc{i}")
+                for i in range(20)]
+        ix.process_batch(spark.createDataFrame(rows, SCHEMA), batch_id=batch)
+        assert _manifest_codecs(d) == ("packed", "packed")

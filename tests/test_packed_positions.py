@@ -1,11 +1,12 @@
-"""Bit-packed POSITIONS stream (the packed codec's prox-stream twin,
-`formats_10.cpp:230-265` pos block write via `bit_packing.cpp`):
-round-trip equivalence with the varint positions codec at the array level,
-end-to-end phrase/offsets/payload identity at the engine level, merge +
-manifest persistence, and legacy-manifest compatibility (indexes written
-before positions gained a packed encoding keep decoding as varint)."""
+"""Bit-packed POSITIONS stream (`formats_10.cpp:230-265` pos block write
+via `bit_packing.cpp`): array-level round trips against the input
+positions, refusal of corrupt blobs, end-to-end phrase/offsets/payload
+identity against the naive oracle, merge + manifest persistence, and the
+refusal of legacy manifests (indexes written before packed became the one
+postings format)."""
 
 import json
+import os
 
 import numpy as np
 import pytest
@@ -13,12 +14,26 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from iresearch_spark.codec import packed as P
-from iresearch_spark.codec import postings as V
 from iresearch_spark.index import build_index, read_manifest
 
 SCHEMA = (
     "repo string, path string, commit string, lang string, content string"
 )
+CODEC_KEYS = ("postings_codec", "positions_codec")
+
+
+def _manifest_json(d: str) -> dict:
+    with open(os.path.join(d, "manifest.json")) as f:
+        return json.load(f)
+
+
+def _strip_codec_keys(d: str, keys=CODEC_KEYS) -> None:
+    """Rewrite ``d``'s manifest as a legacy one, without ``keys``."""
+    m = _manifest_json(d)
+    for key in keys:
+        m.pop(key)
+    with open(os.path.join(d, "manifest.json"), "w") as f:
+        json.dump(m, f)
 
 
 # ------------------------------------------------------------- array level
@@ -54,18 +69,51 @@ def position_streams(draw):
 
 @settings(max_examples=40, deadline=None)
 @given(position_streams())
-def test_packed_positions_roundtrip_equals_varint(data):
+def test_packed_positions_roundtrip(data):
     freqs, flat, nt = data
-    vb, _ = V.encode_positions_batch(freqs, flat, nt)
     pb, poffs = P.encode_positions_batch(freqs, flat, nt)
     ts = np.concatenate([[0], np.cumsum(nt)])[:-1]
+    occ = np.concatenate([[0], np.cumsum(freqs)])
     for t in range(nt.size):
         f_t = freqs[ts[t] : ts[t] + nt[t]]
-        dv = V.decode_positions(vb[t], f_t)
-        # packed decodes identically with stored chunk offsets AND by
-        # header-walking without them
-        assert np.array_equal(dv, P.decode_positions(pb[t], f_t, poffs[t]))
-        assert np.array_equal(dv, P.decode_positions(pb[t], f_t))
+        exp = flat[occ[ts[t]] : occ[ts[t] + nt[t]]]
+        # decodes with stored chunk offsets AND by header-walking
+        assert np.array_equal(exp, P.decode_positions(pb[t], f_t, poffs[t]))
+        assert np.array_equal(exp, P.decode_positions(pb[t], f_t))
+
+
+@settings(max_examples=40, deadline=None)
+@given(position_streams(), st.data())
+def test_corrupt_positions_raise_value_error(data, draw):
+    """A zero or >32 bit width in a full chunk's header, or a truncated
+    blob, raises ValueError with and without stored offsets — never
+    IndexError, never arrays."""
+    freqs, flat, nt = data
+    # one extra term with >= 128 occurrences, so a full chunk exists
+    hot = np.full(draw.draw(st.integers(5, 40)), 30, dtype=np.int64)
+    freqs = np.concatenate([freqs, hot])
+    flat = np.concatenate([flat, np.tile(np.arange(1, 31), hot.size)])
+    nt = np.append(nt, hot.size)
+    pb, poffs = P.encode_positions_batch(freqs, flat, nt)
+    t = nt.size - 1
+    f_t = freqs[-hot.size :]
+    blob = bytearray(pb[t])
+    kind = draw.draw(st.sampled_from(["zero", "wide", "truncate"]))
+    if kind == "truncate":
+        blob = blob[: draw.draw(st.integers(0, len(blob) - 1))]
+    else:
+        full = int(f_t.sum()) // P.BLOCK_SIZE
+        hdr = int(poffs[t][draw.draw(st.integers(0, full - 1))])
+        blob[hdr] = 0 if kind == "zero" else draw.draw(st.integers(33, 255))
+    blob = bytes(blob)
+    rows = list(pb)
+    rows[t] = blob
+    for offs in (poffs[t], None):
+        with pytest.raises(ValueError, match="corrupt|varint"):
+            P.decode_positions(blob, f_t, offs)
+    for offs in (list(poffs), None):
+        with pytest.raises(ValueError, match="corrupt|varint"):
+            P.decode_positions_many(rows, freqs, nt, offs)
 
 
 def test_packed_positions_chunk_layout():
@@ -84,53 +132,41 @@ def test_packed_positions_chunk_layout():
 
 
 def test_packed_positions_smaller_on_dense_stream():
-    """Hot-term occurrences with small within-doc deltas — the packed
-    chunks beat one-byte-per-varint."""
+    """Hot-term occurrences with small within-doc deltas. Varint spends at
+    least one byte per occurrence; packed spends 4 bits (the widest delta
+    is a doc's absolute first position, 10) plus a 1-byte header per
+    128-occurrence chunk."""
     f = 16
-    freqs = np.full(256, f, dtype=np.int64)
+    freqs = np.full(256, f, dtype=np.int64)  # 4096 occurrences
     flat = np.tile(np.arange(10, 10 + 2 * f, 2, dtype=np.int64), 256)
     nt = np.asarray([256], dtype=np.int64)
-    vb, _ = V.encode_positions_batch(freqs, flat, nt)
     pb, _ = P.encode_positions_batch(freqs, flat, nt)
-    assert len(pb[0]) < 0.85 * len(vb[0]), (len(pb[0]), len(vb[0]))
+    assert len(pb[0]) == 32 * (1 + 16 * 4)
+    assert len(pb[0]) < 0.85 * freqs.sum()
 
 
 @settings(max_examples=25, deadline=None)
 @given(position_streams(), st.randoms(use_true_random=False))
 def test_decode_positions_many_equals_per_row_loop(data, rnd):
-    """The merge hot path: cross-row vectorized decode == a per-row decode
-    loop, for BOTH codecs, with stored offsets, header-walking (packed),
-    and None placeholder rows mixed in."""
+    """The merge hot path: cross-row vectorized decode == the input
+    positions, with stored offsets, header-walking, and None placeholder
+    rows mixed in."""
     freqs, flat, nt = data
     ts = np.concatenate([[0], np.cumsum(nt)])[:-1]
     occ = np.concatenate([[0], np.cumsum(freqs)])
-    for mod in (V, P):
-        blobs, offs = mod.encode_positions_batch(freqs, flat, nt)
-        # per-row reference
-        exp_parts, occ_rs = [], []
-        for t in range(nt.size):
-            f_t = freqs[ts[t] : ts[t] + nt[t]]
-            occ_rs.append(int(occ[ts[t]]))
-            exp_parts.append(mod.decode_positions(blobs[t], f_t, offs[t]))
-        exp = np.concatenate(exp_parts)
-        got = mod.decode_positions_many(blobs, freqs, nt, offs)
-        assert np.array_equal(got, exp)
-        if mod is P:  # header-walk path (offsets column absent)
-            assert np.array_equal(
-                mod.decode_positions_many(blobs, freqs, nt, None), exp
-            )
-        # None placeholder rows decode to zeros through the permutation
-        none_at = {
-            t for t in range(nt.size) if rnd.random() < 0.4
-        } or {0}
-        mixed = [None if t in none_at else b for t, b in enumerate(blobs)]
-        exp2 = exp.copy()
-        for t in none_at:
-            o0 = int(occ[ts[t]])
-            o1 = int(occ[ts[t] + nt[t]])
-            exp2[o0:o1] = 0
-        got2 = mod.decode_positions_many(mixed, freqs, nt, offs)
-        assert np.array_equal(got2, exp2)
+    blobs, offs = P.encode_positions_batch(freqs, flat, nt)
+    assert np.array_equal(P.decode_positions_many(blobs, freqs, nt, offs), flat)
+    # header-walk path (offsets column absent)
+    assert np.array_equal(P.decode_positions_many(blobs, freqs, nt, None), flat)
+    # None placeholder rows decode to zeros through the permutation
+    none_at = {
+        t for t in range(nt.size) if rnd.random() < 0.4
+    } or {0}
+    mixed = [None if t in none_at else b for t, b in enumerate(blobs)]
+    exp2 = flat.copy()
+    for t in none_at:
+        exp2[int(occ[ts[t]]) : int(occ[ts[t] + nt[t]])] = 0
+    assert np.array_equal(P.decode_positions_many(mixed, freqs, nt, offs), exp2)
 
 
 # ------------------------------------------------------------ engine level
@@ -138,75 +174,72 @@ def test_decode_positions_many_equals_per_row_loop(data, rnd):
 
 @pytest.fixture(scope="module")
 def pos_corpora(spark, tmp_path_factory):
-    """A positions-heavy corpus built under both codecs."""
-    from iresearch_spark.corpus import generate_corpus
+    """A positions-heavy corpus: its packed index and the naive oracle."""
+    from iresearch_spark.corpus import generate_corpus, make_corpus_pdf
+    from tests.oracle import OracleEngine
 
     corpus = generate_corpus(spark, 400, 3, min_tokens=60, max_tokens=400)
-    dirs = {}
-    for codec in ("varint", "packed"):
-        d = str(tmp_path_factory.mktemp(f"posidx_{codec}"))
-        build_index(spark, corpus, d, num_segments=3, codec=codec)
-        dirs[codec] = d
-    return dirs
+    d = str(tmp_path_factory.mktemp("posidx_packed"))
+    build_index(spark, corpus, d, num_segments=3)
+    oracle = OracleEngine(make_corpus_pdf(400, min_tokens=60, max_tokens=400), 3)
+    return d, oracle
+
+
+def _oracle_rows(oracle, q, k):
+    return [(e[0], e[1], e[2], np.float32(e[3])) for e in oracle.search(q, k)]
+
+
+def _engine_rows(eng, q, k):
+    return [
+        (r["repo"], r["path"], r["commit"], np.float32(r["score"]))
+        for r in eng.search(q, k=k).collect()
+    ]
 
 
 def test_manifest_records_positions_codec(pos_corpora):
-    man_p = read_manifest(pos_corpora["packed"])
-    man_v = read_manifest(pos_corpora["varint"])
-    assert man_p.positions_codec == "packed"
-    assert man_v.positions_codec == "varint"
+    d, _ = pos_corpora
+    assert _manifest_json(d)["positions_codec"] == "packed"
 
 
-def test_phrase_identity_across_positions_codecs(spark, pos_corpora):
-    """Positional queries (the only readers of the prox stream) return
-    IDENTICAL rows from both codecs."""
-    from iresearch_spark.search import Phrase, SamePosition, SearchEngine, TermF
+def test_phrase_identity_vs_oracle(spark, pos_corpora):
+    """Positional queries (the only readers of the prox stream) return the
+    oracle's rows: same docs, float32 scores and order."""
+    from iresearch_spark.search import Phrase, SearchEngine
 
-    ev = SearchEngine(spark, pos_corpora["varint"])
-    ep = SearchEngine(spark, pos_corpora["packed"])
+    d, oracle = pos_corpora
+    eng = SearchEngine(spark, d)
     queries = [
         Phrase(terms=("import", "def")),
         Phrase(terms=("the", "for")),
         Phrase(terms=("import", "the"), offsets=(0, 2)),  # gap phrase
-        SamePosition(terms=("import", "return")),
     ]
     for q in queries:
-        rv = [tuple(r) for r in ev.search(q, k=25).collect()]
-        rp = [tuple(r) for r in ep.search(q, k=25).collect()]
-        assert rv == rp, q
-    ev.close()
-    ep.close()
+        assert _engine_rows(eng, q, 25) == _oracle_rows(oracle, q, 25), q
+    eng.close()
 
 
 def test_merge_preserves_packed_positions(spark, pos_corpora):
     """Consolidation decodes packed positions per row (the chunk grid
     restarts per input blob — no concat fast path), re-encodes packed, and
-    keeps the manifest field; phrase results are unchanged."""
+    keeps the manifest key; phrase results still equal the oracle's."""
     from iresearch_spark.index.merge import merge_segments
     from iresearch_spark.search import Phrase, SearchEngine
 
-    d = pos_corpora["packed"]
+    d, oracle = pos_corpora
     q = Phrase(terms=("import", "def"))
-
-    def rows(eng):
-        return sorted(
-            (r["repo"], r["path"], r["commit"], r["score"])
-            for r in eng.search(q, k=25).collect()
-        )
-
-    before = rows(SearchEngine(spark, d))
     man = read_manifest(d)
     merge_segments(spark, d, [s["segment_id"] for s in man.segments])
-    man2 = read_manifest(d)
-    assert man2.positions_codec == "packed"
+    assert _manifest_json(d)["positions_codec"] == "packed"
+    assert len(read_manifest(d).segments) == 1
     # doc identity + scores survive (segment/doc ids are remapped)
-    assert rows(SearchEngine(spark, d)) == before
+    eng = SearchEngine(spark, d)
+    assert _engine_rows(eng, q, 25) == _oracle_rows(oracle, q, 25)
+    eng.close()
 
 
 def test_offsets_and_payloads_ride_packed_positions(spark, tmp_path):
-    """A stored-OFFS index under the packed codec: pay streams stay aligned
-    with the (packed) positions permutation; spans still slice the source
-    text exactly."""
+    """A stored-OFFS index: pay streams stay aligned with the (packed)
+    positions permutation; spans still slice the source text exactly."""
     from iresearch_spark.search import SearchEngine
 
     rows = [
@@ -217,10 +250,10 @@ def test_offsets_and_payloads_ride_packed_positions(spark, tmp_path):
     d = str(tmp_path / "offs_packed")
     build_index(
         spark, spark.createDataFrame(rows, SCHEMA), d, num_segments=2,
-        fields=[("content", "code_offsets")], codec="packed",
+        fields=[("content", "code_offsets")],
     )
-    man = read_manifest(d)
-    assert man.positions_codec == "packed" and man.with_payloads
+    assert _manifest_json(d)["positions_codec"] == "packed"
+    assert read_manifest(d).with_payloads
     eng = SearchEngine(spark, d)
     got = eng.term_offsets("alpha").collect()
     assert len(got) == 3 * 60
@@ -231,12 +264,21 @@ def test_offsets_and_payloads_ride_packed_positions(spark, tmp_path):
     eng.close()
 
 
-# ------------------------------------------------- legacy + append paths
+# ------------------------------------------------- legacy manifests
 
 
-def test_legacy_manifest_reads_varint_positions(tmp_path):
-    """A manifest written before positions_codec existed (key absent) must
-    parse as varint positions even when postings are packed."""
+@pytest.mark.parametrize(
+    "recorded",
+    [{}, {"postings_codec": "packed"}, {"postings_codec": "varint",
+                                        "positions_codec": "varint"}],
+    ids=["no_keys", "no_positions_key", "varint"],
+)
+def test_legacy_manifest_is_refused(spark, tmp_path, recorded):
+    """A manifest without both codec keys set to packed (written before
+    packed became the one format) is refused by every reader with a
+    ValueError naming the index dir and the recorded format."""
+    from iresearch_spark.search import SearchEngine
+
     d = tmp_path / "legacy"
     d.mkdir()
     (d / "manifest.json").write_text(
@@ -248,18 +290,20 @@ def test_legacy_manifest_reads_varint_positions(tmp_path):
                 "analyzer": "code",
                 "with_positions": True,
                 "segments": [],
-                "postings_codec": "packed",
+                **recorded,
             }
         )
     )
-    man = read_manifest(str(d))
-    assert man.postings_codec == "packed"
-    assert man.positions_codec == "varint"
+    with pytest.raises(ValueError, match="codec='varint'") as e:
+        read_manifest(str(d))
+    assert str(d) in str(e.value) and "rebuild" in str(e.value)
+    with pytest.raises(ValueError, match="codec"):
+        SearchEngine(spark, str(d))
 
 
-def test_incremental_adopts_existing_positions_codec(spark, tmp_path):
-    """Appending to an index whose manifest lacks positions_codec (legacy)
-    must keep encoding positions varint — NOT the new packed default."""
+def test_incremental_refuses_legacy_manifest(spark, tmp_path):
+    """Appending to an index whose manifest has no codec keys (legacy) is
+    refused when the indexer opens it."""
     from iresearch_spark.streaming.incremental import IncrementalIndexer
 
     d = str(tmp_path / "idx_stream_legacy")
@@ -267,35 +311,24 @@ def test_incremental_adopts_existing_positions_codec(spark, tmp_path):
             for i in range(20)]
     ix = IncrementalIndexer(spark, d, segments_per_batch=2)
     ix.process_batch(spark.createDataFrame(rows, SCHEMA), batch_id=0)
-    assert read_manifest(d).positions_codec == "packed"
-
-    # strip the key to simulate a legacy index, then append
-    import os
-
-    p = os.path.join(d, "manifest.json")
-    m = json.loads(open(p).read())
-    m.pop("positions_codec")
-    open(p, "w").write(json.dumps(m))
-    ix2 = IncrementalIndexer(spark, d, segments_per_batch=2)
-    assert ix2.pos_codec == "varint"
-    assert ix2.codec == "packed"
+    _strip_codec_keys(d)
+    with pytest.raises(ValueError, match="codec"):
+        IncrementalIndexer(spark, d, segments_per_batch=2)
 
 
 def test_import_rejects_positions_codec_mismatch(spark, tmp_path):
-    """Import requires matching positions codecs (a mixed index would be
-    unreadable)."""
+    """Importing from or into a legacy index (no codec keys) is refused —
+    a mixed-format index would be unreadable."""
     from iresearch_spark.index.importer import import_index
 
     rows = [("r", f"{i:03d}.py", "c", "py", f"eta theta doc{i}")
             for i in range(20)]
     df = spark.createDataFrame(rows, SCHEMA)
     d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
-    build_index(spark, df, d1, num_segments=1, codec="packed")
-    build_index(spark, df, d2, num_segments=1, codec="packed")
-    # strip d2's positions_codec -> legacy varint positions
-    p = f"{d2}/manifest.json"
-    m = json.loads(open(p).read())
-    m.pop("positions_codec")
-    open(p, "w").write(json.dumps(m))
+    build_index(spark, df, d1, num_segments=1)
+    build_index(spark, df, d2, num_segments=1)
+    _strip_codec_keys(d2)
     with pytest.raises(ValueError, match="codec"):
         import_index(spark, d1, d2)
+    with pytest.raises(ValueError, match="codec"):
+        import_index(spark, d2, d1)
