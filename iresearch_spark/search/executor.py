@@ -4,23 +4,27 @@ Mirrors the reference query lifecycle (`core/search/filter.hpp:38-99`,
 SURVEY §3.2) Spark-first:
 
 1. **prepare** (driver): rewrite the filter tree, expand multi-term leaves
-   against the term dictionary (a pushed-down scan of the segments table),
-   collect *global* stats — docs_with_field / total_term_freq from the
-   manifest, docs_with_term via one aggregate over the needed postings rows —
-   and bake per-term-instance score constants (c0) exactly like
-   `Scorer::collect` (`bm25.cpp:366-410`). Global, never per-segment stats:
-   the rank-identity requirement of `term_filter.cpp:92-129`.
+   against the term dictionary, collect *global* stats — docs_with_field /
+   total_term_freq from the manifest, docs_with_term summed over the live
+   segments' dictionary rows — and bake per-term-instance score constants
+   (c0) exactly like `Scorer::collect` (`bm25.cpp:366-410`). Global, never
+   per-segment stats: the rank-identity requirement of
+   `term_filter.cpp:92-129`. The dictionary is read on the driver with
+   pyarrow (term filter pushed into the read, no Spark job); only Fuzzy
+   leaves run a Spark dictionary job (the banded Levenshtein).
 2. **execute** (cluster): group the needed postings rows by segment; one
    Arrow kernel per segment evaluates the boolean tree with numpy set ops
    (conjunction = intersect1d ordered by cost, disjunction = bincount-union
    with min_match, exclusion = isin mask — SURVEY §2.5) and returns the
    segment-local top-k. Its per-doc side (norms, tombstones) is packed on
    the driver and broadcast once per snapshot (``norms_blob_df``): no
-   docmeta scan or norms exchange per query.
+   docmeta scan or norms exchange per query. The kernel then reads the
+   (repo, path, commit, lang) identity of its top-k docs only, from its
+   own segment's docmeta partition.
 3. **reduce**: global ``orderBy(score desc, segment_id, doc_id).limit(k)``
-   (ties broken by ascending docID, like the reference test expectations),
-   then a broadcast join back to docmeta for (repo, path, commit) identity,
-   re-ordered under the same bounded ``limit(k)``.
+   over the kernel output (ties broken by ascending docID, like the
+   reference test expectations) — a TakeOrderedAndProject with no join. A
+   warm top-k query is one scan plus one kernel: 2 Spark jobs.
 
 Block-max WAND (`formats_10.cpp:2426-2806` wanderator, adapted to a batch
 engine): for single-term / flat-disjunction queries the kernel first builds a
@@ -39,12 +43,18 @@ pruning == the reference's separate .pos file).
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
+from operator import or_
 from typing import Any
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,11 +104,11 @@ class _Prepared:
     rest_specs: list[tuple] = dc_field(default_factory=list)
 
 
-def _like_regex(pattern: str):
-    """Spark SQL LIKE -> compiled regex (%% any seq, _ any char, backslash
-    escapes — `wildcard_utils.cpp` semantics, same as _leaf_pred's LIKE)."""
-    import re
-
+def _like_body(pattern: str) -> str:
+    """Spark SQL LIKE -> unanchored regex body (%% any seq, _ any char,
+    backslash escapes — `wildcard_utils.cpp` semantics, same as _leaf_pred's
+    LIKE), valid in both Python ``re`` and RE2 (pyarrow): a literal ASCII
+    punctuation char is written ``\\xhh``."""
     out = []
     i = 0
     while i < len(pattern):
@@ -111,45 +121,117 @@ def _like_regex(pattern: str):
                 raise ValueError(
                     "the pattern '%s' is invalid: dangling escape" % pattern
                 )
-            out.append(re.escape(pattern[i + 1]))
-            i += 2
+            i += 1
+            c = pattern[i]
+        elif c in "%_":
+            out.append(".*" if c == "%" else ".")
+            i += 1
             continue
-        if c == "%":
-            out.append(".*")
-        elif c == "_":
-            out.append(".")
-        else:
-            out.append(re.escape(c))
+        out.append(c if c.isalnum() or ord(c) > 127 else "\\x%02x" % ord(c))
         i += 1
-    return re.compile("(?s)\\A" + "".join(out) + "\\Z")
+    return "".join(out)
 
 
-def _term_matches(leaf, term: str, _rx_cache: dict = {}) -> bool:
-    """Kernel-side twin of _leaf_pred for the executor-side unscored rest
-    (Prefix/Wildcard/TermRange only; Fuzzy expands driver-side — its match
-    set is bounded by the edit-distance automaton). Python str comparison
-    is code-point order == UTF-8 byte order, matching Spark's string
-    ordering for the range bounds."""
+def _like_regex(pattern: str):
+    """Spark SQL LIKE -> compiled Python regex over the same body as the
+    pyarrow predicate (``_leaf_expr``), for matching plain strings."""
+    import re
+
+    return re.compile("(?s)\\A(?:" + _like_body(pattern) + ")\\Z")
+
+
+def _prefix_bounds(prefix: str) -> ds.Expression:
+    """``prefix <= term < successor(prefix)``: the range of terms starting
+    with ``prefix`` (code-point order == UTF-8 byte order), on which pyarrow
+    prunes row groups by their term min/max statistics."""
+    term = ds.field("term")
+    expr = term >= prefix
+    stem = prefix.rstrip("\U0010ffff")
+    if stem:
+        c = ord(stem[-1]) + 1
+        expr = expr & (term < stem[:-1] + chr(0xE000 if 0xD800 <= c < 0xE000 else c))
+    return expr
+
+
+def _like_prefix(pattern: str) -> str:
+    """The literal prefix of a LIKE pattern (escapes resolved), up to its
+    first unescaped ``%``/``_``."""
+    out = []
+    i = 0
+    while i < len(pattern) and pattern[i] not in "%_":
+        if pattern[i] == "\\":
+            i += 1
+        out.append(pattern[i])
+        i += 1
+    return "".join(out)
+
+
+def _leaf_expr(leaf) -> ds.Expression:
+    """pyarrow twin of ``_leaf_pred`` for Prefix/Wildcard/TermRange — the
+    driver-side dictionary read and the kernel's unscored rest evaluate it:
+    the exact predicate, AND-ed with a term range for row-group pruning.
+    Python str comparison is code-point order == UTF-8 byte order, the
+    string order of Spark and Arrow."""
+    term = ds.field("term")
     if isinstance(leaf, Prefix):
-        return term.startswith(leaf.prefix)
-    if isinstance(leaf, TermRange):
-        if leaf.min_term is not None:
-            if term < leaf.min_term or (
-                term == leaf.min_term and not leaf.include_min
-            ):
-                return False
-        if leaf.max_term is not None:
-            if term > leaf.max_term or (
-                term == leaf.max_term and not leaf.include_max
-            ):
-                return False
-        return True
+        return _prefix_bounds(leaf.prefix) & pc.starts_with(term, leaf.prefix)
     if isinstance(leaf, Wildcard):
-        rx = _rx_cache.get(leaf.pattern)
-        if rx is None:
-            rx = _rx_cache[leaf.pattern] = _like_regex(leaf.pattern)
-        return rx.match(term) is not None
+        # not pc.match_like: it misreads an escaped backslash (LIKE a\\\\b%
+        # does not match a\\b.py)
+        rx = "(?s)^(?:" + _like_body(leaf.pattern) + ")$"
+        return _prefix_bounds(_like_prefix(leaf.pattern)) & pc.match_substring_regex(
+            term, rx
+        )
+    if isinstance(leaf, TermRange):
+        expr = ds.scalar(True)
+        if leaf.min_term is not None:
+            expr &= (
+                term >= leaf.min_term if leaf.include_min else term > leaf.min_term
+            )
+        if leaf.max_term is not None:
+            expr &= (
+                term <= leaf.max_term if leaf.include_max else term < leaf.max_term
+            )
+        return expr
     raise TypeError(leaf)  # pragma: no cover
+
+
+# what the driver reads of a segment's dictionary, and what the kernel reads
+# of its docmeta; explicit schemas: a merged segment's files declare
+# ``field`` not-null and a built segment's do not
+_DICT_SCHEMA = pa.schema(
+    [("field", pa.string()), ("term", pa.string()), ("docs_count", pa.int32())]
+)
+_IDENTITY = ("repo", "path", "commit", "lang")
+_IDENTITY_SCHEMA = pa.schema(
+    [("doc_id", pa.int32())] + [(c, pa.string()) for c in _IDENTITY]
+)
+
+
+def _parquet_files(path: str) -> list[str]:
+    """Data files of a Spark-written parquet directory (none if absent),
+    skipping its hidden ``.crc`` and ``_SUCCESS`` side files."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        os.path.join(path, n)
+        for n in os.listdir(path)
+        if not n.startswith((".", "_"))
+    )
+
+
+def _read_identity(
+    index_dir: str, segment_id: int, doc_ids: np.ndarray
+) -> pd.DataFrame:
+    """(doc_id, repo, path, commit, lang) of ``doc_ids`` from one segment's
+    docmeta partition; an empty id list reads nothing."""
+    if doc_ids.size == 0:
+        return _IDENTITY_SCHEMA.empty_table().to_pandas()
+    return pq.read_table(
+        f"{index_dir}/docmeta/segment_id={segment_id}",
+        schema=_IDENTITY_SCHEMA,
+        filters=ds.field("doc_id").isin(doc_ids.tolist()),
+    ).to_pandas()
 
 
 def _read_int32(path: str, cols: list[str]) -> pa.Table | None:
@@ -157,8 +239,6 @@ def _read_int32(path: str, cols: list[str]) -> pa.Table | None:
     parquet directory (None if absent). The explicit schema null-fills a
     missing column the way a Spark read with a schema does, and reads a
     directory without data files as zero rows."""
-    import os
-
     if not os.path.isdir(path):
         return None
     return pq.read_table(path, schema=pa.schema([(c, pa.int32()) for c in cols]))
@@ -235,12 +315,22 @@ class SearchEngine:
         # publishes, and this snapshot's broadcasts (dropped on publish)
         self._norms_cache: dict[tuple, dict] = {}
         self._norms_bc: dict[int, Any] | None = None
+        # this snapshot's segments relation (Spark) and dictionary dataset
+        # (pyarrow), built once per manifest stamp so a query does not
+        # re-list the segment directories
+        self._scan: DataFrame | None = None
+        self._dict: ds.Dataset | None = None
         # serializes the stamp check/reload so a concurrent reader can't
         # observe a half-reloaded manifest view (long-lived service shape:
         # queries race publishes — tests/test_concurrent_reader.py)
         import threading
 
         self._stamp_lock = threading.RLock()
+        # one build per proxy match set at a time: a second concurrent
+        # build of the same set would evict the first's cache entry before
+        # its count() materialized it, leaving the materialized blocks
+        # persisted with no entry to unpersist them
+        self._proxy_lock = threading.RLock()
         self._load_manifest()
         self._manifest_stamp = self._stamp()
 
@@ -274,7 +364,8 @@ class SearchEngine:
 
     def _check_stamp(self) -> None:
         """React to a new manifest publish since the last check: drop the
-        snapshot-scoped caches (proxy match sets, term stats) and — for a
+        snapshot-scoped caches (proxy match sets, term stats, norms, the
+        segments relation and dictionary dataset) and — for a
         live (non-pinned) engine — reload the manifest-derived segment view
         and global stats, so a long-lived reader sees new commits and
         merges (the reference's reopen). A generation-pinned engine keeps
@@ -287,6 +378,7 @@ class SearchEngine:
                 self.clear_proxy_cache()
                 self._stats_cache.clear()
                 self._release_norms()
+                self._scan = self._dict = None
                 if self.generation is None:
                     self._load_manifest()
                 self._manifest_stamp = stamp
@@ -300,8 +392,6 @@ class SearchEngine:
         current), so a mark_deleted publish — which rewrites manifest.json
         but never the retained gen-N file — must still invalidate proxy
         match sets materialized under the old mask."""
-        import os
-
         from iresearch_spark.index.manifest import (
             generation_path,
             manifest_path,
@@ -347,10 +437,42 @@ class SearchEngine:
         ]
         if with_positions:
             cols += ["positions", "pos_offsets"]
-        return self._seg_filter(
-            self.spark.read.schema(SEGMENTS_SCHEMA)
-            .parquet(f"{self.index_dir}/segments")
-            .select(*cols)
+        return self._segments_scan().select(*cols)
+
+    def _segments_scan(self) -> DataFrame:
+        """This snapshot's segments table relation, listed once per
+        manifest stamp."""
+        with self._stamp_lock:
+            self._check_stamp()
+            if self._scan is None:
+                self._scan = self._seg_filter(
+                    self.spark.read.schema(SEGMENTS_SCHEMA).parquet(
+                        f"{self.index_dir}/segments"
+                    )
+                )
+            return self._scan
+
+    def _read_dictionary(self, expr: ds.Expression) -> pa.Table:
+        """(field, term, df) of the live segments' dictionary rows matching
+        ``expr``, df summed over segments and term shards — read on the
+        driver with pyarrow, no Spark job. Segments are written sorted by
+        term, so the term bounds in ``expr`` prune row groups."""
+        with self._stamp_lock:
+            self._check_stamp()
+            if self._dict is None:
+                files = [
+                    f
+                    for sid in self._seg_ids
+                    for f in _parquet_files(
+                        f"{self.index_dir}/segments/segment_id={sid}"
+                    )
+                ]
+                self._dict = ds.dataset(files, schema=_DICT_SCHEMA, format="parquet")
+            dictionary = self._dict
+        t = dictionary.to_table(filter=expr)
+        t = t.group_by(["field", "term"]).aggregate([("docs_count", "sum")])
+        return t.rename_columns(
+            ["df" if c == "docs_count_sum" else c for c in t.column_names]
         )
 
     def norms_blob_df(self) -> dict[int, Any]:
@@ -480,8 +602,6 @@ class SearchEngine:
                 "index was not built with a payload analyzer "
                 "(manifest.with_payloads is false)"
             )
-        import os
-
         from iresearch_spark.codec import decode_payloads, packed
         from iresearch_spark.index.build import SEGMENTS_PAY_SCHEMA
 
@@ -606,9 +726,6 @@ class SearchEngine:
                 )
             return pred
         if isinstance(leaf, Fuzzy):
-            from functools import reduce
-            from operator import or_
-
             q = leaf.term
             lev_cap = leaf.max_distance * (
                 2 if leaf.with_transpositions else 1
@@ -666,23 +783,24 @@ class SearchEngine:
         pairs: set[tuple[str, str]],
         leaves: list[tuple[str, Filter]],
     ) -> tuple[dict[tuple[str, str], int], list[list[tuple[str, int]]]]:
-        """ONE dictionary job for every literal term and multi-term leaf of
-        a query: the reference walks its in-memory FST per leaf; we pay one
-        pushed-down parquet scan total instead of one Spark job per leaf.
+        """Global df of every literal term and the matched terms of every
+        multi-term leaf of a query, from ONE driver-side dictionary read
+        (``_read_dictionary``): the reference walks its in-memory FST per
+        leaf (`core/index/index_reader.hpp:35-153`); we read the live
+        segments' (field, term, docs_count) rows with the term filter pushed
+        into the parquet read. Fuzzy is the one leaf that still runs a Spark
+        dictionary job: its banded Levenshtein predicate is a JVM
+        expression (``_leaf_pred``).
 
         Returns ``(dfs, matches)``: global docs_count per literal (field,
         term) pair, and the matched (term, df) list per leaf."""
-        from functools import reduce
-        from operator import or_
-
         # term-stats cache — the analogue of the reference holding its term
-        # dictionary (FST + per-term meta) in memory per open reader
-        # (`core/index/index_reader.hpp:35-153`): repeat lookups of the same
-        # literal or multi-term leaf serve from the engine and skip the
-        # dictionary job entirely. Stats come from committed segment
-        # metadata (tombstones don't rewrite df — same as the reference
-        # until a merge purges), so validity is the manifest stamp, shared
-        # with the proxy cache via _check_stamp.
+        # dictionary (FST + per-term meta) in memory per open reader:
+        # repeat lookups of the same literal or multi-term leaf serve from
+        # the engine and skip the dictionary read entirely. Stats come from
+        # committed segment metadata (tombstones don't rewrite df — same as
+        # the reference until a merge purges), so validity is the manifest
+        # stamp, shared with the proxy cache via _check_stamp.
         self._check_stamp()
         entry_stamp = self._manifest_stamp
         dfs: dict[tuple[str, str], int] = {}
@@ -696,55 +814,64 @@ class SearchEngine:
             else:
                 dfs[p] = hit
         miss_leaves: list[tuple[int, str, Filter]] = []
+        fuzzy_leaves: list[tuple[int, str, Filter]] = []
         for i, (fld, leaf) in enumerate(leaves):
             hit = self._stats_cache.get(("l", fld, leaf))
-            if hit is None:
-                miss_leaves.append((i, fld, leaf))
-            else:
+            if hit is not None:
                 matches[i] = list(hit)  # copy: callers own their list
+            elif isinstance(leaf, Fuzzy):
+                fuzzy_leaves.append((i, fld, leaf))
+            else:
+                miss_leaves.append((i, fld, leaf))
 
         by_field: dict[str, set[str]] = {}
         for fld, term in miss_pairs:
             by_field.setdefault(fld, set()).add(term)
-        literal_preds = [
-            (F.col("field") == fld) & F.col("term").isin(sorted(terms))
+        literal_exprs = [
+            (ds.field("field") == fld) & ds.field("term").isin(sorted(terms))
             for fld, terms in sorted(by_field.items())
         ]
-        leaf_preds = [
-            (F.col("field") == fld) & self._leaf_pred(leaf)
+        leaf_exprs = [
+            (ds.field("field") == fld) & _leaf_expr(leaf)
             for _i, fld, leaf in miss_leaves
         ]
-        all_preds = literal_preds + leaf_preds
-        if not all_preds:
-            return dfs, matches
-        combined = reduce(or_, all_preds)
-        sel = [F.col("field"), F.col("term"), F.col("df")]
-        sel += [p.alias(f"m{j}") for j, p in enumerate(leaf_preds)]
-        rows = (
-            self._seg_filter(
-                self.spark.read.schema(SEGMENTS_SCHEMA)
-                .parquet(f"{self.index_dir}/segments")
+        if literal_exprs or leaf_exprs:
+            rows = self._read_dictionary(reduce(or_, literal_exprs + leaf_exprs))
+            if literal_exprs:
+                lit = rows.filter(reduce(or_, literal_exprs))
+                for fld, term, df in zip(
+                    *(lit[c].to_pylist() for c in ("field", "term", "df"))
+                ):
+                    dfs[(fld, term)] = df
+            for (i, _fld, _leaf), expr in zip(miss_leaves, leaf_exprs):
+                hit = rows.filter(expr)
+                matches[i] = list(
+                    zip(hit["term"].to_pylist(), hit["df"].to_pylist())
+                )
+        if fuzzy_leaves:
+            preds = [
+                (F.col("field") == fld) & self._leaf_pred(leaf)
+                for _i, fld, leaf in fuzzy_leaves
+            ]
+            rows = (
+                self._segments_scan()
+                .filter(reduce(or_, preds))
+                .groupBy("field", "term")
+                .agg(F.sum("docs_count").alias("df"))
+                .select("term", "df", *(p.alias(f"m{j}") for j, p in enumerate(preds)))
+                .collect()
             )
-            .filter(combined)
-            .groupBy("field", "term")
-            .agg(F.sum("docs_count").alias("df"))
-            .select(*sel)
-            .collect()
-        )
-        for r in rows:
-            key = (r["field"], r["term"])
-            if key in miss_pairs:
-                dfs[key] = int(r["df"])
-            for j, (i, _fld, _leaf) in enumerate(miss_leaves):
-                if r[f"m{j}"]:
-                    matches[i].append((r["term"], int(r["df"])))
+            for r in rows:
+                for j, (i, _fld, _leaf) in enumerate(fuzzy_leaves):
+                    if r[f"m{j}"]:
+                        matches[i].append((r["term"], int(r["df"])))
         # stamp-guarded insert: stats collected under the OLD snapshot must
         # not land in the cache after a concurrent publish's clear
         cacheable = self._manifest_stamp == entry_stamp
         if cacheable:
             for p in miss_pairs:
                 self._stats_cache[("t",) + p] = dfs[p]
-        for i, fld, leaf in miss_leaves:
+        for i, fld, leaf in miss_leaves + fuzzy_leaves:
             if isinstance(leaf, Fuzzy) and leaf.with_transpositions:
                 npfx = len(leaf.prefix)
                 matches[i] = [
@@ -765,12 +892,14 @@ class SearchEngine:
     ) -> dict[tuple[str, Filter], list[tuple[str, int]]]:
         """TOP ``scored_terms_limit`` matched terms (by df desc, term asc)
         per standalone multi-term leaf — the ONLY driver-side
-        materialization for Prefix/Wildcard/TermRange. The unscored rest is
-        never collected: its predicate is pushed into the kernel's segment
-        scan and unioned executor-side (`multiterm_query.cpp:36-106`
-        bit_union; `limited_sample_collector.hpp:45-244` keeps exactly this
-        bounded scored sample). One Spark job for all missing leaves via a
-        union of per-leaf limited aggregates."""
+        materialization for Prefix/Wildcard/TermRange. The unscored rest
+        never becomes an instance: its predicate is pushed into the
+        kernel's segment scan and unioned executor-side
+        (`multiterm_query.cpp:36-106` bit_union;
+        `limited_sample_collector.hpp:45-244` keeps exactly this bounded
+        scored sample). One driver-side dictionary read for all missing
+        leaves, each limited with a pyarrow sort; the read holds a leaf's
+        matched (term, df) rows in Arrow memory until that sort."""
         self._check_stamp()
         entry_stamp = self._manifest_stamp
         out: dict[tuple[str, Filter], list[tuple[str, int]]] = {}
@@ -782,37 +911,21 @@ class SearchEngine:
             else:
                 out[key] = list(hit)
         if miss:
-            seg = self._seg_filter(
-                self.spark.read.schema(SEGMENTS_SCHEMA)
-                .parquet(f"{self.index_dir}/segments")
-                .select("field", "term", "docs_count")
-            )
-            parts = []
-            for j, (fld, leaf) in enumerate(miss):
-                parts.append(
-                    seg.filter(
-                        (F.col("field") == fld) & self._leaf_pred(leaf)
-                    )
-                    .groupBy("term")
-                    .agg(F.sum("docs_count").alias("df"))
-                    .orderBy(F.desc("df"), F.asc("term"))
-                    .limit(int(leaf.scored_terms_limit))
-                    .select(F.lit(j).alias("leaf"), "term", "df")
-                )
-            from functools import reduce
-
-            got: dict[int, list[tuple[str, int]]] = {
-                j: [] for j in range(len(miss))
-            }
-            for r in reduce(DataFrame.unionAll, parts).collect():
-                got[r["leaf"]].append((r["term"], int(r["df"])))
+            exprs = [
+                (ds.field("field") == fld) & _leaf_expr(leaf) for fld, leaf in miss
+            ]
+            rows = self._read_dictionary(reduce(or_, exprs))
             cacheable = self._manifest_stamp == entry_stamp
-            for j, key in enumerate(miss):
-                lst = got[j]
-                lst.sort(key=lambda td: (-td[1], td[0]))
-                if cacheable:  # same stamp-guard as _collect_stats
+            for key, expr in zip(miss, exprs):
+                top = (
+                    rows.filter(expr)
+                    .sort_by([("df", "descending"), ("term", "ascending")])
+                    .slice(0, int(key[1].scored_terms_limit))
+                )
+                lst = list(zip(top["term"].to_pylist(), top["df"].to_pylist()))
+                if cacheable:  # same stamp-guard as _batch_lookup
                     self._stats_cache[("lb",) + key] = tuple(lst)
-                out[key] = list(lst)
+                out[key] = lst
         return out
 
     # ------------------------------------------------------------- prepare
@@ -1230,10 +1343,13 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-k (k int) or all-matches (k=None, scores without truncation)."""
         if isinstance(f, ProxyF):
-            return self._search_proxy(f, k, dtype, with_identity)
-        prep = self.prepare(f, dtype)
-        local_topk = self._run_kernel(prep, k, wand and k is not None)
-        return self._finalize(local_topk, k, with_identity)
+            hits = self._search_proxy(f, dtype)
+        else:
+            hits = self._run_kernel(
+                self.prepare(f, dtype), k, wand and k is not None,
+                identity=with_identity,
+            )
+        return self._finalize(hits, k, with_identity)
 
     def wand_stats(
         self, f: Filter, k: int = 10, dtype: str = "float32"
@@ -1254,19 +1370,23 @@ class SearchEngine:
         return self._run_kernel(self.prepare(f, dtype), k, True, stats=True)
 
     def _run_kernel(
-        self, prep: _Prepared, k: int | None, wand: bool, stats: bool = False
+        self,
+        prep: _Prepared,
+        k: int | None,
+        wand: bool,
+        stats: bool = False,
+        identity: bool = False,
     ) -> DataFrame:
         """The one scan + kernel launch behind ``search`` and
         ``wand_stats``: the postings rows the prepared tree needs (term and
         field predicates pushed into the segments scan), grouped by segment
-        into the kernel with this snapshot's norms broadcasts."""
+        into the kernel with this snapshot's norms broadcasts. With
+        ``identity`` the kernel also emits the (repo, path, commit, lang)
+        of its segment-local top-k."""
         with self._stamp_lock:  # norms and scan from the same snapshot
             norms = self.norms_blob_df()
             seg_df = self.segments_df(prep.needs_positions)
         if prep.needed_terms or prep.rest_specs:
-            from functools import reduce
-            from operator import or_
-
             by_field: dict[str, list[str]] = {}
             for fld, t in prep.needed_terms:
                 by_field.setdefault(fld, []).append(t)
@@ -1299,72 +1419,68 @@ class SearchEngine:
         else:
             score = "float" if prep.consts["dtype"] == "float32" else "double"
             schema = f"segment_id int, doc_id int, score {score}"
-        return seg_df.groupby("segment_id").applyInPandas(
-            _make_kernel(prep, k, wand, norms, stats), schema=schema
+            if identity:
+                schema += "".join(f", {c} string" for c in _IDENTITY)
+        kernel = _make_kernel(
+            prep, k, wand, norms, stats, self.index_dir if identity else None
         )
+        return seg_df.groupby("segment_id").applyInPandas(kernel, schema=schema)
 
     def _finalize(
-        self, local_topk: DataFrame, k: int | None, with_identity: bool
+        self, hits: DataFrame, k: int | None, with_identity: bool
     ) -> DataFrame:
-        """Global order/limit + identity join back to docmeta."""
-        if k is None:
-            global_topk = local_topk
+        """Global ``orderBy(score desc, segment_id, doc_id)`` over the
+        kernel output, bounded by ``limit(k)`` (a TakeOrderedAndProject) —
+        no join: identity columns come from the kernel. Without identity,
+        an all-matches result (k=None) is returned unordered."""
+        if with_identity:
+            hits = hits.select(*_IDENTITY, "score", "segment_id", "doc_id")
         else:
-            global_topk = local_topk.orderBy(
-                F.desc("score"), F.asc("segment_id"), F.asc("doc_id")
-            ).limit(k)
-        if not with_identity:
-            return global_topk
-        dm = self.docmeta_df().select(
-            "segment_id", "doc_id", "repo", "path", "commit", "lang"
-        )
-        # broadcast only the bounded top-k side; an all-matches result
-        # (k=None, e.g. an exists/whole-corpus query) is unbounded — let AQE
-        # pick the join strategy instead of forcing a full-result broadcast
-        right = F.broadcast(global_topk) if k is not None else global_topk
-        out = (
-            dm.join(right, ["segment_id", "doc_id"])
-            .select("repo", "path", "commit", "lang", "score", "segment_id", "doc_id")
-            .orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
-        )
-        # the join has at most k rows: limit(k) plans a TakeOrderedAndProject
-        # instead of a range-partitioned sort (sampling job + exchange)
+            hits = hits.select("segment_id", "doc_id", "score")
+            if k is None:
+                return hits
+        out = hits.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
         return out if k is None else out.limit(k)
 
-    def _search_proxy(
-        self, f: "ProxyF", k: int | None, dtype: str, with_identity: bool
-    ) -> DataFrame:
+    def _search_proxy(self, f: "ProxyF", dtype: str) -> DataFrame:
         """proxy_filter (`core/search/proxy_filter.cpp`): materialize the
         wrapped filter's FULL match set once (persisted (segment, doc,
-        score) rows — the reference's cached bitset, with scores so any k
-        can be served), reuse it for every subsequent execution.
+        score, identity) rows — the reference's cached bitset, with scores
+        so any k can be served), reuse it for every subsequent execution.
+        Returns the match set, unordered, for ``_finalize``.
 
         Cache validity is tied to the manifest snapshot: a publish (e.g.
         ``mark_deleted``, merge, new commit) changes the manifest file, and
         the stamp check here drops every cached match set so deletes are
         never served from a stale proxy."""
-        self._check_stamp()
-        entry_stamp = self._manifest_stamp
-        key = (repr(f.child), dtype)
-        cached = self._proxy_cache.get(key)
-        if cached is None:
-            cached = self.search(
-                f.child, k=None, wand=False, dtype=dtype, with_identity=False
-            ).persist()
-            cached.count()  # materialize now so later queries only read
-            # insert only if no publish raced the build: a match set
-            # materialized under the OLD snapshot inserted AFTER a
-            # post-publish clear would be served as current forever
-            # (nested _check_stamp calls advance _manifest_stamp, so a
-            # mid-build publish observed anywhere fails this guard; an
-            # unobserved one leaves the stamp stale and the next check
-            # clears the entry — either way no stale serve)
-            if self._manifest_stamp == entry_stamp:
-                self._proxy_cache[key] = cached
+        with self._proxy_lock:
+            self._check_stamp()
+            entry_stamp = self._manifest_stamp
+            key = (repr(f.child), dtype)
+            cached = self._proxy_cache.get(key)
+            if cached is None:
+                child = f.child
+                if isinstance(child, ProxyF):
+                    cached = self._search_proxy(child, dtype)
+                else:
+                    cached = self._run_kernel(
+                        self.prepare(child, dtype), None, False, identity=True
+                    )
+                cached = cached.persist()
+                cached.count()  # materialize now so later queries only read
+                # insert only if no publish raced the build: a match set
+                # materialized under the OLD snapshot inserted AFTER a
+                # post-publish clear would be served as current forever
+                # (nested _check_stamp calls advance _manifest_stamp, so a
+                # mid-build publish observed anywhere fails this guard; an
+                # unobserved one leaves the stamp stale and the next check
+                # clears the entry — either way no stale serve)
+                if self._manifest_stamp == entry_stamp:
+                    self._proxy_cache[key] = cached
+                else:
+                    cached.unpersist()  # serve this (pre-publish) query once
             else:
-                cached.unpersist()  # serve this (pre-publish) query once
-        else:
-            self.proxy_hits += 1
+                self.proxy_hits += 1
         out = cached
         if f.boost != 1.0:
             score_type = "float" if dtype == "float32" else "double"
@@ -1372,21 +1488,23 @@ class SearchEngine:
                 "score",
                 (F.col("score") * F.lit(float(f.boost))).cast(score_type),
             )
-        return self._finalize(out, k, with_identity)
+        return out
 
     def clear_proxy_cache(self) -> None:
         self._proxy_cache.clear()  # LRU on_evict unpersists each entry
 
     def close(self) -> None:
         """Release every resource this reader holds: persisted proxy match
-        sets, the term-stats cache, the norms broadcasts (unpersisted) and
-        the driver-side packed norms. Idempotent — a closed engine
+        sets, the term-stats cache, the norms broadcasts (unpersisted), the
+        driver-side packed norms and the snapshot's segments relation and
+        dictionary dataset. Idempotent — a closed engine
         re-materializes lazily if reused."""
         with self._stamp_lock:
             self.clear_proxy_cache()
             self._stats_cache.clear()
             self._release_norms()
             self._norms_cache = {}
+            self._scan = self._dict = None
 
 
 # ----------------------------------------------------------------- kernel
@@ -1402,10 +1520,19 @@ def _matches_without_postings(node: dict) -> bool:
 
 
 def _make_kernel(
-    prep: _Prepared, k: int, wand: bool, norms: dict, stats: bool = False
+    prep: _Prepared,
+    k: int,
+    wand: bool,
+    norms: dict,
+    stats: bool = False,
+    identity_dir: str | None = None,
 ):
     """The per-segment kernel; ``norms`` is ``norms_blob_df()``'s map, of
-    which a task reads only its own segment's broadcast."""
+    which a task reads only its own segment's broadcast. After its
+    segment-local top-k, a kernel given ``identity_dir`` (the index dir)
+    reads the identity of those docs only, from its segment's docmeta
+    partition. A corrupt postings or positions blob raises ``ValueError``
+    naming the segment, field and term."""
     tree = prep.tree
     instances = prep.instances
     consts = prep.consts
@@ -1417,15 +1544,19 @@ def _make_kernel(
         dtype = np.float32 if consts["dtype"] == "float32" else np.float64
         scorer = consts["scorer"]
         primary_field = consts["primary"]
-        out_cols = {"segment_id": [], "doc_id": [], "score": []}
-        empty = pd.DataFrame(
-            {
-                "segment_id": pd.Series([], dtype="int32"),
-                "doc_id": pd.Series([], dtype="int32"),
-                "score": pd.Series([], dtype=consts["dtype"]),
-            }
-        )
         segment_id = int(left["segment_id"].iloc[0])
+
+        @contextmanager
+        def blob_of(key: tuple[str, str]):
+            """Name the segment, field and term of a corrupt blob."""
+            try:
+                yield
+            except ValueError as e:
+                raise ValueError(
+                    f"corrupt blob of segment {segment_id}, field "
+                    f"{key[0]!r}, term {key[1]!r}: {e}"
+                ) from e
+
         # this segment's packed norms (norms_blob_df): dense int32 dl array
         # per field (index = doc_id - 1) + sorted tombstone ids
         seg_norms = norms[segment_id].value
@@ -1469,14 +1600,15 @@ def _make_kernel(
             """Per-shard (docs, freqs) decodes, in shard order — shared by
             raw_postings and flat_positions so sharded blobs decode once."""
             if key not in shard_cache:
-                shard_cache[key] = [
-                    packed.decode_postings(
-                        r.postings,
-                        int(r.docs_count),
-                        np.asarray(r.block_offsets, dtype=np.int64),
-                    )
-                    for r in rows_by_term.get(key, [])
-                ]
+                with blob_of(key):
+                    shard_cache[key] = [
+                        packed.decode_postings(
+                            r.postings,
+                            int(r.docs_count),
+                            np.asarray(r.block_offsets, dtype=np.int64),
+                        )
+                        for r in rows_by_term.get(key, [])
+                    ]
             return shard_cache[key]
 
         def raw_postings(key: tuple[str, str]):
@@ -1512,16 +1644,17 @@ def _make_kernel(
             if key not in pos_cache:
                 shards = rows_by_term[key]
                 decs = shard_decodes(key)
-                parts = [
-                    packed.decode_positions(
-                        r.positions,
-                        f_s,
-                        np.asarray(r.pos_offsets, dtype=np.int64)
-                        if getattr(r, "pos_offsets", None) is not None
-                        else None,
-                    )
-                    for r, (_, f_s) in zip(shards, decs)
-                ]
+                with blob_of(key):
+                    parts = [
+                        packed.decode_positions(
+                            r.positions,
+                            f_s,
+                            np.asarray(r.pos_offsets, dtype=np.int64)
+                            if getattr(r, "pos_offsets", None) is not None
+                            else None,
+                        )
+                        for r, (_, f_s) in zip(shards, decs)
+                    ]
                 pos_cache[key] = (
                     parts[0]
                     if len(parts) == 1
@@ -1630,12 +1763,12 @@ def _make_kernel(
                         for tid in node["tids"]
                         if instances[tid]["field"] == fld
                     }
-                    for key in rows_by_term:
-                        if key[0] != fld or key[1] in skip:
-                            continue
-                        if not _term_matches(leaf, key[1]):
-                            continue
-                        d, f_ = full_postings(key)
+                    terms = pa.table({"term": pa.array(
+                        [t for fl, t in rows_by_term if fl == fld and t not in skip],
+                        pa.string(),
+                    )}).filter(_leaf_expr(leaf))["term"]
+                    for t in terms.to_pylist():
+                        d, f_ = full_postings((fld, t))
                         if d.size:
                             parts_d.append(d)
                             parts_s.append(np.zeros(d.size, dtype))
@@ -1935,13 +2068,14 @@ def _make_kernel(
                     if bids.size == 0:
                         continue
                     diag["blocks_decoded"] += int(bids.size)
-                    d, f_, _ = packed.decode_blocks(
-                        r.postings,
-                        np.asarray(r.block_offsets, dtype=np.int64),
-                        np.asarray(r.last_docs, dtype=np.int64),
-                        int(r.docs_count),
-                        bids,
-                    )
+                    with blob_of(inst_key(tid)):
+                        d, f_, _ = packed.decode_blocks(
+                            r.postings,
+                            np.asarray(r.block_offsets, dtype=np.int64),
+                            np.asarray(r.last_docs, dtype=np.int64),
+                            int(r.docs_count),
+                            bids,
+                        )
                     sel = cand_mask[d] & ~del_arr[d]
                     d, f_ = d[sel], f_[sel]
                     s = inst_score(tid, d, f_)
@@ -2230,14 +2364,21 @@ def _make_kernel(
                     ),
                 }
             )
-        if docs.size == 0:
-            return empty
         order = np.lexsort((docs, -scores))
         if k is not None:
             order = order[:k]
-        out_cols["segment_id"] = np.full(order.size, segment_id, dtype=np.int32)
-        out_cols["doc_id"] = docs[order].astype(np.int32)
-        out_cols["score"] = scores[order]
-        return pd.DataFrame(out_cols)
+        hits = pd.DataFrame(
+            {
+                "segment_id": np.full(order.size, segment_id, dtype=np.int32),
+                "doc_id": docs[order].astype(np.int32),
+                "score": scores[order].astype(dtype),
+            }
+        )
+        if identity_dir is None:
+            return hits
+        return hits.merge(
+            _read_identity(identity_dir, segment_id, hits["doc_id"].to_numpy()),
+            on="doc_id",
+        )
 
     return kernel

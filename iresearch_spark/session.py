@@ -53,6 +53,9 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-Djava.io.tmpdir=/tmp -XX:+UseParallelGC",
         )
+        # the stock worker daemon, minus a zip-directory re-read per task
+        # (see iresearch_spark/pydaemon.py)
+        .config("spark.python.daemon.module", "iresearch_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

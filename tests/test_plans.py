@@ -6,18 +6,26 @@ fast at scale and that profiling can't catch on toy data:
 - the term predicate reaches the postings parquet scan (PushedFilters), so
   a 100 TB segments table reads only the matching row groups;
 - a non-positional query prunes the positions column out of the scan;
-- the docmeta identity join broadcasts only the bounded top-k side; the
-  unbounded all-matches side (k=None) must NOT carry a broadcast hint.
+- a query plan holds no docmeta scan and no join (the kernel resolves
+  identity), and a top-k query runs in at most 2 Spark jobs.
 """
 
 import io
+import uuid
 from contextlib import redirect_stdout
 
 import pytest
 
 from iresearch_spark.corpus import generate_corpus
 from iresearch_spark.index import build_index
-from iresearch_spark.search import Phrase, Prefix, SearchEngine, TermF
+from iresearch_spark.search import (
+    And,
+    Or,
+    Phrase,
+    Prefix,
+    SearchEngine,
+    TermF,
+)
 
 
 @pytest.fixture(scope="module")
@@ -131,8 +139,8 @@ def test_query_norms_side_is_packed_blobs_not_docmeta_scan(engine):
     scan + exchange — the last query-side 100x scale-killer. The norms are
     read once per manifest publish on the driver (norms_blob_df, the
     reader-open cost) and reach the kernel as broadcasts, so the kernel
-    plan (with_identity=False) must contain NO docmeta scan; the only
-    docmeta read allowed in a query plan is the bounded identity join."""
+    plan (with_identity=False) must contain NO docmeta scan; identity is
+    read inside the kernel, so no query plan scans docmeta at all."""
     df = engine.search(TermF(term="import"), k=5, with_identity=False)
     opt = _optimized(df)
     assert "docmeta" not in opt, opt
@@ -306,25 +314,59 @@ def test_like_regex_raises_on_dangling_escape():
         _like_regex("abc\\")
 
 
-def test_identity_join_broadcasts_only_bounded_topk(engine):
-    bounded = _optimized(engine.search(TermF(term="import"), k=5))
-    unbounded = _optimized(engine.search(TermF(term="import"), k=None))
-    assert "strategy=broadcast" in bounded, bounded[-500:]
-    assert "strategy=broadcast" not in unbounded, unbounded[-500:]
+# the perfbench query kinds: TermF, 3-term Or, And(sel, Or(hot, hot)),
+# 2-term Phrase and Prefix
+JOB_COUNT_QUERIES = [
+    TermF(term="import"),
+    Or(children=(TermF(term="def"), TermF(term="int"), TermF(term="sym_1"))),
+    And(children=(
+        TermF(term="sym_2"),
+        Or(children=(TermF(term="import"), TermF(term="return"))),
+    )),
+    Phrase(terms=("import", "def")),
+    Prefix(prefix="sym_1"),
+]
 
 
-def test_identity_join_dynamic_partition_pruning(engine):
-    """The top-k identity resolve must not scan the whole docmeta table:
-    docmeta is written partitionBy(segment_id), the hits side is
-    broadcast, and Spark's dynamic partition pruning narrows the scan to
-    the segments actually present in the top-k — the Spark analogue of
-    the reference opening only the matched segments' docstore
-    (`columnstore2.hpp:38-63`). At 10^12 docs this is the difference
-    between O(matched segments) and O(corpus) identity IO per query."""
-    plan = (
-        engine.search(TermF(term="import"), k=5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through its own job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("q", JOB_COUNT_QUERIES, ids=lambda q: type(q).__name__)
+def test_topk_query_runs_in_two_spark_jobs(spark, engine, q):
+    """A top-k query is one scan plus one kernel: term stats are read on
+    the driver with pyarrow and identity inside the kernel, so neither a
+    reader's first query nor a repeated one runs a dictionary job or an
+    identity join."""
+    eng = SearchEngine(spark, engine.index_dir)
+    first = _spark_jobs(spark, lambda: eng.search(q, k=10).collect())
+    again = _spark_jobs(spark, lambda: eng.search(q, k=10).collect())
+    assert 1 <= first <= 2 and 1 <= again <= 2, (first, again)
+
+
+@pytest.mark.parametrize("k", [5, None])
+def test_query_plan_has_no_docmeta_scan_or_join(engine, k):
+    """The kernel emits (repo, path, commit, lang) for its segment-local
+    top-k, so the finalize is a sort (TakeOrderedAndProject for k=5) over
+    the kernel output, with no docmeta DataFrame and no join."""
+    for q in JOB_COUNT_QUERIES:
+        df = engine.search(q, k=k)
+        assert df.columns == [
+            "repo", "path", "commit", "lang", "score", "segment_id", "doc_id"
+        ]
+        for plan in (
+            _optimized(df),
+            df._jdf.queryExecution().executedPlan().toString(),
+        ):
+            assert "docmeta" not in plan and "join" not in plan.lower(), plan
+    if k is not None:
+        plan = engine.search(TermF(term="import"), k=k)._jdf.queryExecution()
+        assert "TakeOrderedAndProject" in plan.executedPlan().toString()
