@@ -44,10 +44,6 @@ def strip_accents(s: str) -> str:
     )
 
 
-def _is_vowel(word: str, i: int) -> bool:
-    return word[i] in _VOWELS
-
-
 def _ends_short_syllable(word: str) -> bool:
     """Short syllable at the END of the word: either (a) vowel + non-vowel
     (not w/x/Y) preceded by a non-vowel, or (b) a vowel at position 0

@@ -295,7 +295,6 @@ def make_seg_builder(
     field: str,
     with_positions: bool,
     jvm_tokenize: bool | None = None,
-    verify_dictionary: bool = True,
     out_partitions: int | None = None,
     column: str | None = None,
 ):
@@ -392,16 +391,13 @@ def make_seg_builder(
             .groupBy("segment_id", F.xxhash64("term").alias("h"))
             .agg(F.min("term").alias("term"), F.max("term").alias("term_max"))
         )
-        if verify_dictionary:
-            term_col = F.when(
-                F.col("term") == F.col("term_max"), F.col("term")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(F.lit("xxhash64 term collision: "), F.col("term"))
-                )
+        term_col = F.when(
+            F.col("term") == F.col("term_max"), F.col("term")
+        ).otherwise(
+            F.raise_error(
+                F.concat(F.lit("xxhash64 term collision: "), F.col("term"))
             )
-        else:
-            term_col = F.col("term")
+        )
         out = seg_hash.join(dic, ["segment_id", "h"]).select(
             "segment_id",
             F.lit(field).alias("field"),
@@ -684,7 +680,6 @@ def build_index(
     fail_after_waves: int | None = None,
     resume: bool = False,
     jvm_tokenize: bool | None = None,
-    verify_dictionary: bool = True,
     fields: list[tuple[str, str]] | None = None,
     sort_by: list[str] | None = None,
     commit_payload: bytes | None = None,
@@ -738,7 +733,7 @@ def build_index(
     plan = _plan_waves(num_segments, waves)
     seg_builder = make_seg_builder(
         spark, analyzer, field, with_positions, jvm_tokenize,
-        verify_dictionary, out_partitions=num_segments,
+        out_partitions=num_segments,
     )
     dl_expr = make_dl_expr(analyzer, field)
     extra_fields = [
@@ -746,7 +741,7 @@ def build_index(
             name,
             make_seg_builder(
                 spark, az, name, with_positions, jvm_tokenize,
-                verify_dictionary, out_partitions=num_segments,
+                out_partitions=num_segments,
             ),
             make_dl_expr(az, name),
         )

@@ -132,14 +132,6 @@ def _like_body(pattern: str) -> str:
     return "".join(out)
 
 
-def _like_regex(pattern: str):
-    """Spark SQL LIKE -> compiled Python regex over the same body as the
-    pyarrow predicate (``_leaf_expr``), for matching plain strings."""
-    import re
-
-    return re.compile("(?s)\\A(?:" + _like_body(pattern) + ")\\Z")
-
-
 def _prefix_bounds(prefix: str) -> ds.Expression:
     """``prefix <= term < successor(prefix)``: the range of terms starting
     with ``prefix`` (code-point order == UTF-8 byte order), on which pyarrow
@@ -781,8 +773,11 @@ class SearchEngine:
     def _batch_lookup(
         self,
         pairs: set[tuple[str, str]],
-        leaves: list[tuple[str, Filter]],
-    ) -> tuple[dict[tuple[str, str], int], list[list[tuple[str, int]]]]:
+        leaves: list[tuple[str, Filter, bool]],
+    ) -> tuple[
+        dict[tuple[str, str], int],
+        dict[tuple[str, Filter, bool], list[tuple[str, int]]],
+    ]:
         """Global df of every literal term and the matched terms of every
         multi-term leaf of a query, from ONE driver-side dictionary read
         (``_read_dictionary``): the reference walks its in-memory FST per
@@ -792,8 +787,21 @@ class SearchEngine:
         dictionary job: its banded Levenshtein predicate is a JVM
         expression (``_leaf_pred``).
 
+        ``leaves`` holds (field, leaf, bounded) keys; a repeated key is
+        looked up once. A bounded key (a standalone Prefix/Wildcard/
+        TermRange) keeps only the TOP ``scored_terms_limit`` matched terms
+        by (df desc, term asc) — the ONLY driver-side materialization for
+        such a leaf. Its unscored rest
+        never becomes an instance: its predicate is pushed into the
+        kernel's segment scan and unioned executor-side
+        (`multiterm_query.cpp:36-106` bit_union;
+        `limited_sample_collector.hpp:45-244` keeps exactly this bounded
+        scored sample). The read holds a leaf's matched (term, df) rows in
+        Arrow memory until that sort. Any other key keeps every matched
+        term, in term order.
+
         Returns ``(dfs, matches)``: global docs_count per literal (field,
-        term) pair, and the matched (term, df) list per leaf."""
+        term) pair, and the matched (term, df) list per leaf key."""
         # term-stats cache — the analogue of the reference holding its term
         # dictionary (FST + per-term meta) in memory per open reader:
         # repeat lookups of the same literal or multi-term leaf serve from
@@ -804,7 +812,7 @@ class SearchEngine:
         self._check_stamp()
         entry_stamp = self._manifest_stamp
         dfs: dict[tuple[str, str], int] = {}
-        matches: list[list[tuple[str, int]]] = [[] for _ in leaves]
+        matches: dict[tuple[str, Filter, bool], list[tuple[str, int]]] = {}
         miss_pairs: set[tuple[str, str]] = set()
         for p in pairs:
             hit = self._stats_cache.get(("t",) + p)
@@ -813,16 +821,22 @@ class SearchEngine:
                 dfs[p] = 0
             else:
                 dfs[p] = hit
-        miss_leaves: list[tuple[int, str, Filter]] = []
-        fuzzy_leaves: list[tuple[int, str, Filter]] = []
-        for i, (fld, leaf) in enumerate(leaves):
-            hit = self._stats_cache.get(("l", fld, leaf))
+
+        def cache_key(key: tuple[str, Filter, bool]) -> tuple:
+            fld, leaf, bounded = key
+            return ("lb" if bounded else "l", fld, leaf)
+
+        miss_leaves: list[tuple[str, Filter, bool]] = []
+        fuzzy_leaves: list[tuple[str, Filter, bool]] = []
+        for key in dict.fromkeys(leaves):
+            hit = self._stats_cache.get(cache_key(key))
             if hit is not None:
-                matches[i] = list(hit)  # copy: callers own their list
-            elif isinstance(leaf, Fuzzy):
-                fuzzy_leaves.append((i, fld, leaf))
+                matches[key] = list(hit)  # copy: callers own their list
+            elif isinstance(key[1], Fuzzy):
+                fuzzy_leaves.append(key)
+                matches[key] = []
             else:
-                miss_leaves.append((i, fld, leaf))
+                miss_leaves.append(key)
 
         by_field: dict[str, set[str]] = {}
         for fld, term in miss_pairs:
@@ -833,7 +847,7 @@ class SearchEngine:
         ]
         leaf_exprs = [
             (ds.field("field") == fld) & _leaf_expr(leaf)
-            for _i, fld, leaf in miss_leaves
+            for fld, leaf, _bounded in miss_leaves
         ]
         if literal_exprs or leaf_exprs:
             rows = self._read_dictionary(reduce(or_, literal_exprs + leaf_exprs))
@@ -843,15 +857,19 @@ class SearchEngine:
                     *(lit[c].to_pylist() for c in ("field", "term", "df"))
                 ):
                     dfs[(fld, term)] = df
-            for (i, _fld, _leaf), expr in zip(miss_leaves, leaf_exprs):
+            for key, expr in zip(miss_leaves, leaf_exprs):
                 hit = rows.filter(expr)
-                matches[i] = list(
+                if key[2]:
+                    hit = hit.sort_by(
+                        [("df", "descending"), ("term", "ascending")]
+                    ).slice(0, int(key[1].scored_terms_limit))
+                matches[key] = list(
                     zip(hit["term"].to_pylist(), hit["df"].to_pylist())
                 )
         if fuzzy_leaves:
             preds = [
                 (F.col("field") == fld) & self._leaf_pred(leaf)
-                for _i, fld, leaf in fuzzy_leaves
+                for fld, leaf, _bounded in fuzzy_leaves
             ]
             rows = (
                 self._segments_scan()
@@ -862,71 +880,32 @@ class SearchEngine:
                 .collect()
             )
             for r in rows:
-                for j, (i, _fld, _leaf) in enumerate(fuzzy_leaves):
+                for j, key in enumerate(fuzzy_leaves):
                     if r[f"m{j}"]:
-                        matches[i].append((r["term"], int(r["df"])))
+                        matches[key].append((r["term"], int(r["df"])))
         # stamp-guarded insert: stats collected under the OLD snapshot must
         # not land in the cache after a concurrent publish's clear
         cacheable = self._manifest_stamp == entry_stamp
         if cacheable:
             for p in miss_pairs:
                 self._stats_cache[("t",) + p] = dfs[p]
-        for i, fld, leaf in miss_leaves + fuzzy_leaves:
+        for key in miss_leaves + fuzzy_leaves:
+            leaf = key[1]
             if isinstance(leaf, Fuzzy) and leaf.with_transpositions:
                 npfx = len(leaf.prefix)
-                matches[i] = [
+                matches[key] = [
                     (t, df_)
-                    for t, df_ in matches[i]
+                    for t, df_ in matches[key]
                     if damerau_levenshtein(t[npfx:], leaf.term)
                     <= leaf.max_distance
                 ]
-            matches[i].sort(key=lambda td: td[0])
+            if not key[2]:
+                matches[key].sort(key=lambda td: td[0])
             if cacheable:
                 # store an immutable snapshot so no caller aliasing can
                 # corrupt the cache
-                self._stats_cache[("l", fld, leaf)] = tuple(matches[i])
+                self._stats_cache[cache_key(key)] = tuple(matches[key])
         return dfs, matches
-
-    def _bounded_leaf_lookup(
-        self, bounded: list[tuple[str, Filter]]
-    ) -> dict[tuple[str, Filter], list[tuple[str, int]]]:
-        """TOP ``scored_terms_limit`` matched terms (by df desc, term asc)
-        per standalone multi-term leaf — the ONLY driver-side
-        materialization for Prefix/Wildcard/TermRange. The unscored rest
-        never becomes an instance: its predicate is pushed into the
-        kernel's segment scan and unioned executor-side
-        (`multiterm_query.cpp:36-106` bit_union;
-        `limited_sample_collector.hpp:45-244` keeps exactly this bounded
-        scored sample). One driver-side dictionary read for all missing
-        leaves, each limited with a pyarrow sort; the read holds a leaf's
-        matched (term, df) rows in Arrow memory until that sort."""
-        self._check_stamp()
-        entry_stamp = self._manifest_stamp
-        out: dict[tuple[str, Filter], list[tuple[str, int]]] = {}
-        miss: list[tuple[str, Filter]] = []
-        for key in bounded:
-            hit = self._stats_cache.get(("lb",) + key)
-            if hit is None:
-                miss.append(key)
-            else:
-                out[key] = list(hit)
-        if miss:
-            exprs = [
-                (ds.field("field") == fld) & _leaf_expr(leaf) for fld, leaf in miss
-            ]
-            rows = self._read_dictionary(reduce(or_, exprs))
-            cacheable = self._manifest_stamp == entry_stamp
-            for key, expr in zip(miss, exprs):
-                top = (
-                    rows.filter(expr)
-                    .sort_by([("df", "descending"), ("term", "ascending")])
-                    .slice(0, int(key[1].scored_terms_limit))
-                )
-                lst = list(zip(top["term"].to_pylist(), top["df"].to_pylist()))
-                if cacheable:  # same stamp-guard as _batch_lookup
-                    self._stats_cache[("lb",) + key] = tuple(lst)
-                out[key] = lst
-        return out
 
     # ------------------------------------------------------------- prepare
     def prepare(self, f: Filter, dtype_name: str = "float32") -> _Prepared:
@@ -955,22 +934,7 @@ class SearchEngine:
         # by the edit automaton), phrase slots (need per-term positions) and
         # granular-range tries (bounded by trie width) collect fully.
         literal_pairs: list[tuple[str, str]] = []
-        leaf_list: list[tuple[str, Filter]] = []
-        leaf_index: dict[tuple[str, Filter], int] = {}
-        bounded_list: list[tuple[str, Filter]] = []
-        bounded_seen: set[tuple[str, Filter]] = set()
-
-        def reg_leaf(fld: str, leaf: Filter) -> None:
-            key = (fld, leaf)
-            if key not in leaf_index:
-                leaf_index[key] = len(leaf_list)
-                leaf_list.append(key)
-
-        def reg_bounded(fld: str, leaf: Filter) -> None:
-            key = (fld, leaf)
-            if key not in bounded_seen:
-                bounded_seen.add(key)
-                bounded_list.append(key)
+        leaf_keys: list[tuple[str, Filter, bool]] = []  # (field, leaf, bounded)
 
         def collect_terms(node: Filter):
             if isinstance(node, TermF):
@@ -997,13 +961,12 @@ class SearchEngine:
                     elif isinstance(el, TermsF):
                         literal_pairs.extend((fld, t) for t, _ in el.pairs())
                     elif isinstance(el, (Prefix, Wildcard, TermRange, Fuzzy)):
-                        reg_leaf(fld, el)
+                        leaf_keys.append((fld, el, False))
                     else:
                         raise TypeError(f"bad phrase element {el!r}")
-            elif isinstance(node, Fuzzy):
-                reg_leaf(self._resolve_field(node.field_name), node)
-            elif isinstance(node, (Prefix, Wildcard, TermRange)):
-                reg_bounded(self._resolve_field(node.field_name), node)
+            elif isinstance(node, (Prefix, Wildcard, TermRange, Fuzzy)):
+                fld = self._resolve_field(node.field_name)
+                leaf_keys.append((fld, node, not isinstance(node, Fuzzy)))
             elif isinstance(node, GranularRangeF):
                 from iresearch_spark.search.numeric import granular_ranges
 
@@ -1013,7 +976,7 @@ class SearchEngine:
                     include_min=node.include_min,
                     include_max=node.include_max,
                 ):
-                    reg_leaf(fld, tr)
+                    leaf_keys.append((fld, tr, False))
             elif isinstance(node, (And, Or)):
                 for c in node.children:
                     collect_terms(c)
@@ -1021,8 +984,7 @@ class SearchEngine:
                 collect_terms(node.child)
 
         collect_terms(f)
-        dfs, leaf_matches = self._batch_lookup(set(literal_pairs), leaf_list)
-        bounded_matches = self._bounded_leaf_lookup(bounded_list)
+        dfs, leaf_matches = self._batch_lookup(set(literal_pairs), leaf_keys)
         rest_specs: list[tuple[str, Filter]] = []
 
         def add_instance(
@@ -1048,7 +1010,7 @@ class SearchEngine:
             return len(instances) - 1
 
         def leaf_terms(fld: str, leaf: Filter) -> list[tuple[str, int]]:
-            return leaf_matches[leaf_index[(fld, leaf)]]
+            return leaf_matches[(fld, leaf, False)]
 
         def expand_multiterm(leaf, boost: float) -> dict:
             fld = self._resolve_field(leaf.field_name)
@@ -1097,7 +1059,7 @@ class SearchEngine:
             # its postings per segment from the pushed-predicate scan
             # (`multiterm_query.cpp:36-106` bit_union)
             used_fields.add(fld)
-            scored = bounded_matches[(fld, leaf)]
+            scored = leaf_matches[(fld, leaf, True)]
             tids = [add_instance(fld, t, df, boost, True) for t, df in scored]
             rest_specs.append((fld, leaf))
             return {
@@ -1509,6 +1471,14 @@ class SearchEngine:
 
 # ----------------------------------------------------------------- kernel
 
+# ScoreMergeType (scorer.hpp:223-237): how matched sub-scores combine per
+# doc — the reduction ufunc and its identity
+_MERGE = {
+    "sum": (np.add, 0.0),
+    "max": (np.maximum, -np.inf),
+    "min": (np.minimum, np.inf),
+}
+
 
 def _matches_without_postings(node: dict) -> bool:
     """True when the compiled tree holds an ``all`` or ``exists`` node —
@@ -1712,17 +1682,9 @@ def _make_kernel(
             if all_d.size == 0:
                 return all_d.astype(np.int64), all_s.astype(dtype)
             uniq, inv = np.unique(all_d, return_inverse=True)
-            if merge == "sum":
-                scores = np.zeros(uniq.size, dtype)
-                np.add.at(scores, inv, all_s)
-            elif merge == "max":
-                scores = np.full(uniq.size, -np.inf, dtype)
-                np.maximum.at(scores, inv, all_s)
-            elif merge == "min":
-                scores = np.full(uniq.size, np.inf, dtype)
-                np.minimum.at(scores, inv, all_s)
-            else:  # pragma: no cover
-                raise ValueError(merge)
+            red, init = _MERGE[merge]
+            scores = np.full(uniq.size, init, dtype)
+            red.at(scores, inv, all_s)
             counts = np.bincount(inv, minlength=uniq.size)
             mask = counts >= min_match
             return uniq[mask], scores[mask]
@@ -1789,22 +1751,11 @@ def _make_kernel(
                 inter = parts[order[0]][0]
                 for j in order[1:]:
                     inter = np.intersect1d(inter, parts[j][0], assume_unique=True)
-                merge = node.get("merge", "sum")
-                if merge == "sum":
-                    scores = np.zeros(inter.size, dtype)
-                    for d, s in parts:  # sum in child order (float determinism)
-                        idx = np.searchsorted(d, inter)
-                        scores += s[idx]
-                else:
-                    # kMax/kMin conjunction merge (scorer.hpp:223-237; the
-                    # AndQuery is built with the filter's merge_type)
-                    red = np.maximum if merge == "max" else np.minimum
-                    scores = None
-                    for d, s in parts:
-                        g = s[np.searchsorted(d, inter)]
-                        scores = g if scores is None else red(scores, g)
-                    if scores is None:
-                        scores = np.zeros(inter.size, dtype)
+                # the AndQuery is built with the filter's merge_type
+                red, init = _MERGE[node.get("merge", "sum")]
+                scores = np.full(inter.size, init, dtype)
+                for d, s in parts:  # child order (float determinism)
+                    red(scores, s[np.searchsorted(d, inter)], out=scores)
                 for ex in node.get("excludes", []):
                     ed, _ = eval_node(ex)
                     keep = ~np.isin(inter, ed, assume_unique=True)
@@ -1821,6 +1772,36 @@ def _make_kernel(
                 return eval_ngram_sim(node)
             raise ValueError(op)
 
+        def positional_matches(slots: list[list], shifts) -> np.ndarray:
+            """Packed ``doc << 31 | pos`` keys at which every slot has one
+            of its member (field, term) keys at position ``pos + shift``.
+            Candidates are the docs holding some member of every slot. Slot
+            i contributes the key set {(doc, p - shift_i)} (union over its
+            members, deduped), and a key counted once per slot matches — a
+            slot repeated n times contributes exactly n counts. doc < 2^31
+            (int32 ids) and pos < 2^31 (positions are token ordinals,
+            bounded by dl)."""
+            cand = None
+            for members in slots:
+                if not members:
+                    return np.empty(0, np.int64)
+                docs = reduce(np.union1d, [full_postings(t)[0] for t in members])
+                cand = docs if cand is None else np.intersect1d(
+                    cand, docs, assume_unique=True)
+            if cand.size == 0:
+                return np.empty(0, np.int64)
+            key_sets = []
+            for members, shift in zip(slots, shifts):
+                parts = []
+                for t in members:
+                    d_rep, p = positions_for(t, cand)
+                    adj = p - np.int64(shift)
+                    ok = adj >= 0
+                    parts.append((d_rep[ok] << np.int64(31)) | adj[ok])
+                key_sets.append(np.unique(np.concatenate(parts)))
+            uq, cnt = np.unique(np.concatenate(key_sets), return_counts=True)
+            return uq[cnt == len(slots)]
+
         def eval_same_pos(node: dict) -> tuple[np.ndarray, np.ndarray]:
             """by_same_position kernel (same_position_filter.cpp:38-99):
             conjunction of the (field, term) postings, a doc surviving iff
@@ -1830,25 +1811,8 @@ def _make_kernel(
             gates matching, not freq."""
             tids = node["tids"]
             keys = [inst_key(t) for t in tids]
-            posts = [full_postings(k) for k in keys]
-            cand = posts[0][0]
-            for d, _ in posts[1:]:
-                if cand.size == 0:
-                    break
-                cand = np.intersect1d(cand, d, assume_unique=True)
-            if cand.size:
-                n = len(keys)
-                parts = []
-                for k in keys:
-                    d_rep, p = positions_for(k, cand)
-                    parts.append(np.unique((d_rep << np.int64(31)) | p))
-                uq, cnt = np.unique(np.concatenate(parts), return_counts=True)
-                # a key counted len(keys) times occurs in every slot —
-                # duplicated (field, term) slots contribute exactly their
-                # multiplicity, so the bar stays n for them too
-                docs = np.unique(uq[cnt == n] >> np.int64(31))
-            else:
-                docs = np.empty(0, np.int64)
+            matched = positional_matches([[k] for k in keys], [0] * len(keys))
+            docs = np.unique(matched >> np.int64(31))
             if docs.size == 0:
                 return docs, np.empty(0, dtype)
             total = np.zeros(docs.size, dtype=dtype)
@@ -1858,57 +1822,13 @@ def _make_kernel(
             return docs, total
 
         def eval_phrase(node: dict) -> tuple[np.ndarray, np.ndarray]:
-            groups = node["groups"]
-            # per slot: union of member-term postings
-            slot_docs: list[np.ndarray] = []
-            slot_members: list[list[str]] = []
-            for g in groups:
-                terms_g = [inst_key(t) for t in g]
-                terms_g = [t for t in terms_g if t in rows_by_term]
-                if not terms_g:
-                    return np.empty(0, np.int64), np.empty(0, dtype)
-                docs_u = (
-                    full_postings(terms_g[0])[0]
-                    if len(terms_g) == 1
-                    else np.union1d(
-                        *[full_postings(t)[0] for t in terms_g]
-                    )
-                    if len(terms_g) == 2
-                    else np.unique(
-                        np.concatenate([full_postings(t)[0] for t in terms_g])
-                    )
-                )
-                slot_docs.append(docs_u)
-                slot_members.append(terms_g)
-            cand = slot_docs[0]
-            for d in slot_docs[1:]:
-                cand = np.intersect1d(cand, d, assume_unique=True)
-            if cand.size == 0:
-                return cand, np.empty(0, dtype)
-            # flat vectorized verify (no per-doc loop): slot i contributes
-            # the key set {(doc, pos - i)} (union over member terms); a
-            # phrase occurrence at (doc, p) exists iff the key (doc, p)
-            # appears in ALL n_slots key sets — count keys across slots and
-            # keep those seen n_slots times. (doc, pos) packs into one int64:
-            # doc < 2^31 (int32 ids) and pos < 2^31 (positions are token
-            # ordinals, bounded by dl).
-            n_slots = len(slot_members)
-            slot_pos = node.get("positions") or list(range(n_slots))
-            key_parts: list[np.ndarray] = []
-            for i, terms_g in enumerate(slot_members):
-                shift = np.int64(slot_pos[i])
-                parts = []
-                for t in terms_g:
-                    d_rep, p = positions_for(t, cand)
-                    adj = p - shift
-                    ok = adj >= 0
-                    parts.append((d_rep[ok] << np.int64(31)) | adj[ok])
-                keys = np.concatenate(parts) if parts else np.empty(0, np.int64)
-                # dedupe within the slot: member-term unions may overlap
-                key_parts.append(np.unique(keys))
-            all_keys = np.concatenate(key_parts)
-            uniq_keys, counts = np.unique(all_keys, return_counts=True)
-            matched = uniq_keys[counts == n_slots]
+            """Phrase kernel: each slot is a term set (one term, or a
+            variadic slot's matched terms) at its phrase position; score
+            is the phrase freq — the matched occurrences per doc."""
+            matched = positional_matches(
+                [[inst_key(t) for t in g] for g in node["groups"]],
+                node["positions"],
+            )
             if matched.size == 0:
                 return np.empty(0, np.int64), np.empty(0, dtype)
             docs, phrase_freqs = np.unique(matched >> np.int64(31),
@@ -2051,12 +1971,8 @@ def _make_kernel(
             same float32 op order as the exhaustive path). Returns the
             dense score array plus the per-doc MATCHED-TERM COUNT (the
             min_match input, `min_match_disjunction.hpp:62-200`)."""
-            if merge == "sum":
-                acc = np.zeros(ndocs + 1, dtype)
-            elif merge == "max":
-                acc = np.full(ndocs + 1, -np.inf, dtype)
-            else:
-                acc = np.full(ndocs + 1, np.inf, dtype)
+            red, init = _MERGE[merge]
+            acc = np.full(ndocs + 1, init, dtype)
             counts = np.zeros(ndocs + 1, dtype=np.int32)
             cum = np.concatenate([[0], np.cumsum(cand_mask)])
             for tid in tids:
@@ -2078,34 +1994,31 @@ def _make_kernel(
                         )
                     sel = cand_mask[d] & ~del_arr[d]
                     d, f_ = d[sel], f_[sel]
-                    s = inst_score(tid, d, f_)
-                    if merge == "sum":
-                        acc[d] += s
-                    elif merge == "max":
-                        acc[d] = np.maximum(acc[d], s)
-                    else:
-                        acc[d] = np.minimum(acc[d], s)
+                    acc[d] = red(acc[d], inst_score(tid, d, f_))
                     # a term's shards are disjoint doc ranges, so each doc
                     # appears at most once per tid — plain += is exact
                     counts[d] += 1
             return acc, counts
 
         def descendant_tids(n: dict) -> list[int]:
-            """Scored term ids under a wandable subtree, in tree order
-            (excludes contribute no score and are NOT collected)."""
+            """Scored term ids under a wandable subtree that have rows in
+            this segment, in tree order (excludes contribute no score and
+            are NOT collected)."""
             if n["op"] == "terms":
-                return list(n["tids"])
-            out: list[int] = []
-            for c in n["children"]:
-                out.extend(descendant_tids(c))
-            return out
+                return [t for t in n["tids"] if inst_key(t) in rows_by_term]
+            return [t for c in n["children"] for t in descendant_tids(c)]
 
         def node_cost(n: dict) -> int:
-            cost = 0
-            for t in descendant_tids(n):
-                for r in rows_by_term.get(inst_key(t), []):
-                    cost += int(r.docs_count)
-            return cost
+            return sum(
+                int(r.docs_count)
+                for t in descendant_tids(n)
+                for r in rows_by_term[inst_key(t)]
+            )
+
+        def doc_mask(docs: np.ndarray) -> np.ndarray:
+            mask = np.zeros(ndocs + 1, dtype=bool)
+            mask[docs] = True
+            return mask
 
         def eval_masked(node: dict, cand_mask, blockinfo):
             """Generic masked evaluator: exact (dense score, dense matched)
@@ -2124,25 +2037,14 @@ def _make_kernel(
                 )
                 return acc, counts >= node["min_match"]
             if op == "or":
-                merge = node.get("merge", "sum")
-                if merge == "sum":
-                    acc = np.zeros(ndocs + 1, dtype)
-                elif merge == "max":
-                    acc = np.full(ndocs + 1, -np.inf, dtype)
-                else:
-                    acc = np.full(ndocs + 1, np.inf, dtype)
+                red, init = _MERGE[node.get("merge", "sum")]
+                acc = np.full(ndocs + 1, init, dtype)
                 counts = np.zeros(ndocs + 1, dtype=np.int32)
                 for c in node["children"]:
                     acc_c, m_c = eval_masked(c, cand_mask, blockinfo)
-                    if merge == "sum":
-                        # x + 0.0 == x exactly: unmatched children are
-                        # no-ops, matched ones add in child order (the
-                        # same per-doc order as merge_union's add.at)
-                        acc += np.where(m_c, acc_c, dtype(0))
-                    elif merge == "max":
-                        acc = np.where(m_c, np.maximum(acc, acc_c), acc)
-                    else:
-                        acc = np.where(m_c, np.minimum(acc, acc_c), acc)
+                    # matched children combine in child order (the same
+                    # per-doc order as merge_union's ufunc.at)
+                    acc = np.where(m_c, red(acc, acc_c), acc)
                     counts += m_c
                 return acc, counts >= node["min_match"]
             if op == "and":
@@ -2158,75 +2060,80 @@ def _make_kernel(
                 return acc, matched
             raise ValueError(op)  # pragma: no cover — gated by wandable
 
-        def wand_flat(node: dict) -> tuple[np.ndarray, np.ndarray]:
-            """Two-phase block-max WAND for any wandable terms/or subtree —
-            including min_match>1 disjunctions and Or-of-And nests. The
-            dense per-doc SUM of every descendant term's block upper bounds
-            is a valid bound for any sum/max/min merge combination over
-            non-negative scores (and min_match only shrinks the match set),
-            so one bound serves the whole tree."""
-            tids = [
-                t for t in descendant_tids(node)
-                if inst_key(t) in rows_by_term
-            ]
-            if not tids:
-                return np.empty(0, np.int64), np.empty(0, dtype)
-            ub, blockinfo = dense_ub(tids)
-
-            def full_pass(mode: str):
-                diag["mode"] = mode
-                acc, matched = eval_masked(
-                    node, np.ones(ndocs + 1, dtype=bool), blockinfo
-                )
-                docs = np.flatnonzero(matched)
-                return docs, acc[docs]
-
-            # bootstrap threshold from top-C upper-bound docs
+        def two_phase(universe, ub, exact_on, tag: str):
+            """The wanderator's bootstrap-then-prune pass
+            (`formats_10.cpp:2426-2806`) over the sorted candidate docs
+            ``universe``, whose float64 score upper bounds ``ub`` are
+            aligned with it; ``exact_on(docs)`` returns the exact (docs,
+            scores) of the matches among the sorted ``docs``. The regime
+            lands in ``diag["mode"]`` as ``tag`` + full_small / full_lowmatch
+            / full_dense / pruned."""
             C = max(4 * k, 256)
-            if ndocs + 1 <= C:
-                return full_pass("full_small")
-            top_ub_docs = np.argpartition(ub, -C)[-C:]
-            mask1 = np.zeros(ndocs + 1, dtype=bool)
-            mask1[top_ub_docs] = True
-            acc1, matched1 = eval_masked(node, mask1, blockinfo)
-            cand1 = np.flatnonzero(matched1)
-            if cand1.size < k:
-                return full_pass("full_lowmatch")
-            s1 = acc1[cand1]
-            theta = np.partition(s1, -k)[-k]
-            mask2 = ub >= np.float64(theta)
-            mask2 &= ~mask1  # already have exact scores for mask1 docs
+            if universe.size <= C:
+                diag["mode"] = tag + "full_small"
+                return exact_on(universe)
+            # bootstrap threshold from the top-C upper-bound docs
+            docs1 = np.sort(universe[np.argpartition(ub, -C)[-C:]])
+            docs_a, scores_a = exact_on(docs1)
+            if docs_a.size < k:
+                diag["mode"] = tag + "full_lowmatch"
+                return exact_on(universe)
+            theta = np.partition(scores_a, -k)[-k]
+            # already have exact scores for the bootstrap docs
+            surv = universe[
+                (ub >= np.float64(theta)) & ~doc_mask(docs1)[universe]
+            ]
             # degenerate pruning guard: on low-score-variance corpora the
             # k-th threshold sits below most docs' upper bounds, so phase 2
             # would re-decode nearly every block AFTER the bootstrap pass —
             # 2x an exhaustive scan. When the survivor set is dense, one
             # full pass is strictly cheaper (the reference's wanderator has
             # the same regime: dense hot-term disjunctions skip nothing).
-            if mask2.sum() > 0.25 * (ndocs + 1):
-                return full_pass("full_dense")
-            diag["mode"] = "pruned"
-            acc2, matched2 = eval_masked(node, mask2, blockinfo)
-            # phase masks are disjoint: each matched doc's exact score
-            # lives in exactly one acc (works for sum AND max/min merges)
-            acc = np.where(matched1, acc1, acc2)
-            matched = matched1 | matched2
-            docs = np.flatnonzero(matched)
-            return docs, acc[docs]
+            if surv.size > 0.25 * universe.size:
+                diag["mode"] = tag + "full_dense"
+                return exact_on(universe)
+            diag["mode"] = tag + "pruned"
+            # the phases' doc sets are disjoint: each matched doc's exact
+            # score comes from exactly one of them
+            docs_b, scores_b = exact_on(surv)
+            docs = np.concatenate([docs_a, docs_b])
+            order_ = np.argsort(docs, kind="stable")
+            return docs[order_], np.concatenate([scores_a, scores_b])[order_]
+
+        def wand_flat(node: dict) -> tuple[np.ndarray, np.ndarray]:
+            """Two-phase block-max WAND for any wandable terms/or subtree —
+            including min_match>1 disjunctions and Or-of-And nests — over
+            every doc of the segment. The dense per-doc SUM of every
+            descendant term's block upper bounds is a valid bound for any
+            sum/max/min merge combination over non-negative scores (and
+            min_match only shrinks the match set), so one bound serves the
+            whole tree."""
+            tids = descendant_tids(node)
+            if not tids:
+                return np.empty(0, np.int64), np.empty(0, dtype)
+            ub, blockinfo = dense_ub(tids)
+
+            def exact_on(docs: np.ndarray):
+                acc, matched = eval_masked(node, doc_mask(docs), blockinfo)
+                hit = np.flatnonzero(matched)
+                return hit, acc[hit]
+
+            return two_phase(np.arange(ndocs + 1), ub, exact_on, "")
 
         def wand_and(node: dict) -> tuple[np.ndarray, np.ndarray]:
             """Block-max pruning for a top-k conjunction of wandable
             subtrees (`And(term, Or(terms))`, min_match children, nested
             Or-of-And, with excludes): the cheapest child (by summed
-            docs_count) decodes exhaustively and bounds the candidate set;
-            every other child decodes ONLY blocks that intersect it (the
-            wanderator's leaf-level skip, `formats_10.cpp:2426-2806`), with
-            a bootstrap threshold over s_lead + sum of the other children's
-            block upper bounds (`score.hpp:33-62` max.tail analogue)
-            pruning candidates that can never reach the top k. Excludes are
-            removed from the lead BEFORE the threshold bootstrap (an
-            excluded doc must never inflate theta). Exact scores accumulate
-            per child in CHILD order — the same float32 op order as the
-            exhaustive 'and' — so results are bit-identical to WAND-off."""
+            docs_count) decodes exhaustively and its docs are the
+            two-phase universe; every other child decodes ONLY blocks that
+            intersect the docs being scored (the wanderator's leaf-level
+            skip, `formats_10.cpp:2426-2806`), and a doc's bound is s_lead
+            + the sum of the other children's block upper bounds
+            (`score.hpp:33-62` max.tail analogue). Excludes are removed
+            from the lead BEFORE the threshold bootstrap (an excluded doc
+            must never inflate theta). Exact scores accumulate per child in
+            CHILD order — the same float32 op order as the exhaustive
+            'and' — so results are bit-identical to WAND-off."""
             children = node["children"]
             costs = [node_cost(c) for c in children]
             lead = int(np.argmin(costs))
@@ -2243,10 +2150,7 @@ def _make_kernel(
             for j, c in enumerate(children):
                 if j == lead:
                     continue
-                tids = [
-                    t for t in descendant_tids(c)
-                    if inst_key(t) in rows_by_term
-                ]
+                tids = descendant_tids(c)
                 if not tids:  # child matches nothing here -> empty conj
                     return np.empty(0, np.int64), np.empty(0, dtype)
                 ub_j, binfo_j = dense_ub(tids)
@@ -2255,8 +2159,7 @@ def _make_kernel(
             def exact_on(docs_sub: np.ndarray):
                 """Conjunction-exact (docs, scores) restricted to the given
                 candidate docs (subset of d_lead)."""
-                mask = np.zeros(ndocs + 1, dtype=bool)
-                mask[docs_sub] = True
+                mask = doc_mask(docs_sub)
                 accs: dict[int, np.ndarray] = {}
                 alive = docs_sub
                 for j, c, binfo, _ub in others:
@@ -2273,39 +2176,15 @@ def _make_kernel(
                         scores += accs[j][alive]
                 return alive, scores
 
-            C = max(4 * k, 256)
-            if d_lead.size <= C:
-                diag["mode"] = "and_full_small"
-                return exact_on(d_lead)
             ub_total = s_lead.astype(np.float64)
             for _j, _c, _binfo, ub_j in others:
                 ub_total = ub_total + ub_j[d_lead]
-            top_idx = np.argpartition(ub_total, -C)[-C:]
-            docs1 = np.sort(d_lead[top_idx])
-            a_docs1, a_scores1 = exact_on(docs1)
-            if a_docs1.size < k:
-                diag["mode"] = "and_full_lowmatch"
-                return exact_on(d_lead)
-            theta = np.partition(a_scores1, -k)[-k]
-            in_phase1 = np.zeros(ndocs + 1, dtype=bool)
-            in_phase1[docs1] = True
-            surv = d_lead[
-                (ub_total >= np.float64(theta)) & ~in_phase1[d_lead]
-            ]
-            if surv.size > 0.25 * d_lead.size:  # dense-survivor guard
-                diag["mode"] = "and_full_dense"
-                return exact_on(d_lead)
-            diag["mode"] = "and_pruned"
-            a_docs2, a_scores2 = exact_on(surv)
-            docs = np.concatenate([a_docs1, a_docs2])
-            scores = np.concatenate([a_scores1, a_scores2])
-            order_ = np.argsort(docs, kind="stable")
-            return docs[order_], scores[order_]
+            return two_phase(d_lead, ub_total, exact_on, "and_")
 
         def wandable_subtree(n: dict) -> bool:
             """True when every scored leaf under ``n`` is a plain terms set
-            (no unscored rest), all merges are sum/max/min, and min_match
-            is satisfiable — the shapes the wanderator serves
+            (no unscored rest), every conjunction merges by sum, and
+            min_match is satisfiable — the shapes the wanderator serves
             (`formats_10.cpp:2426-2806`, `min_match_disjunction.hpp`).
             Excludes under 'and' are allowed (they only shrink the match
             set, so the sum-of-UBs bound stays valid)."""
@@ -2313,15 +2192,13 @@ def _make_kernel(
             if op == "terms":
                 return (
                     n.get("rest") is None
-                    and n.get("merge", "sum") in ("sum", "max", "min")
                     and bool(n["tids"])
                     and n["min_match"] <= len(n["tids"])
                     and all(instances[t]["scored"] for t in n["tids"])
                 )
             if op == "or":
                 return (
-                    n.get("merge", "sum") in ("sum", "max", "min")
-                    and bool(n["children"])
+                    bool(n["children"])
                     and n["min_match"] <= len(n["children"])
                     and all(wandable_subtree(c) for c in n["children"])
                 )
@@ -2335,20 +2212,13 @@ def _make_kernel(
                 )
             return False
 
-        use_wand = (
-            wand and tree["op"] in ("terms", "or") and wandable_subtree(tree)
-        )
-        use_wand_and = (
+        # a one-child conjunction (an Or with negations) runs exhaustive
+        if (
             wand
-            and tree["op"] == "and"
-            and tree.get("merge", "sum") == "sum"
-            and len(tree["children"]) >= 2
-            and all(wandable_subtree(c) for c in tree["children"])
-        )
-        if use_wand:
-            docs, scores = wand_flat(tree)
-        elif use_wand_and:
-            docs, scores = wand_and(tree)
+            and wandable_subtree(tree)
+            and (tree["op"] != "and" or len(tree["children"]) >= 2)
+        ):
+            docs, scores = (wand_and if tree["op"] == "and" else wand_flat)(tree)
         else:
             docs, scores = eval_node(tree)
         if stats:

@@ -53,6 +53,16 @@ class TermsF(Filter):
         return tuple(sorted(out.items()))
 
 
+def _check_merge_type(f: Filter) -> None:
+    """ScoreMergeType has three values (scorer.hpp:223-237); any other
+    merge_type is refused when the filter is built."""
+    if f.merge_type not in ("sum", "max", "min"):
+        raise ValueError(
+            f"{type(f).__name__}.merge_type must be one of sum, max, min; "
+            f"got {f.merge_type!r}"
+        )
+
+
 @dataclass(frozen=True)
 class And(Filter):
     """Conjunction; ``merge_type`` picks how the matching children's
@@ -62,6 +72,8 @@ class And(Filter):
 
     children: tuple[Filter, ...] = ()
     merge_type: str = "sum"
+
+    __post_init__ = _check_merge_type
 
 
 @dataclass(frozen=True)
@@ -73,6 +85,8 @@ class Or(Filter):
     children: tuple[Filter, ...] = ()
     min_match: int = 1
     merge_type: str = "sum"  # sum | max | min
+
+    __post_init__ = _check_merge_type
 
 
 @dataclass(frozen=True)

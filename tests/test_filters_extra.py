@@ -55,6 +55,18 @@ def test_rewrites():
     assert rewrite(SamePosition(terms=("x", "y"))) == SamePosition(terms=("x", "y"))
 
 
+@pytest.mark.parametrize("cls", ["And", "Or"])
+def test_unknown_merge_type_is_refused(cls):
+    """ScoreMergeType is sum/max/min: any other merge_type fails when the
+    filter is built, not as a silent min (And) or inside a Spark task
+    (Or)."""
+    from iresearch_spark.search import filters
+
+    kids = (TermF(term="import"), TermF(term="return"))
+    with pytest.raises(ValueError, match="sum, max, min"):
+        getattr(filters, cls)(children=kids, merge_type="avg")
+
+
 def test_or_merge_types(engine):
     from iresearch_spark.search import Or
 

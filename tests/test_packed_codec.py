@@ -33,24 +33,21 @@ def _manifest_codecs(d: str) -> tuple[str, str]:
 
 @st.composite
 def posting_lists(draw, min_len=1):
+    """Per term: a drawn length, a drawn upper bound per column (so bit
+    widths from 1 to the maximum all occur) and a drawn seed for the
+    values. Drawing every value through ``st.lists`` overruns Hypothesis's
+    per-example data budget on long lists."""
     T = draw(st.integers(1, 6))
     lengths, docs, freqs, dls = [], [], [], []
     for _ in range(T):
         n = draw(st.integers(min_len, 400))
-        gaps = draw(
-            st.lists(
-                st.integers(1, 1 << 20), min_size=n, max_size=n
-            )
-        )
-        d = np.cumsum(np.asarray(gaps, dtype=np.int64))
-        f = np.asarray(
-            draw(st.lists(st.integers(1, 1 << 16), min_size=n, max_size=n)),
-            dtype=np.int64,
-        )
-        dl = np.asarray(
-            draw(st.lists(st.integers(1, 1 << 16), min_size=n, max_size=n)),
-            dtype=np.int64,
-        )
+        rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+        gap_hi = draw(st.integers(1, 1 << 20))
+        f_hi = draw(st.integers(1, 1 << 16))
+        dl_hi = draw(st.integers(1, 1 << 16))
+        d = np.cumsum(rng.integers(1, gap_hi, n, endpoint=True))
+        f = rng.integers(1, f_hi, n, endpoint=True)
+        dl = rng.integers(1, dl_hi, n, endpoint=True)
         lengths.append(n)
         docs.append(d)
         freqs.append(f)

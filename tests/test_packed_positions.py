@@ -48,15 +48,16 @@ def position_streams(draw):
     for _ in range(T):
         n = draw(st.integers(1, 40))  # postings in this term
         lengths.append(n)
-        for _ in range(n):
-            f = draw(st.integers(1, 30))
-            gaps = draw(
-                st.lists(st.integers(0, 1 << 18), min_size=f, max_size=f)
-            )
+        # values from a drawn seed under drawn upper bounds: drawing each
+        # one overruns Hypothesis's per-example data budget
+        rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+        f_hi = draw(st.integers(1, 30))
+        gap_hi = draw(st.integers(0, 1 << 18))
+        for f in rng.integers(1, f_hi, n, endpoint=True).tolist():
+            gaps = rng.integers(0, gap_hi, f, endpoint=True)
             # first gap is the absolute first position; rest are deltas >= 1
             pos = np.cumsum(
-                np.asarray(gaps, dtype=np.int64)
-                + np.concatenate([[0], np.ones(f - 1, dtype=np.int64)])
+                gaps + np.concatenate([[0], np.ones(f - 1, dtype=np.int64)])
             )
             freqs.append(f)
             flats.append(pos)

@@ -305,13 +305,15 @@ def test_stored_fields_rejects_hit_column_collisions(engine):
 
 
 def test_like_regex_raises_on_dangling_escape():
-    """Spark LIKE raises on a trailing lone backslash; the kernel twin must
+    """Spark LIKE raises on a trailing lone backslash; the pyarrow twin must
     mirror that strictness rather than silently treat it as a literal."""
-    from iresearch_spark.search.executor import _like_regex
+    import re
 
-    assert _like_regex("a\\%b").match("a%b")
+    from iresearch_spark.search.executor import _like_body
+
+    assert re.fullmatch(_like_body("a\\%b"), "a%b")
     with pytest.raises(ValueError, match="dangling"):
-        _like_regex("abc\\")
+        _like_body("abc\\")
 
 
 # the perfbench query kinds: TermF, 3-term Or, And(sel, Or(hot, hot)),

@@ -1,9 +1,9 @@
 """The query path's driver-side dictionary and the kernel's error naming.
 
-- Term stats are read on the driver with pyarrow (``_batch_lookup``,
-  ``_bounded_leaf_lookup``); each lookup must equal the Spark aggregate it
-  replaced, on an index that mixes built and merged segments, has
-  tombstones and a secondary field.
+- Term stats are read on the driver with pyarrow (``_batch_lookup``); each
+  lookup, full or bounded, must equal the Spark aggregate it replaced, on
+  an index that mixes built and merged segments, has tombstones and a
+  secondary field.
 - A query after a consolidation with cleanup reads only live segments.
 - A corrupt postings blob fails the query with the segment, field and term.
 """
@@ -113,26 +113,26 @@ LITERALS = [
 
 
 def _check_equivalence(spark, eng):
-    dfs, matches = eng._batch_lookup(set(LITERALS), LEAVES)
+    full = [(fld, leaf, False) for fld, leaf in LEAVES]
+    # bounded: top scored_terms_limit by (df desc, term asc)
+    bounded = [
+        (fld, dataclasses.replace(leaf, scored_terms_limit=3), True)
+        for fld, leaf in LEAVES
+    ]
+    dfs, matches = eng._batch_lookup(set(LITERALS), full + bounded)
     for fld, term in LITERALS:
         want = _spark_df(spark, eng, fld, F.col("term") == term)
         assert dfs[(fld, term)] == (want[0][1] if want else 0), (fld, term)
-    for (fld, leaf), got in zip(LEAVES, matches):
-        want = _spark_df(spark, eng, fld, SearchEngine._leaf_pred(leaf))
-        assert got == want, (fld, leaf)
-    # bounded: top scored_terms_limit by (df desc, term asc)
-    bounded = [
-        (fld, dataclasses.replace(leaf, scored_terms_limit=3))
-        for fld, leaf in LEAVES
-    ]
-    tops = eng._bounded_leaf_lookup(bounded)
-    for fld, leaf in bounded:
+    for key in full:
+        want = _spark_df(spark, eng, key[0], SearchEngine._leaf_pred(key[1]))
+        assert matches[key] == want, key
+    for key in bounded:
         want = sorted(
-            _spark_df(spark, eng, fld, SearchEngine._leaf_pred(leaf)),
+            _spark_df(spark, eng, key[0], SearchEngine._leaf_pred(key[1])),
             key=lambda td: (-td[1], td[0]),
         )[:3]
-        assert tops[(fld, leaf)] == want, (fld, leaf)
-    return dfs, matches, tops
+        assert matches[key] == want, key
+    return dfs, matches
 
 
 def test_driver_dictionary_equals_spark_aggregate(spark, mixed_index):
@@ -140,24 +140,23 @@ def test_driver_dictionary_equals_spark_aggregate(spark, mixed_index):
     eng = SearchEngine(spark, d)
     segs = {int(s["segment_id"]) for s in eng.manifest.segments}
     assert {2, 3} < segs and len(segs) == 3  # built 2, 3 + one merged
-    dfs, matches, tops = _check_equivalence(spark, eng)
-    assert dfs[("content", "sym_1")] > 0 and any(matches)
+    dfs, matches = _check_equivalence(spark, eng)
+    assert dfs[("content", "sym_1")] > 0 and any(matches.values())
     # tombstones never change df: the deletes mask is applied in the kernel
     mark_deleted(spark, d, spark.createDataFrame(pdf.iloc[::5][
         ["repo", "path", "commit"]]))
     again = _check_equivalence(spark, eng)
-    assert again == (dfs, matches, tops)
+    assert again == (dfs, matches)
 
 
 def test_dangling_escape_raises_like_spark(spark, mixed_index):
     eng = SearchEngine(spark, mixed_index[0])
-    leaf = ("content", Wildcard(pattern="abc\\"))
+    leaf = Wildcard(pattern="abc\\")
     with pytest.raises(ValueError, match="dangling"):
-        executor._like_regex(leaf[1].pattern)
-    with pytest.raises(ValueError, match="dangling"):
-        eng._batch_lookup(set(), [leaf])
-    with pytest.raises(ValueError, match="dangling"):
-        eng._bounded_leaf_lookup([leaf])
+        executor._like_body(leaf.pattern)
+    for bounded in (False, True):
+        with pytest.raises(ValueError, match="dangling"):
+            eng._batch_lookup(set(), [("content", leaf, bounded)])
 
 
 def test_fuzzy_keeps_its_dictionary_job(spark, mixed_index):
@@ -165,7 +164,8 @@ def test_fuzzy_keeps_its_dictionary_job(spark, mixed_index):
     Levenshtein is a JVM predicate); it matches the same terms."""
     eng = SearchEngine(spark, mixed_index[0])
     leaf = Fuzzy(term="sym_1", max_distance=1)
-    _dfs, (got,) = eng._batch_lookup(set(), [("content", leaf)])
+    key = ("content", leaf, False)
+    got = eng._batch_lookup(set(), [key])[1][key]
     want = _spark_df(spark, eng, "content", SearchEngine._leaf_pred(leaf))
     assert got == want and got
 

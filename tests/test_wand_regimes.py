@@ -212,3 +212,34 @@ def test_and_with_exclude_rides_wand_and(clustered_engine):
     w = clustered_engine.search(q, k=10, wand=True).collect()
     e = clustered_engine.search(q, k=10, wand=False).collect()
     assert [tuple(r) for r in w] == [tuple(r) for r in e]
+
+
+def _and(*terms):
+    from iresearch_spark.search import And
+
+    return And(children=tuple(TermF(term=t) for t in terms))
+
+
+@pytest.mark.parametrize(
+    "corpus, q, k, mode",
+    [
+        # 2001 dense doc slots fit in the bootstrap size max(4k, 256)
+        ("clustered", TermF(term="needle"), 600, "full_small"),
+        # 'end' matches 300 docs, fewer than k
+        ("clustered", TermF(term="end"), 350, "full_lowmatch"),
+        # the lead 'end' (300 docs) fits in max(4k, 256) = 400
+        ("clustered", _and("end", "needle"), 100, "and_full_small"),
+        # no doc holds both 'end' and 'w5'
+        ("clustered", _and("end", "w5"), 10, "and_full_lowmatch"),
+        # identical docs: every lead doc's bound reaches the threshold
+        ("uniform", _and("alpha", "beta"), 10, "and_full_dense"),
+    ],
+)
+def test_fallback_regimes(request, corpus, q, k, mode):
+    """Each two-phase fallback regime is reached by name, and returns the
+    exhaustive result."""
+    eng = request.getfixturevalue(f"{corpus}_engine")
+    assert [r["mode"] for r in eng.wand_stats(q, k=k).collect()] == [mode]
+    w = eng.search(q, k=k, wand=True).collect()
+    e = eng.search(q, k=k, wand=False).collect()
+    assert [tuple(r) for r in w] == [tuple(r) for r in e]
