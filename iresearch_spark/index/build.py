@@ -31,7 +31,11 @@ the shuffle is embarrassingly parallel per segment.
 
 from __future__ import annotations
 
+import base64
+import os
+import shutil
 import time
+from dataclasses import replace
 from typing import Iterable
 
 import numpy as np
@@ -90,18 +94,19 @@ def segment_expr(num_segments: int):
 
 def assign_doc_ids(
     corpus: DataFrame, num_segments: int,
-    sort_by: list[str] | None = None,
+    sort_by: list[str] | None = None, base: int = 0,
 ) -> DataFrame:
     """Dense per-segment doc ids. ``sort_by`` is the PLUGGABLE primary sort
     (the reference's sorted-index comparator, `core/index/comparer.hpp`):
     doc ids ascend by these columns within each segment, with the identity
     triple appended as tiebreak so assignment stays a total order
-    (determinism/resume invariant)."""
+    (determinism/resume invariant). ``base`` shifts the segment ids, so a
+    micro-batch's segments sit above the index's existing ones."""
     order = list(sort_by or []) + ["repo", "path", "commit"]
     w = Window.partitionBy("segment_id").orderBy(*order)
-    return corpus.withColumn("segment_id", segment_expr(num_segments)).withColumn(
-        "doc_id", F.row_number().over(w)
-    )
+    return corpus.withColumn(
+        "segment_id", segment_expr(num_segments) + F.lit(base)
+    ).withColumn("doc_id", F.row_number().over(w))
 
 
 # Analyzers with a JVM (Catalyst expression) twin. When available, the build
@@ -536,62 +541,84 @@ def docmeta_schema(extra_fields: Iterable[str] = ()) -> str:
     return DOCMETA_SCHEMA + extras
 
 
-def write_segment_wave(
+def field_writers(
     spark: SparkSession,
-    docs: DataFrame,
-    index_dir: str,
-    pending: list[int],
-    seg_builder,
-    field: str,
-    lineage: dict,
-    dl_expr=None,
-    extra_fields: list[tuple[str, object, object]] | None = None,
-) -> dict[int, dict]:
-    """Write docmeta + segment rows for the given pending segment ids, then
-    collect per-segment stats and record checkpoints. ``docs`` must already
-    carry (segment_id, doc_id). Shared by batch waves and streaming batches.
-
-    ``extra_fields``: [(name, seg_builder, dl_expr)] for secondary indexed
-    fields (the reference indexes N fields per doc,
-    `core/index/segment_writer.hpp:91-119`); their norms live in docmeta
-    columns ``dl_<name>`` and their term rows carry ``field = name``."""
-    extra_fields = extra_fields or []
-    sub = docs.filter(F.col("segment_id").isin(pending))
-
-    docmeta_cols = [
-        F.col("segment_id"),
-        F.col("doc_id"),
-        F.col("repo"),
-        F.col("path"),
-        F.col("commit"),
-        F.col("lang"),
-        F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias(
-            "content_sha256"
-        ),
-        (dl_expr if dl_expr is not None else make_dl_expr("code")).alias("dl"),
-    ]
-    for name, _, extra_dl in extra_fields:
-        docmeta_cols.append(extra_dl.alias(f"dl_{name}"))
-    docmeta = sub.select(*docmeta_cols)
-    docmeta.write.mode("append").partitionBy("segment_id").parquet(
-        f"{index_dir}/docmeta"
-    )
-
-    seg_df = seg_builder(sub)
-    for _, extra_builder, _ in extra_fields:
-        # allowMissingColumns: a payload field (SEGMENTS_PAY_SCHEMA) can mix
-        # with plain fields — the pay columns null-fill on the plain side
-        seg_df = seg_df.unionByName(
-            extra_builder(sub), allowMissingColumns=True
+    fields: list[tuple[str, str]],
+    with_positions: bool,
+    jvm_tokenize: bool | None = None,
+    out_partitions: int | None = None,
+) -> list[tuple[str, object, object]]:
+    """[(name, seg_builder, dl_expr)] for the field specs [(name, analyzer),
+    ...]; the first entry is the primary field (norm column ``dl``), the
+    others are secondary fields (norm columns ``dl_<name>``)."""
+    return [
+        (
+            name,
+            make_seg_builder(
+                spark, az, name, with_positions, jvm_tokenize,
+                out_partitions=out_partitions,
+            ),
+            make_dl_expr(az, name),
         )
-    seg_df.write.mode("append").partitionBy("segment_id").parquet(
-        f"{index_dir}/segments"
+        for name, az in fields
+    ]
+
+
+def new_manifest(
+    fields: list[tuple[str, str]],
+    with_positions: bool,
+    num_segments: int = 0,
+    sort_by: list[str] | None = None,
+    commit_payload: bytes | None = None,
+) -> Manifest:
+    """The manifest of an index over ``fields`` with no segments yet."""
+    field, analyzer = fields[0]
+    return Manifest(
+        format_version=1,
+        num_segments=num_segments,
+        field_name=field,
+        analyzer=analyzer,
+        with_positions=with_positions,
+        segments=[],
+        fields=[[n, a] for n, a in fields] if len(fields) > 1 else None,
+        sort=list(sort_by) if sort_by else None,
+        with_payloads=any(is_payload_analyzer(a) for _, a in fields),
+        commit_payload=(
+            base64.b64encode(commit_payload).decode("ascii")
+            if commit_payload is not None
+            else None
+        ),
     )
 
-    # per-segment stats: one tiny driver-side collect per wave (explicit
-    # schemas: an all-empty wave writes no files, inference would fail)
-    extra_names = [name for name, _, _ in extra_fields]
-    dm_schema = docmeta_schema(extra_names)
+
+def reset_segments(index_dir: str, seg_ids: Iterable[int]) -> None:
+    """Delete the docmeta and segments partitions of ``seg_ids``. Every
+    writer resets the ids it is about to write, so data left by an attempt
+    that died before its publish is never appended to twice; merge also
+    uses it to drop the inputs it consumed."""
+    for sub in ("docmeta", "segments"):
+        for sid in seg_ids:
+            shutil.rmtree(
+                f"{index_dir}/{sub}/segment_id={sid}", ignore_errors=True
+            )
+
+
+def segment_stats(
+    spark: SparkSession,
+    index_dir: str,
+    seg_ids: list[int],
+    field: str,
+    extra_names: list[str],
+    lineage: dict,
+) -> dict[int, dict]:
+    """Manifest records of the written segments ``seg_ids``: one driver-side
+    collect over their docmeta and segments partitions (the reference
+    computes the segment meta as it flushes or merges,
+    `segment_writer.hpp:91-119`, `merge_writer.cpp:1862-1890`).
+    ``extra_names`` are the secondary fields, whose doc stats go under
+    ``fields``. ``terms`` counts distinct (field, term): a merge with
+    ``shard_docs`` writes a big term as several rows. Explicit schemas: an
+    all-empty wave writes no files, and inference would fail."""
     field_aggs = []
     for name in extra_names:
         c = F.col(f"dl_{name}")
@@ -600,8 +627,9 @@ def write_segment_wave(
         )
         field_aggs.append(F.sum(c).alias(f"ttf_{name}"))
     dstats = (
-        spark.read.schema(dm_schema).parquet(f"{index_dir}/docmeta")
-        .filter(F.col("segment_id").isin(pending))
+        spark.read.schema(docmeta_schema(extra_names))
+        .parquet(f"{index_dir}/docmeta")
+        .filter(F.col("segment_id").isin(seg_ids))
         .groupBy("segment_id")
         .agg(
             F.count("*").alias("docs"),
@@ -612,19 +640,26 @@ def write_segment_wave(
             *field_aggs,
         )
     )
+    # hashed by segment_id once, the rows are already clustered for the
+    # distinct (field, term) count: one exchange, not two; the postings
+    # blobs are reduced to their length and hash before it
     sstats = (
         spark.read.schema(SEGMENTS_SCHEMA).parquet(f"{index_dir}/segments")
-        .filter(F.col("segment_id").isin(pending))
+        .filter(F.col("segment_id").isin(seg_ids))
+        .select(
+            "segment_id", "field", "term", "docs_count",
+            F.length("postings").alias("nbytes"),
+            F.xxhash64("term", "docs_count", "total_tf", "postings").alias("h"),
+        )
+        .repartition("segment_id")
         .groupBy("segment_id")
         .agg(
-            F.count("*").alias("terms"),
+            F.countDistinct("field", "term").alias("terms"),
             F.sum("docs_count").alias("sum_doc_freq"),
-            F.sum(F.length("postings")).alias("postings_bytes"),
+            F.sum("nbytes").alias("postings_bytes"),
             F.min("term").alias("min_term"),
             F.max("term").alias("max_term"),
-            F.expr(
-                "bit_xor(xxhash64(term, docs_count, total_tf, postings))"
-            ).alias("content_hash"),
+            F.expr("bit_xor(h)").alias("content_hash"),
         )
     )
     stats = {
@@ -632,7 +667,7 @@ def write_segment_wave(
         for r in dstats.join(sstats, "segment_id", "left").collect()
     }
     out: dict[int, dict] = {}
-    for seg in pending:
+    for seg in seg_ids:
         r = stats.get(seg, {})
         rec = {
             "segment_id": seg,
@@ -656,8 +691,65 @@ def write_segment_wave(
                 }
                 for name in extra_names
             }
-        write_checkpoint(index_dir, rec)
         out[seg] = rec
+    return out
+
+
+def write_segment_wave(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    pending: list[int],
+    writers: list[tuple[str, object, object]],
+    lineage: dict,
+) -> dict[int, dict]:
+    """Reset the pending segment ids, write their docmeta + segment rows,
+    then collect per-segment stats and record checkpoints. ``docs`` must
+    already carry (segment_id, doc_id); ``writers`` is
+    :func:`field_writers`' output. Shared by batch waves and streaming
+    batches.
+
+    The reference indexes N fields per doc
+    (`core/index/segment_writer.hpp:91-119`): a secondary field's norms
+    live in the docmeta column ``dl_<name>`` and its term rows carry
+    ``field = name``."""
+    reset_segments(index_dir, pending)
+    sub = docs.filter(F.col("segment_id").isin(pending))
+    (field, seg_builder, dl_expr), *extra = writers
+
+    docmeta = sub.select(
+        F.col("segment_id"),
+        F.col("doc_id"),
+        F.col("repo"),
+        F.col("path"),
+        F.col("commit"),
+        F.col("lang"),
+        F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias(
+            "content_sha256"
+        ),
+        dl_expr.alias("dl"),
+        *(extra_dl.alias(f"dl_{name}") for name, _, extra_dl in extra),
+    )
+    docmeta.write.mode("append").partitionBy("segment_id").parquet(
+        f"{index_dir}/docmeta"
+    )
+
+    seg_df = seg_builder(sub)
+    for _, extra_builder, _ in extra:
+        # allowMissingColumns: a payload field (SEGMENTS_PAY_SCHEMA) can mix
+        # with plain fields — the pay columns null-fill on the plain side
+        seg_df = seg_df.unionByName(
+            extra_builder(sub), allowMissingColumns=True
+        )
+    seg_df.write.mode("append").partitionBy("segment_id").parquet(
+        f"{index_dir}/segments"
+    )
+
+    out = segment_stats(
+        spark, index_dir, pending, field, [n for n, _, _ in extra], lineage
+    )
+    for rec in out.values():
+        write_checkpoint(index_dir, rec)
     return out
 
 
@@ -698,10 +790,6 @@ def build_index(
     analogue). A resume refuses, with ``ValueError``, an index whose
     published manifest records another format.
     """
-    import glob
-    import os
-    import shutil
-
     from pyspark import StorageLevel
 
     if resume:
@@ -718,71 +806,35 @@ def build_index(
 
     if not resume and os.path.isdir(index_dir):
         shutil.rmtree(index_dir)
-    done = set(read_checkpoints(index_dir)) if resume else set()
-    if resume:
-        # drop data of segments that were written but never checkpointed
-        # (died between data write and checkpoint): rebuild them cleanly
-        for sub in ("docmeta", "segments"):
-            base = f"{index_dir}/{sub}"
-            for d in glob.glob(f"{base}/segment_id=*"):
-                if int(d.rsplit("=", 1)[1]) not in done:
-                    shutil.rmtree(d)
-    if fields is None:
-        fields = [(field, analyzer)]
-    field, analyzer = fields[0]
-    plan = _plan_waves(num_segments, waves)
-    seg_builder = make_seg_builder(
-        spark, analyzer, field, with_positions, jvm_tokenize,
-        out_partitions=num_segments,
+    # a resumed build skips checkpointed segments; a segment written but
+    # never checkpointed is rebuilt (write_segment_wave resets its data)
+    seg_records: dict[int, dict] = read_checkpoints(index_dir) if resume else {}
+    fields = fields or [(field, analyzer)]
+    writers = field_writers(
+        spark, fields, with_positions, jvm_tokenize, out_partitions=num_segments
     )
-    dl_expr = make_dl_expr(analyzer, field)
-    extra_fields = [
-        (
-            name,
-            make_seg_builder(
-                spark, az, name, with_positions, jvm_tokenize,
-                out_partitions=num_segments,
-            ),
-            make_dl_expr(az, name),
-        )
-        for name, az in fields[1:]
-    ]
-
-    seg_records: dict[int, dict] = dict(read_checkpoints(index_dir)) if resume else {}
+    man = new_manifest(
+        fields, with_positions, num_segments, sort_by, commit_payload
+    )
     committed_waves = 0
-    total_docs = 0
 
-    for wave_idx, seg_batch in enumerate(plan):
-        pending = [s for s in seg_batch if s not in done]
+    for wave_idx, seg_batch in enumerate(_plan_waves(num_segments, waves)):
+        pending = [s for s in seg_batch if s not in seg_records]
         if pending:
-            recs = write_segment_wave(
-                spark, docs, index_dir, pending, seg_builder, field,
-                lineage={"wave": wave_idx, "generation": 0},
-                dl_expr=dl_expr,
-                extra_fields=extra_fields,
+            seg_records.update(
+                write_segment_wave(
+                    spark, docs, index_dir, pending, writers,
+                    lineage={"wave": wave_idx, "generation": 0},
+                )
             )
-            seg_records.update(recs)
-            done.update(recs)
 
         # commit: publish manifest covering everything checkpointed so far
-        import base64
-
         write_manifest(
             index_dir,
-            Manifest(
-                format_version=1,
-                num_segments=num_segments,
-                field_name=field,
-                analyzer=analyzer,
-                with_positions=with_positions,
-                segments=sorted(seg_records.values(), key=lambda s: s["segment_id"]),
-                fields=[[n, a] for n, a in fields] if len(fields) > 1 else None,
-                sort=list(sort_by) if sort_by else None,
-                with_payloads=any(is_payload_analyzer(a) for _, a in fields),
-                commit_payload=(
-                    base64.b64encode(commit_payload).decode("ascii")
-                    if commit_payload is not None
-                    else None
+            replace(
+                man,
+                segments=sorted(
+                    seg_records.values(), key=lambda s: s["segment_id"]
                 ),
             ),
         )

@@ -6,8 +6,8 @@ doc-id remap (`core/index/segment_writer.hpp:63-66`,
 `core/utils/index_utils.hpp:384-385`, `merge_writer.cpp:1448-`). Spark
 reading: a ``deletes`` parquet table of (segment_id, doc_id) tombstones,
 appended per delete batch; the query kernel drops tombstoned docs at
-posting-decode time; ``merge_segments(purge_deletes=True)`` rewrites merged
-segments without them.
+posting-decode time; ``merge_segments`` always purges them: the merged
+segment is rewritten without the tombstoned docs.
 
 Stats semantics mirror the reference: index-wide term/field statistics keep
 counting masked docs until a consolidation purges them (the reference's
@@ -53,7 +53,11 @@ def mark_deleted_rows(
     """Tombstone pre-resolved (segment_id, doc_id) rows — the segment-aware
     path (e.g. replace_batch deleting only PRE-batch segments' copies)."""
     import os
+    from dataclasses import replace
 
+    man = read_manifest(index_dir)
+    if man is None:
+        raise FileNotFoundError(f"no manifest in {index_dir}")
     resolved = resolved.select("segment_id", "doc_id").dropDuplicates(
         ["segment_id", "doc_id"]
     )
@@ -65,8 +69,6 @@ def mark_deleted_rows(
         resolved.write.mode("append").parquet(f"{index_dir}/deletes")
     resolved.unpersist()
 
-    man = read_manifest(index_dir)
-    assert man is not None
     counts = {
         r["segment_id"]: r["n"]
         for r in deletes_df(spark, index_dir)
@@ -82,8 +84,6 @@ def mark_deleted_rows(
     # replace() carries EVERY manifest attribute forward (a hand-copied
     # field list once silently reset with_payloads on delete publish,
     # corrupting payload reads)
-    from dataclasses import replace
-
     write_manifest(index_dir, replace(man, segments=segs))
     return n_new
 

@@ -18,15 +18,13 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from iresearch_spark.index.manifest import (
-    Manifest,
-    read_manifest,
-    write_manifest,
-)
+from iresearch_spark.index.build import reset_segments
+from iresearch_spark.index.manifest import read_manifest, write_manifest
 
 
 def import_index(
@@ -58,13 +56,13 @@ def import_index(
     src_ids = sorted(s["segment_id"] for s in src.segments)
     mapping = {old: base + i for i, old in enumerate(src_ids)}
 
+    reset_segments(dst_dir, mapping.values())  # failed previous attempt
     for old, new in mapping.items():
         for sub in ("segments", "docmeta"):
-            s_dir = f"{src_dir}/{sub}/segment_id={old}"
-            d_dir = f"{dst_dir}/{sub}/segment_id={new}"
-            if os.path.isdir(d_dir):  # failed previous attempt
-                shutil.rmtree(d_dir)
-            shutil.copytree(s_dir, d_dir)
+            shutil.copytree(
+                f"{src_dir}/{sub}/segment_id={old}",
+                f"{dst_dir}/{sub}/segment_id={new}",
+            )
 
     if os.path.isdir(f"{src_dir}/deletes"):
         from iresearch_spark.index.deletes import deletes_df
@@ -96,23 +94,12 @@ def import_index(
         lin["imported_from"] = os.path.abspath(src_dir)
         s["lineage"] = lin
         new_segs.append(s)
-    merged = sorted(
-        [dict(s) for s in dst.segments] + new_segs,
-        key=lambda s: s["segment_id"],
-    )
     write_manifest(
         dst_dir,
-        Manifest(
-            format_version=dst.format_version,
+        replace(
+            dst,
             num_segments=base + len(src_ids),
-            field_name=dst.field_name,
-            analyzer=dst.analyzer,
-            with_positions=dst.with_positions,
-            segments=merged,
-            fields=dst.fields,
-            sort=dst.sort,
-            with_payloads=dst.with_payloads,
-            commit_payload=dst.commit_payload,
+            segments=dst.segments + new_segs,
         ),
     )
     return {"imported": len(src_ids), "mapping": mapping}

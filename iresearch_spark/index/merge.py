@@ -29,6 +29,7 @@ first-block-doc tiebreak.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Sequence
 
 import numpy as np
@@ -41,15 +42,18 @@ from iresearch_spark.codec import (
     encode_payloads_batch,
 )
 from iresearch_spark.codec import packed
-from iresearch_spark.index.build import SEGMENTS_SCHEMA
+from iresearch_spark.index.build import (
+    SEGMENTS_PAY_SCHEMA,
+    SEGMENTS_SCHEMA,
+    docmeta_schema,
+    reset_segments,
+    segment_stats,
+)
 from iresearch_spark.index.manifest import (
-    Manifest,
     read_manifest,
     write_checkpoint,
     write_manifest,
 )
-
-MERGE_SCHEMA = SEGMENTS_SCHEMA  # same table shape, new segment_id
 
 
 def plan_tier(
@@ -176,18 +180,23 @@ def merge_segments(
     instead of one giant blob — the two-level escalation for terms that
     outgrow a single blob at 10^12-doc scale. Query side is shard-aware
     (executor concatenates; WAND skips per shard). Already-sharded input
-    rows re-merge correctly (ordered by each row's first-block doc)."""
-    import glob
+    rows re-merge correctly (ordered by each row's first-block doc).
+
+    A merge retried after a failure before its publish rewrites the same
+    ``new_segment_id`` from scratch: its partitions are reset first."""
     import os
     import shutil
 
     man = read_manifest(index_dir)
-    assert man is not None
+    if man is None:
+        raise FileNotFoundError(f"no manifest in {index_dir}")
     # public API: normalize — remap base offsets accumulate in iteration
     # order, which MUST be ascending segment_id to match merge_bucket's sort
     seg_ids = sorted({int(s) for s in seg_ids})
     by_id = {s["segment_id"]: s for s in man.segments}
     new_id = max(max(by_id) + 1, man.num_segments)
+    # a retry of a merge that died before its publish gets the same new_id
+    reset_segments(index_dir, [new_id])
 
     # DRIVER STATE IS O(tombstones + K), never O(docs): doc ids are dense
     # 1..docs per segment (build/merge invariant), so the reference's
@@ -213,16 +222,16 @@ def merge_segments(
         bases[sid] = acc
         n_docs_seg = int(by_id[sid]["docs"])
         acc += n_docs_seg - int(deleted.get(sid, np.empty(0)).size)
-    total_docs = acc
     bc = spark.sparkContext.broadcast((bases, deleted))
 
     with_positions = man.with_positions
-    with_payloads = getattr(man, "with_payloads", False)
-    out_schema = (
-        MERGE_SCHEMA + ", pay_lens binary, payloads binary"
-        if with_payloads
-        else MERGE_SCHEMA
-    )
+    with_payloads = man.with_payloads
+    # explicit schemas: no inference job per read, and every column is
+    # present (all-null where a field or index has no positions)
+    out_schema = SEGMENTS_PAY_SCHEMA if with_payloads else SEGMENTS_SCHEMA
+    extra_names = [
+        name for name, _ in man.field_specs() if name != man.field_name
+    ]
 
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -358,11 +367,7 @@ def merge_segments(
         # (plain fields) in the SAME bucket. Null rows get zero
         # placeholders through the shared permutation and their output
         # terms are nulled back out below, mirroring the payload branch.
-        has_pos = (
-            pdf["positions"].notna().to_numpy()
-            if "positions" in pdf.columns
-            else np.zeros(len(pdf), dtype=bool)
-        )
+        has_pos = pdf["positions"].notna().to_numpy()
         if (with_positions or with_payloads) and has_pos.any():
             # one cross-row vectorized decode of the whole bucket (the
             # chunks of every row width-grouped at once — a per-row decode
@@ -373,9 +378,7 @@ def merge_segments(
                 pdf["positions"].tolist(),
                 freqs,
                 counts,
-                pdf["pos_offsets"].tolist()
-                if "pos_offsets" in pdf.columns
-                else None,
+                pdf["pos_offsets"].tolist(),
             )
             pos_keep = np.repeat(keep, freqs)
             pblobs, poffs = packed.encode_positions_batch(
@@ -442,8 +445,10 @@ def merge_segments(
             ]
         return pd.DataFrame(out)
 
-    seg_df = spark.read.parquet(f"{index_dir}/segments").filter(
-        F.col("segment_id").isin(list(seg_ids))
+    seg_df = (
+        spark.read.schema(out_schema)
+        .parquet(f"{index_dir}/segments")
+        .filter(F.col("segment_id").isin(list(seg_ids)))
     )
     # Hot-term skew: Zipfian terms (`import`, `int`) can dominate a hash
     # bucket and straggle the whole merge. Terms whose total postings bytes
@@ -489,8 +494,10 @@ def merge_segments(
     # docmeta remap: DISTRIBUTED dense renumber (no driver collect) — live
     # docs get ``base_offset + row_number() over (segment, order by doc_id)``,
     # exactly the kernel's searchsorted arithmetic over dense ids
-    dm_src = spark.read.parquet(f"{index_dir}/docmeta").filter(
-        F.col("segment_id").isin(list(seg_ids))
+    dm_src = (
+        spark.read.schema(docmeta_schema(extra_names))
+        .parquet(f"{index_dir}/docmeta")
+        .filter(F.col("segment_id").isin(list(seg_ids)))
     )
     if deleted:
         from iresearch_spark.index.deletes import deletes_df
@@ -519,98 +526,21 @@ def merge_segments(
         f"{index_dir}/docmeta"
     )
 
-    # stats + manifest update (per-field doc stats from the rewritten
-    # docmeta — one distributed agg, nothing driver-side but K scalars)
-    sstats = (
-        spark.read.parquet(f"{index_dir}/segments")
-        .filter(F.col("segment_id") == new_id)
-        .agg(
-            # distinct (field, term): with shard_docs a big term is written
-            # as several rows; the dictionary-size stat must count it once
-            F.countDistinct("field", "term").alias("terms"),
-            F.sum("docs_count").alias("sum_doc_freq"),
-            F.sum(F.length("postings")).alias("postings_bytes"),
-            F.min("term").alias("min_term"),
-            F.max("term").alias("max_term"),
-            F.expr("bit_xor(xxhash64(term, docs_count, total_tf, postings))").alias(
-                "content_hash"
-            ),
-        )
-        .collect()[0]
-        .asDict()
-    )
-    extra_names = [
-        name for name, _ in man.field_specs() if name != man.field_name
-    ]
-    field_aggs = []
-    for name in extra_names:
-        c = F.col(f"dl_{name}")
-        field_aggs.append(
-            F.sum(F.when(c > 0, 1).otherwise(0)).alias(f"dwf_{name}")
-        )
-        field_aggs.append(F.sum(c).alias(f"ttf_{name}"))
-    dstats = (
-        spark.read.parquet(f"{index_dir}/docmeta")
-        .filter(F.col("segment_id") == new_id)
-        .agg(
-            F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("dwf"),
-            F.sum("dl").alias("ttf"),
-            *field_aggs,
-        )
-        .collect()[0]
-        .asDict()
-    )
-    rec = {
-        "segment_id": new_id,
-        "field": man.field_name,
-        "docs": total_docs,
-        "docs_with_field": int(dstats["dwf"] or 0),
-        "total_term_freq": int(dstats["ttf"] or 0),
-        "terms": int(sstats["terms"] or 0),
-        "sum_doc_freq": int(sstats["sum_doc_freq"] or 0),
-        "postings_bytes": int(sstats["postings_bytes"] or 0),
-        "min_term": sstats["min_term"],
-        "max_term": sstats["max_term"],
-        "content_hash": int(sstats["content_hash"] or 0),
-        "lineage": {
+    rec = segment_stats(
+        spark, index_dir, [new_id], man.field_name, extra_names,
+        lineage={
             "merged_from": list(seg_ids),
             "fan_in": len(seg_ids),
             "generation": 1 + max(
                 by_id[s]["lineage"].get("generation", 0) for s in seg_ids
             ),
         },
-    }
-    if extra_names:
-        rec["fields"] = {
-            name: {
-                "docs_with_field": int(dstats[f"dwf_{name}"] or 0),
-                "total_term_freq": int(dstats[f"ttf_{name}"] or 0),
-            }
-            for name in extra_names
-        }
+    )[new_id]
     write_checkpoint(index_dir, rec)
-    new_segments = [s for s in man.segments if s["segment_id"] not in set(seg_ids)]
-    new_segments.append(rec)
-    write_manifest(
-        index_dir,
-        Manifest(
-            format_version=man.format_version,
-            num_segments=man.num_segments,
-            field_name=man.field_name,
-            analyzer=man.analyzer,
-            with_positions=man.with_positions,
-            segments=new_segments,
-            fields=man.fields,
-            sort=man.sort,
-            with_payloads=man.with_payloads,
-            commit_payload=man.commit_payload,
-        ),
-    )
+    new_segments = [s for s in man.segments if s["segment_id"] not in seg_ids]
+    write_manifest(index_dir, replace(man, segments=new_segments + [rec]))
     if cleanup:
-        for sub in ("segments", "docmeta"):
-            for sid in seg_ids:
-                for d in glob.glob(f"{index_dir}/{sub}/segment_id={sid}"):
-                    shutil.rmtree(d, ignore_errors=True)
+        reset_segments(index_dir, seg_ids)
         for sid in seg_ids:
             p = f"{index_dir}/checkpoints/seg-{sid:06d}.json"
             if os.path.exists(p):
@@ -631,7 +561,7 @@ def merge_segments(
     return {
         "new_segment_id": new_id,
         "fan_in": len(seg_ids),
-        "docs": total_docs,
+        "docs": rec["docs"],
         "terms": rec["terms"],
         "postings_bytes": rec["postings_bytes"],
     }

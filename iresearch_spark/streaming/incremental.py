@@ -8,6 +8,12 @@ analogue: a ``foreachBatch`` sink where every micro-batch becomes a set of
 new segments plus an atomic manifest publish — one manifest generation per
 micro-batch, exactly the reference's commit model.
 
+A batch follows its index: it is written through the same field setup,
+doc-id assignment and segment writer as ``build_index``, with the fields,
+analyzers, positions and primary sort recorded in the manifest. The
+indexer's own ``field``/``analyzer``/``with_positions`` only seed a new
+index.
+
 Idempotence / exactly-once: Spark may retry a micro-batch after a failure.
 Each committed batch id is recorded in the manifest; a replayed batch id is
 skipped (classic foreachBatch dedup), and segment data written by a failed
@@ -23,16 +29,15 @@ cadence, like the reference's background consolidation thread.
 
 from __future__ import annotations
 
-import glob
-import shutil
+from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iresearch_spark.index.build import (
-    make_dl_expr,
-    make_seg_builder,
-    segment_expr,
+    assign_doc_ids,
+    field_writers,
+    new_manifest,
     write_segment_wave,
 )
 from iresearch_spark.index.manifest import (
@@ -48,6 +53,9 @@ class IncrementalIndexer:
 
     Use directly (``indexer.process_batch(df, batch_id)``) or as a
     Structured Streaming ``foreachBatch`` sink via :func:`index_stream`.
+    ``field``, ``analyzer`` and ``with_positions`` default to the index's
+    own (``content``/``code``/positions on for a new index); a value that
+    conflicts with an existing index raises ``ValueError``.
     """
 
     def __init__(
@@ -55,97 +63,76 @@ class IncrementalIndexer:
         spark: SparkSession,
         index_dir: str,
         segments_per_batch: int = 4,
-        field: str = "content",
-        analyzer: str = "code",
-        with_positions: bool = True,
+        field: str | None = None,
+        analyzer: str | None = None,
+        with_positions: bool | None = None,
         retain_generations: int | None = None,
     ):
         self.spark = spark
         self.index_dir = index_dir
         self.segments_per_batch = segments_per_batch
-        self.field = field
-        self.analyzer = analyzer
-        self.with_positions = with_positions
-        read_manifest(index_dir)  # refuses a legacy-format index up front
+        m = read_manifest(index_dir)  # refuses a legacy-format index up front
+        if m is not None:
+            for name, given, have in (
+                ("field", field, m.field_name),
+                ("analyzer", analyzer, m.analyzer),
+                ("with_positions", with_positions, m.with_positions),
+            ):
+                if given is not None and given != have:
+                    raise ValueError(
+                        f"{name}={given!r} conflicts with {name}={have!r} "
+                        f"of the index in {index_dir}"
+                    )
+        self._seed = new_manifest(
+            [(field or "content", analyzer or "code")],
+            True if with_positions is None else with_positions,
+        )
         # a per-micro-batch publisher is the one writer that accumulates
         # generations without bound; set a rolling window (e.g. 64) to
         # prune old snapshot files each publish. OPT-IN (default None =
         # keep everything): pruning deletes gen files that generation-
         # pinned point-in-time readers may still be holding open.
         self.retain_generations = retain_generations
-        self._seg_builder = make_seg_builder(
-            spark, analyzer, field, with_positions,
-            out_partitions=segments_per_batch,
-        )
 
     # ------------------------------------------------------------ manifest
     def _manifest(self) -> Manifest:
-        m = read_manifest(self.index_dir)
-        if m is None:
-            m = Manifest(
-                format_version=1,
-                num_segments=0,
-                field_name=self.field,
-                analyzer=self.analyzer,
-                with_positions=self.with_positions,
-                segments=[],
-            )
-        return m
+        return read_manifest(self.index_dir) or self._seed
 
     def committed_batches(self) -> set[int]:
-        m = read_manifest(self.index_dir)
-        if m is None:
-            return set()
         return {
             s["lineage"]["batch_id"]
-            for s in m.segments
+            for s in self._manifest().segments
             if "batch_id" in s.get("lineage", {})
         }
 
     # ------------------------------------------------------------ batches
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
         """foreachBatch body: new segments + one manifest generation."""
-        m = self._manifest()
         if batch_id in self.committed_batches():
             return {"batch_id": batch_id, "skipped": True}
-
+        m = self._manifest()
+        n = self.segments_per_batch
         base = 1 + max((s["segment_id"] for s in m.segments), default=-1)
-        seg_ids = list(range(base, base + self.segments_per_batch))
-
-        # wipe data left by a failed attempt of this batch (same ids)
-        for sub in ("docmeta", "segments"):
-            for d in glob.glob(f"{self.index_dir}/{sub}/segment_id=*"):
-                if int(d.rsplit("=", 1)[1]) in set(seg_ids):
-                    shutil.rmtree(d)
-
-        w = Window.partitionBy("segment_id").orderBy("repo", "path", "commit")
-        docs = (
-            batch_df.withColumn(
-                "segment_id",
-                segment_expr(self.segments_per_batch) + F.lit(base),
-            )
-            .withColumn("doc_id", F.row_number().over(w))
-        )
+        seg_ids = list(range(base, base + n))
         recs = write_segment_wave(
-            self.spark, docs, self.index_dir, seg_ids, self._seg_builder,
-            self.field, lineage={"batch_id": int(batch_id), "generation": 1},
-            dl_expr=make_dl_expr(self.analyzer),
+            self.spark,
+            assign_doc_ids(batch_df, n, m.sort, base=base),
+            self.index_dir,
+            seg_ids,
+            field_writers(
+                self.spark, m.field_specs(), m.with_positions,
+                out_partitions=n,
+            ),
+            lineage={"batch_id": int(batch_id), "generation": 1},
         )
         live = {s["segment_id"]: s for s in m.segments}
         live.update(recs)
         write_manifest(
             self.index_dir,
-            Manifest(
-                format_version=m.format_version,
-                num_segments=base + self.segments_per_batch,
-                field_name=m.field_name,
-                analyzer=m.analyzer,
-                with_positions=m.with_positions,
+            replace(
+                m,
+                num_segments=base + n,
                 segments=sorted(live.values(), key=lambda s: s["segment_id"]),
-                fields=m.fields,
-                sort=m.sort,
-                with_payloads=m.with_payloads,
-                commit_payload=m.commit_payload,
             ),
         )
         if self.retain_generations:

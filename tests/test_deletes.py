@@ -108,3 +108,22 @@ def test_cleanup_policy(spark, fresh_index):
     s0 = [s for s in m2.segments if s["segment_id"] == 0][0]
     assert deletion_ratio(s0) == 1.0
     assert plan_cleanup(m2.segments) == [0]
+
+
+def test_writers_refuse_a_missing_index(spark, tmp_path):
+    """merge and tombstoning name the index dir when it has no manifest
+    (an error, not an assert that ``python -O`` strips), and write
+    nothing there."""
+    import os
+
+    from iresearch_spark.index.deletes import mark_deleted_rows
+
+    d = str(tmp_path / "no_index")
+    with pytest.raises(FileNotFoundError, match="no_index"):
+        merge_segments(spark, d, [0, 1])
+    rows = spark.range(1).select(
+        F.lit(0).alias("segment_id"), F.lit(1).alias("doc_id")
+    )
+    with pytest.raises(FileNotFoundError, match="no_index"):
+        mark_deleted_rows(spark, d, rows)
+    assert not os.path.exists(d)

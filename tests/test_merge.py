@@ -284,3 +284,47 @@ def test_sharded_merge_purges_tombstones(spark, tmp_path):
         for r in eng2.search(TermF(term="common"), k=None).collect()
     )
     assert after == fresh
+
+
+def test_merge_retried_after_failed_publish(spark, index_dir, monkeypatch):
+    """A merge that dies before its publish leaves the new segment's data
+    behind; retrying the same merge resets it, so the merged segment holds
+    each term and each doc once and answers as before."""
+    from pyspark.sql import functions as F
+
+    from iresearch_spark.index import merge as merge_mod
+
+    def hits():
+        rows = SearchEngine(spark, index_dir).search(
+            TermF(term="import"), k=None
+        ).collect()
+        return sorted(
+            (r["repo"], r["path"], r["commit"], np.float32(r["score"]))
+            for r in rows
+        )
+
+    before = hits()
+    publish = merge_mod.write_manifest
+    failed = []
+
+    def publish_fails_once(*args, **kwargs):
+        if not failed:
+            failed.append(True)
+            raise OSError("injected publish failure")
+        return publish(*args, **kwargs)
+
+    monkeypatch.setattr(merge_mod, "write_manifest", publish_fails_once)
+    seg_ids = list(range(N_SEGMENTS))
+    with pytest.raises(OSError, match="injected"):
+        merge_segments(spark, index_dir, seg_ids)
+    new_id = merge_segments(spark, index_dir, seg_ids)["new_segment_id"]
+
+    segs = spark.read.parquet(f"{index_dir}/segments").filter(
+        F.col("segment_id") == new_id
+    )
+    assert segs.count() == segs.select("field", "term").distinct().count()
+    dm = spark.read.parquet(f"{index_dir}/docmeta").filter(
+        F.col("segment_id") == new_id
+    )
+    assert dm.count() == dm.select("doc_id").distinct().count() == N_DOCS
+    assert hits() == before

@@ -372,3 +372,25 @@ def test_query_plan_has_no_docmeta_scan_or_join(engine, k):
     if k is not None:
         plan = engine.search(TermF(term="import"), k=k)._jdf.queryExecution()
         assert "TakeOrderedAndProject" in plan.executedPlan().toString()
+
+
+def test_merge_and_micro_batch_job_counts(spark, tmp_path):
+    """A merge of 8 segments without deletes reads parquet with explicit
+    schemas (no schema-inference jobs) and collects its stats once; a
+    micro-batch keeps the one stats pass of a build wave."""
+    from pyspark.sql import functions as F
+
+    from iresearch_spark.index import merge_segments
+    from iresearch_spark.streaming import IncrementalIndexer
+
+    corpus = generate_corpus(spark, 160, 2).cache()
+    d = str(tmp_path / "merge8")
+    build_index(spark, corpus, d, num_segments=8)
+    merge_jobs = _spark_jobs(
+        spark, lambda: merge_segments(spark, d, list(range(8)))
+    )
+    ix = IncrementalIndexer(spark, d, segments_per_batch=2)
+    batch = corpus.withColumn("commit", F.concat(F.col("commit"), F.lit("b")))
+    batch_jobs = _spark_jobs(spark, lambda: ix.process_batch(batch, 0))
+    assert merge_jobs <= 11 and batch_jobs <= 11, (merge_jobs, batch_jobs)
+    corpus.unpersist()

@@ -132,3 +132,97 @@ def test_replace_batch_identical_reship_no_duplicate(spark, tmp_path):
     assert hits.count() == hits.distinct().count()
     corpus.unpersist()
     same.unpersist()
+
+
+def _halves(corpus):
+    from pyspark.sql import functions as F
+
+    odd = F.pmod(F.crc32("path"), F.lit(2)) == 1
+    return corpus.filter(~odd), corpus.filter(odd)
+
+
+def _batch_segments(index_dir, batch_id):
+    return [
+        s for s in read_manifest(index_dir).segments
+        if s["lineage"].get("batch_id") == batch_id
+    ]
+
+
+def _terms(spark, index_dir, seg_ids):
+    from pyspark.sql import functions as F
+
+    rows = (
+        spark.read.parquet(f"{index_dir}/segments")
+        .filter(F.col("segment_id").isin(seg_ids))
+        .select("field", "term")
+        .collect()
+    )
+    return sorted((r["field"], r["term"]) for r in rows)
+
+
+def test_batch_follows_multifield_index(spark, tmp_path):
+    """A micro-batch into a multi-field index indexes every field of the
+    manifest, not just the primary one: lang:python after build + batch
+    equals a one-shot build over the same docs."""
+    import numpy as np
+
+    fields = [("content", "code"), ("lang", "code")]
+    corpus = generate_corpus(spark, 200, 4).cache()
+    first, second = _halves(corpus)
+    d, one = str(tmp_path / "inc"), str(tmp_path / "one")
+    build_index(spark, first, d, num_segments=2, fields=fields)
+    IncrementalIndexer(spark, d, segments_per_batch=2).process_batch(second, 0)
+    build_index(spark, corpus, one, num_segments=4, fields=fields)
+
+    def hits(index_dir):
+        rows = SearchEngine(spark, index_dir).search(
+            TermF(field_name="lang", term="python"), k=None
+        ).collect()
+        return sorted(
+            (r["repo"], r["path"], r["commit"], np.float32(r["score"]))
+            for r in rows
+        )
+
+    want = hits(one)
+    assert len(want) == 34
+    assert hits(d) == want
+    segs = _batch_segments(d, 0)
+    assert segs and all(set(s["fields"]) == {"lang"} for s in segs)
+    assert sum(s["fields"]["lang"]["docs_with_field"] for s in segs) == sum(
+        s["docs"] for s in segs
+    )
+    corpus.unpersist()
+
+
+def test_batch_follows_index_analyzer(spark, tmp_path):
+    """A micro-batch into a ``text`` index is tokenized with ``text``: its
+    segments hold the terms of a one-shot ``text`` build over the batch."""
+    corpus = generate_corpus(spark, 120, 2).cache()
+    first, second = _halves(corpus)
+    d, one = str(tmp_path / "inc"), str(tmp_path / "one")
+    build_index(spark, first, d, num_segments=2, analyzer="text")
+    IncrementalIndexer(spark, d, segments_per_batch=2).process_batch(second, 0)
+    build_index(spark, second, one, num_segments=2, analyzer="text")
+
+    seg_ids = [s["segment_id"] for s in _batch_segments(d, 0)]
+    want = _terms(spark, one, [0, 1])
+    assert want
+    assert sorted(set(_terms(spark, d, seg_ids))) == sorted(set(want))
+    corpus.unpersist()
+
+
+def test_indexer_refuses_settings_that_conflict_with_index(spark, tmp_path):
+    """``field``/``analyzer``/``with_positions`` only seed a new index; a
+    value that contradicts an existing manifest is an error naming both."""
+    d = str(tmp_path / "idx")
+    build_index(spark, generate_corpus(spark, 30, 1), d, num_segments=1)
+    with pytest.raises(ValueError, match="'text'.*'code'"):
+        IncrementalIndexer(spark, d, analyzer="text")
+    with pytest.raises(ValueError, match="'lang'.*'content'"):
+        IncrementalIndexer(spark, d, field="lang")
+    with pytest.raises(ValueError, match="False.*True"):
+        IncrementalIndexer(spark, d, with_positions=False)
+    # agreeing values and the defaults open the index
+    IncrementalIndexer(spark, d, field="content", analyzer="code",
+                       with_positions=True)
+    IncrementalIndexer(spark, d)
