@@ -7,7 +7,8 @@ doc-id remap (`core/index/segment_writer.hpp:63-66`,
 reading: a ``deletes`` parquet table of (segment_id, doc_id) tombstones,
 appended per delete batch; the query kernel drops tombstoned docs at
 posting-decode time; ``merge_segments`` always purges them: the merged
-segment is rewritten without the tombstoned docs.
+segment is rewritten without the tombstoned docs. The purged tombstones stay
+in the table: segment ids are never reused, so they match no live doc.
 
 Stats semantics mirror the reference: index-wide term/field statistics keep
 counting masked docs until a consolidation purges them (the reference's

@@ -185,7 +185,6 @@ def merge_segments(
     A merge retried after a failure before its publish rewrites the same
     ``new_segment_id`` from scratch: its partitions are reset first."""
     import os
-    import shutil
 
     man = read_manifest(index_dir)
     if man is None:
@@ -545,18 +544,10 @@ def merge_segments(
             p = f"{index_dir}/checkpoints/seg-{sid:06d}.json"
             if os.path.exists(p):
                 os.remove(p)
-        # purged tombstones are dead; rewrite the deletes table without them
-        if deleted and os.path.isdir(f"{index_dir}/deletes"):
-            from iresearch_spark.index.deletes import DELETES_SCHEMA, deletes_df
-
-            remaining = deletes_df(spark, index_dir).filter(
-                ~F.col("segment_id").isin(list(seg_ids))
-            ).toPandas()
-            shutil.rmtree(f"{index_dir}/deletes", ignore_errors=True)
-            if len(remaining):
-                spark.createDataFrame(
-                    remaining, schema=DELETES_SCHEMA
-                ).write.parquet(f"{index_dir}/deletes")
+        # the purged tombstones stay in the deletes table: segment ids are
+        # never reused (new ids start above every live id), so they match
+        # no live doc, and leaving the table alone leaves no crash window
+        # in which other segments' tombstones are lost
     bc.unpersist()
     return {
         "new_segment_id": new_id,
@@ -590,6 +581,8 @@ def consolidate(
     out = []
     for _ in range(max_rounds):
         man = read_manifest(index_dir)
+        if man is None:
+            raise FileNotFoundError(f"no manifest in {index_dir}")
         batch = plan(man.segments, **policy_kwargs)
         if not batch or len(batch) < 2:
             break

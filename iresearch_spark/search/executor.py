@@ -12,19 +12,24 @@ SURVEY §3.2) Spark-first:
    `term_filter.cpp:92-129`. The dictionary is read on the driver with
    pyarrow (term filter pushed into the read, no Spark job); only Fuzzy
    leaves run a Spark dictionary job (the banded Levenshtein).
-2. **execute** (cluster): group the needed postings rows by segment; one
-   Arrow kernel per segment evaluates the boolean tree with numpy set ops
-   (conjunction = intersect1d ordered by cost, disjunction = bincount-union
-   with min_match, exclusion = isin mask — SURVEY §2.5) and returns the
+2. **execute** (cluster): one Spark task per group of live segments —
+   ``spark.range`` over the snapshot's segments in ``min(live segments,
+   defaultParallelism)`` partitions, fed to ``mapInPandas``. For each of
+   its segments a task reads the postings rows the query needs from
+   ``segments/segment_id=S`` with pyarrow (``_read_postings``), and one
+   Arrow kernel evaluates the boolean tree with numpy set ops (conjunction
+   = intersect1d ordered by cost, disjunction = bincount-union with
+   min_match, exclusion = isin mask — SURVEY §2.5) and returns the
    segment-local top-k. Its per-doc side (norms, tombstones) is packed on
    the driver and broadcast once per snapshot (``norms_blob_df``): no
    docmeta scan or norms exchange per query. The kernel then reads the
    (repo, path, commit, lang) identity of its top-k docs only, from its
-   own segment's docmeta partition.
+   own segment's docmeta partition. Executors therefore read ``index_dir``
+   through the filesystem: it must be a path every executor sees.
 3. **reduce**: global ``orderBy(score desc, segment_id, doc_id).limit(k)``
    over the kernel output (ties broken by ascending docID, like the
-   reference test expectations) — a TakeOrderedAndProject with no join. A
-   warm top-k query is one scan plus one kernel: 2 Spark jobs.
+   reference test expectations) — a TakeOrderedAndProject with no join and
+   no exchange. A top-k query is one Spark job.
 
 Block-max WAND (`formats_10.cpp:2426-2806` wanderator, adapted to a batch
 engine): for single-term / flat-disjunction queries the kernel first builds a
@@ -35,10 +40,12 @@ arithmetic runs in float64 with a nextafter margin so pruning can never drop
 a doc the exhaustive float32 scorer would keep; WAND-on therefore returns
 bit-identical results to WAND-off (tested).
 
-Scan-side efficiency: the term filter and the field filter are pushed into
-the Parquet scan of the segments table (In/StartsWith/Like predicates); the
-positions/pos_offsets columns are only selected for phrase queries (column
-pruning == the reference's separate .pos file).
+Read-side efficiency: the needed (field, term) set, OR-ed with each
+unscored-rest leaf's ``_leaf_expr``, is pushed into each task's pyarrow
+read of its segment (segments are written sorted by term, so row groups
+prune on their term statistics); the positions/pos_offsets columns are only
+selected for positional queries (column pruning == the reference's separate
+.pos file).
 """
 
 from __future__ import annotations
@@ -97,8 +104,8 @@ class _Prepared:
     consts: dict
     needed_terms: list[str]
     # (field, leaf) specs whose UNSCORED rest is evaluated executor-side:
-    # the leaf predicate is pushed into the segment scan and the kernel
-    # unions the matching postings per segment — matched terms beyond
+    # the leaf predicate is pushed into each segment's postings read and the
+    # kernel unions the matching postings per segment — matched terms beyond
     # scored_terms_limit never reach the driver (the reference's bit_union
     # over the sampled-out rest, `multiterm_query.cpp:36-106`)
     rest_specs: list[tuple] = dc_field(default_factory=list)
@@ -106,7 +113,7 @@ class _Prepared:
 
 def _like_body(pattern: str) -> str:
     """Spark SQL LIKE -> unanchored regex body (%% any seq, _ any char,
-    backslash escapes — `wildcard_utils.cpp` semantics, same as _leaf_pred's
+    backslash escapes — `wildcard_utils.cpp` semantics, same as Spark's
     LIKE), valid in both Python ``re`` and RE2 (pyarrow): a literal ASCII
     punctuation char is written ``\\xhh``."""
     out = []
@@ -115,9 +122,8 @@ def _like_body(pattern: str) -> str:
         c = pattern[i]
         if c == "\\":
             if i + 1 >= len(pattern):
-                # Spark LIKE raises on a dangling escape; mirror that so
-                # the kernel twin can never diverge from the Spark-side
-                # scan predicate (which would already have errored).
+                # Spark LIKE raises on a dangling escape; mirror that
+                # rather than read it as a literal backslash
                 raise ValueError(
                     "the pattern '%s' is invalid: dangling escape" % pattern
                 )
@@ -159,9 +165,10 @@ def _like_prefix(pattern: str) -> str:
 
 
 def _leaf_expr(leaf) -> ds.Expression:
-    """pyarrow twin of ``_leaf_pred`` for Prefix/Wildcard/TermRange — the
-    driver-side dictionary read and the kernel's unscored rest evaluate it:
-    the exact predicate, AND-ed with a term range for row-group pruning.
+    """Term-set predicate of a Prefix/Wildcard/TermRange leaf — the
+    driver-side dictionary read, each task's postings read and the kernel's
+    unscored rest evaluate it: the exact predicate, AND-ed with a term range
+    for row-group pruning.
     Python str comparison is code-point order == UTF-8 byte order, the
     string order of Spark and Arrow."""
     term = ds.field("term")
@@ -188,11 +195,30 @@ def _leaf_expr(leaf) -> ds.Expression:
     raise TypeError(leaf)  # pragma: no cover
 
 
-# what the driver reads of a segment's dictionary, and what the kernel reads
-# of its docmeta; explicit schemas: a merged segment's files declare
-# ``field`` not-null and a built segment's do not
+def _terms_expr(pairs) -> list[ds.Expression]:
+    """One ``field == f & term in (...)`` predicate per field of the
+    (field, term) ``pairs``."""
+    by_field: dict[str, set[str]] = {}
+    for fld, term in pairs:
+        by_field.setdefault(fld, set()).add(term)
+    return [
+        (ds.field("field") == fld) & ds.field("term").isin(sorted(terms))
+        for fld, terms in sorted(by_field.items())
+    ]
+
+
+# what the driver reads of a segment's dictionary, what a task reads of its
+# postings, and what the kernel reads of its docmeta; explicit schemas: a
+# merged segment's files declare ``field`` not-null and a built segment's do
+# not
 _DICT_SCHEMA = pa.schema(
     [("field", pa.string()), ("term", pa.string()), ("docs_count", pa.int32())]
+)
+_POSTINGS_SCHEMA = pa.schema(
+    [*_DICT_SCHEMA, ("postings", pa.binary())]
+    + [(c, pa.list_(pa.int64()))
+       for c in ("block_offsets", "last_docs", "max_freqs", "min_norms")]
+    + [("positions", pa.binary()), ("pos_offsets", pa.list_(pa.int64()))]
 )
 _IDENTITY = ("repo", "path", "commit", "lang")
 _IDENTITY_SCHEMA = pa.schema(
@@ -223,6 +249,30 @@ def _read_identity(
         f"{index_dir}/docmeta/segment_id={segment_id}",
         schema=_IDENTITY_SCHEMA,
         filters=ds.field("doc_id").isin(doc_ids.tolist()),
+    ).to_pandas()
+
+
+def _read_postings(
+    index_dir: str, segment_id: int, prep: _Prepared
+) -> pd.DataFrame:
+    """The rows of one segment's postings that ``prep`` needs, read with
+    pyarrow in the kernel's task: the needed (field, term) set, OR-ed with
+    each unscored-rest leaf's ``_leaf_expr``, is pushed into the read, and
+    ``positions``/``pos_offsets`` are selected only for positional queries.
+    A tree without terms (all, exists) reads nothing."""
+    exprs = _terms_expr(prep.needed_terms) + [
+        (ds.field("field") == fld) & _leaf_expr(leaf)
+        for fld, leaf in prep.rest_specs
+    ]
+    cols = _POSTINGS_SCHEMA.names
+    if not prep.needs_positions:
+        cols = cols[:-2]  # positions, pos_offsets
+    files = (
+        _parquet_files(f"{index_dir}/segments/segment_id={segment_id}")
+        if exprs else []
+    )
+    return ds.dataset(files, schema=_POSTINGS_SCHEMA, format="parquet").to_table(
+        columns=cols, filter=reduce(or_, exprs, ds.scalar(False))
     ).to_pandas()
 
 
@@ -307,10 +357,8 @@ class SearchEngine:
         # publishes, and this snapshot's broadcasts (dropped on publish)
         self._norms_cache: dict[tuple, dict] = {}
         self._norms_bc: dict[int, Any] | None = None
-        # this snapshot's segments relation (Spark) and dictionary dataset
-        # (pyarrow), built once per manifest stamp so a query does not
-        # re-list the segment directories
-        self._scan: DataFrame | None = None
+        # this snapshot's dictionary dataset (pyarrow), built once per
+        # manifest stamp so a query does not re-list the segment directories
         self._dict: ds.Dataset | None = None
         # serializes the stamp check/reload so a concurrent reader can't
         # observe a half-reloaded manifest view (long-lived service shape:
@@ -357,7 +405,7 @@ class SearchEngine:
     def _check_stamp(self) -> None:
         """React to a new manifest publish since the last check: drop the
         snapshot-scoped caches (proxy match sets, term stats, norms, the
-        segments relation and dictionary dataset) and — for a
+        dictionary dataset) and — for a
         live (non-pinned) engine — reload the manifest-derived segment view
         and global stats, so a long-lived reader sees new commits and
         merges (the reference's reopen). A generation-pinned engine keeps
@@ -370,7 +418,7 @@ class SearchEngine:
                 self.clear_proxy_cache()
                 self._stats_cache.clear()
                 self._release_norms()
-                self._scan = self._dict = None
+                self._dict = None
                 if self.generation is None:
                     self._load_manifest()
                 self._manifest_stamp = stamp
@@ -422,28 +470,6 @@ class SearchEngine:
         )
 
     # ------------------------------------------------------------- helpers
-    def segments_df(self, with_positions: bool) -> DataFrame:
-        cols = [
-            "segment_id", "field", "term", "docs_count", "total_tf",
-            "postings", "block_offsets", "last_docs", "max_freqs", "min_norms",
-        ]
-        if with_positions:
-            cols += ["positions", "pos_offsets"]
-        return self._segments_scan().select(*cols)
-
-    def _segments_scan(self) -> DataFrame:
-        """This snapshot's segments table relation, listed once per
-        manifest stamp."""
-        with self._stamp_lock:
-            self._check_stamp()
-            if self._scan is None:
-                self._scan = self._seg_filter(
-                    self.spark.read.schema(SEGMENTS_SCHEMA).parquet(
-                        f"{self.index_dir}/segments"
-                    )
-                )
-            return self._scan
-
     def _read_dictionary(self, expr: ds.Expression) -> pa.Table:
         """(field, term, df) of the live segments' dictionary rows matching
         ``expr``, df summed over segments and term shards — read on the
@@ -690,85 +716,62 @@ class SearchEngine:
         )
 
     @staticmethod
-    def _leaf_pred(leaf):
-        """Term-set predicate of a multi-term leaf (JVM column expression,
-        pushed into the dictionary scan). Transposition-aware fuzzy
+    def _leaf_pred(leaf: Fuzzy):
+        """Term-set predicate of a Fuzzy leaf (JVM column expression,
+        pushed into its Spark dictionary job). Transposition-aware fuzzy
         (Damerau, levenshtein_filter.hpp:67) over-approximates with
         levenshtein <= 2*d (a transposition costs <=2 plain edits); exact
         Damerau post-filters driver-side."""
-        if isinstance(leaf, Prefix):
-            return F.col("term").startswith(leaf.prefix)
-        if isinstance(leaf, Wildcard):
-            # Spark's LIKE uses backslash as the default escape char, same
-            # as the reference automaton's \% \_ escapes (wildcard_utils.cpp)
-            return F.col("term").like(leaf.pattern)
-        if isinstance(leaf, TermRange):
-            pred = F.lit(True)
-            if leaf.min_term is not None:
-                pred = pred & (
-                    F.col("term") >= leaf.min_term
-                    if leaf.include_min
-                    else F.col("term") > leaf.min_term
-                )
-            if leaf.max_term is not None:
-                pred = pred & (
-                    F.col("term") <= leaf.max_term
-                    if leaf.include_max
-                    else F.col("term") < leaf.max_term
-                )
-            return pred
-        if isinstance(leaf, Fuzzy):
-            q = leaf.term
-            lev_cap = leaf.max_distance * (
-                2 if leaf.with_transpositions else 1
+        q = leaf.term
+        lev_cap = leaf.max_distance * (
+            2 if leaf.with_transpositions else 1
+        )
+        # Options::prefix (levenshtein_filter.hpp:60-66): the automaton
+        # is built over prefix+term, so matched terms carry the prefix
+        # verbatim and the distance applies to the remainder — here the
+        # startswith prune plus the same preds over the suffix
+        npfx = len(leaf.prefix)
+        if npfx:
+            rest = F.col("term").substr(
+                F.lit(npfx + 1), F.length("term")
             )
-            # Options::prefix (levenshtein_filter.hpp:60-66): the automaton
-            # is built over prefix+term, so matched terms carry the prefix
-            # verbatim and the distance applies to the remainder — here the
-            # startswith prune plus the same preds over the suffix
-            npfx = len(leaf.prefix)
-            if npfx:
-                rest = F.col("term").substr(
-                    F.lit(npfx + 1), F.length("term")
-                )
-                rest_len = F.length("term") - npfx
-            else:
-                rest = F.col("term")
-                rest_len = F.length("term")
+            rest_len = F.length("term") - npfx
+        else:
+            rest = F.col("term")
+            rest_len = F.length("term")
+        length_pred = (
+            rest_len >= len(q) - leaf.max_distance
+        ) & (rest_len <= len(q) + leaf.max_distance)
+        if npfx:
             length_pred = (
-                rest_len >= len(q) - leaf.max_distance
-            ) & (rest_len <= len(q) + leaf.max_distance)
-            if npfx:
-                length_pred = (
-                    F.col("term").startswith(leaf.prefix) & length_pred
-                )
-            # Alignment prefilter standing in for the reference's parametric
-            # Levenshtein-automaton ∩ FST walk (levenshtein_filter.cpp:
-            # 137-263), which only touches feasible dictionary prefixes.
-            # NOTE a first-character startswith prune would be UNSOUND: an
-            # insertion at position 0 ("xspark" vs "spark", d=1) admits ANY
-            # first character, so no prefix range can be skipped outright.
-            # The sound pigeonhole: if lev(m, q) <= cap, the first cap+1
-            # chars of m cannot all be edits (each costs 1), so some m[j]
-            # (j <= cap) is an exact MATCH of some q[i] with |i-j| <= cap.
-            # That membership test is a handful of substring/IN ops —
-            # Catalyst's And short-circuits in codegen, so terms failing it
-            # (the overwhelming majority of a big dictionary) never reach
-            # the Levenshtein DP at all.
-            branches = [
-                F.substring(rest, j + 1, 1).isin(
-                    sorted(set(q[: j + lev_cap + 1]))
-                )
-                for j in range(lev_cap + 1)
-            ]
-            # terms shorter than cap+1 chars can be all-edits: let them
-            # through to the exact check
-            prefilter = (rest_len <= lev_cap) | reduce(or_, branches)
-            # banded DP: threshold arg makes levenshtein O(cap*len) and
-            # early-exits with -1 past the cap, instead of the full O(len^2)
-            lev_ok = F.levenshtein(rest, F.lit(q), lev_cap) > -1
-            return length_pred & prefilter & lev_ok
-        raise TypeError(leaf)  # pragma: no cover
+                F.col("term").startswith(leaf.prefix) & length_pred
+            )
+        # Alignment prefilter standing in for the reference's parametric
+        # Levenshtein-automaton ∩ FST walk (levenshtein_filter.cpp:
+        # 137-263), which only touches feasible dictionary prefixes.
+        # NOTE a first-character startswith prune would be UNSOUND: an
+        # insertion at position 0 ("xspark" vs "spark", d=1) admits ANY
+        # first character, so no prefix range can be skipped outright.
+        # The sound pigeonhole: if lev(m, q) <= cap, the first cap+1
+        # chars of m cannot all be edits (each costs 1), so some m[j]
+        # (j <= cap) is an exact MATCH of some q[i] with |i-j| <= cap.
+        # That membership test is a handful of substring/IN ops —
+        # Catalyst's And short-circuits in codegen, so terms failing it
+        # (the overwhelming majority of a big dictionary) never reach
+        # the Levenshtein DP at all.
+        branches = [
+            F.substring(rest, j + 1, 1).isin(
+                sorted(set(q[: j + lev_cap + 1]))
+            )
+            for j in range(lev_cap + 1)
+        ]
+        # terms shorter than cap+1 chars can be all-edits: let them
+        # through to the exact check
+        prefilter = (rest_len <= lev_cap) | reduce(or_, branches)
+        # banded DP: threshold arg makes levenshtein O(cap*len) and
+        # early-exits with -1 past the cap, instead of the full O(len^2)
+        lev_ok = F.levenshtein(rest, F.lit(q), lev_cap) > -1
+        return length_pred & prefilter & lev_ok
 
     def _batch_lookup(
         self,
@@ -792,8 +795,8 @@ class SearchEngine:
         TermRange) keeps only the TOP ``scored_terms_limit`` matched terms
         by (df desc, term asc) — the ONLY driver-side materialization for
         such a leaf. Its unscored rest
-        never becomes an instance: its predicate is pushed into the
-        kernel's segment scan and unioned executor-side
+        never becomes an instance: its predicate is pushed into each
+        task's postings read and unioned executor-side
         (`multiterm_query.cpp:36-106` bit_union;
         `limited_sample_collector.hpp:45-244` keeps exactly this bounded
         scored sample). The read holds a leaf's matched (term, df) rows in
@@ -838,13 +841,7 @@ class SearchEngine:
             else:
                 miss_leaves.append(key)
 
-        by_field: dict[str, set[str]] = {}
-        for fld, term in miss_pairs:
-            by_field.setdefault(fld, set()).add(term)
-        literal_exprs = [
-            (ds.field("field") == fld) & ds.field("term").isin(sorted(terms))
-            for fld, terms in sorted(by_field.items())
-        ]
+        literal_exprs = _terms_expr(miss_pairs)
         leaf_exprs = [
             (ds.field("field") == fld) & _leaf_expr(leaf)
             for fld, leaf, _bounded in miss_leaves
@@ -872,7 +869,11 @@ class SearchEngine:
                 for fld, leaf, _bounded in fuzzy_leaves
             ]
             rows = (
-                self._segments_scan()
+                self._seg_filter(
+                    self.spark.read.schema(SEGMENTS_SCHEMA).parquet(
+                        f"{self.index_dir}/segments"
+                    )
+                )
                 .filter(reduce(or_, preds))
                 .groupBy("field", "term")
                 .agg(F.sum("docs_count").alias("df"))
@@ -1318,7 +1319,7 @@ class SearchEngine:
     ) -> DataFrame:
         """Diagnostic: per-segment WAND regime + block-decode accounting
         for a top-k query — (segment_id, mode, blocks_total,
-        blocks_decoded), one row per segment the query's kernel runs on.
+        blocks_decoded).
         ``mode`` records which branch the kernel took
         (pruned / full_dense dense-survivor fallback / full_small /
         full_lowmatch, and their and_* conjunction twins; 'exhaustive'
@@ -1327,8 +1328,10 @@ class SearchEngine:
         non-lead children — the lead child decodes whole postings by
         design). The skipped-block ratio 1 - decoded/total is the
         regression-tracked signal behind the ~1.1x dense-corpus worst-case
-        guard (bench.py --wand-regimes). Runs through the same scan and
-        kernel launch as ``search``."""
+        guard (bench.py --wand-regimes). Runs through the same kernel
+        launch as ``search``, so it has one row per live segment: a
+        segment holding none of the query's postings reports
+        ('exhaustive', 0, 0)."""
         return self._run_kernel(self.prepare(f, dtype), k, True, stats=True)
 
     def _run_kernel(
@@ -1339,42 +1342,15 @@ class SearchEngine:
         stats: bool = False,
         identity: bool = False,
     ) -> DataFrame:
-        """The one scan + kernel launch behind ``search`` and
-        ``wand_stats``: the postings rows the prepared tree needs (term and
-        field predicates pushed into the segments scan), grouped by segment
-        into the kernel with this snapshot's norms broadcasts. With
+        """The one kernel launch behind ``search`` and ``wand_stats``: the
+        snapshot's live segments, spread over ``min(live segments,
+        defaultParallelism)`` tasks by ``spark.range``, each run through the
+        kernel (``_make_kernel``) with this snapshot's norms broadcasts. No
+        exchange: a task reads its segments' postings itself. With
         ``identity`` the kernel also emits the (repo, path, commit, lang)
         of its segment-local top-k."""
-        with self._stamp_lock:  # norms and scan from the same snapshot
-            norms = self.norms_blob_df()
-            seg_df = self.segments_df(prep.needs_positions)
-        if prep.needed_terms or prep.rest_specs:
-            by_field: dict[str, list[str]] = {}
-            for fld, t in prep.needed_terms:
-                by_field.setdefault(fld, []).append(t)
-            preds = [
-                (F.col("field") == fld) & F.col("term").isin(terms)
-                for fld, terms in sorted(by_field.items())
-            ]
-            # executor-side unscored rest: push each multi-term leaf's
-            # predicate into the scan so its postings reach the kernel
-            # without a driver-side term list
-            preds += [
-                (F.col("field") == fld) & self._leaf_pred(leaf)
-                for fld, leaf in prep.rest_specs
-            ]
-            seg_df = seg_df.filter(reduce(or_, preds))
-        else:
-            seg_df = seg_df.filter(F.col("field") == self.field).limit(0)
-        if _matches_without_postings(prep.tree):
-            # all/exists match docs that have no postings row: one null stub
-            # row per live segment makes every segment a kernel group
-            stubs = self.spark.range(1).select(
-                F.explode(
-                    F.array(*map(F.lit, sorted(norms))).cast("array<int>")
-                ).alias("segment_id")
-            )
-            seg_df = seg_df.unionByName(stubs, allowMissingColumns=True)
+        norms = self.norms_blob_df()  # one snapshot: keys = live segments
+        seg_ids = sorted(norms)
         if stats:
             schema = ("segment_id int, mode string, blocks_total long, "
                       "blocks_decoded long")
@@ -1383,10 +1359,17 @@ class SearchEngine:
             schema = f"segment_id int, doc_id int, score {score}"
             if identity:
                 schema += "".join(f", {c} string" for c in _IDENTITY)
-        kernel = _make_kernel(
-            prep, k, wand, norms, stats, self.index_dir if identity else None
-        )
-        return seg_df.groupby("segment_id").applyInPandas(kernel, schema=schema)
+        kernel = _make_kernel(prep, k, wand, norms, self.index_dir, stats, identity)
+
+        def run(batches):
+            for pdf in batches:
+                for i in pdf["id"]:
+                    yield kernel(seg_ids[i])
+
+        tasks = min(len(seg_ids), self.spark.sparkContext.defaultParallelism)
+        return self.spark.range(
+            len(seg_ids), numPartitions=max(tasks, 1)
+        ).mapInPandas(run, schema=schema)
 
     def _finalize(
         self, hits: DataFrame, k: int | None, with_identity: bool
@@ -1458,15 +1441,15 @@ class SearchEngine:
     def close(self) -> None:
         """Release every resource this reader holds: persisted proxy match
         sets, the term-stats cache, the norms broadcasts (unpersisted), the
-        driver-side packed norms and the snapshot's segments relation and
-        dictionary dataset. Idempotent — a closed engine
+        driver-side packed norms and the snapshot's dictionary dataset.
+        Idempotent — a closed engine
         re-materializes lazily if reused."""
         with self._stamp_lock:
             self.clear_proxy_cache()
             self._stats_cache.clear()
             self._release_norms()
             self._norms_cache = {}
-            self._scan = self._dict = None
+            self._dict = None
 
 
 # ----------------------------------------------------------------- kernel
@@ -1480,41 +1463,35 @@ _MERGE = {
 }
 
 
-def _matches_without_postings(node: dict) -> bool:
-    """True when the compiled tree holds an ``all`` or ``exists`` node —
-    the ops that match docs of a segment with no postings row."""
-    subs = node.get("children", []) + node.get("excludes", [])
-    subs += [node["child"]] if "child" in node else []
-    return node["op"] in ("all", "exists") or any(
-        map(_matches_without_postings, subs))
-
-
 def _make_kernel(
     prep: _Prepared,
     k: int,
     wand: bool,
     norms: dict,
+    index_dir: str,
     stats: bool = False,
-    identity_dir: str | None = None,
+    identity: bool = False,
 ):
-    """The per-segment kernel; ``norms`` is ``norms_blob_df()``'s map, of
-    which a task reads only its own segment's broadcast. After its
-    segment-local top-k, a kernel given ``identity_dir`` (the index dir)
-    reads the identity of those docs only, from its segment's docmeta
-    partition. A corrupt postings or positions blob raises ``ValueError``
-    naming the segment, field and term."""
+    """The per-segment kernel, called with a segment id in a Spark task:
+    it reads the segment's postings rows that ``prep`` needs
+    (``_read_postings``) and its own broadcast of ``norms``
+    (``norms_blob_df()``'s map). After its segment-local top-k, a kernel
+    with ``identity`` reads the identity of those docs only, from its
+    segment's docmeta partition. Both reads go through the filesystem at
+    ``index_dir``. A corrupt postings or positions blob raises
+    ``ValueError`` naming the segment, field and term."""
     tree = prep.tree
     instances = prep.instances
     consts = prep.consts
     rest_specs = prep.rest_specs
 
-    def kernel(left: pd.DataFrame) -> pd.DataFrame:
+    def kernel(segment_id: int) -> pd.DataFrame:
         from iresearch_spark.codec import packed
 
         dtype = np.float32 if consts["dtype"] == "float32" else np.float64
         scorer = consts["scorer"]
         primary_field = consts["primary"]
-        segment_id = int(left["segment_id"].iloc[0])
+        left = _read_postings(index_dir, segment_id, prep)
 
         @contextmanager
         def blob_of(key: tuple[str, str]):
@@ -1531,6 +1508,14 @@ def _make_kernel(
         # per field (index = doc_id - 1) + sorted tombstone ids
         seg_norms = norms[segment_id].value
         ndocs = seg_norms["ndocs"]
+        # a merge's cleanup removes docmeta, then segments: a docmeta
+        # partition still present after the read means the read was whole
+        docmeta = f"{index_dir}/docmeta/segment_id={segment_id}"
+        if ndocs and not os.path.isdir(docmeta):
+            raise FileNotFoundError(
+                f"segment {segment_id} of this query's snapshot was removed "
+                f"from {index_dir} by a later publish"
+            )
         # per-field dense norm lookups (primary field's norms are ``dl``,
         # secondary fields ride in ``dl_<name>``)
         dl_arrs: dict[str, np.ndarray] = {}
@@ -1553,8 +1538,7 @@ def _make_kernel(
         # last_doc)
         rows_by_term: dict[tuple[str, str], list] = {}
         for row in left.itertuples(index=False):
-            if row.term is not None:  # skip the all/exists stub row
-                rows_by_term.setdefault((row.field, row.term), []).append(row)
+            rows_by_term.setdefault((row.field, row.term), []).append(row)
         for shards in rows_by_term.values():
             if len(shards) > 1:
                 shards.sort(
@@ -2244,10 +2228,10 @@ def _make_kernel(
                 "score": scores[order].astype(dtype),
             }
         )
-        if identity_dir is None:
+        if not identity:
             return hits
         return hits.merge(
-            _read_identity(identity_dir, segment_id, hits["doc_id"].to_numpy()),
+            _read_identity(index_dir, segment_id, hits["doc_id"].to_numpy()),
             on="doc_id",
         )
 

@@ -110,17 +110,58 @@ def test_cleanup_policy(spark, fresh_index):
     assert plan_cleanup(m2.segments) == [0]
 
 
+def test_tombstones_survive_a_merge_that_fails_after_its_publish(
+    spark, fresh_index, monkeypatch
+):
+    """A merge that purges tombstones and then dies writing parquet into
+    the deletes table leaves every other segment's tombstones in force."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from iresearch_spark.search import All
+
+    dm = spark.read.parquet(f"{fresh_index}/docmeta")
+    victims = [
+        dm.filter(F.col("segment_id") == sid)
+        .orderBy("doc_id").select("repo", "path", "commit").first()
+        for sid in (0, 2)
+    ]
+    mark_deleted(spark, fresh_index, spark.createDataFrame(victims))
+    write = DataFrameWriter.parquet
+    failed = []
+
+    def crash_once(self, path, *args, **kwargs):
+        if path.rstrip("/").endswith("/deletes") and not failed:
+            failed.append(path)
+            raise RuntimeError("injected crash")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_once)
+    try:
+        merge_segments(spark, fresh_index, [0, 1])
+    except RuntimeError:
+        pass
+    monkeypatch.undo()
+    assert len(read_manifest(fresh_index).segments) == 3
+    hits = SearchEngine(spark, fresh_index).search(All(), k=None).collect()
+    found = {(r["repo"], r["path"], r["commit"]) for r in hits}
+    assert tuple(victims[1]) not in found and tuple(victims[0]) not in found
+    assert len(hits) == N_DOCS - 2
+
+
 def test_writers_refuse_a_missing_index(spark, tmp_path):
-    """merge and tombstoning name the index dir when it has no manifest
-    (an error, not an assert that ``python -O`` strips), and write
-    nothing there."""
+    """merge, consolidation and tombstoning name the index dir when it has
+    no manifest (an error, not an assert that ``python -O`` strips), and
+    write nothing there."""
     import os
 
     from iresearch_spark.index.deletes import mark_deleted_rows
+    from iresearch_spark.index.merge import consolidate
 
     d = str(tmp_path / "no_index")
     with pytest.raises(FileNotFoundError, match="no_index"):
         merge_segments(spark, d, [0, 1])
+    with pytest.raises(FileNotFoundError, match="no_index"):
+        consolidate(spark, d)
     rows = spark.range(1).select(
         F.lit(0).alias("segment_id"), F.lit(1).alias("doc_id")
     )

@@ -162,6 +162,22 @@ def test_plan_built_before_publish_keeps_its_snapshot(spark, index):
     eng.close()
 
 
+def test_plan_built_before_a_merge_cleanup_fails_on_collect(spark, index):
+    """A DataFrame built before a merge removed segments of its snapshot
+    fails on collect instead of answering without them."""
+    from iresearch_spark.index import merge_segments
+
+    d, _ = index
+    eng = SearchEngine(spark, d)
+    old = [eng.search(q, k=10) for q in (TermF(term="alpha"), All())]
+    merge_segments(spark, d, [0, 1])
+    for df in old:
+        with pytest.raises(Exception, match="was removed"):
+            df.collect()
+    assert len(_rows(eng.search(All(), k=None))) == 40
+    eng.close()
+
+
 def test_empty_corpus_searches(spark, tmp_path):
     d = str(tmp_path / "idx_empty")
     build_index(spark, spark.createDataFrame([], CORPUS_SCHEMA), d,

@@ -3,11 +3,12 @@
 These assert the *shape* of the plans — the properties that keep the engine
 fast at scale and that profiling can't catch on toy data:
 
-- the term predicate reaches the postings parquet scan (PushedFilters), so
-  a 100 TB segments table reads only the matching row groups;
-- a non-positional query prunes the positions column out of the scan;
+- each task's pyarrow read of a segment's postings returns only the rows
+  of the query's terms, so a 100 TB segments table reads only the matching
+  row groups;
+- a non-positional query prunes the positions columns out of that read;
 - a query plan holds no docmeta scan and no join (the kernel resolves
-  identity), and a top-k query runs in at most 2 Spark jobs.
+  identity), and a top-k query runs in one Spark job.
 """
 
 import io
@@ -19,13 +20,18 @@ import pytest
 from iresearch_spark.corpus import generate_corpus
 from iresearch_spark.index import build_index
 from iresearch_spark.search import (
+    All,
     And,
+    ExistsF,
+    Not,
     Or,
     Phrase,
     Prefix,
     SearchEngine,
     TermF,
 )
+from iresearch_spark.search import executor
+from iresearch_spark.search.executor import _read_postings
 
 
 @pytest.fixture(scope="module")
@@ -46,34 +52,41 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _postings(engine, q):
+    """Each live segment's postings read for ``q``, one frame per segment."""
+    prep = engine.prepare(q)
+    return [_read_postings(engine.index_dir, sid, prep) for sid in engine._seg_ids]
+
+
 def test_term_predicate_pushed_to_postings_scan(engine):
-    plan = _formatted(engine.search(TermF(term="import"), k=None))
-    assert "PushedFilters" in plan
-    # the term shows up inside a pushed In/EqualTo on the postings scan
-    pushed = [
-        line for line in plan.splitlines() if "PushedFilters" in line
-    ]
-    assert any("term" in line for line in pushed), pushed
+    rows = _postings(engine, TermF(term="import"))
+    assert all(len(r) for r in rows), [len(r) for r in rows]
+    for r in rows:
+        assert set(zip(r["field"], r["term"])) == {("content", "import")}
+        assert "positions" not in r.columns and "pos_offsets" not in r.columns
 
 
 def test_positions_column_pruned_unless_phrase(engine):
-    plan = _formatted(engine.search(TermF(term="import"), k=None))
-    read_schemas = [
-        line for line in plan.splitlines() if "ReadSchema" in line
-    ]
-    seg_reads = [line for line in read_schemas if "postings" in line]
-    assert seg_reads and all("positions" not in line for line in seg_reads), (
-        read_schemas
-    )
-    plan_ph = _formatted(
-        engine.search(Phrase(terms=("fast", "key")), k=None)
-    )
-    seg_reads_ph = [
-        line
-        for line in plan_ph.splitlines()
-        if "ReadSchema" in line and "postings" in line
-    ]
-    assert any("positions" in line for line in seg_reads_ph), seg_reads_ph
+    (r, *_) = _postings(engine, TermF(term="import"))
+    assert "positions" not in r.columns and "postings" in r.columns
+    for r in _postings(engine, Phrase(terms=("import", "def"))):
+        assert {"positions", "pos_offsets"} <= set(r.columns)
+        assert set(r["term"]) == {"import", "def"}
+        assert r["positions"].notna().all()
+
+
+def test_bounded_prefix_read_returns_only_its_rest(engine):
+    """A bounded Prefix reads its scored terms plus every term of its
+    unscored rest, and nothing else."""
+    q = Prefix(prefix="sym_1", scored_terms_limit=2)
+    prep = engine.prepare(q)
+    assert len(prep.instances) == 2 and len(prep.rest_specs) == 1
+    terms = set()
+    for r in _postings(engine, q):
+        terms |= set(r["term"])
+    assert len(terms) > 2 and all(t.startswith("sym_1") for t in terms)
+    want = engine._read_dictionary(executor._leaf_expr(q))["term"].to_pylist()
+    assert terms == set(want)
 
 
 def test_fuzzy_dictionary_scan_uses_banded_lev_and_prefilter(engine):
@@ -317,7 +330,7 @@ def test_like_regex_raises_on_dangling_escape():
 
 
 # the perfbench query kinds: TermF, 3-term Or, And(sel, Or(hot, hot)),
-# 2-term Phrase and Prefix
+# 2-term Phrase and Prefix; then trees that match docs without postings
 JOB_COUNT_QUERIES = [
     TermF(term="import"),
     Or(children=(TermF(term="def"), TermF(term="int"), TermF(term="sym_1"))),
@@ -327,6 +340,9 @@ JOB_COUNT_QUERIES = [
     )),
     Phrase(terms=("import", "def")),
     Prefix(prefix="sym_1"),
+    All(),
+    ExistsF(),
+    Not(child=TermF(term="import")),
 ]
 
 
@@ -343,15 +359,20 @@ def _spark_jobs(spark, fn) -> int:
 
 
 @pytest.mark.parametrize("q", JOB_COUNT_QUERIES, ids=lambda q: type(q).__name__)
-def test_topk_query_runs_in_two_spark_jobs(spark, engine, q):
-    """A top-k query is one scan plus one kernel: term stats are read on
-    the driver with pyarrow and identity inside the kernel, so neither a
-    reader's first query nor a repeated one runs a dictionary job or an
-    identity join."""
+def test_topk_query_runs_in_one_spark_job(spark, engine, q):
+    """A top-k query is one kernel job: term stats are read on the driver
+    with pyarrow, and each task reads its segments' postings and identity
+    itself, so neither a reader's first query nor a repeated one runs a
+    dictionary job, a scan exchange or an identity join. The kernel input
+    spreads the live segments over min(segments, defaultParallelism)
+    tasks."""
     eng = SearchEngine(spark, engine.index_dir)
     first = _spark_jobs(spark, lambda: eng.search(q, k=10).collect())
     again = _spark_jobs(spark, lambda: eng.search(q, k=10).collect())
-    assert 1 <= first <= 2 and 1 <= again <= 2, (first, again)
+    assert (first, again) == (1, 1)
+    tasks = eng._run_kernel(eng.prepare(q), 10, True).rdd.getNumPartitions()
+    want = min(len(eng._seg_ids), spark.sparkContext.defaultParallelism)
+    assert tasks == want == 2, (tasks, want)
 
 
 @pytest.mark.parametrize("k", [5, None])

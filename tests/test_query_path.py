@@ -1,8 +1,9 @@
 """The query path's driver-side dictionary and the kernel's error naming.
 
 - Term stats are read on the driver with pyarrow (``_batch_lookup``); each
-  lookup, full or bounded, must equal the Spark aggregate it replaced, on
-  an index that mixes built and merged segments, has tombstones and a
+  lookup, full or bounded, must equal a Spark aggregate under Spark's own
+  startswith/LIKE/range predicates (the oracle ``_spark_pred``), on an
+  index that mixes built and merged segments, has tombstones and a
   secondary field.
 - A query after a consolidation with cleanup reads only live segments.
 - A corrupt postings blob fails the query with the segment, field and term.
@@ -79,6 +80,24 @@ def _spark_df(spark, eng, fld, pred) -> list[tuple[str, int]]:
     return sorted((r["term"], int(r["df"])) for r in rows)
 
 
+def _spark_pred(leaf):
+    """Spark's own term predicate of a Prefix/Wildcard/TermRange leaf: the
+    oracle for the engine's pyarrow ``_leaf_expr``. Spark's LIKE uses
+    backslash as its escape char, as the reference's wildcard automaton
+    does (``wildcard_utils.cpp``)."""
+    term = F.col("term")
+    if isinstance(leaf, Prefix):
+        return term.startswith(leaf.prefix)
+    if isinstance(leaf, Wildcard):
+        return term.like(leaf.pattern)
+    pred = F.lit(True)
+    if leaf.min_term is not None:
+        pred &= term >= leaf.min_term if leaf.include_min else term > leaf.min_term
+    if leaf.max_term is not None:
+        pred &= term <= leaf.max_term if leaf.include_max else term < leaf.max_term
+    return pred
+
+
 LEAVES = [
     ("content", Prefix(prefix="sym_1")),
     ("content", Prefix(prefix="")),
@@ -124,11 +143,11 @@ def _check_equivalence(spark, eng):
         want = _spark_df(spark, eng, fld, F.col("term") == term)
         assert dfs[(fld, term)] == (want[0][1] if want else 0), (fld, term)
     for key in full:
-        want = _spark_df(spark, eng, key[0], SearchEngine._leaf_pred(key[1]))
+        want = _spark_df(spark, eng, key[0], _spark_pred(key[1]))
         assert matches[key] == want, key
     for key in bounded:
         want = sorted(
-            _spark_df(spark, eng, key[0], SearchEngine._leaf_pred(key[1])),
+            _spark_df(spark, eng, key[0], _spark_pred(key[1])),
             key=lambda td: (-td[1], td[0]),
         )[:3]
         assert matches[key] == want, key
@@ -147,6 +166,30 @@ def test_driver_dictionary_equals_spark_aggregate(spark, mixed_index):
         ["repo", "path", "commit"]]))
     again = _check_equivalence(spark, eng)
     assert again == (dfs, matches)
+
+
+def test_postings_read_equals_spark_scan(spark, mixed_index):
+    """Each task's pyarrow read of a segment (``_read_postings``) holds
+    exactly the rows of a bounded leaf's scored terms and unscored rest
+    that Spark's predicate selects in that segment."""
+    eng = SearchEngine(spark, mixed_index[0])
+    seg = spark.read.schema(SEGMENTS_SCHEMA).parquet(f"{eng.index_dir}/segments")
+    for fld, leaf in LEAVES:
+        q = dataclasses.replace(leaf, field_name=fld, scored_terms_limit=3)
+        prep = eng.prepare(q)
+        want = sorted(
+            (r["segment_id"], r["term"], r["docs_count"])
+            for r in seg.filter(F.col("segment_id").isin(eng._seg_ids)
+                                & (F.col("field") == fld) & _spark_pred(leaf))
+            .collect()
+        )
+        got = sorted(
+            (sid, t, n)
+            for sid in eng._seg_ids
+            for t, n in executor._read_postings(eng.index_dir, sid, prep)[
+                ["term", "docs_count"]].itertuples(index=False)
+        )
+        assert got == want, (fld, leaf)
 
 
 def test_dangling_escape_raises_like_spark(spark, mixed_index):
