@@ -8,15 +8,18 @@ Spark-first reading of the reference indexing dataflow
   resume (the reference's per-thread segment sharding, made reproducible).
 - dense per-segment ``doc_id`` starting at 1 (`core/utils/type_limits.hpp:45-47`)
   via ``row_number() over (partition by segment order by repo, path, commit)``.
-- one grouped Arrow UDF per segment = the tokenize→invert→flush pipeline
-  (`field_data::invert` :985-1080 + flush :1124-1162), fully numpy-vectorized,
-  emitting one row per term with a bit-packed posting blob
-  (:mod:`iresearch_spark.codec.packed`), block offsets and block-max (WAND)
-  metadata.
+- one invert kernel (:func:`invert`), run per segment by a grouped Arrow
+  UDF = the invert→flush pipeline (`field_data::invert` :985-1080 + flush
+  :1124-1162): Arrow dictionary-encodes the tokens and byte-sorts the terms,
+  numpy builds the postings, and it emits one row per term with a
+  bit-packed posting blob (:mod:`iresearch_spark.codec.packed`), block
+  offsets and block-max (WAND) metadata. An analyzer with a Catalyst twin
+  tokenizes JVM-side and ships token strings through Arrow; any other
+  analyzer tokenizes in the Python task. Both feed the same kernel.
 - ``docmeta`` table = docmap + norms in one: identity, sha256 invariant,
   Norm2 ``dl`` (raw token count, `core/index/norm.hpp:135-142`), computed
-  JVM-side with ``regexp_extract_all`` — which also cross-checks the Python
-  tokenizer (the two must agree on token counts; tested).
+  JVM-side with ``regexp_extract_all`` where the analyzer has a Catalyst
+  twin (it must agree with the kernel's token counts; tested).
 - waves = commit generations: segments are built in bounded batches; each wave
   ends with per-segment checkpoints + an atomic manifest publish
   (`index_writer.cpp:2360-2380` two-phase commit). Resume skips checkpointed
@@ -40,6 +43,8 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -110,11 +115,11 @@ def assign_doc_ids(
 
 
 # Analyzers with a JVM (Catalyst expression) twin. When available, the build
-# tokenizes JVM-side: regexp + posexplode + xxhash64 run inside whole-stage
-# codegen, and the Python kernel only ever sees fixed-width integers. This
-# avoids the memory-bandwidth wall of allocating millions of Python string
-# objects per partition (measured: the object-string kernel stops scaling at
-# ~8 concurrent workers; the int kernel scales with cores).
+# tokenizes JVM-side and the kernel receives each doc's tokens as an Arrow
+# string array, which it dictionary-encodes without making a Python string
+# object per token: millions of those per partition hit a memory-bandwidth
+# wall (measured: a kernel that allocates them stops scaling at ~8
+# concurrent workers).
 JVM_TOKENIZERS = {
     "code": lambda col: F.regexp_extract_all(
         F.lower(F.coalesce(col, F.lit(""))), F.lit(CODE_TOKEN_PATTERN), F.lit(0)
@@ -126,10 +131,10 @@ JVM_TOKENIZERS["segmentation"] = JVM_TOKENIZERS["code"]
 # regexp drives regexp_extract_all (tokens, original case) and split (the
 # n+1 inter-token gaps); per-token char spans follow from cumulative
 # gap/token lengths — the technique the ft_stored_offsets DuckDB oracle
-# already validates char-exact. The kernel then sees only integer arrays
-# (hashes + gap/token lengths), keeping the OFFS-enabled build on the same
-# memory-bandwidth profile as the plain JVM build (the r4 verdict's one
-# perf-weak item: the per-row re.finditer + struct.pack path).
+# already validates char-exact. The kernel then sees Arrow token strings
+# plus integer gap/token lengths, keeping the OFFS-enabled build on the same
+# memory-bandwidth profile as the plain JVM build (no per-row re.finditer +
+# struct.pack).
 JVM_SPAN_TOKENIZERS = {"code_offsets": CODE_TOKEN_PATTERN_CI}
 
 
@@ -182,116 +187,115 @@ def make_dl_expr(analyzer: str, column: str = "content"):
     return dl_udf(F.col(column))
 
 
-HASH_SEGMENTS_SCHEMA = (
-    "segment_id int, h long, docs_count int, total_tf long, "
-    "postings binary, block_offsets array<long>, last_docs array<long>, "
-    "max_freqs array<long>, min_norms array<long>, "
-    "positions binary, pos_offsets array<long>"
-)
-
-# span-payload variant: the kernel also emits the pay streams (fixed 8-byte
-# char spans), fed by integer gap/token-length arrays computed JVM-side
-HASH_SEGMENTS_PAY_SCHEMA = HASH_SEGMENTS_SCHEMA + ", pay_lens binary, payloads binary"
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow twin of a segments DDL schema (the invert kernel's output)."""
+    types = {
+        "int": pa.int32(), "long": pa.int64(), "string": pa.string(),
+        "binary": pa.binary(), "array<long>": pa.list_(pa.int64()),
+    }
+    return pa.schema([(n, types[t]) for n, t in map(str.split, ddl.split(", "))])
 
 
-def _invert_hash_kernel(with_positions: bool, with_spans: bool = False):
-    """Pure-integer invert: one input row per doc (segment_id, doc_id, dl,
-    hs array<long> of per-token hashes) -> one output row per term hash with
-    encoded postings. Same math as ``_invert_kernel`` with the term identity
-    carried as a 64-bit hash; term strings are joined back JVM-side from the
-    per-segment dictionary. Token positions are the array ordinals.
+def invert(
+    segment_id: int,
+    field: str,
+    doc_ids: np.ndarray,
+    toks: pa.ListArray,
+    with_positions: bool,
+    span_lens: tuple[np.ndarray, np.ndarray] | None = None,
+    payloads: pa.Array | None = None,
+) -> pa.Table:
+    """One segment's tokens -> one row per term with encoded postings, terms
+    in UTF-8 byte order (the reference keys postings by the term bytes and
+    sorts them at flush, `field_data.cpp:985-1080`, `:1145-1148`).
 
-    ``with_spans``: rows additionally carry ``gls``/``tls`` (per-token gap /
-    token char lengths, array<int>) and the kernel emits the stored-OFFS pay
-    streams — per-occurrence char spans reconstructed by cumulative-length
-    arithmetic (start_i = within-doc cumsum(gap+len)_i - len_i), still
-    integer-only end to end."""
+    ``toks`` holds each doc's token list (list<string>, aligned with
+    ``doc_ids``); a token's position is its list ordinal. Term ids come
+    from ``pc.dictionary_encode`` and their order from ``pc.sort_indices``,
+    so the term strings stay in Arrow: no token becomes a Python ``str``.
+    A payload field (SEGMENTS_PAY_SCHEMA) passes one per-token payload:
+    ``span_lens`` = (gap before the token, token) char lengths, from which
+    each token's stored-OFFS char span is rebuilt, or ``payloads`` =
+    arbitrary bytes (binary). Payloads imply positions (the pay stream is
+    position-aligned, `field_data.cpp:79-96`)."""
+    with_pay = span_lens is not None or payloads is not None
+    schema = _arrow_schema(SEGMENTS_PAY_SCHEMA if with_pay else SEGMENTS_SCHEMA)
+    counts = pc.list_value_length(toks).to_numpy().astype(np.int64)
+    flat = toks.flatten()
+    total = len(flat)
+    if total == 0:
+        return schema.empty_table()
+    doc_rep = np.repeat(doc_ids, counts)
+    doc_starts = np.cumsum(counts) - counts
+    pos = np.arange(total, dtype=np.int64) - np.repeat(doc_starts, counts)
 
-    schema = HASH_SEGMENTS_PAY_SCHEMA if with_spans else HASH_SEGMENTS_SCHEMA
-    cols = [c.split()[0] for c in schema.split(", ")]
+    enc = pc.dictionary_encode(flat)
+    term_order = pc.sort_indices(enc.dictionary)
+    rank = np.empty(len(term_order), dtype=np.int64)
+    rank[term_order.to_numpy()] = np.arange(len(term_order))
+    sort_key = rank[enc.indices.to_numpy()]
+    order = np.lexsort((doc_rep, sort_key))  # stable: keeps pos ascending
+    sc, sd, sp = sort_key[order], doc_rep[order], pos[order]
 
-    def invert(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=cols)
-        segment_id = int(pdf["segment_id"].iloc[0])
-        doc_ids = pdf["doc_id"].to_numpy(np.int64)
-        hs = pdf["hs"].to_numpy(dtype=object)
-        counts = np.fromiter((len(x) for x in hs), dtype=np.int64, count=len(hs))
-        total = int(counts.sum())
-        if total == 0:
-            return pd.DataFrame(columns=cols)
-        flat_h = np.concatenate([np.asarray(x, dtype=np.int64) for x in hs])
-        doc_rep = np.repeat(doc_ids, counts)
-        doc_starts = np.concatenate([[0], np.cumsum(counts)])[:-1]
-        pos = np.arange(total, dtype=np.int64) - np.repeat(doc_starts, counts)
+    posting_start = np.empty(total, dtype=bool)
+    posting_start[0] = True
+    posting_start[1:] = (sc[1:] != sc[:-1]) | (sd[1:] != sd[:-1])
+    pstarts = np.flatnonzero(posting_start)
+    freqs = np.diff(np.append(pstarts, total))
+    p_docs = sd[pstarts]
+    p_terms = sc[pstarts]
 
-        if with_spans:
-            flat_gl = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf["gls"]]
-            )
-            flat_tl = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf["tls"]]
-            )
-            # within-doc cumulative sum of (gap + token) lengths is each
-            # token's END char offset; start = end - token length
-            cs = np.cumsum(flat_gl + flat_tl)
-            cs_before = np.concatenate([[0], cs])[doc_starts]
-            ends_flat = cs - np.repeat(cs_before, counts)
-            starts_flat = ends_flat - flat_tl
+    term_start_mask = np.empty(pstarts.size, dtype=bool)
+    term_start_mask[0] = True
+    term_start_mask[1:] = p_terms[1:] != p_terms[:-1]
+    tstarts = np.flatnonzero(term_start_mask)
+    term_lengths = np.diff(np.append(tstarts, pstarts.size))
+    n_terms = term_lengths.size
 
-        order = np.lexsort((pos, doc_rep, flat_h))
-        sh, sd, sp = flat_h[order], doc_rep[order], pos[order]
-
-        posting_start = np.empty(total, dtype=bool)
-        posting_start[0] = True
-        posting_start[1:] = (sh[1:] != sh[:-1]) | (sd[1:] != sd[:-1])
-        pstarts = np.flatnonzero(posting_start)
-        freqs = np.diff(np.append(pstarts, total))
-        p_docs = sd[pstarts]
-        p_hashes = sh[pstarts]
-
-        dl_lookup = np.zeros(int(doc_ids.max()) + 1, dtype=np.int64)
-        dl_lookup[doc_ids] = counts
-        p_dls = dl_lookup[p_docs]
-
-        term_start_mask = np.empty(pstarts.size, dtype=bool)
-        term_start_mask[0] = True
-        term_start_mask[1:] = p_hashes[1:] != p_hashes[:-1]
-        tstarts = np.flatnonzero(term_start_mask)
-        term_lengths = np.diff(np.append(tstarts, pstarts.size))
-
-        blobs, offs, lasts, maxf, minn = encode_postings_batch(
-            p_docs, freqs, p_dls, term_lengths
+    dl_lookup = np.zeros(int(doc_ids.max()) + 1, dtype=np.int64)
+    dl_lookup[doc_ids] = counts
+    blobs, offs, lasts, maxf, minn = encode_postings_batch(
+        p_docs, freqs, dl_lookup[p_docs], term_lengths
+    )
+    longs = pa.list_(pa.int64())
+    cols = {
+        "segment_id": pa.array(np.full(n_terms, segment_id, dtype=np.int32)),
+        "field": pa.array([field] * n_terms, pa.string()),
+        # every distinct token is a term: the sorted dictionary is the terms
+        "term": enc.dictionary.take(term_order).cast(pa.string()),
+        "docs_count": pa.array(term_lengths.astype(np.int32)),
+        "total_tf": pa.array(np.add.reduceat(freqs, tstarts)),
+        "postings": pa.array(blobs, pa.binary()),
+        "block_offsets": pa.array(offs, longs),
+        "last_docs": pa.array(lasts, longs),
+        "max_freqs": pa.array(maxf, longs),
+        "min_norms": pa.array(minn, longs),
+        "positions": pa.nulls(n_terms, pa.binary()),
+        "pos_offsets": pa.nulls(n_terms, longs),
+    }
+    if with_positions or with_pay:
+        pblobs, poffs = encode_positions_batch(freqs, sp, term_lengths)
+        cols["positions"] = pa.array(pblobs, pa.binary())
+        cols["pos_offsets"] = pa.array(poffs, longs)
+    if span_lens is not None:
+        gaps, lens = span_lens
+        # within-doc cumulative sum of (gap + token) lengths is each
+        # token's END char offset; start = end - token length
+        cs = np.cumsum(gaps + lens)
+        ends = cs - np.repeat(np.concatenate([[0], cs])[doc_starts], counts)
+        lb, db = encode_span_payloads_batch(
+            freqs, (ends - lens)[order], ends[order], term_lengths
         )
-        total_tf = np.add.reduceat(freqs, tstarts)
-
-        out = {
-            "segment_id": np.full(term_lengths.size, segment_id, dtype=np.int32),
-            "h": p_hashes[tstarts],
-            "docs_count": term_lengths.astype(np.int32),
-            "total_tf": total_tf.astype(np.int64),
-            "postings": blobs,
-            "block_offsets": offs,
-            "last_docs": lasts,
-            "max_freqs": maxf,
-            "min_norms": minn,
-        }
-        if with_positions or with_spans:
-            pblobs, poffs = encode_positions_batch(freqs, sp, term_lengths)
-            out["positions"] = pblobs
-            out["pos_offsets"] = poffs
-        else:
-            out["positions"] = None
-            out["pos_offsets"] = None
-        if with_spans:
-            lb, db = encode_span_payloads_batch(
-                freqs, starts_flat[order], ends_flat[order], term_lengths
-            )
-            out["pay_lens"] = lb
-            out["payloads"] = db
-        return pd.DataFrame(out)
-
-    return invert
+    elif payloads is not None:
+        lb, db = encode_payloads_batch(
+            freqs,
+            payloads.take(pa.array(order)).to_numpy(zero_copy_only=False),
+            term_lengths,
+        )
+    if with_pay:
+        cols["pay_lens"] = pa.array(lb, pa.binary())
+        cols["payloads"] = pa.array(db, pa.binary())
+    return pa.table(cols, schema=schema)
 
 
 def make_seg_builder(
@@ -299,127 +303,102 @@ def make_seg_builder(
     analyzer: str,
     field: str,
     with_positions: bool,
-    jvm_tokenize: bool | None = None,
     out_partitions: int | None = None,
     column: str | None = None,
 ):
-    """Returns seg_builder(sub) -> segments DataFrame (SEGMENTS_SCHEMA).
+    """Returns seg_builder(sub) -> segments DataFrame (SEGMENTS_SCHEMA, or
+    SEGMENTS_PAY_SCHEMA for a payload analyzer), one row per (segment,
+    term), sorted by term within each segment.
 
     ``column`` is the source column to analyze (defaults to the field name —
-    index field names mirror source columns). Picks the JVM-tokenized integer
-    path when the analyzer has a Catalyst twin (default), else the
-    Python-tokenizer grouped kernel."""
+    index field names mirror source columns). Every analyzer ends in the one
+    :func:`invert` kernel, run per segment by ``applyInArrow``. An analyzer
+    with a Catalyst twin (``JVM_TOKENIZERS``, ``JVM_SPAN_TOKENIZERS``)
+    tokenizes JVM-side, once, and ships each doc's token array through
+    Arrow; any other analyzer tokenizes in the Python task."""
     column = column or field
-    with_payloads = is_payload_analyzer(analyzer)
-    # span-payload analyzers (stored OFFS) keep the JVM integer path: the
-    # pay bytes are a pure function of char spans, computable JVM-side
-    with_spans = analyzer in JVM_SPAN_TOKENIZERS
-    jvm_ok = (
-        (analyzer in JVM_TOKENIZERS or with_spans)
-        if jvm_tokenize is None
-        else jvm_tokenize
-    )
-    use_jvm = jvm_ok and (not with_payloads or with_spans)
-    if not use_jvm:
-        invert = _invert_kernel(analyzer, field, with_positions, with_payloads)
-        schema = SEGMENTS_PAY_SCHEMA if with_payloads else SEGMENTS_SCHEMA
+    with_pay = is_payload_analyzer(analyzer)
+    schema = SEGMENTS_PAY_SCHEMA if with_pay else SEGMENTS_SCHEMA
 
-        def build_py(sub: DataFrame) -> DataFrame:
-            return (
-                sub.select(
-                    "segment_id", "doc_id", F.col(column).alias("content")
-                )
-                .groupBy("segment_id")
-                .applyInPandas(invert, schema=schema)
+    def keys(t: pa.Table) -> tuple[int, str, np.ndarray]:
+        """invert's leading arguments for one segment's input table."""
+        return (
+            t["segment_id"][0].as_py(), field,
+            t["doc_id"].to_numpy().astype(np.int64),
+        )
+
+    if analyzer in JVM_TOKENIZERS:
+
+        def tokenize(sub: DataFrame) -> DataFrame:
+            return sub.select(
+                "segment_id", "doc_id",
+                JVM_TOKENIZERS[analyzer](F.col(column)).alias("toks"),
             )
 
-        return build_py
+        def run(t: pa.Table) -> pa.Table:
+            return invert(*keys(t), t["toks"].combine_chunks(), with_positions)
 
-    invert_h = _invert_hash_kernel(with_positions, with_spans=with_spans)
-    kernel_schema = (
-        HASH_SEGMENTS_PAY_SCHEMA if with_spans else HASH_SEGMENTS_SCHEMA
-    )
+    elif analyzer in JVM_SPAN_TOKENIZERS:
 
-    def build_jvm(sub: DataFrame) -> DataFrame:
-        # materialize the token array once per doc (a named column — putting
-        # the regexp expression inline next to explode/transform makes
-        # Catalyst re-evaluate it per produced row; measured 10x slowdown)
-        if with_spans:
+        def tokenize(sub: DataFrame) -> DataFrame:
+            # materialize the token array once per doc (a named column —
+            # putting the regexp expression inline next to transform makes
+            # Catalyst re-evaluate it per produced row; measured 10x
+            # slowdown). Tokens in ORIGINAL case (spans refer to the
+            # original text) + the n+1 inter-token gaps; lower per token
+            # afterwards — the twin of code_offsets_analyzer's finditer pass
             pat = JVM_SPAN_TOKENIZERS[analyzer]
             raw = F.coalesce(F.col(column), F.lit(""))
-            # tokens in ORIGINAL case (spans refer to the original text) +
-            # the n+1 inter-token gaps; lower per token afterwards — the
-            # byte-equivalent twin of code_offsets_analyzer's finditer pass
             pre = sub.select(
                 "segment_id",
                 "doc_id",
-                F.regexp_extract_all(raw, F.lit(pat), F.lit(0)).alias(
-                    "toks_ci"
-                ),
+                F.regexp_extract_all(raw, F.lit(pat), F.lit(0)).alias("toks_ci"),
                 F.split(raw, pat, -1).alias("gaps"),
             )
-            arr = pre.select(
+            return pre.select(
                 "segment_id",
                 "doc_id",
                 F.expr("transform(toks_ci, t -> lower(t))").alias("toks"),
-                F.expr("transform(toks_ci, t -> length(t))").alias("tls"),
                 F.expr(
                     "transform(slice(gaps, 1, size(toks_ci)), g -> length(g))"
                 ).alias("gls"),
+                F.expr("transform(toks_ci, t -> length(t))").alias("tls"),
             )
-            span_cols = ["gls", "tls"]
-        else:
-            toks_expr = JVM_TOKENIZERS[analyzer]
-            arr = sub.select(
-                "segment_id", "doc_id", toks_expr(F.col(column)).alias("toks")
+
+        def run(t: pa.Table) -> pa.Table:
+            gls, tls = (
+                t[c].combine_chunks().flatten().to_numpy().astype(np.int64)
+                for c in ("gls", "tls")
             )
-            span_cols = []
-        # kernel feed: per-doc hash arrays, fixed-width ints end to end —
-        # no Python string objects anywhere in the hot path
-        kernel_in = arr.select(
-            "segment_id",
-            "doc_id",
-            F.size("toks").alias("dl"),
-            F.expr("transform(toks, t -> xxhash64(t))").alias("hs"),
-            *span_cols,
-        )
-        seg_hash = kernel_in.groupBy("segment_id").applyInPandas(
-            invert_h, schema=kernel_schema
-        )
-        # per-segment term dictionary for the hash -> term join back;
-        # min==max detects (astronomically unlikely) xxhash64 collisions and
-        # raise_error makes the guard free — no extra pass over the corpus
-        dic = (
-            arr.select(
-                "segment_id", F.explode(F.array_distinct("toks")).alias("term")
+            return invert(
+                *keys(t), t["toks"].combine_chunks(), with_positions,
+                span_lens=(gls, tls),
             )
-            .groupBy("segment_id", F.xxhash64("term").alias("h"))
-            .agg(F.min("term").alias("term"), F.max("term").alias("term_max"))
-        )
-        term_col = F.when(
-            F.col("term") == F.col("term_max"), F.col("term")
-        ).otherwise(
-            F.raise_error(
-                F.concat(F.lit("xxhash64 term collision: "), F.col("term"))
+
+    else:
+        fn = get_payload_analyzer(analyzer) if with_pay else get_analyzer(analyzer)
+
+        def tokenize(sub: DataFrame) -> DataFrame:
+            return sub.select(
+                "segment_id", "doc_id", F.col(column).alias("content")
             )
-        )
-        out = seg_hash.join(dic, ["segment_id", "h"]).select(
-            "segment_id",
-            F.lit(field).alias("field"),
-            term_col.alias("term"),
-            "docs_count",
-            "total_tf",
-            "postings",
-            "block_offsets",
-            "last_docs",
-            "max_freqs",
-            "min_norms",
-            "positions",
-            "pos_offsets",
-            *(["pay_lens", "payloads"] if with_spans else []),
-        )
+
+        def run(t: pa.Table) -> pa.Table:
+            content = t["content"].to_pandas()
+            tokens, pays = fn(content) if with_pay else (fn(content), None)
+            return invert(
+                *keys(t), pa.array(tokens, pa.list_(pa.string())),
+                with_positions,
+                payloads=(
+                    None if pays is None
+                    else pa.array(pays, pa.list_(pa.binary())).flatten()
+                ),
+            )
+
+    def build(sub: DataFrame) -> DataFrame:
+        out = tokenize(sub).groupBy("segment_id").applyInArrow(run, schema=schema)
         # explicit partition count: AQE would coalesce the small-by-bytes
-        # join output into a couple of partitions, serializing the (CPU
+        # kernel output into a couple of partitions, serializing the (CPU
         # heavy) parquet encode of the blob/array columns into 1-2 tasks.
         # One task per segment also yields the one-file-per-segment layout.
         n_out = out_partitions or spark.sparkContext.defaultParallelism
@@ -427,112 +406,7 @@ def make_seg_builder(
             "segment_id", "term"
         )
 
-    return build_jvm
-
-
-def _invert_kernel(
-    analyzer_name: str, field: str, with_positions: bool,
-    with_payloads: bool = False,
-):
-    """``with_payloads``: the analyzer is a payload analyzer (tokens + per-
-    position user bytes, token_attributes.hpp:67-72); positions are implied
-    (the pay stream is position-aligned, field_data.cpp:79-96) and the output
-    schema grows the pay_lens/payloads columns (SEGMENTS_PAY_SCHEMA)."""
-    out_schema = SEGMENTS_PAY_SCHEMA if with_payloads else SEGMENTS_SCHEMA
-    analyzer = (
-        get_payload_analyzer(analyzer_name)
-        if with_payloads
-        else get_analyzer(analyzer_name)
-    )
-
-    def invert(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(
-                columns=[c.split()[0] for c in out_schema.split(", ")]
-            )
-        pdf = pdf.sort_values("doc_id")
-        segment_id = int(pdf["segment_id"].iloc[0])
-        doc_ids = pdf["doc_id"].to_numpy(np.int64)
-        if with_payloads:
-            tokens, pays = analyzer(pdf["content"])
-        else:
-            tokens = analyzer(pdf["content"])
-        counts = tokens.str.len().to_numpy(np.int64)
-        total = int(counts.sum())
-        if total == 0:
-            return pd.DataFrame(
-                columns=[c.split()[0] for c in out_schema.split(", ")]
-            )
-        flat_terms = tokens.explode().dropna().to_numpy(dtype=object)
-        if with_payloads:
-            flat_pay = pays.explode().dropna().to_numpy(dtype=object)
-        doc_rep = np.repeat(doc_ids, counts)
-        doc_starts = np.concatenate([[0], np.cumsum(counts)])[:-1]
-        pos = np.arange(total, dtype=np.int64) - np.repeat(doc_starts, counts)
-
-        codes, uniques = pd.factorize(flat_terms, sort=False)
-        # lexicographic term order (reference sorts terms at flush,
-        # field_data.cpp:1145-1148); rank remap keeps the sort O(V log V)
-        term_order = np.argsort(uniques, kind="stable")
-        rank = np.empty(len(uniques), dtype=np.int64)
-        rank[term_order] = np.arange(len(uniques))
-        sort_key = rank[codes]
-        order = np.lexsort((doc_rep, sort_key))  # stable: keeps pos ascending
-        sc, sd, sp = sort_key[order], doc_rep[order], pos[order]
-
-        posting_start = np.empty(total, dtype=bool)
-        posting_start[0] = True
-        posting_start[1:] = (sc[1:] != sc[:-1]) | (sd[1:] != sd[:-1])
-        pstarts = np.flatnonzero(posting_start)
-        freqs = np.diff(np.append(pstarts, total))
-        p_docs = sd[pstarts]
-        p_terms = sc[pstarts]
-
-        term_start_mask = np.empty(pstarts.size, dtype=bool)
-        term_start_mask[0] = True
-        term_start_mask[1:] = p_terms[1:] != p_terms[:-1]
-        tstarts = np.flatnonzero(term_start_mask)
-        term_lengths = np.diff(np.append(tstarts, pstarts.size))
-        term_ids = p_terms[tstarts]  # == 0..V-1 since sorted
-
-        dl_lookup = np.zeros(int(doc_ids.max()) + 1, dtype=np.int64)
-        dl_lookup[doc_ids] = counts
-        p_dls = dl_lookup[p_docs]
-
-        blobs, offs, lasts, maxf, minn = encode_postings_batch(
-            p_docs, freqs, p_dls, term_lengths
-        )
-        total_tf = np.add.reduceat(freqs, tstarts)
-        terms_sorted = uniques[term_order][term_ids]
-
-        out = {
-            "segment_id": np.full(term_lengths.size, segment_id, dtype=np.int32),
-            "field": field,
-            "term": terms_sorted,
-            "docs_count": term_lengths.astype(np.int32),
-            "total_tf": total_tf.astype(np.int64),
-            "postings": blobs,
-            "block_offsets": offs,
-            "last_docs": lasts,
-            "max_freqs": maxf,
-            "min_norms": minn,
-        }
-        if with_positions or with_payloads:
-            pblobs, poffs = encode_positions_batch(freqs, sp, term_lengths)
-            out["positions"] = pblobs
-            out["pos_offsets"] = poffs
-        else:
-            out["positions"] = None
-            out["pos_offsets"] = None
-        if with_payloads:
-            lb, db = encode_payloads_batch(
-                freqs, flat_pay[order], term_lengths
-            )
-            out["pay_lens"] = lb
-            out["payloads"] = db
-        return pd.DataFrame(out)
-
-    return invert
+    return build
 
 
 def docmeta_schema(extra_fields: Iterable[str] = ()) -> str:
@@ -545,7 +419,6 @@ def field_writers(
     spark: SparkSession,
     fields: list[tuple[str, str]],
     with_positions: bool,
-    jvm_tokenize: bool | None = None,
     out_partitions: int | None = None,
 ) -> list[tuple[str, object, object]]:
     """[(name, seg_builder, dl_expr)] for the field specs [(name, analyzer),
@@ -555,8 +428,7 @@ def field_writers(
         (
             name,
             make_seg_builder(
-                spark, az, name, with_positions, jvm_tokenize,
-                out_partitions=out_partitions,
+                spark, az, name, with_positions, out_partitions=out_partitions
             ),
             make_dl_expr(az, name),
         )
@@ -771,7 +643,6 @@ def build_index(
     waves: int = 1,
     fail_after_waves: int | None = None,
     resume: bool = False,
-    jvm_tokenize: bool | None = None,
     fields: list[tuple[str, str]] | None = None,
     sort_by: list[str] | None = None,
     commit_payload: bytes | None = None,
@@ -811,7 +682,7 @@ def build_index(
     seg_records: dict[int, dict] = read_checkpoints(index_dir) if resume else {}
     fields = fields or [(field, analyzer)]
     writers = field_writers(
-        spark, fields, with_positions, jvm_tokenize, out_partitions=num_segments
+        spark, fields, with_positions, out_partitions=num_segments
     )
     man = new_manifest(
         fields, with_positions, num_segments, sort_by, commit_payload

@@ -18,11 +18,15 @@ docs are unaffected because all docs share the same global constants).
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iresearch_spark.index.build import DOCMETA_SCHEMA
 from iresearch_spark.index.manifest import read_manifest, write_manifest
+from iresearch_spark.util import read_int32
 
 DELETES_SCHEMA = "segment_id int, doc_id int"
 
@@ -33,6 +37,18 @@ def deletes_df(spark: SparkSession, index_dir: str) -> DataFrame:
         .parquet(f"{index_dir}/deletes")
         .dropDuplicates(["segment_id", "doc_id"])
     )
+
+
+def read_tombstones(index_dir: str) -> dict[int, np.ndarray]:
+    """segment_id -> sorted unique tombstoned doc ids (int32), read on the
+    driver with pyarrow, no Spark job (segment_writer.hpp:63-66 document
+    mask). Queries and merge share it."""
+    t = read_int32(f"{index_dir}/deletes", ["segment_id", "doc_id"])
+    if t is None:
+        return {}
+    seg = t["segment_id"].to_numpy()
+    doc = t["doc_id"].to_numpy()
+    return {int(s): np.unique(doc[seg == s]) for s in np.unique(seg)}
 
 
 def mark_deleted(spark: SparkSession, index_dir: str, keys: DataFrame) -> int:
@@ -53,7 +69,6 @@ def mark_deleted_rows(
 ) -> int:
     """Tombstone pre-resolved (segment_id, doc_id) rows — the segment-aware
     path (e.g. replace_batch deleting only PRE-batch segments' copies)."""
-    import os
     from dataclasses import replace
 
     man = read_manifest(index_dir)

@@ -49,6 +49,7 @@ from iresearch_spark.index.build import (
     reset_segments,
     segment_stats,
 )
+from iresearch_spark.index.deletes import DELETES_SCHEMA, read_tombstones
 from iresearch_spark.index.manifest import (
     read_manifest,
     write_checkpoint,
@@ -203,17 +204,11 @@ def merge_segments(
     # OFFSETS; with deletes, the dense renumber is
     # ``new = base + old - #(deleted <= old)`` computed from the (small)
     # sorted tombstone list — no docmeta collect.
-    deleted: dict[int, np.ndarray] = {}
-    if os.path.isdir(f"{index_dir}/deletes"):
-        from iresearch_spark.index.deletes import deletes_df
-
-        dpdf = (
-            deletes_df(spark, index_dir)
-            .filter(F.col("segment_id").isin(list(seg_ids)))
-            .toPandas()
-        )
-        for sid, g in dpdf.groupby("segment_id"):
-            deleted[int(sid)] = np.sort(g["doc_id"].to_numpy(np.int64))
+    deleted = {
+        sid: ids
+        for sid, ids in read_tombstones(index_dir).items()
+        if sid in seg_ids
+    }
 
     bases: dict[int, int] = {}
     acc = 0
@@ -499,12 +494,10 @@ def merge_segments(
         .filter(F.col("segment_id").isin(list(seg_ids)))
     )
     if deleted:
-        from iresearch_spark.index.deletes import deletes_df
-
+        # an anti-join needs no dropDuplicates of the tombstones
+        dels = spark.read.schema(DELETES_SCHEMA).parquet(f"{index_dir}/deletes")
         dm_src = dm_src.join(
-            F.broadcast(deletes_df(spark, index_dir)),
-            ["segment_id", "doc_id"],
-            "anti",
+            F.broadcast(dels), ["segment_id", "doc_id"], "anti"
         )
     base_map = F.create_map(
         *[F.lit(x) for sid in seg_ids for x in (sid, bases[sid])]

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iresearch_spark.index.build import DOCMETA_SCHEMA, SEGMENTS_SCHEMA
+from iresearch_spark.index.deletes import read_tombstones
 from iresearch_spark.index.manifest import read_manifest
 from iresearch_spark.search.filters import (
     All,
@@ -94,6 +95,7 @@ from iresearch_spark.search.filters import (
     rewrite,
 )
 from iresearch_spark.search.scorers import BM25
+from iresearch_spark.util import read_int32
 
 
 @dataclass
@@ -276,21 +278,11 @@ def _read_postings(
     ).to_pandas()
 
 
-def _read_int32(path: str, cols: list[str]) -> pa.Table | None:
-    """Driver-side pyarrow read of int32 columns from a Spark-written
-    parquet directory (None if absent). The explicit schema null-fills a
-    missing column the way a Spark read with a schema does, and reads a
-    directory without data files as zero rows."""
-    if not os.path.isdir(path):
-        return None
-    return pq.read_table(path, schema=pa.schema([(c, pa.int32()) for c in cols]))
-
-
 def _pack_norms(index_dir: str, segment_id: int, dl_cols: list[str]) -> dict:
     """One segment's norms from its docmeta partition: ``{"ndocs": n,
     col: int32[n] for col in dl_cols}`` (index = doc_id - 1, null -> 0).
     A segment without docmeta rows (an empty wave) packs to ndocs 0."""
-    t = _read_int32(
+    t = read_int32(
         f"{index_dir}/docmeta/segment_id={segment_id}", ["doc_id", *dl_cols]
     )
     if t is None or t.num_rows == 0:
@@ -303,17 +295,6 @@ def _pack_norms(index_dir: str, segment_id: int, dl_cols: list[str]) -> dict:
         a[ids - 1] = t[c].fill_null(0).to_numpy()
         out[c] = a
     return out
-
-
-def _read_tombstones(index_dir: str) -> dict[int, np.ndarray]:
-    """segment_id -> sorted unique tombstoned doc ids (int32) from the
-    deletes table (segment_writer.hpp:63-66 document mask)."""
-    t = _read_int32(f"{index_dir}/deletes", ["segment_id", "doc_id"])
-    if t is None:
-        return {}
-    seg = t["segment_id"].to_numpy()
-    doc = t["doc_id"].to_numpy()
-    return {int(s): np.unique(doc[seg == s]) for s in np.unique(seg)}
 
 
 class SearchEngine:
@@ -525,7 +506,7 @@ class SearchEngine:
                     cache[key] = self._norms_cache.get(key) or _pack_norms(
                         self.index_dir, sid, dl_cols)
                 self._norms_cache = cache  # drops merged-away segments
-                dels = _read_tombstones(self.index_dir)
+                dels = read_tombstones(self.index_dir)
                 sc = self.spark.sparkContext
                 none = np.empty(0, np.int32)
                 self._norms_bc = {

@@ -1,5 +1,8 @@
 """Small shared utilities.
 
+read_int32: a driver-side pyarrow read of int32 columns of a Spark-written
+parquet directory (norms, tombstones).
+
 LRUCache: a bounded least-recently-used map for the engine's long-lived
 caches (term stats, proxy match sets, cached engines). The reference keeps
 analogous bounded structures per open reader (e.g. the columnstore block
@@ -9,8 +12,22 @@ monotonically — the r3 review flagged the crude "clear at 100k" bound.
 
 from __future__ import annotations
 
+import os
 from collections import OrderedDict
 from typing import Any, Callable
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+
+def read_int32(path: str, cols: list[str]) -> pa.Table | None:
+    """Driver-side pyarrow read of int32 columns from a Spark-written
+    parquet directory (None if absent). The explicit schema null-fills a
+    missing column the way a Spark read with a schema does, and reads a
+    directory without data files as zero rows."""
+    if not os.path.isdir(path):
+        return None
+    return pq.read_table(path, schema=pa.schema([(c, pa.int32()) for c in cols]))
 
 
 class LRUCache:

@@ -3,9 +3,10 @@
 
 The r4 finding: payload/offsets builds forfeited the JVM tokenize path and
 ran per-row Python (re.finditer + struct.pack), capping scaling at the
-~8-worker Python string-object memory wall. The fix routes `code_offsets`
-through the JVM integer path (regexp_extract_all + split gaps + an
-integer-only kernel); this records the evidence.
+~8-worker Python string-object memory wall. The fix tokenizes
+`code_offsets` JVM-side (regexp_extract_all + split gaps) and hands the
+invert kernel Arrow token strings plus integer gap/token lengths; this
+records the evidence.
 
 Usage: python scripts/bench_offsets.py [--n 400000] [--trials 2]
                                        [--py-n 50000]
@@ -16,7 +17,9 @@ Prints ONE JSON line:
 
 `offsets_over_plain` is the headline: the verdict's bar is <= ~1.5x.
 The per-row Python path is measured at the smaller --py-n (it is the
-documented slow path; at --n it would dominate the wall-clock budget).
+documented slow path; at --n it would dominate the wall-clock budget). It
+builds with ``code_offsets_analyzer`` registered under a second payload-
+analyzer name, which has no JVM tokenizer, so it tokenizes in Python.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import sys
 import time
 
 
-def _build(spark, n, analyzer, jvm, tag, num_segments):
+def _build(spark, n, analyzer, tag, num_segments):
     from iresearch_spark.corpus import generate_corpus
     from iresearch_spark.index.build import build_index
 
@@ -36,10 +39,7 @@ def _build(spark, n, analyzer, jvm, tag, num_segments):
     shutil.rmtree(d, ignore_errors=True)
     corpus = generate_corpus(spark, n)
     t0 = time.time()
-    build_index(
-        spark, corpus, d, num_segments=num_segments, analyzer=analyzer,
-        jvm_tokenize=jvm,
-    )
+    build_index(spark, corpus, d, num_segments=num_segments, analyzer=analyzer)
     sec = time.time() - t0
     shutil.rmtree(d, ignore_errors=True)
     return sec
@@ -60,14 +60,14 @@ def main() -> int:
 
     spark = get_spark("bench-offsets", cores=args.cores)
 
-    def best(n, analyzer, jvm, tag):
+    def best(n, analyzer, tag):
         return min(
-            _build(spark, n, analyzer, jvm, f"{tag}_{t}", args.segments)
+            _build(spark, n, analyzer, f"{tag}_{t}", args.segments)
             for t in range(args.trials)
         )
 
-    plain = best(args.n, "code", None, "plain")
-    offs_jvm = best(args.n, "code_offsets", None, "offs_jvm")
+    plain = best(args.n, "code", "plain")
+    offs_jvm = best(args.n, "code_offsets", "offs_jvm")
     out = {
         "n": args.n,
         "trials": args.trials,
@@ -79,7 +79,11 @@ def main() -> int:
         "offsets_jvm_docs_per_sec": round(args.n / offs_jvm, 1),
     }
     if args.py_n:
-        offs_py = best(args.py_n, "code_offsets", False, "offs_py")
+        from iresearch_spark.analysis import PAYLOAD_ANALYZERS
+        from iresearch_spark.analysis.analyzers import code_offsets_analyzer
+
+        PAYLOAD_ANALYZERS["code_offsets_python_feed"] = code_offsets_analyzer
+        offs_py = best(args.py_n, "code_offsets_python_feed", "offs_py")
         out.update(
             py_n=args.py_n,
             offsets_py_sec=round(offs_py, 2),

@@ -1,10 +1,14 @@
-"""The JVM-tokenized integer build path must produce an index
-indistinguishable from the Python-tokenizer kernel path: identical
-per-segment content hashes (XOR over term/docs_count/total_tf/postings —
-order-independent) and identical query results."""
+"""The JVM tokenizer feed must produce an index indistinguishable from the
+Python tokenizer feed of the same analyzer: identical per-segment content
+hashes (XOR over term/docs_count/total_tf/postings — order-independent)
+and identical query results. ``code`` has a Catalyst twin, so it tokenizes
+JVM-side; the same ``code_analyzer`` registered under a second name has
+none, so it tokenizes in the Python task."""
 
 import pytest
 
+from iresearch_spark.analysis import ANALYZERS, register_analyzer
+from iresearch_spark.analysis.analyzers import code_analyzer
 from iresearch_spark.corpus import generate_corpus
 from iresearch_spark.index import build_index, read_manifest
 from iresearch_spark.search import Or, Phrase, SearchEngine, TermF
@@ -13,13 +17,15 @@ from iresearch_spark.search import Or, Phrase, SearchEngine, TermF
 @pytest.fixture(scope="module")
 def both_indexes(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("idx_paths")
+    register_analyzer("code_python_feed", code_analyzer)
     dirs = {}
-    for name, jvm in (("jvm", True), ("py", False)):
+    for name, analyzer in (("jvm", "code"), ("py", "code_python_feed")):
         d = str(base / name)
         corpus = generate_corpus(spark, 250, num_partitions=3)
-        build_index(spark, corpus, d, num_segments=3, jvm_tokenize=jvm)
+        build_index(spark, corpus, d, num_segments=3, analyzer=analyzer)
         dirs[name] = d
-    return dirs
+    yield dirs
+    ANALYZERS.pop("code_python_feed")
 
 
 def test_manifests_equivalent(both_indexes):

@@ -156,12 +156,19 @@ def test_term_offsets_unicode_content(spark, tmp_path_factory):
     assert got == exp
 
 
-def test_jvm_offsets_build_byte_equivalent(spark, tmp_path_factory):
-    """The JVM-vectorized OFFS build path (regexp_extract_all + split gaps
-    + integer kernel; r4 verdict ask #1) must produce an index BYTE-identical
-    to the per-row Python analyzer path: same manifest content hashes AND
-    identical pay streams per (segment, term) — mirrors test_jvm_tokenize.py
-    with the payload columns added to the comparison."""
+def test_jvm_offsets_build_byte_equivalent(spark, tmp_path_factory, monkeypatch):
+    """The JVM OFFS feed (regexp_extract_all + split gaps) must produce an
+    index BYTE-identical to the per-row Python analyzer feed: same manifest
+    content hashes AND identical pay streams per (segment, term) — mirrors
+    test_jvm_tokenize.py with the payload columns added to the comparison.
+    The same ``code_offsets_analyzer`` under a second payload-analyzer name
+    has no Catalyst twin, so it tokenizes in the Python task."""
+    from iresearch_spark.analysis import PAYLOAD_ANALYZERS
+    from iresearch_spark.analysis.analyzers import code_offsets_analyzer
+
+    monkeypatch.setitem(
+        PAYLOAD_ANALYZERS, "code_offsets_python_feed", code_offsets_analyzer
+    )
     mixed = [
         ("r", f"{i:04d}", "c", "py", text)
         for i, text in enumerate(
@@ -179,13 +186,12 @@ def test_jvm_offsets_build_byte_equivalent(spark, tmp_path_factory):
     ]
     base = tmp_path_factory.mktemp("idx_offs_paths")
     dirs = {}
-    for name, jvm in (("jvm", True), ("py", False)):
+    for name, analyzer in (
+        ("jvm", "code_offsets"), ("py", "code_offsets_python_feed")
+    ):
         d = str(base / name)
         corpus = spark.createDataFrame(mixed, COLS)
-        build_index(
-            spark, corpus, d, num_segments=2, analyzer="code_offsets",
-            jvm_tokenize=jvm,
-        )
+        build_index(spark, corpus, d, num_segments=2, analyzer=analyzer)
         dirs[name] = d
     from iresearch_spark.index import read_manifest
     from iresearch_spark.index.build import SEGMENTS_PAY_SCHEMA

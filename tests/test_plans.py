@@ -8,7 +8,8 @@ fast at scale and that profiling can't catch on toy data:
   row groups;
 - a non-positional query prunes the positions columns out of that read;
 - a query plan holds no docmeta scan and no join (the kernel resolves
-  identity), and a top-k query runs in one Spark job.
+  identity), and a top-k query runs in one Spark job;
+- a JVM-tokenized build runs its tokenizer regexp once and joins nothing.
 """
 
 import io
@@ -396,12 +397,14 @@ def test_query_plan_has_no_docmeta_scan_or_join(engine, k):
 
 
 def test_merge_and_micro_batch_job_counts(spark, tmp_path):
-    """A merge of 8 segments without deletes reads parquet with explicit
-    schemas (no schema-inference jobs) and collects its stats once; a
-    micro-batch keeps the one stats pass of a build wave."""
+    """A merge of 8 segments reads parquet with explicit schemas (no
+    schema-inference jobs) and collects its stats once; with tombstones it
+    reads them on the driver with pyarrow, no Spark job. A micro-batch
+    keeps the one stats pass of a build wave."""
     from pyspark.sql import functions as F
 
     from iresearch_spark.index import merge_segments
+    from iresearch_spark.index.deletes import mark_deleted
     from iresearch_spark.streaming import IncrementalIndexer
 
     corpus = generate_corpus(spark, 160, 2).cache()
@@ -414,4 +417,28 @@ def test_merge_and_micro_batch_job_counts(spark, tmp_path):
     batch = corpus.withColumn("commit", F.concat(F.col("commit"), F.lit("b")))
     batch_jobs = _spark_jobs(spark, lambda: ix.process_batch(batch, 0))
     assert merge_jobs <= 11 and batch_jobs <= 11, (merge_jobs, batch_jobs)
+
+    dd = str(tmp_path / "merge8_deletes")
+    build_index(spark, corpus, dd, num_segments=8)
+    assert mark_deleted(spark, dd, corpus.limit(20)) == 20
+    del_jobs = _spark_jobs(
+        spark, lambda: merge_segments(spark, dd, list(range(8)))
+    )
+    assert del_jobs <= 11, del_jobs
     corpus.unpersist()
+
+
+@pytest.mark.parametrize("analyzer", ["code", "code_offsets"])
+def test_jvm_tokenized_build_tokenizes_once(spark, analyzer):
+    """A JVM-tokenized build runs the tokenizer regexp once per doc and
+    hands the token strings to the invert kernel: no per-token hash and no
+    join of the terms back from a second, dictionary branch."""
+    from iresearch_spark.index.build import assign_doc_ids, make_seg_builder
+
+    sub = assign_doc_ids(generate_corpus(spark, 40, 2), 2)
+    seg_df = make_seg_builder(
+        spark, analyzer, "content", True, out_partitions=2
+    )(sub)
+    plan = seg_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("regexp_extract_all(") == 1, plan
+    assert "xxhash64" not in plan and "Join" not in plan, plan
