@@ -157,9 +157,8 @@ def run_merge_bench(cpus: int) -> dict:
     quiescence, and record docs/s, bytes in/out, per-round fan-in — the
     merge-side analogue of --wand-regimes (`merge_writer.cpp:1862-1890` is
     the reference's consolidation driver). A second timed merge re-runs the
-    largest fan-in with ``shard_docs``+``hot_term_bytes`` low enough that
-    the hot-term solo buckets AND the giant-term shard escalation both
-    engage, and asserts they did (the plan-audit note)."""
+    largest fan-in with ``shard_docs`` low enough that the giant-term shard
+    escalation engages, and asserts it did (the plan-audit note)."""
     import pyspark.sql.functions as F
 
     from iresearch_spark.corpus import generate_corpus
@@ -209,17 +208,15 @@ def run_merge_bench(cpus: int) -> dict:
         }
         shutil.rmtree(d, ignore_errors=True)
 
-        # ---- full-index merge with hot-term/shard escalations forced on
-        # (plan audit: HOT_TERMS postings at 200k docs are ~all-docs lists,
-        # so a 1 MB hot threshold puts them in solo buckets and shard_docs
-        # splits their merged blobs into disjoint doc-range rows)
+        # ---- full-index merge with the shard escalation forced on (plan
+        # audit: HOT_TERMS postings at 200k docs are ~all-docs lists, each
+        # heavier than a merge range's budget, so each sits alone in its
+        # range, and shard_docs splits their merged blobs into disjoint
+        # doc-range rows)
         d = fresh_index("sharded")
         seg_ids = [s["segment_id"] for s in read_manifest(d).segments]
         t0 = time.perf_counter()
-        rec = merge_segments(
-            spark, d, seg_ids, hot_term_bytes=1 << 20,
-            shard_docs=50_000,
-        )
+        rec = merge_segments(spark, d, seg_ids, shard_docs=50_000)
         shard_sec = round(time.perf_counter() - t0, 4)
         seg = spark.read.parquet(f"{d}/segments").filter(
             F.col("segment_id") == rec["new_segment_id"]

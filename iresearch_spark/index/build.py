@@ -187,7 +187,7 @@ def make_dl_expr(analyzer: str, column: str = "content"):
     return dl_udf(F.col(column))
 
 
-def _arrow_schema(ddl: str) -> pa.Schema:
+def arrow_schema(ddl: str) -> pa.Schema:
     """The Arrow twin of a segments DDL schema (the invert kernel's output)."""
     types = {
         "int": pa.int32(), "long": pa.int64(), "string": pa.string(),
@@ -219,7 +219,7 @@ def invert(
     arbitrary bytes (binary). Payloads imply positions (the pay stream is
     position-aligned, `field_data.cpp:79-96`)."""
     with_pay = span_lens is not None or payloads is not None
-    schema = _arrow_schema(SEGMENTS_PAY_SCHEMA if with_pay else SEGMENTS_SCHEMA)
+    schema = arrow_schema(SEGMENTS_PAY_SCHEMA if with_pay else SEGMENTS_SCHEMA)
     counts = pc.list_value_length(toks).to_numpy().astype(np.int64)
     flat = toks.flatten()
     total = len(flat)

@@ -22,7 +22,6 @@ import os
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from iresearch_spark.index.build import DOCMETA_SCHEMA
 from iresearch_spark.index.manifest import read_manifest, write_manifest
@@ -78,24 +77,20 @@ def mark_deleted_rows(
         ["segment_id", "doc_id"]
     )
     if os.path.isdir(f"{index_dir}/deletes"):
-        resolved = resolved.exceptAll(deletes_df(spark, index_dir))
+        # an anti-join needs no dropDuplicates of the tombstones
+        old = spark.read.schema(DELETES_SCHEMA).parquet(f"{index_dir}/deletes")
+        resolved = resolved.join(old, ["segment_id", "doc_id"], "anti")
     resolved = resolved.cache()
     n_new = resolved.count()
     if n_new:
         resolved.write.mode("append").parquet(f"{index_dir}/deletes")
     resolved.unpersist()
 
-    counts = {
-        r["segment_id"]: r["n"]
-        for r in deletes_df(spark, index_dir)
-        .groupBy("segment_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    } if os.path.isdir(f"{index_dir}/deletes") else {}
+    tombs = read_tombstones(index_dir)
     segs = []
     for s in man.segments:
         s = dict(s)
-        s["deleted_docs"] = int(counts.get(s["segment_id"], 0))
+        s["deleted_docs"] = int(tombs.get(s["segment_id"], np.empty(0)).size)
         segs.append(s)
     # replace() carries EVERY manifest attribute forward (a hand-copied
     # field list once silently reset with_payloads on delete publish,

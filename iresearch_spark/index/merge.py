@@ -11,16 +11,25 @@ The Spark reading of `core/index/merge_writer.cpp` + the tier policy of
 - **merge_segments**: because doc ids are remapped by *per-segment base
   offsets* (ascending old segment id, `merge_writer.cpp:1448-`), the k-way
   term merge degenerates to an ordered concatenation per term — no heap
-  needed. One ``groupBy(field, hash(term) % B)`` shuffle; each bucket kernel
+  needed. A merge has a query's shape: the driver reads the inputs'
+  ``(term, docs_count, total_tf)`` with pyarrow and cuts the terms, in
+  UTF-8 byte order, into contiguous ranges (:func:`term_ranges`); each
+  ``spark.range(ranges).mapInPandas`` task reads its run of ranges once
+  from every input with pyarrow (:func:`read_inputs`). Each range's kernel
   decodes ALL its posting blobs in one vectorized pass
   (``packed.decode_postings_many``), shifts doc ids by broadcast base
   offsets, concatenates per term in segment order, and re-encodes with
-  ``packed.encode_postings_batch`` — no per-term Python.
+  ``packed.encode_postings_batch`` — no per-term Python. Each task writes
+  one file, so a merged segment's files hold disjoint term intervals, as
+  the reference writes its merged dictionary in term order
+  (`merge_writer.cpp:1862-1890`).
 
-Skew note (10^12-file scale): bucketing by term hash spreads the dictionary
-uniformly, and terms whose total postings bytes exceed ``hot_term_bytes``
-are promoted to a dedicated bucket each (tiny hot set -> broadcast join), so
-no task carries more than max(hottest term, average bucket). For terms that
+Skew note (10^12-file scale): a range never splits a term, so a term
+heavier than the budget sits alone in its range and no range carries more
+than max(heaviest term, budget). Below 128 MB an input file is one parquet
+row group, so the term filter of a task's read prunes nothing there: each
+task decodes every input file its term block overlaps, and a merge reads
+its inputs up to min(ranges, defaultParallelism) times. For terms that
 outgrow a single blob, ``shard_docs`` splits the merged posting list into
 several disjoint doc-range rows (block-aligned); the query kernel and WAND
 are shard-aware, and re-merges of sharded rows restore doc order via a
@@ -34,6 +43,8 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,6 +56,7 @@ from iresearch_spark.codec import packed
 from iresearch_spark.index.build import (
     SEGMENTS_PAY_SCHEMA,
     SEGMENTS_SCHEMA,
+    arrow_schema,
     docmeta_schema,
     reset_segments,
     segment_stats,
@@ -55,6 +67,61 @@ from iresearch_spark.index.manifest import (
     write_checkpoint,
     write_manifest,
 )
+from iresearch_spark.util import parquet_files
+
+#: Weight budget of one merge range: the summed ``docs_count + total_tf``
+#: of its input rows (the doc ids and positions ``merge_range`` decodes).
+#: A ~1k-doc tier merge (0.9M weight) spans ~14 ranges, enough to fill
+#: every task; on a 4-vCPU host a 5k-doc, 10-segment merge took 4.5 / 4.3
+#: / 5.2 s (medians of 3) at 2^14 / 2^16 / 2^18: per-range cost below,
+#: task imbalance above.
+RANGE_BUDGET = 1 << 16
+
+
+def term_ranges(terms, weights, budget: int) -> list[tuple[str, str | None]]:
+    """Cut the distinct ``terms`` (UTF-8 byte order, the order the
+    reference merges and writes them in, `merge_writer.cpp:1448-`) into
+    contiguous ranges ``[lo, hi)`` (``hi`` None: unbounded). A range takes
+    terms while its summed weight stays within ``budget``; a term is never
+    split, so one heavier than the budget sits alone and every range weighs
+    at most max(budget, its heaviest term)."""
+    t = (
+        pa.table({"term": terms, "w": weights})
+        .group_by("term")
+        .aggregate([("w", "sum")])
+        .sort_by("term")
+    )
+    ends = np.cumsum(t["w_sum"].to_numpy())
+    starts: list[int] = []
+    i = 0
+    while i < ends.size:
+        starts.append(i)
+        base = ends[i - 1] if i else 0
+        i = max(int(np.searchsorted(ends, base + budget, "right")), i + 1)
+    los = t["term"].take(pa.array(starts, pa.int64())).to_pylist()
+    return list(zip(los, los[1:] + [None]))
+
+
+def read_inputs(
+    index_dir: str,
+    seg_ids: Sequence[int],
+    schema: pa.Schema,
+    columns: list[str] | None = None,
+    flt: ds.Expression | None = None,
+) -> pa.Table:
+    """The input segments' rows matching ``flt``, read with pyarrow (the
+    plan on the driver, each term block in its merge task);
+    ``segment_id`` comes from the partition path."""
+    parts = []
+    for sid in seg_ids:
+        t = ds.dataset(
+            parquet_files(f"{index_dir}/segments/segment_id={sid}"),
+            schema=schema, format="parquet",
+        ).to_table(columns=columns, filter=flt)
+        parts.append(t.add_column(
+            0, "segment_id", pa.array(np.full(t.num_rows, sid, np.int32))
+        ))
+    return pa.concat_tables(parts)
 
 
 def plan_tier(
@@ -165,9 +232,7 @@ def merge_segments(
     spark: SparkSession,
     index_dir: str,
     seg_ids: Sequence[int],
-    bucket_count: int = 64,
     cleanup: bool = True,
-    hot_term_bytes: int = 64 << 20,
     shard_docs: int | None = None,
 ) -> dict:
     """Merge the given segments into one new segment; returns merge metrics.
@@ -191,7 +256,7 @@ def merge_segments(
     if man is None:
         raise FileNotFoundError(f"no manifest in {index_dir}")
     # public API: normalize — remap base offsets accumulate in iteration
-    # order, which MUST be ascending segment_id to match merge_bucket's sort
+    # order, which MUST be ascending segment_id to match merge_range's sort
     seg_ids = sorted({int(s) for s in seg_ids})
     by_id = {s["segment_id"]: s for s in man.segments}
     new_id = max(max(by_id) + 1, man.num_segments)
@@ -227,7 +292,7 @@ def merge_segments(
         name for name, _ in man.field_specs() if name != man.field_name
     ]
 
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_range(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame(
                 columns=[c.split()[0] for c in out_schema.split(", ")]
@@ -288,8 +353,8 @@ def merge_segments(
         terms = pdf["term"].to_numpy(dtype=object)
         term_change = np.empty(len(pdf), dtype=bool)
         term_change[0] = True
-        # a bucket can hold rows of several (field, term) pairs — hash
-        # collisions across fields land in the same bucket
+        # a range holds every field's rows of its terms, so one term can
+        # come in several fields
         term_change[1:] = (terms[1:] != terms[:-1]) | (
             fields_arr[1:] != fields_arr[:-1]
         )
@@ -354,19 +419,19 @@ def merge_segments(
         # (build gates the encoder on `with_positions or with_payloads`);
         # dropping them here would desync pay_lens/payloads from the
         # positions permutation and break term_payloads after a merge.
-        # The data gate is PER OUTPUT TERM, never per bucket: a bucket
-        # holds many (field, term) pairs (xxhash64 % bucket_count), so a
-        # mixed multi-field payload index built with with_positions=False
-        # can land positions-bearing rows (payload field) and null rows
-        # (plain fields) in the SAME bucket. Null rows get zero
-        # placeholders through the shared permutation and their output
-        # terms are nulled back out below, mirroring the payload branch.
+        # The data gate is PER OUTPUT TERM, never per range: a range
+        # holds many (field, term) pairs, so a mixed multi-field payload
+        # index built with with_positions=False can land positions-bearing
+        # rows (payload field) and null rows (plain fields) in the SAME
+        # range. Null rows get zero placeholders through the shared
+        # permutation and their output terms are nulled back out below,
+        # mirroring the payload branch.
         has_pos = pdf["positions"].notna().to_numpy()
         if (with_positions or with_payloads) and has_pos.any():
-            # one cross-row vectorized decode of the whole bucket (the
+            # one cross-row vectorized decode of the whole range (the
             # chunks of every row width-grouped at once — a per-row decode
             # loop measured 3.2x slower). None rows (mixed multi-field
-            # buckets) come back as zero placeholders through the shared
+            # ranges) come back as zero placeholders through the shared
             # permutation.
             flat_pos = packed.decode_positions_many(
                 pdf["positions"].tolist(),
@@ -439,51 +504,44 @@ def merge_segments(
             ]
         return pd.DataFrame(out)
 
-    seg_df = (
-        spark.read.schema(out_schema)
-        .parquet(f"{index_dir}/segments")
-        .filter(F.col("segment_id").isin(list(seg_ids)))
+    in_schema = arrow_schema(out_schema).remove(0)  # segment_id: the path
+    # the plan holds the inputs' (term, weight) rows on the driver: O(term
+    # rows), never O(postings)
+    w = read_inputs(
+        index_dir, seg_ids, in_schema, ["term", "docs_count", "total_tf"]
     )
-    # Hot-term skew: Zipfian terms (`import`, `int`) can dominate a hash
-    # bucket and straggle the whole merge. Terms whose total postings bytes
-    # exceed hot_term_bytes get a dedicated bucket each (the hot set is tiny
-    # -> broadcast join); everything else hashes uniformly. A single term's
-    # postings stay in one task — the storage format keeps one blob per
-    # (segment, field, term) — so the per-task bound is max(hottest term,
-    # average bucket), the best achievable without sharding the blob.
-    hot = (
-        seg_df.groupBy("field", "term")
-        .agg(F.sum(F.length("postings")).alias("hot_bytes"))
-        .filter(F.col("hot_bytes") > hot_term_bytes)
-        .select(
-            "field",
-            "term",
-            (
-                F.row_number().over(
-                    Window.orderBy("field", "term")
-                ) + F.lit(bucket_count)
-            ).alias("solo_bucket"),
-        )
+    ranges = term_ranges(
+        w["term"],
+        w["docs_count"].to_numpy().astype(np.int64) + w["total_tf"].to_numpy(),
+        RANGE_BUDGET,
     )
-    merged = (
-        seg_df.join(F.broadcast(hot), ["field", "term"], "left")
-        .withColumn(
-            "bucket",
-            F.coalesce(
-                F.col("solo_bucket"),
-                F.pmod(F.xxhash64("field", "term"), F.lit(bucket_count)),
-            ),
-        )
-        .drop("solo_bucket")
-        .groupBy("bucket")
-        .applyInPandas(
-            lambda key, pdf: merge_bucket(pdf.drop(columns=["bucket"])),
-            schema=out_schema,
-        )
-    )
-    merged.write.mode("append").partitionBy("segment_id").parquet(
-        f"{index_dir}/segments"
-    )
+
+    def merge_task(batches):
+        # spark.range hands each task a contiguous run of range ids: one
+        # read of its whole term block from every input, then one
+        # merge_range per range
+        ids = np.concatenate([b["id"].to_numpy() for b in batches])
+        first, last = int(ids.min()), int(ids.max())
+        lo, hi = ranges[first][0], ranges[last][1]
+        flt = ds.field("term") >= lo
+        if hi is not None:
+            flt &= ds.field("term") < hi
+        block = read_inputs(index_dir, seg_ids, in_schema, flt=flt).sort_by("term")
+        # Arrow sorts and Python compares strings in UTF-8 byte order
+        cuts = np.searchsorted(
+            block["term"].to_numpy(zero_copy_only=False),
+            [r[0] for r in ranges[first + 1 : last + 1]],
+        ).tolist()
+        for i, j in zip([0, *cuts], [*cuts, block.num_rows]):
+            yield merge_range(block.slice(i, j - i).to_pandas())
+
+    if ranges:
+        spark.range(
+            len(ranges),
+            numPartitions=min(len(ranges), spark.sparkContext.defaultParallelism),
+        ).mapInPandas(merge_task, schema=out_schema).write.mode(
+            "append"
+        ).partitionBy("segment_id").parquet(f"{index_dir}/segments")
 
     # docmeta remap: DISTRIBUTED dense renumber (no driver collect) — live
     # docs get ``base_offset + row_number() over (segment, order by doc_id)``,

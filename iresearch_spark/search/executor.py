@@ -95,7 +95,7 @@ from iresearch_spark.search.filters import (
     rewrite,
 )
 from iresearch_spark.search.scorers import BM25
-from iresearch_spark.util import read_int32
+from iresearch_spark.util import parquet_files, read_int32
 
 
 @dataclass
@@ -228,18 +228,6 @@ _IDENTITY_SCHEMA = pa.schema(
 )
 
 
-def _parquet_files(path: str) -> list[str]:
-    """Data files of a Spark-written parquet directory (none if absent),
-    skipping its hidden ``.crc`` and ``_SUCCESS`` side files."""
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        os.path.join(path, n)
-        for n in os.listdir(path)
-        if not n.startswith((".", "_"))
-    )
-
-
 def _read_identity(
     index_dir: str, segment_id: int, doc_ids: np.ndarray
 ) -> pd.DataFrame:
@@ -270,7 +258,7 @@ def _read_postings(
     if not prep.needs_positions:
         cols = cols[:-2]  # positions, pos_offsets
     files = (
-        _parquet_files(f"{index_dir}/segments/segment_id={segment_id}")
+        parquet_files(f"{index_dir}/segments/segment_id={segment_id}")
         if exprs else []
     )
     return ds.dataset(files, schema=_POSTINGS_SCHEMA, format="parquet").to_table(
@@ -462,7 +450,7 @@ class SearchEngine:
                 files = [
                     f
                     for sid in self._seg_ids
-                    for f in _parquet_files(
+                    for f in parquet_files(
                         f"{self.index_dir}/segments/segment_id={sid}"
                     )
                 ]

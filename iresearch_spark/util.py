@@ -1,7 +1,8 @@
 """Small shared utilities.
 
-read_int32: a driver-side pyarrow read of int32 columns of a Spark-written
-parquet directory (norms, tombstones).
+parquet_files / read_int32: the data files of a Spark-written parquet
+directory (a query task's or a merge task's segment read), and a driver-side
+pyarrow read of its int32 columns (norms, tombstones).
 
 LRUCache: a bounded least-recently-used map for the engine's long-lived
 caches (term stats, proxy match sets, cached engines). The reference keeps
@@ -18,6 +19,18 @@ from typing import Any, Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+
+def parquet_files(path: str) -> list[str]:
+    """Data files of a Spark-written parquet directory (none if absent),
+    skipping its hidden ``.crc`` and ``_SUCCESS`` side files."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        os.path.join(path, n)
+        for n in os.listdir(path)
+        if not n.startswith((".", "_"))
+    )
 
 
 def read_int32(path: str, cols: list[str]) -> pa.Table | None:

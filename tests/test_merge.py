@@ -6,6 +6,7 @@ changes ranking (global stats are segment-independent).
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from iresearch_spark.corpus import generate_corpus
@@ -85,24 +86,72 @@ def test_consolidate_to_single_segment(spark, index_dir):
     assert before == after
 
 
-def test_merge_hot_term_solo_bucket(spark, tmp_path):
-    """Forcing every term above the hot threshold must still produce a
-    byte-identical merged segment (solo buckets change task layout only)."""
-    from iresearch_spark.corpus import generate_corpus
-    from iresearch_spark.index.build import build_index
-    from iresearch_spark.index.manifest import read_manifest
-    from iresearch_spark.index.merge import merge_segments
+def test_term_ranges_cover_every_term_once_in_byte_order():
+    """The merge planner cuts the distinct terms into contiguous ranges
+    [lo, hi) in UTF-8 byte order: every term lands in exactly one range,
+    no range weighs more than max(budget, its heaviest term), and a range
+    is closed only when its next term would overflow the budget."""
+    from iresearch_spark.index.merge import term_ranges
 
-    d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
-    for d in (d1, d2):
-        build_index(spark, generate_corpus(spark, 120, 2), d, num_segments=2)
-    merge_segments(spark, d1, [0, 1], hot_term_bytes=0)  # everything "hot"
-    merge_segments(spark, d2, [0, 1])  # normal hash buckets
-    m1 = read_manifest(d1).segments[-1]
-    m2 = read_manifest(d2).segments[-1]
-    assert m1["content_hash"] == m2["content_hash"]
-    assert m1["terms"] == m2["terms"]
-    assert m1["postings_bytes"] == m2["postings_bytes"]
+    pool = ["0042", "_lead", "a", "import", "sym_1", "sym_10", "z", "é",
+            "日本", "ＡＢ", "😀", "uniq_9_b", "int", "void"]
+    rng = np.random.default_rng(7)
+    terms = [pool[i] for i in rng.integers(0, len(pool), 60)]
+    weights = rng.integers(1, 12, len(terms))
+    weights[terms.index("import")] = 500  # heavier than the budget
+    budget = 40
+    ranges = term_ranges(terms, weights, budget)
+
+    los = [lo.encode() for lo, _ in ranges]
+    assert los == sorted(los) and len(set(los)) == len(los)
+    assert [hi for _, hi in ranges] == [lo for lo, _ in ranges[1:]] + [None]
+    per_term: dict[str, int] = {}
+    for t, w in zip(terms, weights.tolist()):
+        per_term[t] = per_term.get(t, 0) + w
+    members = [[] for _ in ranges]
+    for t in per_term:
+        hit = [
+            i for i, (lo, hi) in enumerate(ranges)
+            if lo.encode() <= t.encode() and (hi is None or t.encode() < hi.encode())
+        ]
+        assert len(hit) == 1, (t, hit)
+        members[hit[0]].append(t)
+    loads = [sum(per_term[t] for t in m) for m in members]
+    for m, load in zip(members, loads):
+        assert load <= max(budget, max(per_term[t] for t in m))
+    assert ["import"] in members  # the heavy term sits alone
+    for i in range(len(ranges) - 1):
+        assert loads[i] + per_term[ranges[i + 1][0]] > budget
+    # contiguous in byte order (UTF-16 order would put 😀 before ＡＢ)
+    flat = [t for m in members for t in sorted(m, key=str.encode)]
+    assert flat == sorted(per_term, key=str.encode)
+    assert term_ranges(pa.array([], pa.string()), np.empty(0, np.int64), 10) == []
+
+
+def test_merged_segment_files_hold_disjoint_term_ranges(spark, tmp_path):
+    """Each merge task writes one file of contiguous term ranges, so the
+    term min/max statistics of a merged segment's files never overlap and
+    a query's term pushdown can skip files. The 160-doc merge spans more
+    than one range budget, so several tasks write; results are unchanged."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+    build_index(spark, generate_corpus(spark, 160, 2), d, num_segments=8)
+    before = _results(spark, d)
+    new_id = merge_segments(spark, d, list(range(8)))["new_segment_id"]
+    spans = []
+    for f in glob.glob(f"{d}/segments/segment_id={new_id}/*.parquet"):
+        md = pq.ParquetFile(f).metadata
+        col = md.schema.names.index("term")
+        stats = [md.row_group(g).column(col).statistics for g in range(md.num_row_groups)]
+        spans.append((min(s.min for s in stats), max(s.max for s in stats)))
+    spans.sort()
+    assert len(spans) >= 2, spans
+    for (_, hi), (lo, _) in zip(spans, spans[1:]):
+        assert hi.encode() < lo.encode(), spans
+    assert _results(spark, d) == before
 
 
 def _seg(sid, bytes_, docs=100, deleted=0):

@@ -202,11 +202,10 @@ def test_mixed_fields_merge_without_positions_flag(spark, tmp_path_factory):
     """Mixed payload + plain fields AND with_positions=False: the payload
     field's rows carry positions (the pay permutation needs them) while the
     plain field's rows are null — the merge's data gate is per OUTPUT TERM
-    (a bucket holds many (field, term) pairs), so a bucket mixing both
+    (a term range holds many (field, term) pairs), so a range mixing both
     kinds must keep positions for the payload terms and null them for the
-    plain ones. bucket_count=1 forces EVERY term into one mixed bucket —
-    the deterministic worst case — and every payload term is checked, not
-    just one that happens to dodge the collision."""
+    plain ones. Every term range holds rows of both fields, and every
+    payload term is checked, not just one."""
     from iresearch_spark.index.manifest import read_manifest as _rm
     from iresearch_spark.index.merge import merge_segments
 
@@ -217,7 +216,7 @@ def test_mixed_fields_merge_without_positions_flag(spark, tmp_path_factory):
         fields=[("content", "code_payload"), ("lang", "code")],
     )
     seg_ids = [s["segment_id"] for s in _rm(d).segments]
-    merge_segments(spark, d, seg_ids, bucket_count=1)
+    merge_segments(spark, d, seg_ids)
     eng = SearchEngine(spark, d)
     import re
 

@@ -9,7 +9,8 @@ fast at scale and that profiling can't catch on toy data:
 - a non-positional query prunes the positions columns out of that read;
 - a query plan holds no docmeta scan and no join (the kernel resolves
   identity), and a top-k query runs in one Spark job;
-- a JVM-tokenized build runs its tokenizer regexp once and joins nothing.
+- a JVM-tokenized build runs its tokenizer regexp once and joins nothing;
+- a merge, a micro-batch and a tombstoning stay within their job counts.
 """
 
 import io
@@ -397,10 +398,14 @@ def test_query_plan_has_no_docmeta_scan_or_join(engine, k):
 
 
 def test_merge_and_micro_batch_job_counts(spark, tmp_path):
-    """A merge of 8 segments reads parquet with explicit schemas (no
-    schema-inference jobs) and collects its stats once; with tombstones it
-    reads them on the driver with pyarrow, no Spark job. A micro-batch
-    keeps the one stats pass of a build wave."""
+    """A merge of 8 segments plans its term ranges on the driver with
+    pyarrow and runs one merge job (``spark.range`` over the ranges, each
+    task reading its inputs with pyarrow), reads parquet with explicit
+    schemas (no schema-inference jobs) and collects its stats once; with
+    tombstones it reads them on the driver with pyarrow, no Spark job. A
+    micro-batch keeps the one stats pass of a build wave. Tombstoning
+    takes the manifest's per-segment counts from the pyarrow tombstone
+    read, not from a second Spark aggregate."""
     from pyspark.sql import functions as F
 
     from iresearch_spark.index import merge_segments
@@ -416,15 +421,19 @@ def test_merge_and_micro_batch_job_counts(spark, tmp_path):
     ix = IncrementalIndexer(spark, d, segments_per_batch=2)
     batch = corpus.withColumn("commit", F.concat(F.col("commit"), F.lit("b")))
     batch_jobs = _spark_jobs(spark, lambda: ix.process_batch(batch, 0))
-    assert merge_jobs <= 11 and batch_jobs <= 11, (merge_jobs, batch_jobs)
+    assert merge_jobs <= 7 and batch_jobs <= 11, (merge_jobs, batch_jobs)
 
     dd = str(tmp_path / "merge8_deletes")
     build_index(spark, corpus, dd, num_segments=8)
-    assert mark_deleted(spark, dd, corpus.limit(20)) == 20
+    marked = []
+    mark_jobs = _spark_jobs(
+        spark, lambda: marked.append(mark_deleted(spark, dd, corpus.limit(20)))
+    )
+    assert marked == [20] and mark_jobs <= 7, mark_jobs
     del_jobs = _spark_jobs(
         spark, lambda: merge_segments(spark, dd, list(range(8)))
     )
-    assert del_jobs <= 11, del_jobs
+    assert del_jobs <= 8, del_jobs
     corpus.unpersist()
 
 

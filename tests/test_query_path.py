@@ -234,13 +234,13 @@ def test_query_after_consolidate_cleanup_reads_only_live_segments(
     removed = [0, 1]
     assert not any(os.path.isdir(f"{d}/segments/segment_id={s}") for s in removed)
     read = []
-    orig = executor._parquet_files
+    orig = executor.parquet_files
 
     def spy(path):
         read.append(path)
         return orig(path)
 
-    monkeypatch.setattr(executor, "_parquet_files", spy)
+    monkeypatch.setattr(executor, "parquet_files", spy)
     eng._stats_cache.clear()  # force a dictionary read of the new snapshot
     assert rows() == before  # merge without deletes keeps every score
     assert read and not any(
