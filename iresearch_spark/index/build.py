@@ -254,29 +254,24 @@ def invert(
 
     dl_lookup = np.zeros(int(doc_ids.max()) + 1, dtype=np.int64)
     dl_lookup[doc_ids] = counts
-    blobs, offs, lasts, maxf, minn = encode_postings_batch(
-        p_docs, freqs, dl_lookup[p_docs], term_lengths
-    )
     longs = pa.list_(pa.int64())
     cols = {
         "segment_id": pa.array(np.full(n_terms, segment_id, dtype=np.int32)),
-        "field": pa.array([field] * n_terms, pa.string()),
+        "field": pa.repeat(pa.scalar(field, pa.string()), n_terms),
         # every distinct token is a term: the sorted dictionary is the terms
         "term": enc.dictionary.take(term_order).cast(pa.string()),
         "docs_count": pa.array(term_lengths.astype(np.int32)),
         "total_tf": pa.array(np.add.reduceat(freqs, tstarts)),
-        "postings": pa.array(blobs, pa.binary()),
-        "block_offsets": pa.array(offs, longs),
-        "last_docs": pa.array(lasts, longs),
-        "max_freqs": pa.array(maxf, longs),
-        "min_norms": pa.array(minn, longs),
+        **encode_postings_batch(
+            p_docs, freqs, dl_lookup[p_docs], term_lengths
+        ).columns("postings"),
         "positions": pa.nulls(n_terms, pa.binary()),
         "pos_offsets": pa.nulls(n_terms, longs),
     }
     if with_positions or with_pay:
-        pblobs, poffs = encode_positions_batch(freqs, sp, term_lengths)
-        cols["positions"] = pa.array(pblobs, pa.binary())
-        cols["pos_offsets"] = pa.array(poffs, longs)
+        cols.update(
+            encode_positions_batch(freqs, sp, term_lengths).columns("positions")
+        )
     if span_lens is not None:
         gaps, lens = span_lens
         # within-doc cumulative sum of (gap + token) lengths is each

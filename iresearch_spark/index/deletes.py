@@ -19,8 +19,11 @@ docs are unaffected because all docs share the same global constants).
 from __future__ import annotations
 
 import os
+import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from iresearch_spark.index.build import DOCMETA_SCHEMA
@@ -28,6 +31,7 @@ from iresearch_spark.index.manifest import read_manifest, write_manifest
 from iresearch_spark.util import read_int32
 
 DELETES_SCHEMA = "segment_id int, doc_id int"
+_ARROW_SCHEMA = pa.schema([("segment_id", pa.int32()), ("doc_id", pa.int32())])
 
 
 def deletes_df(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -55,7 +59,7 @@ def mark_deleted(spark: SparkSession, index_dir: str, keys: DataFrame) -> int:
 
     Resolves identity through docmeta, appends to the deletes table, and
     publishes a manifest generation with per-segment deleted counts.
-    Returns the number of NEW tombstones."""
+    Returns the number of NEW tombstones; with none, it writes nothing."""
     dm = spark.read.schema(DOCMETA_SCHEMA).parquet(f"{index_dir}/docmeta")
     resolved = dm.join(
         keys.select("repo", "path", "commit"), ["repo", "path", "commit"]
@@ -80,12 +84,19 @@ def mark_deleted_rows(
         # an anti-join needs no dropDuplicates of the tombstones
         old = spark.read.schema(DELETES_SCHEMA).parquet(f"{index_dir}/deletes")
         resolved = resolved.join(old, ["segment_id", "doc_id"], "anti")
-    resolved = resolved.cache()
-    n_new = resolved.count()
-    if n_new:
-        resolved.write.mode("append").parquet(f"{index_dir}/deletes")
-    resolved.unpersist()
-
+    # the new tombstones are few (O(deletes)): one job collects them, and
+    # the driver writes them as one file under a hidden name (pyarrow and
+    # Spark skip it) renamed into place, or writes nothing when none is new
+    new = resolved.toArrow().cast(_ARROW_SCHEMA)
+    n_new = new.num_rows
+    if not n_new:
+        return 0
+    out = f"{index_dir}/deletes"
+    os.makedirs(out, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(new.sort_by([("segment_id", "ascending"),
+                                ("doc_id", "ascending")]), f"{out}/.{name}")
+    os.replace(f"{out}/.{name}", f"{out}/{name}")
     tombs = read_tombstones(index_dir)
     segs = []
     for s in man.segments:

@@ -13,16 +13,18 @@ The Spark reading of `core/index/merge_writer.cpp` + the tier policy of
   term merge degenerates to an ordered concatenation per term — no heap
   needed. A merge has a query's shape: the driver reads the inputs'
   ``(term, docs_count, total_tf)`` with pyarrow and cuts the terms, in
-  UTF-8 byte order, into contiguous ranges (:func:`term_ranges`); each
-  ``spark.range(ranges).mapInPandas`` task reads its run of ranges once
-  from every input with pyarrow (:func:`read_inputs`). Each range's kernel
-  decodes ALL its posting blobs in one vectorized pass
+  UTF-8 byte order, into contiguous weighted ranges (:func:`term_ranges`);
+  each ``spark.range(ranges).mapInArrow`` task reads its contiguous run of
+  ranges as one term block from every input with pyarrow
+  (:func:`read_inputs`). The task stays in Arrow end to end: each range's
+  kernel sorts the rows with ``Table.sort_by``, decodes ALL its posting
+  blobs in one vectorized pass straight from the Arrow buffers
   (``packed.decode_postings_many``), shifts doc ids by broadcast base
   offsets, concatenates per term in segment order, and re-encodes with
-  ``packed.encode_postings_batch`` — no per-term Python. Each task writes
-  one file, so a merged segment's files hold disjoint term intervals, as
-  the reference writes its merged dictionary in term order
-  (`merge_writer.cpp:1862-1890`).
+  ``packed.encode_postings_batch`` into Arrow columns — no per-term
+  Python object. Each task writes one file, so a merged segment's files
+  hold disjoint term intervals, as the reference writes its merged
+  dictionary in term order (`merge_writer.cpp:1862-1890`).
 
 Skew note (10^12-file scale): a range never splits a term, so a term
 heavier than the budget sits alone in its range and no range carries more
@@ -42,8 +44,8 @@ from dataclasses import replace
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
@@ -292,29 +294,29 @@ def merge_segments(
         name for name, _ in man.field_specs() if name != man.field_name
     ]
 
-    def merge_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(
-                columns=[c.split()[0] for c in out_schema.split(", ")]
-            )
+    arrow_out = arrow_schema(out_schema)
+
+    def merge_range(t: pa.Table) -> pa.Table:
+        if t.num_rows == 0:
+            return arrow_out.empty_table()
         bases_l, deleted_l = bc.value
         # first-block doc as tiebreak: input segments may already carry
         # SHARDED rows for a term; doc order must ascend across shards so
         # the delta encoder sees monotonic ids
-        pdf = pdf.assign(
-            _first=pdf["last_docs"].map(
-                lambda a: int(a[0]) if len(a) else 0
-            )
-        ).sort_values(
-            ["field", "term", "segment_id", "_first"], kind="stable"
+        ld, ld_offs, _ = packed.flat_values(t["last_docs"])
+        first = np.where(
+            np.diff(ld_offs) > 0, np.append(ld, 0)[ld_offs[:-1]], 0
         )
-        fields_arr = pdf["field"].to_numpy(dtype=object)
-        counts = pdf["docs_count"].to_numpy(np.int64)
+        t = t.append_column("_first", pa.array(first)).sort_by(
+            [(c, "ascending") for c in ("field", "term", "segment_id", "_first")]
+        )
+        n_rows = t.num_rows
+        counts = t["docs_count"].to_numpy().astype(np.int64)
         docs, freqs = packed.decode_postings_many(
-            list(pdf["postings"]), counts, list(pdf["block_offsets"])
+            t["postings"], counts, t["block_offsets"]
         )
-        row_of = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
-        seg_arr = pdf["segment_id"].to_numpy(np.int64)[row_of]
+        row_of = np.repeat(np.arange(n_rows, dtype=np.int64), counts)
+        seg_arr = t["segment_id"].to_numpy().astype(np.int64)[row_of]
         new_docs = np.zeros(len(docs), dtype=np.int64)
         for sid in np.unique(seg_arr):
             m = seg_arr == sid
@@ -334,38 +336,28 @@ def merge_segments(
         # min_norm: the WAND bound only needs min_norm <= every true dl in
         # the new block (smaller norm -> larger, still-safe upper bound), so
         # merge never touches per-doc norms — no O(docs) dl broadcast
-        mn_rows = [np.asarray(x, dtype=np.int64) for x in pdf["min_norms"]]
-        mn_all = (
-            np.concatenate(mn_rows) if mn_rows else np.empty(0, np.int64)
-        )
-        blocks_per_row = (counts + 127) // 128
-        block_row_offsets = np.concatenate(
-            [[0], np.cumsum(blocks_per_row)]
-        )[:-1]
-        row_starts = np.concatenate([[0], np.cumsum(counts)])[:-1]
-        rank_in_row = np.arange(len(docs), dtype=np.int64) - np.repeat(
-            row_starts, counts
-        )
-        dls = mn_all[block_row_offsets[row_of] + rank_in_row // 128]
+        mn, mn_offs, _ = packed.flat_values(t["min_norms"])
+        row_starts = np.cumsum(counts) - counts
+        rank_in_row = np.arange(len(docs), dtype=np.int64) - row_starts[row_of]
+        dls = mn[mn_offs[:-1][row_of] + rank_in_row // 128]
 
         # per-output-term lengths: rows are (term, segment) sorted, so terms
         # are contiguous; ordered concat replaces the reference's heap merge
-        terms = pdf["term"].to_numpy(dtype=object)
-        term_change = np.empty(len(pdf), dtype=bool)
-        term_change[0] = True
+        terms, fields = t["term"], t["field"]
+        term_change = np.ones(n_rows, dtype=bool)
         # a range holds every field's rows of its terms, so one term can
         # come in several fields
-        term_change[1:] = (terms[1:] != terms[:-1]) | (
-            fields_arr[1:] != fields_arr[:-1]
-        )
+        term_change[1:] = pc.or_(
+            pc.not_equal(terms[1:], terms[:-1]),
+            pc.not_equal(fields[1:], fields[:-1]),
+        ).to_numpy()
         trow_starts = np.flatnonzero(term_change)
         term_of_row = np.cumsum(term_change) - 1
-        term_of_entry = term_of_row[row_of]
-        n_terms = trow_starts.size
         term_lengths = np.bincount(
-            term_of_entry[keep], minlength=n_terms
+            term_of_row[row_of][keep], minlength=trow_starts.size
         ).astype(np.int64)
-        nonempty = term_lengths > 0
+        meta = np.flatnonzero(term_lengths)
+        lengths = term_lengths[meta]
 
         kept_docs = new_docs[keep]
         kept_freqs = freqs[keep]
@@ -375,45 +367,29 @@ def merge_segments(
         # SEVERAL rows of disjoint consecutive doc ranges (block-aligned
         # chunks), bounding every blob; the query kernel concatenates
         # shards in first-doc order (executor rows_by_term)
-        lengths = term_lengths[nonempty]
-        meta = np.flatnonzero(nonempty)
         if shard_docs:
-            exp_lengths: list[int] = []
-            exp_meta: list[int] = []
-            for L, mi in zip(lengths.tolist(), meta.tolist()):
-                if L > shard_docs:
-                    n_chunks = -(-L // shard_docs)
-                    chunk = ((-(-L // n_chunks) + 127) // 128) * 128
-                    rem = L
-                    while rem > 0:
-                        c = min(chunk, rem)
-                        exp_lengths.append(c)
-                        exp_meta.append(mi)
-                        rem -= c
-                else:
-                    exp_lengths.append(int(L))
-                    exp_meta.append(mi)
-            lengths = np.asarray(exp_lengths, dtype=np.int64)
-            meta = np.asarray(exp_meta, dtype=np.int64)
-        blobs, offs, lasts, maxf, minn = packed.encode_postings_batch(
-            kept_docs, kept_freqs, kept_dls, lengths
-        )
-        out = {
-            "segment_id": np.full(lengths.size, new_id, dtype=np.int32),
-            "field": fields_arr[trow_starts[meta]],
-            "term": terms[trow_starts[meta]],
-            "docs_count": lengths.astype(np.int32),
-            "total_tf": np.add.reduceat(
-                kept_freqs,
-                np.concatenate([[0], np.cumsum(lengths)])[:-1],
-            ).astype(np.int64)
-            if kept_freqs.size
-            else np.empty(0, np.int64),
-            "postings": blobs,
-            "block_offsets": offs,
-            "last_docs": lasts,
-            "max_freqs": maxf,
-            "min_norms": minn,
+            # ceil(L / ceil(L / shard_docs)), rounded up to whole blocks
+            per = -(-lengths // -(-lengths // shard_docs))
+            chunk = np.where(lengths > shard_docs, (per + 127) // 128 * 128, lengths)
+            pieces = -(-lengths // chunk)
+            meta = np.repeat(meta, pieces)
+            shards = np.repeat(chunk, pieces)
+            shards[np.cumsum(pieces) - 1] = lengths - chunk * (pieces - 1)
+            lengths = shards
+        src = trow_starts[meta]
+        cols = {
+            "segment_id": pa.array(np.full(lengths.size, new_id, dtype=np.int32)),
+            "field": fields.take(src),
+            "term": terms.take(src),
+            "docs_count": pa.array(lengths.astype(np.int32)),
+            "total_tf": pa.array(
+                np.add.reduceat(kept_freqs, np.cumsum(lengths) - lengths)
+                if kept_freqs.size
+                else np.empty(0, np.int64)
+            ),
+            **packed.encode_postings_batch(
+                kept_docs, kept_freqs, kept_dls, lengths
+            ).columns("postings"),
         }
         # payload indexes carry positions even when with_positions=False
         # (build gates the encoder on `with_positions or with_payloads`);
@@ -426,42 +402,24 @@ def merge_segments(
         # range. Null rows get zero placeholders through the shared
         # permutation and their output terms are nulled back out below,
         # mirroring the payload branch.
-        has_pos = pdf["positions"].notna().to_numpy()
+        has_pos = t["positions"].is_valid().to_numpy()
         if (with_positions or with_payloads) and has_pos.any():
             # one cross-row vectorized decode of the whole range (the
             # chunks of every row width-grouped at once — a per-row decode
-            # loop measured 3.2x slower). None rows (mixed multi-field
-            # ranges) come back as zero placeholders through the shared
-            # permutation.
+            # loop measured 3.2x slower)
             flat_pos = packed.decode_positions_many(
-                pdf["positions"].tolist(),
-                freqs,
-                counts,
-                pdf["pos_offsets"].tolist(),
-            )
-            pos_keep = np.repeat(keep, freqs)
-            pblobs, poffs = packed.encode_positions_batch(
-                kept_freqs, flat_pos[pos_keep], lengths
+                t["positions"], freqs, counts, t["pos_offsets"]
             )
             # an output term's rows all come from one (field, term) —
             # term_change splits on field — so the representative input
             # row decides whether the term really carries positions
-            src_has_pos = has_pos[trow_starts[meta]]
-            if src_has_pos.all():
-                out["positions"] = pblobs
-                out["pos_offsets"] = poffs
-            else:
-                out["positions"] = [
-                    b if src_has_pos[j] else None
-                    for j, b in enumerate(pblobs)
-                ]
-                out["pos_offsets"] = [
-                    o if src_has_pos[j] else None
-                    for j, o in enumerate(poffs)
-                ]
+            src_has_pos = has_pos[src]
+            cols.update(packed.encode_positions_batch(
+                kept_freqs, flat_pos[np.repeat(keep, freqs)], lengths
+            ).columns("positions", None if src_has_pos.all() else src_has_pos))
         else:
-            out["positions"] = None
-            out["pos_offsets"] = None
+            cols["positions"] = pa.nulls(lengths.size, pa.binary())
+            cols["pos_offsets"] = pa.nulls(lengths.size, pa.list_(pa.int64()))
         if with_payloads:
             # payloads ride the positions permutation: per-row decode (each
             # row's pay blobs are standalone), row-order concat == the
@@ -469,42 +427,35 @@ def merge_segments(
             # non-payload fields (mixed multi-field index) carry null pay
             # blobs: their occurrences get b'' placeholders and the output
             # row's pay columns are nulled back out below.
-            row_starts_posting = np.concatenate([[0], np.cumsum(counts)])[:-1]
-            has_pay = pdf["pay_lens"].notna().to_numpy()
+            pay_lens = t["pay_lens"].to_pylist()
+            payloads = t["payloads"].to_pylist()
             pays = []
-            for i in range(len(pdf)):
-                f_row = freqs[
-                    row_starts_posting[i] : row_starts_posting[i] + counts[i]
-                ]
-                if has_pay[i]:
-                    pays.append(
-                        decode_payloads(
-                            pdf["pay_lens"].iloc[i],
-                            pdf["payloads"].iloc[i],
-                            f_row,
-                        )
-                    )
+            for i in range(n_rows):
+                f_row = freqs[row_starts[i] : row_starts[i] + counts[i]]
+                if pay_lens[i] is not None:
+                    pays.append(decode_payloads(pay_lens[i], payloads[i], f_row))
                 else:
                     pays.append(np.full(int(f_row.sum()), b"", dtype=object))
             flat_pay = (
                 np.concatenate(pays) if pays else np.empty(0, dtype=object)
             )
-            pos_keep_pay = np.repeat(keep, freqs)
             lb, db = encode_payloads_batch(
-                kept_freqs, flat_pay[pos_keep_pay], lengths
+                kept_freqs, flat_pay[np.repeat(keep, freqs)], lengths
             )
             # an output term's rows all come from one field (term_change
             # splits on field), so the representative input row decides
-            src_has_pay = has_pay[trow_starts[meta]]
-            out["pay_lens"] = [
-                b if src_has_pay[j] else None for j, b in enumerate(lb)
-            ]
-            out["payloads"] = [
-                b if src_has_pay[j] else None for j, b in enumerate(db)
-            ]
-        return pd.DataFrame(out)
+            src_has_pay = t["pay_lens"].is_valid().to_numpy()[src]
+            cols["pay_lens"] = pa.array(
+                [b if src_has_pay[j] else None for j, b in enumerate(lb)],
+                pa.binary(),
+            )
+            cols["payloads"] = pa.array(
+                [b if src_has_pay[j] else None for j, b in enumerate(db)],
+                pa.binary(),
+            )
+        return pa.table(cols, schema=arrow_out)
 
-    in_schema = arrow_schema(out_schema).remove(0)  # segment_id: the path
+    in_schema = arrow_out.remove(0)  # segment_id: the path
     # the plan holds the inputs' (term, weight) rows on the driver: O(term
     # rows), never O(postings)
     w = read_inputs(
@@ -533,13 +484,13 @@ def merge_segments(
             [r[0] for r in ranges[first + 1 : last + 1]],
         ).tolist()
         for i, j in zip([0, *cuts], [*cuts, block.num_rows]):
-            yield merge_range(block.slice(i, j - i).to_pandas())
+            yield from merge_range(block.slice(i, j - i)).to_batches()
 
     if ranges:
         spark.range(
             len(ranges),
             numPartitions=min(len(ranges), spark.sparkContext.defaultParallelism),
-        ).mapInPandas(merge_task, schema=out_schema).write.mode(
+        ).mapInArrow(merge_task, schema=out_schema).write.mode(
             "append"
         ).partitionBy("segment_id").parquet(f"{index_dir}/segments")
 

@@ -48,8 +48,12 @@ def _random_posting(n, max_doc=None, seed=0):
 
 def _encode_one(docs, freqs, dls):
     """One posting list through the batch encoder -> per-list tuple."""
-    out = encode_postings_batch(docs, freqs, dls, np.asarray([docs.size]))
-    return tuple(x[0] for x in out)
+    enc = encode_postings_batch(docs, freqs, dls, np.asarray([docs.size]))
+    cols = enc.columns("postings")
+    return (cols["postings"][0].as_py(),) + tuple(
+        np.asarray(cols[k][0].as_py(), np.int64)
+        for k in ("block_offsets", "last_docs", "max_freqs", "min_norms")
+    )
 
 
 @pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 255, 256, 1000, 10_000])
@@ -92,11 +96,13 @@ def test_positions_roundtrip(n):
     flat = np.concatenate(
         [np.sort(rng.choice(1000, size=f, replace=False)) for f in freqs]
     ).astype(np.int64)
-    blobs, pos_offs = encode_positions_batch(freqs, flat, np.asarray([n]))
-    np.testing.assert_array_equal(decode_positions(blobs[0], freqs, pos_offs[0]), flat)
-    np.testing.assert_array_equal(decode_positions(blobs[0], freqs), flat)
+    cols = encode_positions_batch(freqs, flat, np.asarray([n])).columns("positions")
+    blob = cols["positions"][0].as_py()
+    pos_offs = np.asarray(cols["pos_offsets"][0].as_py(), np.int64)
+    np.testing.assert_array_equal(decode_positions(blob, freqs, pos_offs), flat)
+    np.testing.assert_array_equal(decode_positions(blob, freqs), flat)
     # one offset per 128-occurrence chunk, the varint tail included
-    assert pos_offs[0].size == (int(freqs.sum()) + BLOCK_SIZE - 1) // BLOCK_SIZE
+    assert pos_offs.size == (int(freqs.sum()) + BLOCK_SIZE - 1) // BLOCK_SIZE
 
 
 def test_singleton_posting():

@@ -110,6 +110,44 @@ def test_cleanup_policy(spark, fresh_index):
     assert plan_cleanup(m2.segments) == [0]
 
 
+def test_redelete_counts_only_new_tombstones(spark, fresh_index):
+    """``mark_deleted`` returns the tombstones it added: re-deleting docs
+    that are already tombstoned returns 0 and leaves the tombstones and
+    the manifest's per-segment counts as they were; a batch that mixes old
+    and new docs counts only the new ones."""
+    import os
+
+    from iresearch_spark.index.deletes import read_tombstones
+    from iresearch_spark.index.manifest import list_generations
+
+    keys = spark.read.parquet(f"{fresh_index}/docmeta").select(
+        "repo", "path", "commit"
+    ).orderBy("repo", "path", "commit")
+    first = keys.limit(10).cache()
+    assert mark_deleted(spark, fresh_index, first) == 10
+    tombs = read_tombstones(fresh_index)
+    counts = {
+        s["segment_id"]: s["deleted_docs"]
+        for s in read_manifest(fresh_index).segments
+    }
+    assert sum(ids.size for ids in tombs.values()) == 10
+    files = os.listdir(f"{fresh_index}/deletes")
+    generations = list_generations(fresh_index)
+    assert mark_deleted(spark, fresh_index, first) == 0
+    # nothing new: no file in deletes/ and no manifest generation
+    assert os.listdir(f"{fresh_index}/deletes") == files
+    assert list_generations(fresh_index) == generations
+    again = read_tombstones(fresh_index)
+    assert again.keys() == tombs.keys()
+    assert all(np.array_equal(again[s], tombs[s]) for s in tombs)
+    assert {
+        s["segment_id"]: s["deleted_docs"]
+        for s in read_manifest(fresh_index).segments
+    } == counts
+    assert mark_deleted(spark, fresh_index, keys.limit(15)) == 5
+    first.unpersist()
+
+
 def test_tombstones_survive_a_merge_that_fails_after_its_publish(
     spark, fresh_index, monkeypatch
 ):

@@ -8,6 +8,7 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -29,6 +30,17 @@ def _manifest_codecs(d: str) -> tuple[str, str]:
 
 
 # ------------------------------------------------------------- array level
+
+
+def _encode(docs, freqs, dls, nt):
+    """The encoder's Arrow columns, and the same as per-term lists
+    ``(blobs, block_offsets, last_docs, max_freqs, min_norms)``."""
+    cols = P.encode_postings_batch(docs, freqs, dls, nt).columns("postings")
+    per_term = [cols["postings"].to_pylist()] + [
+        [np.asarray(x, np.int64) for x in cols[k].to_pylist()]
+        for k in ("block_offsets", "last_docs", "max_freqs", "min_norms")
+    ]
+    return cols, per_term
 
 
 @st.composite
@@ -64,7 +76,7 @@ def posting_lists(draw, min_len=1):
 @given(posting_lists())
 def test_packed_postings_roundtrip(data):
     docs, freqs, dls, nt = data
-    pb, po, pl, pmf, pmn = P.encode_postings_batch(docs, freqs, dls, nt)
+    cols, (pb, po, pl, pmf, pmn) = _encode(docs, freqs, dls, nt)
     ts = np.concatenate([[0], np.cumsum(nt)])
     for t in range(nt.size):
         n = int(nt[t])
@@ -85,7 +97,7 @@ def test_packed_postings_roundtrip(data):
         assert np.array_equal(sd, d_t[mask])
         assert np.array_equal(sf, f_t[mask])
         assert np.array_equal(sb, (np.arange(n) // P.BLOCK_SIZE)[mask])
-    dm, fm = P.decode_postings_many(pb, nt, list(po))
+    dm, fm = P.decode_postings_many(cols["postings"], nt, cols["block_offsets"])
     assert np.array_equal(dm, docs) and np.array_equal(fm, freqs)
 
 
@@ -96,7 +108,7 @@ def test_corrupt_postings_raise_value_error(data, draw):
     blob, raises ValueError from the full decoders — never IndexError,
     never arrays."""
     docs, freqs, dls, nt = data
-    pb, po, *_ = P.encode_postings_batch(docs, freqs, dls, nt)
+    cols, (pb, po, *_) = _encode(docs, freqs, dls, nt)
     t = draw.draw(st.integers(0, nt.size - 1))
     n, blob = int(nt[t]), bytearray(pb[t])
     kind = draw.draw(st.sampled_from(["zero", "wide", "truncate"]))
@@ -113,7 +125,103 @@ def test_corrupt_postings_raise_value_error(data, draw):
     rows = list(pb)
     rows[t] = blob
     with pytest.raises(ValueError, match="corrupt|varint"):
-        P.decode_postings_many(rows, nt, list(po))
+        P.decode_postings_many(
+            pa.array(rows, pa.binary()), nt, cols["block_offsets"]
+        )
+
+
+def _lists(lengths, seed=0):
+    """Term-major posting lists of the given lengths (0 allowed)."""
+    rng = np.random.default_rng(seed)
+    docs = [np.sort(rng.choice(5000, n, replace=False)) + 1 for n in lengths]
+    freqs = rng.integers(1, 30, int(sum(lengths)))
+    return np.concatenate(docs), freqs, freqs + 5, np.asarray(lengths, np.int64)
+
+
+def _per_row(pb, nt, po):
+    """The per-row ``decode_postings`` results, concatenated."""
+    out = [P.decode_postings(b, int(n), o) for b, n, o in zip(pb, nt, po)]
+    return tuple(np.concatenate([[]] + [x[i] for x in out]) for i in (0, 1))
+
+
+def test_decode_many_reads_sliced_and_chunked_columns():
+    """The merge task hands ``decode_postings_many`` a slice of a term
+    block (``block.slice(i, n)``: an offset > 0 into shared buffers) and
+    columns made of several chunks; rows with zero postings carry an
+    empty blob and no block offsets. Each decodes to the per-row
+    ``decode_postings`` results."""
+    lengths = [3, 300, 128, 1, 0, 129, 0, 40, 256, 7]
+    docs, freqs, dls, nt = _lists(lengths)
+    nz = nt > 0
+    cols, (pb, po, *_) = _encode(docs, freqs, dls, nt[nz])
+    # zero-posting rows, spliced in where _lists put them
+    blobs, offs = iter(pb), iter(po)
+    pb = [next(blobs) if n else b"" for n in nt]
+    po = [next(offs) if n else np.empty(0, np.int64) for n in nt]
+    post = pa.array(pb, pa.binary())
+    boff = pa.array([o.tolist() for o in po], pa.list_(pa.int64()))
+    d, f = P.decode_postings_many(post, nt, boff)
+    assert np.array_equal(d, docs) and np.array_equal(f, freqs)
+    for i, n in [(1, 4), (3, 5), (4, 1), (9, 1), (2, 0)]:
+        exp = _per_row(pb[i : i + n], nt[i : i + n], po[i : i + n])
+        got = P.decode_postings_many(
+            post.slice(i, n), nt[i : i + n], boff.slice(i, n)
+        )
+        assert all(np.array_equal(g, e) for g, e in zip(got, exp)), (i, n)
+    # chunked: separate buffers per chunk, and chunks that are slices
+    for cut in (1, 4, 7):
+        two = [
+            pa.chunked_array([c.slice(0, cut), pa.concat_arrays([c.slice(cut)])])
+            for c in (post, boff)
+        ]
+        d, f = P.decode_postings_many(two[0], nt, two[1])
+        assert np.array_equal(d, docs) and np.array_equal(f, freqs), cut
+
+
+def test_decode_many_refuses_an_offset_into_the_next_row():
+    """A block offset moved into the next row's bytes raises ValueError
+    instead of decoding the neighbour's postings, for a single-block row
+    and for the last block of a multi-block row."""
+    docs, freqs, dls, nt = _lists([5, 300, 9, 200])
+    cols, (pb, po, *_) = _encode(docs, freqs, dls, nt)
+    for row, block in [(0, 0), (1, 2), (1, 0), (2, 0)]:
+        bad = [o.tolist() for o in po]
+        bad[row][block] = len(pb[row]) + 1  # inside row + 1's blob
+        with pytest.raises(ValueError, match="corrupt"):
+            P.decode_postings_many(
+                cols["postings"], nt, pa.array(bad, pa.list_(pa.int64()))
+            )
+    short = [o.tolist() for o in po]
+    short[1] = short[1][:-1]  # one offset fewer than ceil(300/128) blocks
+    with pytest.raises(ValueError, match="block offsets for 3 blocks"):
+        P.decode_postings_many(
+            cols["postings"], nt, pa.array(short, pa.list_(pa.int64()))
+        )
+
+
+def test_encoded_columns_chunk_at_the_offset_limit(monkeypatch):
+    """A batch whose bytes outgrow Arrow's int32 offsets is wrapped in
+    several chunks, each within the limit, instead of wrapping around;
+    the chunked columns hold the same rows. One blob past the limit is
+    refused."""
+    docs, freqs, dls, nt = _lists([300, 40, 200, 129, 1, 90, 256])
+    enc = P.encode_postings_batch(docs, freqs, dls, nt)
+    whole = enc.columns("postings")
+    assert whole["postings"].num_chunks == 1
+    monkeypatch.setattr(P, "MAX_OFFSET", int(np.diff(enc.offsets).max()) + 10)
+    chunked = enc.columns("postings")
+    assert chunked["postings"].num_chunks > 1
+    for c in chunked["postings"].chunks:
+        assert sum(len(b) for b in c.to_pylist()) <= P.MAX_OFFSET
+    for k in whole:
+        assert chunked[k].to_pylist() == whole[k].to_pylist(), k
+    d, f = P.decode_postings_many(
+        chunked["postings"], nt, chunked["block_offsets"]
+    )
+    assert np.array_equal(d, docs) and np.array_equal(f, freqs)
+    monkeypatch.setattr(P, "MAX_OFFSET", int(np.diff(enc.offsets).max()) - 1)
+    with pytest.raises(ValueError, match="exceeds"):
+        enc.columns("postings")
 
 
 def test_packed_beats_varint_on_dense_blocks():
@@ -126,7 +234,7 @@ def test_packed_beats_varint_on_dense_blocks():
     freqs = np.full(n, 2, dtype=np.int64)
     dls = np.full(n, 50, dtype=np.int64)
     nt = np.asarray([n], dtype=np.int64)
-    pb, *_ = P.encode_postings_batch(docs, freqs, dls, nt)
+    _, (pb, *_) = _encode(docs, freqs, dls, nt)
     assert len(pb[0]) == 64 * (2 + 16 * (1 + 2))
     assert len(pb[0]) < 0.35 * 2 * n
 

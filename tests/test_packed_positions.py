@@ -9,6 +9,7 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -37,6 +38,16 @@ def _strip_codec_keys(d: str, keys=CODEC_KEYS) -> None:
 
 
 # ------------------------------------------------------------- array level
+
+
+def _encode(freqs, flat, nt):
+    """The encoder's Arrow columns, and the same as per-term lists
+    ``(blobs, pos_offsets)``."""
+    cols = P.encode_positions_batch(freqs, flat, nt).columns("positions")
+    return cols, (
+        cols["positions"].to_pylist(),
+        [np.asarray(x, np.int64) for x in cols["pos_offsets"].to_pylist()],
+    )
 
 
 @st.composite
@@ -72,7 +83,7 @@ def position_streams(draw):
 @given(position_streams())
 def test_packed_positions_roundtrip(data):
     freqs, flat, nt = data
-    pb, poffs = P.encode_positions_batch(freqs, flat, nt)
+    _, (pb, poffs) = _encode(freqs, flat, nt)
     ts = np.concatenate([[0], np.cumsum(nt)])[:-1]
     occ = np.concatenate([[0], np.cumsum(freqs)])
     for t in range(nt.size):
@@ -95,7 +106,7 @@ def test_corrupt_positions_raise_value_error(data, draw):
     freqs = np.concatenate([freqs, hot])
     flat = np.concatenate([flat, np.tile(np.arange(1, 31), hot.size)])
     nt = np.append(nt, hot.size)
-    pb, poffs = P.encode_positions_batch(freqs, flat, nt)
+    cols, (pb, poffs) = _encode(freqs, flat, nt)
     t = nt.size - 1
     f_t = freqs[-hot.size :]
     blob = bytearray(pb[t])
@@ -112,9 +123,66 @@ def test_corrupt_positions_raise_value_error(data, draw):
     for offs in (poffs[t], None):
         with pytest.raises(ValueError, match="corrupt|varint"):
             P.decode_positions(blob, f_t, offs)
-    for offs in (list(poffs), None):
+    for offs in (cols["pos_offsets"], None):
         with pytest.raises(ValueError, match="corrupt|varint"):
-            P.decode_positions_many(rows, freqs, nt, offs)
+            P.decode_positions_many(pa.array(rows, pa.binary()), freqs, nt, offs)
+
+
+def test_decode_positions_many_reads_sliced_and_chunked_columns():
+    """Positions decode from a slice of a term block (offset > 0), from a
+    multi-chunk column and with rows of zero postings equals the per-row
+    ``decode_positions`` results, with stored offsets and without."""
+    rng = np.random.default_rng(3)
+    nt = np.asarray([4, 0, 60, 1, 0, 25, 90], np.int64)
+    freqs = rng.integers(1, 9, int(nt.sum()))
+    flat = np.concatenate(
+        [np.sort(rng.choice(400, f, replace=False)) for f in freqs]
+    )
+    nz = nt > 0
+    _, (pb, poffs) = _encode(freqs, flat, nt[nz])
+    blobs, offs = iter(pb), iter(poffs)
+    pb = [next(blobs) if n else b"" for n in nt]
+    po = [next(offs).tolist() if n else [] for n in nt]
+    pos = pa.array(pb, pa.binary())
+    off = pa.array(po, pa.list_(pa.int64()))
+    post = np.concatenate([[0], np.cumsum(nt)])
+
+    def per_row(i, n):
+        return np.concatenate([[]] + [
+            P.decode_positions(pb[r], freqs[post[r] : post[r + 1]], po[r])
+            for r in range(i, i + n)
+        ])
+
+    for i, n in [(0, 7), (2, 3), (1, 1), (4, 3), (6, 1)]:
+        f = freqs[post[i] : post[i + n]]
+        for o in (off.slice(i, n), None):
+            got = P.decode_positions_many(pos.slice(i, n), f, nt[i : i + n], o)
+            assert np.array_equal(got, per_row(i, n)), (i, n)
+    for cut in (2, 5):
+        two = [
+            pa.chunked_array([c.slice(0, cut), pa.concat_arrays([c.slice(cut)])])
+            for c in (pos, off)
+        ]
+        assert np.array_equal(
+            P.decode_positions_many(two[0], freqs, nt, two[1]), flat
+        )
+
+
+def test_decode_positions_many_refuses_an_offset_into_the_next_row():
+    """A stored chunk offset moved into the next row's bytes raises
+    ValueError instead of decoding the neighbour's positions."""
+    freqs = np.full(70, 4, dtype=np.int64)  # 2 x 140 occurrences
+    flat = np.tile(np.asarray([1, 5, 9, 30], dtype=np.int64), 70)
+    nt = np.asarray([35, 35], np.int64)
+    cols, (pb, poffs) = _encode(freqs, flat, nt)
+    for chunk in (0, 1):  # the full chunk and the tail chunk of row 0
+        bad = [o.tolist() for o in poffs]
+        bad[0][chunk] = len(pb[0]) + 1
+        with pytest.raises(ValueError, match="corrupt"):
+            P.decode_positions_many(
+                cols["positions"], freqs, nt,
+                pa.array(bad, pa.list_(pa.int64())),
+            )
 
 
 def test_packed_positions_chunk_layout():
@@ -123,7 +191,7 @@ def test_packed_positions_chunk_layout():
     freqs = np.full(100, 3, dtype=np.int64)  # 300 occurrences
     flat = np.tile(np.asarray([5, 9, 12], dtype=np.int64), 100)
     nt = np.asarray([100], dtype=np.int64)
-    pb, poffs = P.encode_positions_batch(freqs, flat, nt)
+    _, (pb, poffs) = _encode(freqs, flat, nt)
     blob, offs = pb[0], poffs[0]
     assert len(offs) == 3  # 2 full chunks + tail
     w0 = blob[offs[0]]
@@ -141,7 +209,7 @@ def test_packed_positions_smaller_on_dense_stream():
     freqs = np.full(256, f, dtype=np.int64)  # 4096 occurrences
     flat = np.tile(np.arange(10, 10 + 2 * f, 2, dtype=np.int64), 256)
     nt = np.asarray([256], dtype=np.int64)
-    pb, _ = P.encode_positions_batch(freqs, flat, nt)
+    _, (pb, _) = _encode(freqs, flat, nt)
     assert len(pb[0]) == 32 * (1 + 16 * 4)
     assert len(pb[0]) < 0.85 * freqs.sum()
 
@@ -155,10 +223,15 @@ def test_decode_positions_many_equals_per_row_loop(data, rnd):
     freqs, flat, nt = data
     ts = np.concatenate([[0], np.cumsum(nt)])[:-1]
     occ = np.concatenate([[0], np.cumsum(freqs)])
-    blobs, offs = P.encode_positions_batch(freqs, flat, nt)
-    assert np.array_equal(P.decode_positions_many(blobs, freqs, nt, offs), flat)
+    cols, (blobs, _) = _encode(freqs, flat, nt)
+    offs = cols["pos_offsets"]
+    assert np.array_equal(
+        P.decode_positions_many(cols["positions"], freqs, nt, offs), flat
+    )
     # header-walk path (offsets column absent)
-    assert np.array_equal(P.decode_positions_many(blobs, freqs, nt, None), flat)
+    assert np.array_equal(
+        P.decode_positions_many(cols["positions"], freqs, nt, None), flat
+    )
     # None placeholder rows decode to zeros through the permutation
     none_at = {
         t for t in range(nt.size) if rnd.random() < 0.4
@@ -167,7 +240,10 @@ def test_decode_positions_many_equals_per_row_loop(data, rnd):
     exp2 = flat.copy()
     for t in none_at:
         exp2[int(occ[ts[t]]) : int(occ[ts[t] + nt[t]])] = 0
-    assert np.array_equal(P.decode_positions_many(mixed, freqs, nt, offs), exp2)
+    assert np.array_equal(
+        P.decode_positions_many(pa.array(mixed, pa.binary()), freqs, nt, offs),
+        exp2,
+    )
 
 
 # ------------------------------------------------------------ engine level
